@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.DirectParquetIo
 
 /** Incremental aggregate materialized view over a [[ManagedParquetTable]].
   *
@@ -212,11 +213,11 @@ final class IncrementalAggView(
           val cd = s"pfile-${System.nanoTime()}"
           val trusted = srcFilter(readPartials(dirs),
             keep.toSeq.sorted, keep = true)
-          IncrementalAggView.writeStateOrSpark(spark,
+          DirectParquetIo.write(
             newPd.map(pd => trusted.unionByName(
                 spark.read.parquet(s"$viewPath/$pd")))
               .getOrElse(trusted),
-            s"$viewPath/$cd", footerRows(dirs ++ newPd))
+            s"$viewPath/$cd", footerRows(dirs ++ newPd), "overwrite")
           dirs = Seq(cd)
         } else dirs = dirs ++ newPd
         publish(st, nowFiles, dirs, m)
@@ -314,35 +315,15 @@ final class IncrementalAggView(
 
   private def readPartials(dirs: Seq[String]): DataFrame = {
     val paths = dirs.map(d => s"$viewPath/$d")
-    // partials dirs are immutable (nanotime-unique names): the merged
-    // read schema folds DRIVER-side from per-dir cached footer schemas
-    // — mergeSchema=true submits a schema-inference Spark job per
-    // read, at least one per refresh here. Same inference fidelity
-    // (footer schema property preferred, same StructType.merge);
-    // fallback to the distributed inference on any error.
-    try {
-      val cache = IncrementalAggView.dirSchemaCache
-      if (cache.size > 4096) cache.clear()
-      val schema = paths
-        .map(p => cache.computeIfAbsent(p,
-          _ => ManagedParquetTable.driverMergedSchema(spark, Seq(p))))
-        .distinct
-        .reduceLeft(
-          org.apache.spark.sql.graft.SchemaBridge.merge(spark, _, _))
-      spark.read.schema(schema).parquet(paths: _*)
-    } catch {
-      case scala.util.control.NonFatal(_) =>
-        spark.read.option("mergeSchema", "true").parquet(paths: _*)
-    }
+    spark.read.schema(ManagedParquetTable.footerMergedSchema(spark, paths))
+      .parquet(paths: _*)
   }
 
   /** Footer-observed row-count bound over view-relative parquet dirs
-    * (driver metadata read, no job); None when unreadable. */
-  private def footerRows(relDirs: Seq[String]): Option[Long] =
-    try Some(SidecarIo.parquetRowCount(
-      relDirs.map(d => Paths.get(viewPath, d)),
-      spark.sessionState.newHadoopConf()))
-    catch { case scala.util.control.NonFatal(_) => None }
+    * (driver metadata read, no job). */
+  private def footerRows(relDirs: Seq[String]): Long =
+    SidecarIo.parquetRowCount(relDirs.map(d => Paths.get(viewPath, d)),
+      spark.sessionState.newHadoopConf())
 
   private def filesDf(names: Seq[String]): DataFrame = {
     import spark.implicits._
@@ -360,7 +341,7 @@ final class IncrementalAggView(
     * anti ≡ NOT IN exactly). */
   private def srcFilter(p: DataFrame, names: Seq[String],
       keep: Boolean): DataFrame =
-    if (names.size <= IncrementalAggView.MaxInSetFiles) {
+    if (names.size <= Cutovers.MaxInSetFiles) {
       val pred = col(SrcCol).isInCollection(names)
       p.where(if (keep) pred else !pred)
     } else p.join(broadcast(filesDf(names)), Seq(SrcCol),
@@ -433,15 +414,15 @@ final class IncrementalAggView(
     // write job + committer round trip per refresh; a big state keeps
     // the distributed write
     val pBound = footerRows(pdirs)
-    IncrementalAggView.writeStateOrSpark(spark,
-      df.select(stateCols.map(col): _*), s"$viewPath/$stateDir", pBound)
+    DirectParquetIo.write(df.select(stateCols.map(col): _*),
+      s"$viewPath/$stateDir", pBound, "overwrite")
     // many small pfile dirs degrade listing and read fan-out exactly
     // like the table's own small-file problem → compact periodically
     val dirs = if (pdirs.size < 16) pdirs else {
       val cd = s"pfile-${System.nanoTime()}"
-      IncrementalAggView.writeStateOrSpark(spark,
+      DirectParquetIo.write(
         srcFilter(readPartials(pdirs), basis.toSeq.sorted, keep = true),
-        s"$viewPath/$cd", pBound)
+        s"$viewPath/$cd", pBound, "overwrite")
       Seq(cd)
     }
     val json = s"""{"state":"$stateDir","basis":[""" +
@@ -524,39 +505,6 @@ object IncrementalAggView {
   private final case class Manifest(
     state: String, basis: Set[String], partials: Seq[String],
     tableDvs: Seq[String])
-
-  /** Name-count gate above which a file-set filter stays a broadcast
-    * semi/anti-join instead of an isInCollection literal (plan-size
-    * bound; see `srcFilter`). */
-  private[io] val MaxInSetFiles = 10000
-
-  /** Per-dir merged-schema cache for the partials reader (dirs are
-    * immutable and nanotime-unique, so a key can never alias). */
-  private[io] val dirSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      org.apache.spark.sql.types.StructType]()
-
-  /** Overwrite-write `df` to `dest`: driver-direct (collect + Spark's
-    * own parquet write support, no committer) when `bound` — an
-    * OBSERVED footer-derived row bound, never an estimate — is at or
-    * under the small-commit gate; the distributed Spark write
-    * otherwise, and on any direct-path failure. */
-  private[io] def writeStateOrSpark(spark: SparkSession, df: DataFrame,
-      dest: String, bound: Option[Long]): Unit = {
-    val gate = spark.conf.getOption("spark.graft.smallCommitMaxRows")
-      .map(_.toLong)
-      .getOrElse(ManagedParquetTable.SmallCommitMaxRowsDefault)
-    val direct = bound.exists(_ <= gate) && (
-      try {
-        val hp = new org.apache.hadoop.fs.Path(dest)
-        hp.getFileSystem(spark.sessionState.newHadoopConf())
-          .delete(hp, true)
-        org.apache.spark.sql.graft.DirectParquetIo.writeSingleFile(
-          df, java.nio.file.Paths.get(dest))
-        true
-      } catch { case scala.util.control.NonFatal(_) => false })
-    if (!direct) df.write.mode("overwrite").parquet(dest)
-  }
 }
 
 /** JOIN-aware incremental materialized view: fact ⟕ broadcast dims →
@@ -679,8 +627,8 @@ final class IncrementalJoinAggView(
           if (prod.isValidLong) Some(prod.toLong) else None
         } else None
       } else None
-    IncrementalAggView.writeStateOrSpark(spark, fin,
-      s"$viewPath/$stateDir", bound)
+    DirectParquetIo.write(fin, s"$viewPath/$stateDir", bound.getOrElse(-1L),
+      "overwrite")
     val json = s"""{"state":"$stateDir","innerstate":"$innerId"""" +
       s""","dimvers":[""" + dvs.mkString(",") + "]}"
     val tmp = Paths.get(viewPath,

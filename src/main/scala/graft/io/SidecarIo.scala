@@ -136,7 +136,7 @@ object SidecarIo {
     * exceeds `maxBytes`, the part schemas disagree, or any field is
     * outside that set. */
   def readLocalRows(dirs: Seq[Path], conf: Configuration,
-      maxBytes: Long = 4L << 20):
+      maxBytes: Long = Cutovers.SidecarLocalBytes):
       Option[(org.apache.spark.sql.types.StructType,
         Seq[org.apache.spark.sql.Row])] = {
     import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}

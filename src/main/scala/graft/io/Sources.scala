@@ -365,40 +365,15 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
        else s"""],"tag":"${jsonEsc(tag)}"}""")
 
   /** Write df into a fresh immutable segment dir; return its name.
-    *
-    * Small-commit fast path: when the caller has OBSERVED a row count
-    * at or under [[ManagedParquetTable.SmallCommitMaxRows]] (an index
-    * maintainer's change-window count — never a plan-statistics
-    * estimate, which is unreliable post-filter), or the plan is a
-    * LocalRelation (rows already driver-resident), the segment writes
-    * driver-direct through Spark's own parquet write support
-    * ([[org.apache.spark.sql.graft.DirectParquetIo]]) — one collect
-    * job (zero for LocalRelations) instead of one write job PLUS the
-    * output-committer round trip that dominates tiny-commit latency.
-    * Same bytes a Spark write task produces; the distributed write
-    * stays the path for every real (unbounded) segment. */
+    * `rowsHint` is an OBSERVED row count when the caller has one (an
+    * index maintainer's change-window size): at or under the small-write
+    * gate the segment writes driver-direct (see
+    * [[org.apache.spark.sql.graft.DirectParquetIo.write]]); every real
+    * (unbounded) segment keeps the distributed write. */
   private def writeSegment(df: DataFrame, rowsHint: Long = -1L): String = {
     val seg = s"seg-${System.nanoTime()}"
-    val gate = spark.conf.getOption("spark.graft.smallCommitMaxRows")
-      .map(_.toLong)
-      .getOrElse(ManagedParquetTable.SmallCommitMaxRowsDefault)
-    val fast = (rowsHint >= 0L && rowsHint <= gate) ||
-      org.apache.spark.sql.graft.DirectParquetIo.isDriverLocal(df)
-    val direct = fast && (
-      try {
-        org.apache.spark.sql.graft.DirectParquetIo.writeSingleFile(df,
-          Paths.get(path, seg))
-        true
-      } catch {
-        case scala.util.control.NonFatal(_) =>
-          // scrub any partial file; the distributed write recreates
-          // the dir with overwrite semantics
-          val hp = new org.apache.hadoop.fs.Path(s"$path/$seg")
-          hp.getFileSystem(spark.sessionState.newHadoopConf())
-            .delete(hp, true)
-          false
-      })
-    if (!direct) df.write.mode("overwrite").parquet(s"$path/$seg")
+    org.apache.spark.sql.graft.DirectParquetIo.write(df, s"$path/$seg",
+      rowsHint, "overwrite")
     writeStatsSidecar(seg)
     seg
   }
@@ -787,11 +762,11 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     }
 
   /** The dv entries' (file, row) pairs read driver-side, when the
-    * sidecar bytes pass the [[ManagedParquetTable.DvLocalBytes]] gate;
+    * sidecar bytes pass the [[Cutovers.DvLocalBytes]] gate;
     * None → caller uses the distributed scan. */
   private def dvLocalPairs(entries: Seq[String]): Option[Seq[(String, Long)]] = {
     val dirs = entries.map(e => Paths.get(path, "_graft_dv", parseDv(e).dir))
-    if (SidecarIo.parquetBytes(dirs) <= ManagedParquetTable.DvLocalBytes)
+    if (SidecarIo.parquetBytes(dirs) <= Cutovers.DvLocalBytes)
       Some(SidecarIo.readDvPairs(dirs, spark.sessionState.newHadoopConf()))
     else None
   }
@@ -826,28 +801,12 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
       keepPos: Boolean): DataFrame =
     scanPaths(segs.map(s => s"$path/$s"), dvs, keepPos)
 
-  /** Merged read schema of an immutable path set, inferred once and
-    * cached process-wide (segment dirs are nanotime-unique and never
-    * mutate, so the key can never alias different content). The
-    * mergeSchema footer sweep is O(files) DRIVER work; every read()
-    * was re-paying it — a lifecycle gate doing dozens of reads spent
-    * seconds re-merging identical footers. Metadata cache only (the
-    * snapshot-cache Delta/Iceberg keep); no data or results cached. */
-  private def mergedSchemaOf(paths: Seq[String]): StructType = {
-    val cache = ManagedParquetTable.schemaCache
-    if (cache.size > 4096) cache.clear()
-    cache.computeIfAbsent(paths.sorted.mkString("\u0000"), _ =>
-      try ManagedParquetTable.driverMergedSchema(spark, paths)
-      catch {
-        case scala.util.control.NonFatal(_) => spark.read
-          .option("mergeSchema", "true").parquet(paths: _*).schema
-      })
-  }
-
   /** As [[scanSegments]] for explicit file/dir paths under the table. */
   private[io] def scanPaths(paths: Seq[String], dvs: Seq[String],
       keepPos: Boolean): DataFrame = {
-    val base = spark.read.schema(mergedSchemaOf(paths)).parquet(paths: _*)
+    val base = spark.read
+      .schema(ManagedParquetTable.footerMergedSchema(spark, paths))
+      .parquet(paths: _*)
     if (dvs.isEmpty && !keepPos) return base
     val withPos = posCols.foldLeft(base) { case (df, (n, c)) =>
       df.withColumn(n, c)
@@ -856,7 +815,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
       if (dvs.isEmpty) withPos
       else dvLocalPairs(dvs) match {
         case Some(pairs)
-            if pairs.size <= ManagedParquetTable.DvPredicateMaxEntries =>
+            if pairs.size <= Cutovers.LiteralPredicateMaxEntries =>
           // a TINY tombstone set applies as a row-local literal
           // predicate — no join node, no broadcast build (even a
           // LocalTableScan broadcast child submits a collect job), no
@@ -944,7 +903,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     // dv commit in the common small-tombstone case)
     val localPairs =
       if (SidecarIo.parquetBytes(Seq(dvDirPath)) <=
-          ManagedParquetTable.DvLocalBytes)
+          Cutovers.DvLocalBytes)
         Some(SidecarIo.readDvPairs(Seq(dvDirPath),
           spark.sessionState.newHadoopConf()))
       else None
@@ -2072,68 +2031,51 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
 }
 
 object ManagedParquetTable {
-  /** Process-wide merged-schema cache keyed by the (immutable,
-    * nanotime-unique) path set of a scan — see `mergedSchemaOf`. */
-  private[io] val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
-
-  /** Size gate for loading dv tombstone sidecars driver-side (see
-    * `dvFrame`): below this total parquet size the set becomes a
-    * LocalRelation; above it the distributed scan path is kept. */
-  private[io] val DvLocalBytes = 8L << 20
-
-  /** Entry gate for applying a dv tombstone set as a row-local literal
-    * predicate instead of an anti-join (see `scanPaths`): GetMapValue
-    * probes the literal map linearly per row, so only a tiny set may
-    * ride as a predicate; between this and [[DvLocalBytes]] the set
-    * anti-joins as a LocalRelation, above both it scans distributed. */
-  private[io] val DvPredicateMaxEntries = 1024
-
-  /** Default row gate for the small-commit driver-direct segment write
-    * (see `writeSegment`). Applies ONLY when the caller passes an
-    * OBSERVED count (index-maintenance windows observe their
-    * change-feed size anyway); larger commits — every real data write
-    * at scale — keep the distributed write. Deployments whose windows
-    * run wider override via spark.graft.smallCommitMaxRows. */
-  private[io] val SmallCommitMaxRowsDefault = 10000L
-
   private[io] val dvSchema = StructType(Seq(
     StructField("__graft_f", StringType, nullable = false),
     StructField("__graft_r",
       org.apache.spark.sql.types.LongType, nullable = false)))
 
-  /** The footer-merge inference performed WHOLLY on the driver: Spark's
-    * own `mergeSchemasInParallel` submits a Spark job unconditionally
-    * (even for a two-file set), and cache misses here happen once per
-    * fresh snapshot — a lifecycle gate was paying ~12 schema-inference
-    * jobs per run. Fidelity matches Spark's inference exactly: each
-    * footer's serialized Spark schema property is preferred (what
-    * Spark's own `readSchemaFromFooter` prefers), falling back to
-    * converting the parquet MessageType under the session conf; the
-    * fold is the same `StructType.merge`. Large file sets throw and
-    * keep the distributed inference (driver footer IO stays bounded
-    * the same way the stats-sidecar sweep is). Companion-level so the
-    * MV partials reader shares it. */
-  private[io] def driverMergedSchema(spark: SparkSession,
+  /** Per-path read-schema cache: the dirs read here (segments, MV
+    * partials) are nanotime-unique and never mutate, so a key can never
+    * alias different content. Metadata only; no data is cached. */
+  private val pathSchemas =
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
+  /** Merged read schema of parquet dirs/files: each path's schema once
+    * per process, folded by Spark's own `StructType.merge`. Spark's
+    * `mergeSchema` inference submits a Spark job per read, even for a
+    * two-file set; every managed read and MV refresh was paying one.
+    * A path of at most [[Cutovers.DriverSchemaMaxFiles]] files merges
+    * its footers on the driver with Spark's fidelity (each footer's
+    * serialized Spark schema preferred, as `readSchemaFromFooter` does,
+    * else the parquet MessageType converted under the session conf). A
+    * larger path, or one holding no parquet file, keeps Spark's
+    * inference, which also raises Spark's own error for a missing path. */
+  private[io] def footerMergedSchema(spark: SparkSession,
       paths: Seq[String]): StructType = {
-    import org.apache.hadoop.fs.{Path => HPath}
+    if (pathSchemas.size > 4096) pathSchemas.clear()
+    paths.map(p => pathSchemas.computeIfAbsent(p, _ => pathSchema(spark, p)))
+      .distinct
+      .reduceLeft(org.apache.spark.sql.graft.SchemaBridge.merge(spark, _, _))
+  }
+
+  private def pathSchema(spark: SparkSession, path: String): StructType = {
     val conf = spark.sessionState.newHadoopConf()
-    val files: Seq[HPath] = paths.flatMap { p =>
-      val hp = new HPath(p)
-      val fs = hp.getFileSystem(conf)
-      val st = fs.getFileStatus(hp)
-      if (st.isDirectory)
+    val hp = new org.apache.hadoop.fs.Path(path)
+    val fs = hp.getFileSystem(conf)
+    val files =
+      if (!fs.exists(hp)) Nil
+      else if (fs.getFileStatus(hp).isDirectory)
         fs.listStatus(hp).toSeq
           .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet")
             && !s.getPath.getName.startsWith("_")
             && !s.getPath.getName.startsWith("."))
           .map(_.getPath)
       else Seq(hp)
-    }
-    require(files.nonEmpty, s"no parquet files under $paths")
-    require(files.size <= 64,
-      "large file set: use the distributed inference")
-    val schemas = files.map { f =>
+    if (files.isEmpty || files.size > Cutovers.DriverSchemaMaxFiles)
+      spark.read.option("mergeSchema", "true").parquet(path).schema
+    else files.map { f =>
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
       try {
@@ -2147,8 +2089,7 @@ object ManagedParquetTable {
             .convert(spark, fm.getSchema)
         }
       } finally r.close()
-    }
-    schemas.distinct
+    }.distinct
       .reduceLeft(org.apache.spark.sql.graft.SchemaBridge.merge(spark, _, _))
   }
 }

@@ -127,15 +127,14 @@ final class IncrementalIvfPqIndex(spark: SparkSession,
     * consuming join. Size-gated driver-local load into a LocalRelation
     * (same device as the dv/tombstone sidecars): the collect becomes
     * job-free and a BroadcastExchange over LocalTableScan builds
-    * driver-side with no job. The gate (32 MB — generous for nlist×dim
-    * + m·ksub·(dim/m) doubles) keeps a distributed fallback, though an
-    * artifact that large would already be breaking the broadcast
-    * consumers. Values are bit-identical: same parquet bytes, same
-    * IEEE floats, row order immaterial to every consumer (codebooks
-    * key by (sub, code); centroid joins are argmax-by-id). */
+    * driver-side with no job. Above [[graft.io.Cutovers.FrozenLocalBytes]]
+    * the read stays distributed. Values are bit-identical: same parquet
+    * bytes, same IEEE floats, row order immaterial to every consumer
+    * (codebooks key by (sub, code); centroid joins are argmax-by-id). */
   private def frozenFrame(dir: Path): DataFrame =
     graft.io.SidecarIo.readLocalRows(Seq(dir),
-        spark.sessionState.newHadoopConf(), maxBytes = 32L << 20) match {
+        spark.sessionState.newHadoopConf(),
+        maxBytes = graft.io.Cutovers.FrozenLocalBytes) match {
       case Some((schema, rows)) =>
         import scala.jdk.CollectionConverters._
         spark.createDataFrame(rows.asJava, schema)
@@ -145,25 +144,15 @@ final class IncrementalIvfPqIndex(spark: SparkSession,
   /** Immutable-publish: write to a temp dir, atomic-rename into place.
     * A crash mid-write leaves only the temp dir (never a half-visible
     * artifact); train() is not concurrent with itself by contract.
-    *
-    * The artifacts are quantizer DRIVER state by contract (nlist×dim
-    * centroids, m·ksub·(dim/m) codebook rows — the same size class
-    * every consumer already collects/broadcasts; frozenFrame gates the
-    * read at 32 MB), so the write goes driver-direct through Spark's
-    * own parquet write support: zero Spark jobs when the frame is a
+    * The artifacts are quantizer DRIVER state by contract, so they
+    * always write driver-direct: zero Spark jobs when the frame is a
     * LocalRelation (pqTrain(iters=0) codebooks, kmeansFit output), one
-    * collect job otherwise — instead of one coalesce(1) write job PLUS
-    * the output-committer round trip per artifact. Identical bytes
-    * semantics (same WriteSupport, same session codec); the Spark
-    * write remains the fallback on any failure. */
+    * collect job otherwise — instead of a write job PLUS the
+    * output-committer round trip per artifact. */
   private def writeFrozen(df: DataFrame, dest: Path): Unit = {
     val tmp = Paths.get(s"$dest.tmp.${System.nanoTime()}")
-    try org.apache.spark.sql.graft.DirectParquetIo.writeSingleFile(df, tmp)
-    catch {
-      case scala.util.control.NonFatal(_) =>
-        rmDir(tmp)
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    }
+    org.apache.spark.sql.graft.DirectParquetIo.write(df, tmp.toString,
+      graft.io.Cutovers.DriverState, "overwrite", singleFile = true)
     Files.move(tmp, dest, StandardCopyOption.ATOMIC_MOVE)
   }
 

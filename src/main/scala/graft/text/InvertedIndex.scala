@@ -2,6 +2,9 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.DirectParquetIo
+
+import graft.io.Cutovers
 
 /** Inverted token index + positional phrase search + BM25 ranking — the
   * targeted-retrieval layer of a training-data pipeline (find every
@@ -159,71 +162,18 @@ object InvertedIndex {
     val before: Set[String] =
       if (mode == "append") listBucketFiles(spark, path, None).toSet
       else Set.empty
-    val withBucket = postings
-      .withColumn("bucket", bucketOf(col("token"), nBuckets))
     // a maintenance WINDOW's postings delta (rowsHint = the window's
     // OBSERVED n_tokens, computed by the corpus-scalar aggregate the
     // commit needs anyway) writes driver-direct: one collect replaces
     // the bucket repartition exchange + the dynamic-partition
-    // committer — the most expensive job of an append window. Rows
-    // sort (bucket, token, doc_id, pos) exactly as the distributed
-    // form's sortWithinPartitions; footer min/max stats are
-    // value-derived, so probe-side file skipping sees identical
-    // sidecars. Full builds/compactions pass no hint and keep the
-    // distributed write.
-    val gate = spark.conf.getOption("spark.graft.postingsDirectMaxRows")
-      .map(_.toLong).getOrElse(200000L)
-    val direct = mode == "append" && rowsHint >= 0L && rowsHint <= gate && {
-      val placed = scala.collection.mutable.ArrayBuffer
-        .empty[java.nio.file.Path]
-      try {
-        import org.apache.spark.sql.Row
-        val rows = withBucket.collect()
-        val n = postings.schema.size // bucket rides last, dropped below
-        def cmpAny(a: Any, b: Any): Int = (a, b) match {
-          case (null, null) => 0
-          case (null, _) => -1
-          case (_, null) => 1
-          case (x: java.lang.Comparable[_], y) =>
-            x.asInstanceOf[java.lang.Comparable[Any]].compareTo(y)
-          case _ => 0
-        }
-        // sort keys: bucket (last col), then token, doc_id, pos (0..2)
-        val keyIdx = Array(n, 0, 1, 2)
-        val sorted = rows.sortWith { (r1, r2) =>
-          var i = 0
-          var c = 0
-          while (c == 0 && i < keyIdx.length) {
-            c = cmpAny(r1.get(keyIdx(i)), r2.get(keyIdx(i))); i += 1
-          }
-          c < 0
-        }
-        for ((b, rs) <- sorted.groupBy(_.get(n)).toSeq.sortBy(_._1.toString)) {
-          val dir = java.nio.file.Paths.get(s"$path/bucket=$b")
-          val name = org.apache.spark.sql.graft.DirectParquetIo
-            .writeSingleFile(
-              spark.createDataFrame(
-                java.util.Arrays.asList(rs.map(r =>
-                  Row.fromSeq(r.toSeq.dropRight(1))): _*), postings.schema),
-              dir)
-          placed += dir.resolve(name)
-        }
-        true
-      } catch {
-        case scala.util.control.NonFatal(_) =>
-          // remove every file already placed: a half-written bucket
-          // set plus the distributed fallback would double-count
-          placed.foreach(p =>
-            try java.nio.file.Files.deleteIfExists(p)
-            catch { case scala.util.control.NonFatal(_) => () })
-          false
-      }
-    }
-    if (!direct)
-      withBucket
-        .repartition(col("bucket"))
-        .sortWithinPartitions("token", "doc_id", "pos")
-        .write.mode(mode).partitionBy("bucket").parquet(path)
+    // committer. Footer min/max stats are value-derived, so probe-side
+    // file skipping sees identical sidecars on either side. Full
+    // builds/compactions pass no hint and keep the distributed write.
+    DirectParquetIo.write(
+      postings.withColumn("bucket", bucketOf(col("token"), nBuckets)),
+      path, rowsHint, mode, partitionBy = Seq("bucket"),
+      sortBy = Seq("token", "doc_id", "pos"),
+      maxRows = Cutovers.PostingsWriteRows)
     collectPostingsStats(spark, path, before)
   }
 
@@ -701,14 +651,10 @@ object InvertedIndex {
   }
 
   /** Corpus-scalar commit row (exactly ONE row by construction — the
-    * aggregate has no grouping): evaluate it with a collect (one job,
-    * the aggregation itself) and write driver-direct — the coalesce(1)
-    * Spark write paid a second full job + the output-committer round
-    * trip per build/append/compact commit for one row. The direct
-    * writer publishes by rename (hidden temp first), preserving the
-    * commit-record atomicity the contract needs: a death mid-write
-    * leaves no visible corpus file, exactly like a death before a
-    * Spark write's job commit. Fallback: the original Spark write. */
+    * aggregate has no grouping): evaluated with a collect (one job, the
+    * aggregation itself) and written driver-direct, rename-published:
+    * a death mid-write leaves no visible corpus file, exactly like a
+    * death before a Spark write's job commit. */
   private def writeCorpusRow(spark: SparkSession, scalars: DataFrame,
       dest: String, overwrite: Boolean): Unit =
     writeCorpusRowRows(spark, scalars.collect(), scalars.schema,
@@ -720,24 +666,11 @@ object InvertedIndex {
   private def writeCorpusRowRows(spark: SparkSession,
       rows: Array[org.apache.spark.sql.Row],
       schema: org.apache.spark.sql.types.StructType,
-      dest: String, overwrite: Boolean): Unit = {
-    val local = spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*), schema)
-    try {
-      if (overwrite) {
-        val hp = new org.apache.hadoop.fs.Path(dest)
-        hp.getFileSystem(spark.sessionState.newHadoopConf())
-          .delete(hp, true)
-      }
-      org.apache.spark.sql.graft.DirectParquetIo.writeSingleFile(
-        local, java.nio.file.Paths.get(dest))
-      ()
-    } catch {
-      case scala.util.control.NonFatal(_) =>
-        local.coalesce(1).write
-          .mode(if (overwrite) "overwrite" else "append").parquet(dest)
-    }
-  }
+      dest: String, overwrite: Boolean): Unit =
+    DirectParquetIo.write(
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema),
+      dest, rows.length, if (overwrite) "overwrite" else "append",
+      singleFile = true)
 
   /** Current index generation = number of build/append commits (each
     * writes exactly one corpus row; single-writer contract as the
@@ -1176,47 +1109,13 @@ object InvertedIndex {
         // nFresh is the OBSERVED pinned-batch survivor count: a
         // trickle window's doclen delta writes driver-direct, one file
         // per touched dbucket= dir (collect replaces the repartition
-        // exchange + dynamic-partition committer — the single most
-        // expensive job of a maintenance window). Torn-state contract
-        // unchanged: these rows carry `gen`, which only commits via
-        // the corpus row, so a death mid-loop is the same torn
-        // generation a death mid-distributed-write left. Bulk windows
-        // keep the distributed write.
-        val directDl = nFresh <= 10000L && {
-          // on any failure every file already placed is removed before
-          // the distributed fallback runs — a half-written bucket set
-          // followed by the full write would double-count its docs
-          val placed = scala.collection.mutable.ArrayBuffer
-            .empty[java.nio.file.Path]
-          try {
-            import org.apache.spark.sql.Row
-            val rows = dlRows.collect()
-            val dataSchema = org.apache.spark.sql.types.StructType(
-              dlRows.schema.fields.filterNot(_.name == "dbucket"))
-            rows.groupBy(_.getLong(3)).foreach { case (b, rs) =>
-              val dir = java.nio.file.Paths.get(s"$path/doclen/dbucket=$b")
-              val name = org.apache.spark.sql.graft.DirectParquetIo
-                .writeSingleFile(
-                  spark.createDataFrame(
-                    java.util.Arrays.asList(rs.map(r =>
-                      Row(r.get(0), r.get(1), r.get(2))): _*), dataSchema),
-                  dir)
-              placed += dir.resolve(name)
-            }
-            true
-          } catch {
-            case scala.util.control.NonFatal(_) =>
-              placed.foreach(p =>
-                try java.nio.file.Files.deleteIfExists(p)
-                catch { case scala.util.control.NonFatal(_) => () })
-              false
-          }
-        }
-        if (!directDl)
-          dlRows
-            .repartition(col("dbucket")) // one file per touched dir (see build)
-            .write.mode("append").partitionBy("dbucket")
-            .parquet(s"$path/doclen")
+        // exchange + dynamic-partition committer). Torn-state contract
+        // unchanged: these rows carry `gen`, which only commits via the
+        // corpus row, so a death mid-write is the same torn generation
+        // a death mid-distributed-write leaves. The distributed side
+        // repartitions on dbucket: one file per touched dir (see build).
+        DirectParquetIo.write(dlRows, s"$path/doclen", nFresh, "append",
+          partitionBy = Seq("dbucket"))
         val dlFresh = listBucketFiles(spark, s"$path/doclen",
           Some(batchBuckets), "dbucket=").filterNot(dlBefore)
         // this commit's file manifest lands AFTER its data files and
@@ -1276,21 +1175,9 @@ object InvertedIndex {
       // trickle delete writes its tombstone file driver-direct (one
       // collect job — the victim lookup itself — instead of a write
       // job + committer round trip); rename-published, so the
-      // single-file-append atomicity the contract cites is kept. A
-      // batch over the gate keeps the distributed write.
-      val direct = nBatch <= 10000L && (
-        try {
-          val rows = victims.collect()
-          if (rows.nonEmpty)
-            org.apache.spark.sql.graft.DirectParquetIo.writeSingleFile(
-              spark.createDataFrame(java.util.Arrays.asList(rows: _*),
-                victims.schema),
-              java.nio.file.Paths.get(s"$path/tombstones"))
-          true
-        } catch { case scala.util.control.NonFatal(_) => false })
-      if (!direct)
-        victims.coalesce(1).write.mode("append")
-          .parquet(s"$path/tombstones")
+      // single-file-append atomicity the contract cites is kept
+      DirectParquetIo.write(victims, s"$path/tombstones", nBatch, "append",
+        singleFile = true)
     } finally batchRdd.unpersist()
   }
 
@@ -1358,12 +1245,6 @@ object InvertedIndex {
     }
   }
 
-  /** Entry gate for applying the tombstone set as a row-local literal
-    * predicate instead of an anti-join: GetMapValue probes the map
-    * literal linearly per row, so only a tiny set may ride as a
-    * predicate; above it the broadcast anti-join stays the plan. */
-  private val TombstonePredicateMaxEntries = 1024
-
   /** Driver-local tombstone rows as (doc_id, dl, gen) plus the
     * doc_id DataType, when the sidecar passes the size gate. */
   private def tombstonesLocal(spark: SparkSession, path: String):
@@ -1396,7 +1277,7 @@ object InvertedIndex {
       return df
     tombstonesLocal(spark, path) match {
       case Some((idType, rows))
-          if rows.size <= TombstonePredicateMaxEntries =>
+          if rows.size <= Cutovers.LiteralPredicateMaxEntries =>
         val maxGen: Map[Any, Long] = rows.groupBy(_._1).view
           .mapValues(_.map(_._3).max).toMap
         val mLit = org.apache.spark.sql.graft.ColumnBridge.column(
