@@ -1,8 +1,9 @@
 package graft.io
 
 /** Every size gate that picks a driver-side path over a distributed one
-  * in the write helper ([[org.apache.spark.sql.graft.DirectParquetIo]])
-  * and the scan paths, declared once with its reason. None is a conf
+  * in the write and read primitives
+  * ([[org.apache.spark.sql.graft.DirectParquetIo]]) and the scan paths,
+  * declared once with its reason. None is a conf
   * key: each is a property of where the work runs, not of a workload. */
 object Cutovers {
 

@@ -322,8 +322,7 @@ final class IncrementalAggView(
   /** Footer-observed row-count bound over view-relative parquet dirs
     * (driver metadata read, no job). */
   private def footerRows(relDirs: Seq[String]): Long =
-    SidecarIo.parquetRowCount(relDirs.map(d => Paths.get(viewPath, d)),
-      spark.sessionState.newHadoopConf())
+    DirectParquetIo.parquetRowCount(spark, relDirs.map(d => Paths.get(viewPath, d)))
 
   private def filesDf(names: Seq[String]): DataFrame = {
     import spark.implicits._

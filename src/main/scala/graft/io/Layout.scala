@@ -2,6 +2,7 @@ package graft.io
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.DirectParquetIo
 import org.apache.spark.sql.types._
 
 /** Data-layout services for [[ManagedParquetTable]]: per-file min/max
@@ -184,6 +185,18 @@ object FileStats {
       s.minS.orNull, s.maxS.orNull, s.nulls.map(Long.box).orNull)
   }
 
+  /** Write `stats` as a sidecar file under `dir` ("overwrite" replaces
+    * the dir, "append" adds one file; an append of no rows places
+    * nothing). The rows are planning state already on the driver, so
+    * they go driver-direct as a LocalRelation — no Spark job per commit
+    * — and publish by temp-then-rename. */
+  def writeSidecar(spark: SparkSession, stats: Seq[ColStats], dir: String,
+      mode: String): Unit = {
+    import scala.jdk.CollectionConverters._
+    DirectParquetIo.write(spark.createDataFrame(toRows(stats).asJava, schema), dir,
+      stats.size.toLong, mode)
+  }
+
   def fromRow(r: Row): ColStats = {
     def optL(i: Int) = if (r.isNullAt(i)) None else Some(r.getLong(i))
     def optD(i: Int) = if (r.isNullAt(i)) None else Some(r.getDouble(i))
@@ -332,28 +345,28 @@ object FileStats {
     // size-gated driver-local probe: stats sidecars are O(files × cols)
     // planning rows, tiny for all but massive tables — evaluating the
     // prune driver-side skips a full groupByKey job per readWhere call.
-    // Oversized/unreadable sidecars keep the distributed path (which
-    // stays the 100 TB shape: prune work scales out, names of dead
-    // files are all that reaches the driver).
-    SidecarIo.readLocalRows(
-        statsDirs.map(java.nio.file.Paths.get(_)),
-        spark.sessionState.newHadoopConf()) match {
-      case Some((sch, rows)) if sch.fieldNames.sameElements(schema.fieldNames) =>
-        return rows.map(fromRow).groupBy(_.file).collect {
-          case (f, cs) if !conjuncts.forall(
-            mayMatch(cs.map(c => c.col -> c).toMap, _)) => f
-        }.toSet
-      case _ => ()
+    // Oversized sidecars keep the distributed path (which stays the
+    // 100 TB shape: prune work scales out, names of dead files are all
+    // that reaches the driver).
+    DirectParquetIo.read(spark, statsDirs.map(java.nio.file.Paths.get(_)),
+        Cutovers.SidecarLocalBytes) match {
+      case Some(local) =>
+        local.select(schema.fieldNames.map(col): _*).collect()
+          .map(fromRow).groupBy(_.file).collect {
+            case (f, cs) if !conjuncts.forall(
+              mayMatch(cs.map(c => c.col -> c).toMap, _)) => f
+          }.toSet
+      case None =>
+        val cs = spark.sparkContext.broadcast(conjuncts)
+        spark.read.schema(schema).parquet(statsDirs: _*)
+          .groupByKey((r: Row) => r.getString(0))(Encoders.STRING)
+          .mapGroups { (f: String, it: Iterator[Row]) =>
+            val cols = it.map(fromRow).map(c => c.col -> c).toMap
+            if (cs.value.forall(mayMatch(cols, _))) "" else f
+          }(Encoders.STRING)
+          .filter((f: String) => f.nonEmpty)
+          .collect().toSet
     }
-    val cs = spark.sparkContext.broadcast(conjuncts)
-    spark.read.schema(schema).parquet(statsDirs: _*)
-      .groupByKey((r: Row) => r.getString(0))(Encoders.STRING)
-      .mapGroups { (f: String, it: Iterator[Row]) =>
-        val cols = it.map(fromRow).map(c => c.col -> c).toMap
-        if (cs.value.forall(mayMatch(cols, _))) "" else f
-      }(Encoders.STRING)
-      .filter((f: String) => f.nonEmpty)
-      .collect().toSet
   }
 
   /** Driver-side xxhash64 of a conjunct's literal — the IDENTICAL hash

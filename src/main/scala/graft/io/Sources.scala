@@ -2,6 +2,7 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.graft.DirectParquetIo
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Source/sink surface (SURVEY.md §2.1).
@@ -372,8 +373,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     * (unbounded) segment keeps the distributed write. */
   private def writeSegment(df: DataFrame, rowsHint: Long = -1L): String = {
     val seg = s"seg-${System.nanoTime()}"
-    org.apache.spark.sql.graft.DirectParquetIo.write(df, s"$path/$seg",
-      rowsHint, "overwrite")
+    DirectParquetIo.write(df, s"$path/$seg", rowsHint, "overwrite")
     writeStatsSidecar(seg)
     seg
   }
@@ -386,15 +386,13 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     * as a tiny parquet sidecar (`_graft_stats/<seg>`): per (file,
     * column) min/max/nullCount — the same information real Delta puts
     * in `add.stats`. Collected from the parquet footers the writer
-    * just produced, so no data page is ever read. */
+    * just produced, so no data page is ever read, and written on the
+    * driver ([[FileStats.writeSidecar]]). */
   private def writeStatsSidecar(seg: String): Seq[FileStats.ColStats] = {
     val stats = segmentFiles(seg).flatMap { case (rel, _) =>
       FileStats.footerStats(spark, s"$path/$rel", rel)
     }
-    // sidecar rows are planning state (O(files × cols)); write them on
-    // the driver — a Spark job here costs a full plan/schedule round
-    // trip per COMMIT for a one-row-group file
-    SidecarIo.writeStats(statsDir.resolve(seg), stats)
+    FileStats.writeSidecar(spark, stats, statsDir.resolve(seg).toString, "overwrite")
     stats
   }
 
@@ -750,49 +748,35 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
 
   /** Distinct table-relative files named by the given dv entries —
     * the files whose visibility a tombstone commit changed. Driver-
-    * bounded by live file count, like every file list here. Served
-    * from the driver-local pair read when the set is size-gated small
-    * (no Spark job at all); the distributed distinct remains for
-    * large sets. */
+    * bounded by live file count, like every file list here. */
   private[io] def dvTouchedFiles(entries: Seq[String]): Seq[String] =
-    dvLocalPairs(entries) match {
-      case Some(pairs) => pairs.map(_._1).distinct.sorted
-      case None => dvFrame(entries).select("__graft_f").distinct()
-        .collect().map(_.getString(0)).toSeq.sorted
-    }
+    touchedFiles(dvTombstones(dvDirs(entries)))
 
-  /** The dv entries' (file, row) pairs read driver-side, when the
-    * sidecar bytes pass the [[Cutovers.DvLocalBytes]] gate;
-    * None → caller uses the distributed scan. */
-  private def dvLocalPairs(entries: Seq[String]): Option[Seq[(String, Long)]] = {
-    val dirs = entries.map(e => Paths.get(path, "_graft_dv", parseDv(e).dir))
-    if (SidecarIo.parquetBytes(dirs) <= Cutovers.DvLocalBytes)
-      Some(SidecarIo.readDvPairs(dirs, spark.sessionState.newHadoopConf()))
-    else None
-  }
+  private def dvDirs(entries: Seq[String]): Seq[java.nio.file.Path] =
+    entries.map(e => dvRoot.resolve(parseDv(e).dir))
 
-  /** Tombstone set of the given dv entries as (__graft_f, __graft_r).
-    * Size-gated driver-local load: a small tombstone set (the common
+  /** Tombstone sidecar dirs as (__graft_f, __graft_r), read once: the
+    * frame, and its (file, row) pairs when it was read driver-side.
+    * Sidecars passing the [[Cutovers.DvLocalBytes]] gate (the common
     * case — dv commits are O(matched rows) and compactDeletes folds
-    * them) comes back as a LocalRelation, so the read path's anti-join
-    * broadcasts it WITHOUT the separate broadcast-build Spark job a
-    * parquet-scan child needs (BroadcastExchange over LocalTableScan
-    * collects driver-side). Every managed read with live tombstones
-    * was paying that ~100-300 ms job; large dv sets keep the
-    * distributed scan unchanged. */
-  private def dvFrame(entries: Seq[String]): DataFrame =
-    dvLocalPairs(entries) match {
-      case Some(pairs) =>
-        import scala.jdk.CollectionConverters._
-        val rows: java.util.List[Row] =
-          pairs.map(p => Row(p._1, p._2): Row).asJava
-        spark.createDataFrame(rows, ManagedParquetTable.dvSchema)
+    * them) load as a LocalRelation, so an anti-join broadcasts them
+    * WITHOUT the broadcast-build Spark job a parquet-scan child needs;
+    * larger sets keep the distributed scan. */
+  private def dvTombstones(dirs: Seq[java.nio.file.Path]):
+      (DataFrame, Option[Seq[(String, Long)]]) =
+    DirectParquetIo.read(spark, dirs, Cutovers.DvLocalBytes) match {
+      case Some(local) =>
+        val frame = local.toDF("__graft_f", "__graft_r")
+        (frame, Some(frame.collect().map(r => (r.getString(0), r.getLong(1))).toSeq))
       case None =>
-        val dirs = entries.map(e =>
-          Paths.get(path, "_graft_dv", parseDv(e).dir))
-        spark.read.parquet(dirs.map(_.toString): _*)
-          .toDF("__graft_f", "__graft_r")
+        (spark.read.parquet(dirs.map(_.toString): _*).toDF("__graft_f", "__graft_r"), None)
     }
+
+  /** Distinct files of a tombstone set: from its pairs when it was read
+    * driver-side (no Spark job), else a distributed distinct. */
+  private def touchedFiles(dv: (DataFrame, Option[Seq[(String, Long)]])): Seq[String] =
+    dv._2.map(_.map(_._1).distinct).getOrElse(dv._1.select("__graft_f").distinct()
+      .collect().map(_.getString(0)).toSeq).sorted
 
   /** Scan segment dirs with deletion vectors applied (anti-join on the
     * (file, row) tombstone set — AQE broadcasts it when small). With
@@ -813,8 +797,8 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     }
     val filtered =
       if (dvs.isEmpty) withPos
-      else dvLocalPairs(dvs) match {
-        case Some(pairs)
+      else dvTombstones(dvDirs(dvs)) match {
+        case (_, Some(pairs))
             if pairs.size <= Cutovers.LiteralPredicateMaxEntries =>
           // a TINY tombstone set applies as a row-local literal
           // predicate — no join node, no broadcast build (even a
@@ -838,9 +822,8 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
             array_contains(try_element_at(mLit, col("__graft_f")),
               col("__graft_r")),
             lit(false))))
-        case _ =>
-          withPos.join(dvFrame(dvs), Seq("__graft_f", "__graft_r"),
-            "left_anti")
+        case (dvFrame, _) =>
+          withPos.join(dvFrame, Seq("__graft_f", "__graft_r"), "left_anti")
       }
     if (keepPos) filtered else filtered.drop("__graft_f", "__graft_r")
   }
@@ -899,15 +882,10 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     doomedRows.write.mode("overwrite").parquet(s"$path/_graft_dv/$dir")
     // the touched segments are recorded in the entry so later reads
     // can prove it inert once every one of them is rewritten/dropped;
-    // same size-gated driver-local read as dvFrame (one less job per
+    // the same size-gated read as every tombstone consumer (no job per
     // dv commit in the common small-tombstone case)
-    val localPairs =
-      if (SidecarIo.parquetBytes(Seq(dvDirPath)) <=
-          Cutovers.DvLocalBytes)
-        Some(SidecarIo.readDvPairs(Seq(dvDirPath),
-          spark.sessionState.newHadoopConf()))
-      else None
-    if (localPairs.exists(_.isEmpty)) {
+    val doomedSet = dvTombstones(Seq(dvDirPath))
+    if (doomedSet._2.exists(_.isEmpty)) {
       // delete matched nothing: commit nothing (the contract), drop
       // the empty sidecar dir
       val hp = new org.apache.hadoop.fs.Path(dvDirPath.toString)
@@ -915,13 +893,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
         .delete(hp, true)
       return
     }
-    val touched = localPairs match {
-      case Some(pairs) =>
-        pairs.map(_._1.split("/")(0)).distinct.sorted.toArray
-      case None => spark.read.parquet(dvDirPath.toString)
-        .select(col("__graft_f")).distinct()
-        .collect().map(_.getString(0).split("/")(0)).distinct.sorted
-    }
+    val touched = touchedFiles(doomedSet).map(_.split("/")(0)).distinct
     // the entry records the MIRROR version this commit creates (commit
     // files are 0-based and count manifest commits), so readAt can
     // scope tombstones to any historical version
@@ -990,7 +962,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     val live = liveDvEntries(segs)
     if (live.isEmpty) return 0
     // tombstones per segment (sidecars are tiny; one distributed pass)
-    val tombs = dvFrame(live)
+    val tombs = dvTombstones(dvDirs(live))._1
       .groupBy(split(col("__graft_f"), "/").getItem(0).as("seg"))
       .agg(count(lit(1)).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -998,7 +970,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     val affected = segs.filter { s =>
       val tn = tombs.getOrElse(s, 0L)
       tn > 0 && {
-        val rows = segmentFiles(s).map(f => footerRowCount(f._1)).sum
+        val rows = footerRows(segmentFiles(s).map(_._1))
         rows > 0 && tn.toDouble / rows >= threshold
       }
     }
@@ -1026,23 +998,13 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
   /** Footer-observed UPPER BOUND on this table's live row count: the
     * committed snapshot's file row counts summed (dv tombstones only
     * shrink the true count). Driver metadata read, no job; None when
-    * there is no snapshot or a footer is unreadable. */
+    * there is no snapshot. An unreadable footer throws. */
   def liveRowBound: Option[Long] =
-    try snapshot().map(_._2.flatMap(segmentFiles)
-      .map(f => footerRowCount(f._1)).sum)
-    catch { case scala.util.control.NonFatal(_) => None }
+    snapshot().map(s => footerRows(s._2.flatMap(segmentFiles).map(_._1)))
 
-  /** Footer-only row count of one table-relative parquet file. */
-  private def footerRowCount(rel: String): Long = {
-    import scala.jdk.CollectionConverters._
-    import org.apache.hadoop.fs.{Path => HadoopPath}
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-      new HadoopPath(s"$path/$rel"), spark.sessionState.newHadoopConf()))
-    try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-    finally reader.close()
-  }
+  /** Footer-only row count of table-relative parquet files or dirs. */
+  private def footerRows(rels: Seq[String]): Long =
+    DirectParquetIo.parquetRowCount(spark, rels.map(Paths.get(path, _)))
 
   /** S10: healthy = manifest present, readable, non-empty. */
   def isHealthy: Boolean =
@@ -1131,12 +1093,9 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     // footer sweep (dv rows / live rows) runs only when entries exist
     val liveDv = liveDvEntries(segs)
     if (liveDv.nonEmpty) {
-      val dvRows = liveDv.map(parseDv).map(_.dir).distinct.map { d =>
-        listDir(dvRoot.resolve(d))
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .map(p => footerRowCount(s"_graft_dv/$d/${p.getFileName}")).sum
-      }.sum
-      val liveRows = files.map(f => footerRowCount(f._1)).sum
+      val dvRows = footerRows(liveDv.map(parseDv).map(_.dir).distinct
+        .map(d => s"_graft_dv/$d"))
+      val liveRows = footerRows(files.map(_._1))
       val perm = if (liveRows == 0) 1000L else 1000L * dvRows / liveRows
       if (liveDv.size >= policy.maxLiveDvEntries ||
           perm >= policy.maxTombstonePermille)
@@ -1785,7 +1744,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
       if (dvNewTouching.isEmpty || common.isEmpty) None
       else Some(scanPaths(common.map(f => s"$path/$f"),
           touchingDv(dvAtV, segsOf(common)), keepPos = true)
-        .join(dvFrame(dvNewTouching), Seq("__graft_f", "__graft_r"),
+        .join(dvTombstones(dvDirs(dvNewTouching))._1, Seq("__graft_f", "__graft_r"),
           "left_semi")
         .drop("__graft_f", "__graft_r")
         .withColumn("_change_type", lit("delete")))
@@ -2031,11 +1990,6 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
 }
 
 object ManagedParquetTable {
-  private[io] val dvSchema = StructType(Seq(
-    StructField("__graft_f", StringType, nullable = false),
-    StructField("__graft_r",
-      org.apache.spark.sql.types.LongType, nullable = false)))
-
   /** Per-path read-schema cache: the dirs read here (segments, MV
     * partials) are nanotime-unique and never mutate, so a key can never
     * alias different content. Metadata only; no data is cached. */
@@ -2047,12 +2001,11 @@ object ManagedParquetTable {
     * `mergeSchema` inference submits a Spark job per read, even for a
     * two-file set; every managed read and MV refresh was paying one.
     * A path of at most [[Cutovers.DriverSchemaMaxFiles]] files merges
-    * its footers on the driver with Spark's fidelity (each footer's
-    * serialized Spark schema preferred, as `readSchemaFromFooter` does,
-    * else the parquet MessageType converted under the session conf). A
+    * its footers on the driver with Spark's fidelity
+    * ([[DirectParquetIo.footerSchema]]). A
     * larger path, or one holding no parquet file, keeps Spark's
     * inference, which also raises Spark's own error for a missing path. */
-  private[io] def footerMergedSchema(spark: SparkSession,
+  private[graft] def footerMergedSchema(spark: SparkSession,
       paths: Seq[String]): StructType = {
     if (pathSchemas.size > 4096) pathSchemas.clear()
     paths.map(p => pathSchemas.computeIfAbsent(p, _ => pathSchema(spark, p)))
@@ -2075,22 +2028,7 @@ object ManagedParquetTable {
       else Seq(hp)
     if (files.isEmpty || files.size > Cutovers.DriverSchemaMaxFiles)
       spark.read.option("mergeSchema", "true").parquet(path).schema
-    else files.map { f =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
-      try {
-        val fm = r.getFooter.getFileMetaData
-        Option(fm.getKeyValueMetaData
-            .get("org.apache.spark.sql.parquet.row.metadata")) match {
-          case Some(json) =>
-            org.apache.spark.sql.types.DataType.fromJson(json)
-              .asInstanceOf[StructType]
-          case None => org.apache.spark.sql.graft.SchemaBridge
-            .convert(spark, fm.getSchema)
-        }
-      } finally r.close()
-    }.distinct
-      .reduceLeft(org.apache.spark.sql.graft.SchemaBridge.merge(spark, _, _))
+    else DirectParquetIo.footerSchema(spark, files)
   }
 }
 

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.DirectParquetIo
 
 import graft.io.ManagedParquetTable
 
@@ -132,14 +133,8 @@ final class IncrementalIvfPqIndex(spark: SparkSession,
     * bytes, same IEEE floats, row order immaterial to every consumer
     * (codebooks key by (sub, code); centroid joins are argmax-by-id). */
   private def frozenFrame(dir: Path): DataFrame =
-    graft.io.SidecarIo.readLocalRows(Seq(dir),
-        spark.sessionState.newHadoopConf(),
-        maxBytes = graft.io.Cutovers.FrozenLocalBytes) match {
-      case Some((schema, rows)) =>
-        import scala.jdk.CollectionConverters._
-        spark.createDataFrame(rows.asJava, schema)
-      case None => spark.read.parquet(dir.toString)
-    }
+    DirectParquetIo.read(spark, Seq(dir), graft.io.Cutovers.FrozenLocalBytes)
+      .getOrElse(spark.read.parquet(dir.toString))
 
   /** Immutable-publish: write to a temp dir, atomic-rename into place.
     * A crash mid-write leaves only the temp dir (never a half-visible
@@ -151,7 +146,7 @@ final class IncrementalIvfPqIndex(spark: SparkSession,
     * output-committer round trip per artifact. */
   private def writeFrozen(df: DataFrame, dest: Path): Unit = {
     val tmp = Paths.get(s"$dest.tmp.${System.nanoTime()}")
-    org.apache.spark.sql.graft.DirectParquetIo.write(df, tmp.toString,
+    DirectParquetIo.write(df, tmp.toString,
       graft.io.Cutovers.DriverState, "overwrite", singleFile = true)
     Files.move(tmp, dest, StandardCopyOption.ATOMIC_MOVE)
   }

@@ -217,7 +217,7 @@ object InvertedIndex {
     // driver-direct sidecar append (planning state, O(files) rows) —
     // the Spark job the old append-parquet write paid per maintenance
     // call was pure plan/schedule overhead
-    graft.io.SidecarIo.appendStats(java.nio.file.Paths.get(sp), rows)
+    graft.io.FileStats.writeSidecar(spark, rows, sp, "append")
     fresh
   }
 
@@ -432,71 +432,39 @@ object InvertedIndex {
     * fails loudly instead. */
   private def alignIdType(docs: DataFrame, idCol: String,
       path: String): DataFrame = {
-    val spark = docs.sparkSession
-    val p = new org.apache.hadoop.fs.Path(s"$path/doclen")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) return docs // fresh build path: batch defines the dtype
     // ONE footer read resolves the stored dtype (it is uniform across
-    // the sidecar by construction — this very guard enforces it); the
-    // previous spark.read.parquet(root) paid a partition-discovery /
-    // schema-inference pass over all dbucket dirs per maintenance call
-    val stored = storedIdType(spark, path).getOrElse(
-      spark.read.parquet(p.toString).schema("doc_id").dataType)
+    // the sidecar by construction — this very guard enforces it) with
+    // no partition-discovery / schema-inference pass over the dbucket
+    // dirs; with no doclen file yet (fresh build) the batch defines it
     val batchT = docs.schema(idCol).dataType
-    if (batchT == stored) docs
-    else {
-      require(org.apache.spark.sql.catalyst.expressions.Cast
-          .canUpCast(batchT, stored),
-        s"batch id column '$idCol' is $batchT but the index at $path " +
-          s"stores doc_id as $stored — no lossless widening exists, and " +
-          "a lossy cast could silently alias distinct ids; cast the " +
-          "batch to the indexed dtype explicitly")
-      docs.withColumn(idCol, col(idCol).cast(stored))
+    storedIdType(docs.sparkSession, path) match {
+      case Some(stored) if stored != batchT =>
+        require(org.apache.spark.sql.catalyst.expressions.Cast
+            .canUpCast(batchT, stored),
+          s"batch id column '$idCol' is $batchT but the index at $path " +
+            s"stores doc_id as $stored — no lossless widening exists, and " +
+            "a lossy cast could silently alias distinct ids; cast the " +
+            "batch to the indexed dtype explicitly")
+        docs.withColumn(idCol, col(idCol).cast(stored))
+      case _ => docs
     }
   }
 
-  /** doc_id's stored dtype off ONE doclen parquet footer (driver IO,
-    * no Spark job); None → caller falls back to the distributed
-    * schema-inference read (exotic dtype, empty sidecar). */
+  /** doc_id's stored dtype off ONE doclen parquet footer, converted as
+    * Spark's scan converts it (driver IO, no Spark job); None when the
+    * sidecar holds no file yet. */
   private def storedIdType(spark: SparkSession, path: String):
       Option[org.apache.spark.sql.types.DataType] = {
     import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.types._
-    val conf = spark.sessionState.newHadoopConf()
     val dir = new Path(s"$path/doclen")
-    val fs = dir.getFileSystem(conf)
-    val file = fs.listStatus(dir).toSeq.filter(_.isDirectory)
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(dir)) return None
+    fs.listStatus(dir).toSeq.filter(_.isDirectory)
       .sortBy(_.getPath.getName).iterator
       .flatMap(d => fs.listStatus(d.getPath).toSeq)
       .find(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    file.flatMap { f =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(f.getPath, conf))
-      val msg = try r.getFooter.getFileMetaData.getSchema finally r.close()
-      if (!msg.containsField("doc_id")) None
-      else {
-        val t = msg.getType(msg.getFieldIndex("doc_id"))
-        if (!t.isPrimitive) None
-        else {
-          import org.apache.parquet.schema.LogicalTypeAnnotation
-          import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-          val pt = t.asPrimitiveType()
-          (pt.getPrimitiveTypeName, pt.getLogicalTypeAnnotation) match {
-            case (INT32, null) => Some(IntegerType)
-            case (INT64, null) => Some(LongType)
-            case (INT32, a: LogicalTypeAnnotation.IntLogicalTypeAnnotation)
-                if a.getBitWidth == 32 && a.isSigned => Some(IntegerType)
-            case (INT64, a: LogicalTypeAnnotation.IntLogicalTypeAnnotation)
-                if a.getBitWidth == 64 && a.isSigned => Some(LongType)
-            case (BINARY,
-                _: LogicalTypeAnnotation.StringLogicalTypeAnnotation) =>
-              Some(StringType)
-            case _ => None
-          }
-        }
-      }
-    }
+      .map(f => graft.io.ManagedParquetTable.footerMergedSchema(spark,
+        Seq(f.getPath.toString))("doc_id").dataType)
   }
 
   /** The index's bucket count is SELF-DESCRIBING: [[buildIndex]]
@@ -999,9 +967,13 @@ object InvertedIndex {
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(p)) return
     val tmp = new org.apache.hadoop.fs.Path(sp + ".repair")
-    spark.read.schema(graft.io.FileStats.schema).parquet(sp)
+    // a driver-read sidecar stays a LocalRelation through the filter, so
+    // the rewrite goes driver-direct; an oversized one stays distributed
+    val kept = DirectParquetIo.read(spark, Seq(java.nio.file.Paths.get(sp)),
+        Cutovers.SidecarLocalBytes)
+      .getOrElse(spark.read.schema(graft.io.FileStats.schema).parquet(sp))
       .where(!col("file").isin(dead.toSeq: _*))
-      .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    DirectParquetIo.write(kept, tmp.toString, -1L, "overwrite", singleFile = true)
     fs.delete(p, true)
     fs.rename(tmp, p)
   }
@@ -1223,43 +1195,29 @@ object InvertedIndex {
           .where(col("dbucket").isin(bs: _*))
       case None => spark.read.parquet(s"$path/doclen")
     }
-    killTombstoned(spark, path, dls.where(col("gen") < lit(committed)))
+    killTombstoned(tombstones(spark, path), dls.where(col("gen") < lit(committed)))
   }
 
-  private def tombstones(spark: SparkSession, path: String): Option[DataFrame] = {
+  /** The tombstone sidecar as read once: its (doc_id, dl, gen) frame
+    * and, when it was read driver-side, its rows. */
+  private final case class Tombstones(frame: DataFrame,
+      rows: Option[Array[org.apache.spark.sql.Row]])
+
+  /** The tombstone sidecar, None when there is none. A sidecar passing
+    * [[Cutovers.SidecarLocalBytes]] (small by contract between
+    * compactions) loads as a LocalRelation, so every consumer's
+    * broadcast anti-join builds driver-side instead of paying a scan job
+    * + a broadcast-build job per maintenance/probe call; a larger one
+    * stays the distributed scan. */
+  private def tombstones(spark: SparkSession, path: String): Option[Tombstones] = {
     val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return None
-    // size-gated driver-local load (same device as the table layer's
-    // dv sidecars): the tombstone set is small by contract between
-    // compactions, and a LocalRelation lets every consumer's broadcast
-    // anti-join build driver-side instead of paying a scan job + a
-    // broadcast-build job per maintenance/probe call
-    graft.io.SidecarIo.readLocalRows(
-        Seq(java.nio.file.Paths.get(path, "tombstones")), conf) match {
-      case Some((schema, rows)) =>
-        import scala.jdk.CollectionConverters._
-        Some(spark.createDataFrame(rows.asJava, schema))
-      case None => Some(spark.read.parquet(p.toString))
-    }
+    if (!p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)) None
+    else Some(DirectParquetIo.read(spark, Seq(java.nio.file.Paths.get(path, "tombstones")),
+        Cutovers.SidecarLocalBytes) match {
+      case Some(local) => Tombstones(local, Some(local.collect()))
+      case None => Tombstones(spark.read.parquet(p.toString), None)
+    })
   }
-
-  /** Driver-local tombstone rows as (doc_id, dl, gen) plus the
-    * doc_id DataType, when the sidecar passes the size gate. */
-  private def tombstonesLocal(spark: SparkSession, path: String):
-      Option[(org.apache.spark.sql.types.DataType,
-        Seq[(Any, Option[Long], Long)])] =
-    graft.io.SidecarIo.readLocalRows(
-        Seq(java.nio.file.Paths.get(path, "tombstones")),
-        spark.sessionState.newHadoopConf()).map { case (schema, rows) =>
-      val di = schema.fieldIndex("doc_id")
-      val dli = schema.fieldIndex("dl")
-      val gi = schema.fieldIndex("gen")
-      (schema(di).dataType, rows.map(r => (r.get(di),
-        if (r.isNullAt(dli)) None else Some(r.getLong(dli)),
-        r.getLong(gi))))
-    }
 
   /** Apply the generation-scoped tombstone kill to `df` (which must
     * carry doc_id and gen): a row-local literal predicate when the set
@@ -1270,32 +1228,29 @@ object InvertedIndex {
     * gen < SOME tombstone gen of its doc ⟺ gen < max(tombstone gens);
     * try_element_at yields null for an untombstoned doc and coalesce
     * keeps the row. */
-  private def killTombstoned(spark: SparkSession, path: String,
-      df: DataFrame): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    if (!p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p))
-      return df
-    tombstonesLocal(spark, path) match {
-      case Some((idType, rows))
-          if rows.size <= Cutovers.LiteralPredicateMaxEntries =>
-        val maxGen: Map[Any, Long] = rows.groupBy(_._1).view
-          .mapValues(_.map(_._3).max).toMap
+  private def killTombstoned(ts: Option[Tombstones],
+      df: DataFrame): DataFrame =
+    ts match {
+      case None => df
+      case Some(Tombstones(frame, Some(rows)))
+          if rows.length <= Cutovers.LiteralPredicateMaxEntries =>
+        val maxGen: Map[Any, Long] = rows.groupBy(_.getAs[Any]("doc_id")).view
+          .mapValues(_.map(_.getAs[Long]("gen")).max).toMap
         val mLit = org.apache.spark.sql.graft.ColumnBridge.column(
           org.apache.spark.sql.catalyst.expressions.Literal.create(
-            maxGen, org.apache.spark.sql.types.MapType(idType,
+            maxGen, org.apache.spark.sql.types.MapType(
+              frame.schema("doc_id").dataType,
               org.apache.spark.sql.types.LongType,
               valueContainsNull = false)))
         df.filter(!coalesce(
           col("gen") < try_element_at(mLit, col("doc_id")), lit(false)))
-      case _ =>
-        val ts = tombstones(spark, path).get
+      case Some(Tombstones(frame, _)) =>
         df.join(
-          broadcast(ts.select(col("doc_id").as("__td"),
+          broadcast(frame.select(col("doc_id").as("__td"),
             col("gen").as("__tg"))),
           col("doc_id") === col("__td") && col("gen") < col("__tg"),
           "left_anti")
     }
-  }
 
   /** Maintain the index from a managed document table's change feed
     * (the t16 lifecycle driven by the lakehouse layer, mirroring the
@@ -1428,7 +1383,7 @@ object InvertedIndex {
         "append windows accumulated per-commit files; probes open " +
           "every file of a probed bucket")
     val liveDocs = corpusStats(spark, path).collect()(0).getLong(0)
-    val nTomb = tombstones(spark, path).map(_.count()).getOrElse(0L)
+    val nTomb = tombstones(spark, path).map(_.frame.count()).getOrElse(0L)
     if (nTomb > 0) {
       val perm = 1000L * nTomb / (liveDocs + nTomb)
       if (perm >= policy.maxTombstonePermille)
@@ -1523,7 +1478,7 @@ object InvertedIndex {
     val livePost =
       // committed generations only — same contract as probes: torn
       // rows must never be folded into the compacted (gen-0) state
-      killTombstoned(spark, path,
+      killTombstoned(tombstones(spark, path),
         spark.read.parquet(s"$path/postings")
           .where(col("gen") < lit(committed)))
         .select(col("token"), col("doc_id"), col("pos"), col("dl"),
@@ -1594,13 +1549,13 @@ object InvertedIndex {
     * exactly once (with its indexed dl). A one-row frame for
     * broadcasting. */
   def corpusStats(spark: SparkSession, path: String): DataFrame =
-    corpusStatsFrom(spark, path, corpusFooter(spark, path))
+    corpusStatsFrom(spark, path, corpusFooter(spark, path), tombstones(spark, path))
 
   /** [[corpusStats]] core taking the caller's already-resolved corpus
-    * footer, so one footer read can serve both the committed-generation
-    * gate and the scalars of a single probe. */
+    * footer and tombstones, so one read of each can serve both the
+    * committed-generation gate and the scalars of a single probe. */
   private def corpusStatsFrom(spark: SparkSession, path: String,
-      footer: Option[(Long, Long, Long)]): DataFrame = {
+      footer: Option[(Long, Long, Long)], ts: Option[Tombstones]): DataFrame = {
     // footer fast path: the sums come off the driver-side footer read
     // (one row per file ⇒ min == max == value), so a probe spends no
     // scan job on a two-scalar frame
@@ -1610,10 +1565,10 @@ object InvertedIndex {
       case None => spark.read.parquet(s"$path/corpus")
         .agg(sum(col("n_docs")).as("__n"), sum(col("n_tokens")).as("__t"))
     }
-    tombstones(spark, path) match {
+    ts match {
       case None => base
-      case Some(ts) =>
-        val dead = ts.agg(count(lit(1)).as("__dn"), sum(col("dl")).as("__dt"))
+      case Some(t) =>
+        val dead = t.frame.agg(count(lit(1)).as("__dn"), sum(col("dl")).as("__dt"))
         base.crossJoin(dead).select(
           (col("__n") - col("__dn")).as("__n"),
           (col("__t") - coalesce(col("__dt"), lit(0L))).as("__t"))
@@ -1626,14 +1581,15 @@ object InvertedIndex {
     * instead of cross-joining a broadcast one-row frame (whose build
     * is a Spark job per probe). Same arithmetic as
     * [[corpusStatsFrom]]. */
-  private def corpusScalarsLocal(spark: SparkSession, path: String,
-      footer: Option[(Long, Long, Long)]): Option[(Long, Long)] =
+  private def corpusScalarsLocal(footer: Option[(Long, Long, Long)],
+      ts: Option[Tombstones]): Option[(Long, Long)] =
     footer.flatMap { case (_, n, t) =>
-      val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-      if (!p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p))
-        Some((n, t))
-      else tombstonesLocal(spark, path).map { case (_, rows) =>
-        (n - rows.size, t - rows.flatMap(_._2).sum)
+      ts match {
+        case None => Some((n, t))
+        case Some(Tombstones(_, rows)) => rows.map { rs =>
+          val dl = rs.flatMap(r => Option(r.getAs[java.lang.Long]("dl")))
+          (n - rs.length, t - dl.map(_.longValue).sum)
+        }
       }
     }
 
@@ -1648,13 +1604,16 @@ object InvertedIndex {
     * committed state. */
   def openIndex(spark: SparkSession, path: String, tokens: Seq[String],
       nBuckets: Int = DefaultBuckets): DataFrame =
-    openIndexAt(spark, path, tokens, nBuckets, generation(spark, path))
+    openIndexAt(spark, path, tokens, nBuckets, generation(spark, path),
+      tombstones(spark, path))
 
   /** [[openIndex]] core taking the caller's already-resolved committed
-    * generation ([[bm25TopKIndexed]] shares ONE corpus-footer read
-    * between this gate and [[corpusStats]] per probe). */
+    * generation and tombstones ([[bm25TopKIndexed]] shares ONE
+    * corpus-footer read and ONE tombstone read between this gate and
+    * [[corpusStats]] per probe). */
   private def openIndexAt(spark: SparkSession, path: String,
-      tokens: Seq[String], nBuckets: Int, committed: Long): DataFrame = {
+      tokens: Seq[String], nBuckets: Int, committed: Long,
+      ts: Option[Tombstones]): DataFrame = {
     require(tokens.nonEmpty, "empty token list")
     val post = prunedPostings(spark, s"$path/postings", tokens,
       indexBuckets(spark, path, nBuckets))
@@ -1662,7 +1621,7 @@ object InvertedIndex {
       .select(col("token"), col("doc_id"), col("pos"), col("dl"), col("gen"))
     // generation-scoped: a tombstone kills only OLDER postings of its
     // doc — literal predicate when tiny, broadcast anti-join otherwise
-    killTombstoned(spark, path, post).drop("gen")
+    killTombstoned(ts, post).drop("gen")
   }
 
   /** BM25 top-k served ENTIRELY from the persisted index: reads the
@@ -1680,17 +1639,18 @@ object InvertedIndex {
     val footer = corpusFooter(spark, path)
     val committed = footer.map(_._1).getOrElse(
       spark.read.parquet(s"$path/corpus").count())
-    val post = openIndexAt(spark, path, terms, nBuckets, committed)
+    val ts = tombstones(spark, path)
+    val post = openIndexAt(spark, path, terms, nBuckets, committed, ts)
     val tf = post.groupBy(col("doc_id"), col("token"))
       .agg(count(lit(1)).as("tf"), first(col("dl")).as("dl"))
     val df = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
-    val withCorpus = corpusScalarsLocal(spark, path, footer) match {
+    val withCorpus = corpusScalarsLocal(footer, ts) match {
       // scalars known on the driver → literal columns (no one-row
       // broadcast build job per probe); else the broadcast cross-join
       case Some((n, t)) => tf.join(broadcast(df), "token")
         .withColumn("__n", lit(n)).withColumn("__t", lit(t))
       case None => tf.join(broadcast(df), "token")
-        .crossJoin(broadcast(corpusStatsFrom(spark, path, footer)))
+        .crossJoin(broadcast(corpusStatsFrom(spark, path, footer, ts)))
     }
     withCorpus
       .withColumn("__s",

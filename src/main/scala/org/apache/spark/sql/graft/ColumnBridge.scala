@@ -54,23 +54,12 @@ object PlanBridge {
   }
 }
 
-/** Driver-side parquet schema machinery: `StructType.merge` is
-  * private[sql] and the parquet-to-Catalyst converter lives in an
-  * execution-internal package — this bridge re-exposes exactly what a
-  * driver-side footer-merge schema inference needs (the distributed
+/** `StructType.merge` is private[sql]; this bridge re-exposes it for
+  * the driver-side footer-merge schema inference (the distributed
   * `mergeSchemasInParallel` ALWAYS submits a Spark job, even for a
   * two-file segment set). */
 object SchemaBridge {
-  import org.apache.parquet.schema.MessageType
-  import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
   import org.apache.spark.sql.types.StructType
-
-  /** Catalyst schema of a parquet MessageType under the session's
-    * parquet read configuration (binary-as-string, int96, ntz,
-    * nanos-as-long, case sensitivity). */
-  def convert(spark: SparkSession, msg: MessageType): StructType =
-    new ParquetToSparkSchemaConverter(
-      spark.sessionState.conf).convert(msg)
 
   /** The same pairwise merge `mergeSchemasInParallel` folds with. */
   def merge(spark: SparkSession, a: StructType, b: StructType): StructType =

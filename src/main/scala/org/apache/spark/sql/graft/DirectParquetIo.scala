@@ -3,33 +3,47 @@ package org.apache.spark.sql.graft
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{Path => HadoopPath}
 import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.spark.sql.DataFrame
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, Cast, InterpretedOrdering, Literal, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.datasources.DataSourceUtils
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetOptions, ParquetReadSupport, ParquetToSparkSchemaConverter, ParquetUtils}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{StringType, StructType}
 
-/** The one write primitive behind every small commit: a parquet write
-  * that runs on the driver when the frame is known to be small, and as
-  * an ordinary distributed Spark write otherwise.
+/** The driver-side parquet primitives behind every small commit and
+  * every planning-sidecar read: one write, one read, and the footer row
+  * count that small-write gates take.
   *
-  * The direct side goes through Spark's OWN write path
-  * (ParquetUtils.prepareWrite → ParquetOutputWriter) minus the job
-  * scheduling and the output-committer protocol. A distributed write of
-  * a tiny, driver-known frame costs a full plan/schedule/commit round
-  * trip (~150–300 ms on a 4-core host); the bytes written here are what
-  * one Spark write task would produce — same WriteSupport, same schema
-  * footer property, same logical-type mapping, same session codec — so
-  * every reader sees an ordinary Spark parquet file. At 100 TB a real
-  * data write must fan out; this side is for the metadata-sized commits
-  * (maintenance windows, frozen quantizer artifacts, corpus scalars)
-  * that dominate lifecycle latency. Its gates live in
+  * [[write]] runs a parquet write on the driver when the frame is known
+  * to be small, and as an ordinary distributed Spark write otherwise.
+  * [[read]] loads a small dir set into a LocalRelation, and leaves a
+  * larger one to the caller's distributed scan. Both go through Spark's
+  * OWN parquet support (ParquetOutputWriter on the write side,
+  * ParquetReadSupport on the read side) minus the job scheduling: a
+  * distributed write or scan of a tiny, driver-known frame costs a full
+  * plan/schedule round trip (~150–300 ms on a 4-core host). The bytes
+  * written are what one Spark write task would produce — same
+  * WriteSupport, same schema footer property, same logical-type mapping,
+  * same session codec — and the rows read are what a Spark scan of the
+  * same files returns, for every type Spark writes. At 100 TB a real data
+  * write or scan must fan out; the driver side is for the metadata-sized
+  * work (maintenance windows, frozen quantizer artifacts, corpus scalars,
+  * deletion vectors, tombstones, file statistics) that dominates
+  * lifecycle latency. Each caller passes its gate from
   * [[_root_.graft.io.Cutovers]]. */
 object DirectParquetIo {
 
@@ -164,6 +178,95 @@ object DirectParquetIo {
           catch { case c: java.io.IOException => e.addSuppressed(c) }
         }
         throw e
+    }
+  }
+
+  /** The dir set `dirs` as a LocalRelation, read on the driver, when the
+    * total bytes of its parquet files are at or under `maxBytes`; None
+    * otherwise, and the caller keeps its distributed scan. The byte gate
+    * is the only thing that picks the side.
+    *
+    * The schema is the files' footer schemas (each footer's serialized
+    * Spark schema, else its parquet schema under the session's converter)
+    * merged as Spark's `mergeSchema` merges them, all nullable as a Spark
+    * file scan reports them; a file missing a column reads it as null.
+    * Rows are decoded by Spark's own row-based reader, so every type
+    * Spark writes (decimals, dates, timestamps, nested lists) reads as
+    * the distributed scan reads it. No Spark job runs, and none runs to
+    * collect the returned frame. A dir set holding no parquet file has
+    * no schema: the read fails, as Spark's inference does. */
+  def read(spark: SparkSession, dirs: Seq[Path], maxBytes: Long): Option[DataFrame] = {
+    val files = parquetFiles(dirs)
+    if (files.map(Files.size(_)).sum > maxBytes) return None
+    require(files.nonEmpty, s"no parquet file under ${dirs.mkString(", ")}")
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val conf = session.sessionState.conf
+    val hadoopConf = session.sessionState.newHadoopConf()
+    val footers = files.map(f => footerOf(new HadoopPath(f.toString), hadoopConf))
+    val schema = mergedSchema(spark, footers).asNullable
+    hadoopConf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, schema.json)
+    // the reader's schema converter takes these from the Hadoop conf,
+    // where a Spark scan sets them from the session
+    Seq(SQLConf.CASE_SENSITIVE, SQLConf.PARQUET_BINARY_AS_STRING,
+        SQLConf.PARQUET_INT96_AS_TIMESTAMP, SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
+        SQLConf.LEGACY_PARQUET_NANOS_AS_LONG)
+      .foreach(e => hadoopConf.set(e.key, conf.getConfString(e.key)))
+    val options = new ParquetOptions(Map.empty[String, String], conf)
+    val rows = footers.flatMap { footer =>
+      val meta = footer.getParquetMetadata.getFileMetaData.getKeyValueMetaData
+      val support = new ParquetReadSupport(None, enableVectorizedReader = false,
+        DataSourceUtils.datetimeRebaseSpec(meta.get, options.datetimeRebaseModeInRead),
+        DataSourceUtils.int96RebaseSpec(meta.get, options.int96RebaseModeInRead))
+      val reader = ParquetReader.builder(support, footer.getFile).withConf(hadoopConf).build()
+      // the reader reuses its row: keep a deep copy of each
+      try Iterator.continually(reader.read()).takeWhile(_ != null).map(_.copy()).toVector
+      finally reader.close()
+    }
+    Some(org.apache.spark.sql.classic.Dataset.ofRows(session,
+      LocalRelation(DataTypeUtils.toAttributes(schema), rows)))
+  }
+
+  /** Sum of the footer row counts of the parquet files at `paths` (see
+    * [[parquetFiles]]): a driver metadata read, no Spark job — the
+    * observed row count small-write gates take. */
+  def parquetRowCount(spark: SparkSession, paths: Seq[Path]): Long = {
+    val conf = spark.sessionState.newHadoopConf()
+    parquetFiles(paths).map(f => footerOf(new HadoopPath(f.toString), conf)
+      .getParquetMetadata.getBlocks.asScala.map(_.getRowCount).sum).sum
+  }
+
+  /** The Spark schema of parquet `files`, merged from their footers on
+    * the driver (no Spark job) — see [[mergedSchema]]. */
+  def footerSchema(spark: SparkSession, files: Seq[HadoopPath]): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    mergedSchema(spark, files.map(footerOf(_, conf)))
+  }
+
+  private def footerOf(file: HadoopPath, conf: Configuration): Footer =
+    new Footer(file, ParquetFooterReader.readFooter(
+      HadoopInputFile.fromPath(file, conf), ParquetMetadataConverter.NO_FILTER))
+
+  /** Each footer's schema as Spark's inference reads it — the serialized
+    * Spark schema its writer stored, else its parquet schema under the
+    * session's converter — folded by the merge `mergeSchema` uses. */
+  private def mergedSchema(spark: SparkSession, footers: Seq[Footer]): StructType = {
+    val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+    footers.map(ParquetFileFormat.readSchemaFromFooter(_, converter)).distinct
+      .reduceLeft(SchemaBridge.merge(spark, _, _))
+  }
+
+  /** The parquet files at `paths`: a dir contributes the `.parquet`
+    * files directly under it that a Spark scan sees (not `_`- or
+    * `.`-prefixed), any other path is taken as a file. */
+  private def parquetFiles(paths: Seq[Path]): Seq[Path] = paths.flatMap { p =>
+    if (!Files.isDirectory(p)) Seq(p)
+    else {
+      val s = Files.list(p)
+      try s.iterator().asScala.filter { f =>
+        val n = f.getFileName.toString
+        n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+      }.toVector
+      finally s.close()
     }
   }
 }
