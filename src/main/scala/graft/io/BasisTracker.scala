@@ -1,6 +1,6 @@
 package graft.io
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 /** The surface a streaming ingest drives per micro-batch: bring a
   * derived index up to its source table's committed version. Every
@@ -98,13 +98,8 @@ final class BasisTracker(indexPath: String, sourceDesc: String = "") {
     * lineage-less caller must never silently downgrade the recreation
     * guard back to version-only). */
   def publish(v: Long, lineage: Option[String] = None): Unit = {
-    Files.createDirectories(Paths.get(indexPath))
     val keep = lineage.orElse(basisLineage)
-    val tmp = Paths.get(indexPath,
-      s"_graft_index_basis.tmp.${System.nanoTime()}")
-    Files.writeString(tmp, v.toString + keep.map("\n" + _).getOrElse(""))
-    Files.move(tmp, basisFile, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    GraftFs.publish(basisFile, v.toString + keep.map("\n" + _).getOrElse(""))
   }
 
   /** Run the refresh dispatch against source head version `headV`

@@ -1,6 +1,6 @@
 package graft.io
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -430,45 +430,15 @@ final class IncrementalAggView(
       dirs.map("\"" + _ + "\"").mkString(",") +
       s"""],"tdvs":[""" +
       table.dvEntries.map("\"" + _ + "\"").mkString(",") + "]}"
-    val tmp = Paths.get(viewPath, s"_graft_view_manifest.tmp.${System.nanoTime()}")
-    Files.writeString(tmp, json)
-    Files.move(tmp, manifest, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    GraftFs.publish(manifest, json)
     // grace window runs from the moment a dir became unreferenced, not
     // from its creation — touch the newly superseded ones
     val keepDirs = dirs.toSet + stateDir
     val superseded = Option(prev).toSeq.flatMap(m => m.state +: m.partials)
       .filterNot(keepDirs.contains)
-    superseded.foreach { d =>
-      val pth = Paths.get(viewPath, d)
-      if (Files.exists(pth)) Files.setLastModifiedTime(pth,
-        java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
-    }
-    sweep(keepDirs)
-  }
-
-  /** Remove unreferenced state/pfile dirs past the grace window. */
-  private def sweep(keep: Set[String], graceMs: Long = 15 * 60 * 1000L): Unit = {
-    val cutoff = System.currentTimeMillis() - graceMs
-    val dir = Paths.get(viewPath)
-    if (!Files.isDirectory(dir)) return
-    val it = Files.list(dir).iterator()
-    while (it.hasNext) {
-      val p = it.next()
-      val n = p.getFileName.toString
-      if ((n.startsWith("state-") || n.startsWith("pfile-")) &&
-          !keep.contains(n) &&
-          Files.getLastModifiedTime(p).toMillis < cutoff)
-        deleteRecursively(p)
-    }
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val it = Files.list(p).iterator()
-      while (it.hasNext) deleteRecursively(it.next())
-    }
-    Files.deleteIfExists(p)
+    superseded.foreach(d => GraftFs.touch(Paths.get(viewPath, d)))
+    IncrementalAggView.sweep(viewPath)(n =>
+      (n.startsWith("state-") || n.startsWith("pfile-")) && !keepDirs(n))
   }
 
   /** Identity of the committed state publish (the state dir name) —
@@ -504,6 +474,11 @@ object IncrementalAggView {
   private final case class Manifest(
     state: String, basis: Set[String], partials: Seq[String],
     tableDvs: Seq[String])
+
+  /** Delete the superseded state/partial/final dirs of `viewPath`
+    * that `dead` names once they are 15 minutes past supersession. */
+  private[io] def sweep(viewPath: String)(dead: String => Boolean): Unit =
+    GraftFs.sweep(Paths.get(viewPath), System.currentTimeMillis() - 15 * 60 * 1000L)(dead)
 }
 
 /** JOIN-aware incremental materialized view: fact ⟕ broadcast dims →
@@ -630,42 +605,11 @@ final class IncrementalJoinAggView(
       "overwrite")
     val json = s"""{"state":"$stateDir","innerstate":"$innerId"""" +
       s""","dimvers":[""" + dvs.mkString(",") + "]}"
-    val tmp = Paths.get(viewPath,
-      s"_graft_jview_manifest.tmp.${System.nanoTime()}")
-    Files.writeString(tmp, json)
-    Files.move(tmp, manifest, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    prev.map(_.state).filter(_ != stateDir).foreach { d =>
-      val p = Paths.get(viewPath, d)
-      if (Files.exists(p)) Files.setLastModifiedTime(p,
-        java.nio.file.attribute.FileTime.fromMillis(
-          System.currentTimeMillis()))
-    }
-    sweepFinals(stateDir)
+    GraftFs.publish(manifest, json)
+    prev.map(_.state).filter(_ != stateDir)
+      .foreach(d => GraftFs.touch(Paths.get(viewPath, d)))
+    IncrementalAggView.sweep(viewPath)(n => n.startsWith("final-") && n != stateDir)
     lastRefresh = if (innerHow == "noop") "dim-remerge" else innerHow
-  }
-
-  /** Remove superseded final-state dirs past a grace window. */
-  private def sweepFinals(keep: String,
-      graceMs: Long = 15 * 60 * 1000L): Unit = {
-    val cutoff = System.currentTimeMillis() - graceMs
-    val dir = Paths.get(viewPath)
-    if (!Files.isDirectory(dir)) return
-    val s = Files.list(dir)
-    try {
-      val it = s.iterator()
-      while (it.hasNext) {
-        val p = it.next()
-        val n = p.getFileName.toString
-        if (n.startsWith("final-") && n != keep &&
-            Files.getLastModifiedTime(p).toMillis < cutoff) {
-          val w = Files.walk(p)
-          try w.sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => Files.delete(f))
-          finally w.close()
-        }
-      }
-    } finally s.close()
   }
 
   private def loadJManifest(): Option[JManifest] =

@@ -89,24 +89,11 @@ final class ConcurrentWriteException(msg: String)
   * deployment Delta/Iceberg replace this class behind the same calls
   * (object stores swap the rename for a putIfAbsent/conditional-put). */
 final class ManagedParquetTable(spark: SparkSession, val path: String) {
-  import java.nio.file.{Files, Paths, StandardCopyOption}
+  import java.nio.file.{Files, Paths}
 
   private def manifest = Paths.get(path, "_graft_manifest")
   private def commitsDir = Paths.get(path, "_graft_commits")
   private def commitFile(v: Long) = commitsDir.resolve(f"$v%020d.json")
-
-  /** Directory listing that CLOSES the stream (a bare Files.list leaks
-    * one directory fd per call until GC — a long-lived ingest writer
-    * checkpointing every 10 commits creeps toward the ulimit) and
-    * treats a missing directory as empty. */
-  private def listDir(dir: java.nio.file.Path): Seq[java.nio.file.Path] =
-    if (!Files.isDirectory(dir)) Seq.empty
-    else {
-      import scala.jdk.CollectionConverters._
-      val s = Files.list(dir)
-      try s.iterator().asScala.toList
-      finally s.close()
-    }
 
   def exists: Boolean =
     Files.exists(manifest) || resolvedManifest().isDefined
@@ -131,7 +118,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
       else { val s = Files.readString(manifest); Some((verOf(s), s)) }
     if (cur.isEmpty && Files.isDirectory(commitsDir)) {
       // very-first-commit crash window: CAS landed, pointer never did
-      val max = listDir(commitsDir).map(_.getFileName.toString)
+      val max = GraftFs.list(commitsDir).map(_.getFileName.toString)
         .filter(_.matches("\\d{20}\\.json")).map(_.dropRight(5).toLong)
         .maxOption
       cur = max.map(v => (v, Files.readString(commitFile(v))))
@@ -235,12 +222,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     * path: a reader that resolved the pre-consolidation manifest must
     * keep resolving these files. */
   private def touchDvlogFiles(names: Seq[String]): Unit =
-    names.foreach { f =>
-      val p = dvlogDir.resolve(f)
-      if (Files.exists(p)) Files.setLastModifiedTime(p,
-        java.nio.file.attribute.FileTime.fromMillis(
-          System.currentTimeMillis()))
-    }
+    names.foreach(f => GraftFs.touch(dvlogDir.resolve(f)))
 
   /** Parsed dv entry. `touched` is None for legacy entries (unknown
     * touch set → conservatively treated as always-live). */
@@ -336,20 +318,12 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
             "prepared — the single-writer contract is violated; this " +
             "commit was NOT published (the table stays consistent)")
     } finally Files.deleteIfExists(ctmp)
-    val tmp = Paths.get(path, s"_graft_manifest.tmp.${System.nanoTime()}")
-    Files.writeString(tmp, json)
-    Files.move(tmp, manifest, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    GraftFs.publish(manifest, json)
     // touch segments that just became unreferenced: vacuum's grace
     // window must run from the moment a reader could last have resolved
     // them (now), not from their creation time — else a long-lived
     // segment dies the instant it is dropped
-    (prevSegs.toSet -- segments.toSet).foreach { s =>
-      val p = Paths.get(path, s)
-      if (Files.exists(p)) Files.setLastModifiedTime(p,
-        java.nio.file.attribute.FileTime.fromMillis(
-          System.currentTimeMillis()))
-    }
+    (prevSegs.toSet -- segments.toSet).foreach(s => GraftFs.touch(Paths.get(path, s)))
     ver
   }
 
@@ -447,7 +421,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     if (Files.isDirectory(bloomDir)) return Some(bloomDir)
     val legacy = Paths.get(path, "_graft_blooms")
     if (Files.isDirectory(legacy) &&
-        listDir(legacy).exists(_.getFileName.toString.endsWith(".parquet")))
+        GraftFs.list(legacy).exists(_.getFileName.toString.endsWith(".parquet")))
       Some(legacy)
     else None
   }
@@ -503,7 +477,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     // a rebuild retires any pre-idx-layout sidecar files lingering at
     // the legacy root (idx/ shadows them on probe, but leaving them
     // invites a stale fallback if idx/ is ever lost)
-    listDir(Paths.get(path, "_graft_blooms"))
+    GraftFs.list(Paths.get(path, "_graft_blooms"))
       .filterNot(Files.isDirectory(_))
       .foreach(Files.deleteIfExists(_))
   }
@@ -689,11 +663,11 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     * caller re-does its work (at-least-once), never loses it. */
   def hasCommitTagged(tag: String, sinceVersion: Long): Boolean = {
     val mirrorNeedle = s""""userMetadata":"${jsonEsc(tag)}""""
-    val mirrorHit = Files.exists(deltaLogDir) && listDir(deltaLogDir)
+    val mirrorHit = Files.exists(deltaLogDir) && GraftFs.list(deltaLogDir)
       .filter(_.getFileName.toString.matches("\\d{20}\\.json"))
       .filter(_.getFileName.toString.dropRight(5).toLong >= sinceVersion)
       .exists(p => try Files.readString(p).contains(mirrorNeedle)
-        catch { case _: Throwable => false })
+        catch { case _: java.nio.file.NoSuchFileException => false })
     if (mirrorHit) return true
     // commit files, probed by NUMBER from the floor to the resolved
     // head when the window is narrow (the per-batch norm: floor is
@@ -706,7 +680,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     val commitNeedle = s""""tag":"${jsonEsc(tag)}""""
     def readHas(p: java.nio.file.Path): Boolean =
       try Files.readString(p).contains(commitNeedle)
-      catch { case _: Throwable => false }
+      catch { case _: java.nio.file.NoSuchFileException => false }
     val head = version
     val lo = sinceVersion + 1
     if (head - lo < 256) {
@@ -717,7 +691,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
         v += 1
       }
       false
-    } else Files.isDirectory(commitsDir) && listDir(commitsDir)
+    } else Files.isDirectory(commitsDir) && GraftFs.list(commitsDir)
       .filter(_.getFileName.toString.matches("\\d{20}\\.json"))
       .filter(_.getFileName.toString.dropRight(5).toLong >= lo)
       .exists(readHas)
@@ -888,9 +862,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     if (doomedSet._2.exists(_.isEmpty)) {
       // delete matched nothing: commit nothing (the contract), drop
       // the empty sidecar dir
-      val hp = new org.apache.hadoop.fs.Path(dvDirPath.toString)
-      hp.getFileSystem(spark.sessionState.newHadoopConf())
-        .delete(hp, true)
+      GraftFs.delete(dvDirPath)
       return
     }
     val touched = touchedFiles(doomedSet).map(_.split("/")(0)).distinct
@@ -1013,9 +985,8 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
 
   /** S10 repair: corrupted table moved aside, fresh state. */
   def repair(): Unit = if (!isHealthy && Files.exists(Paths.get(path))) {
-    Files.move(Paths.get(path),
-      Paths.get(path + s".corrupted.${System.currentTimeMillis()}"),
-      StandardCopyOption.ATOMIC_MOVE)
+    GraftFs.move(Paths.get(path),
+      Paths.get(path + s".corrupted.${System.currentTimeMillis()}"))
   }
 
   /** Telemetry-driven maintenance recommendations for THIS table — the
@@ -1058,7 +1029,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     // expected number (manifest version - 1; mirror numbers are
     // 0-based). Entries below the retention floor were pruned, not
     // lost, so only the head-side gap counts as lag.
-    val newestMirror = listDir(deltaLogDir).map(_.getFileName.toString)
+    val newestMirror = GraftFs.list(deltaLogDir).map(_.getFileName.toString)
       .filter(_.matches("\\d{20}\\.json")).map(_.dropRight(5).toLong)
       .maxOption.getOrElse(-1L)
     val mirrorLag = (ver - 1L) - newestMirror
@@ -1114,7 +1085,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     // reclaimable dead weight: everything vacuum() would delete today
     // (grace elided — the plan reports pressure, vacuum enforces age)
     val liveSet = segs.toSet
-    val staleSegs = listDir(Paths.get(path))
+    val staleSegs = GraftFs.list(Paths.get(path))
       .map(_.getFileName.toString)
       .count(n => n.startsWith("seg-") && !liveSet(n))
     val ptrVer =
@@ -1122,15 +1093,15 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
       else """"version":(\d+)""".r
         .findFirstMatchIn(Files.readString(manifest))
         .map(_.group(1).toLong).getOrElse(-1L)
-    val staleCommits = listDir(commitsDir).map(_.getFileName.toString)
+    val staleCommits = GraftFs.list(commitsDir).map(_.getFileName.toString)
       .count(n => n.startsWith(".tmp.") ||
         (n.matches("\\d{20}\\.json") && n.dropRight(5).toLong < ptrVer))
     val (_, refFiles) = dvState
     val refSet = refFiles.toSet
-    val staleDvlog = listDir(dvlogDir)
+    val staleDvlog = GraftFs.list(dvlogDir)
       .count(p => !refSet(p.getFileName.toString))
     val refDvDirs = dvEntries.map(parseDv(_).dir).toSet
-    val staleDvDirs = listDir(dvRoot)
+    val staleDvDirs = GraftFs.list(dvRoot)
       .count(p => !refDvDirs(p.getFileName.toString))
     val stale = staleSegs + staleCommits + staleDvlog + staleDvDirs
     if (stale >= policy.maxStaleObjects)
@@ -1276,7 +1247,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
   private def segmentFiles(seg: String): Seq[(String, Long)] = {
     import scala.jdk.CollectionConverters._
     val segDir = Paths.get(path, seg)
-    listDir(segDir)
+    GraftFs.list(segDir)
       .filter(p => p.getFileName.toString.endsWith(".parquet"))
       .map(p => (s"$seg/${p.getFileName}", Files.size(p)))
       .sortBy(_._1)
@@ -1352,7 +1323,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     if (fastPath &&
         Files.exists(deltaLogDir.resolve(f"$limit%020d.json"))) return
     Files.createDirectories(deltaLogDir)
-    val existing = listDir(deltaLogDir).map(_.getFileName.toString)
+    val existing = GraftFs.list(deltaLogDir).map(_.getFileName.toString)
       .filter(_.matches("\\d{20}\\.json")).map(_.dropRight(5).toLong)
     // entries below the oldest retained one were PRUNED by retention,
     // not lost to a crash — only fill above it
@@ -1501,10 +1472,8 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
       sb ++= s"""{"add":{"path":"${jsonEsc(f)}","partitionValues":{},""" +
         s""""size":$size,"modificationTime":$now,"dataChange":$dataChange}}\n"""
     }
-    val tmp = deltaLogDir.resolve(s".tmp.$now.${System.nanoTime()}")
-    Files.writeString(tmp, sb.toString)
-    Files.move(tmp, deltaLogDir.resolve(f"$version%020d.json"),
-      StandardCopyOption.ATOMIC_MOVE)
+    GraftFs.publish(deltaLogDir.resolve(f"$version%020d.json"), sb.toString,
+      replace = false)
     // periodic checkpoint: real Delta readers (and the reference's own
     // health probe, gold/bronzeToGold.py:17-42) expect _last_checkpoint
     // beyond ~10 commits so recovery is O(commits since checkpoint),
@@ -1521,12 +1490,8 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     // the next commit (a stale sidecar can never SUPPRESS one). Also
     // (re)write it when it was absent — a legacy table would otherwise
     // re-scan the whole log on EVERY commit
-    if (emitMeta || sidecarMissing) {
-      val sctmp = deltaLogDir.resolve(s".meta.tmp.${System.nanoTime()}")
-      Files.writeString(sctmp, s"$tableId\n$effectiveSchema")
-      Files.move(sctmp, metaSidecar, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-    }
+    if (emitMeta || sidecarMissing)
+      GraftFs.publish(metaSidecar, s"$tableId\n$effectiveSchema")
   }
 
   /** Checkpoint cadence in commits (Delta's own default is 10). */
@@ -1578,16 +1543,14 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     // temp dir, then move the single part file into place atomically
     val tmpDir = deltaLogDir.resolve(s".ckpt.tmp.${System.nanoTime()}")
     df.write.mode("overwrite").parquet(tmpDir.toString)
-    val part = listDir(tmpDir)
+    val part = GraftFs.list(tmpDir)
       .find(_.getFileName.toString.endsWith(".parquet"))
       .getOrElse(throw new IllegalStateException("checkpoint write produced no parquet"))
-    Files.move(part, deltaLogDir.resolve(f"$version%020d.checkpoint.parquet"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    deleteRecursively(tmpDir)
-    val lcTmp = deltaLogDir.resolve(s".lc.tmp.${System.nanoTime()}")
-    Files.writeString(lcTmp, s"""{"version":$version,"size":${rows.size}}""")
-    Files.move(lcTmp, deltaLogDir.resolve("_last_checkpoint"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    GraftFs.move(part, deltaLogDir.resolve(f"$version%020d.checkpoint.parquet"),
+      replace = true)
+    GraftFs.delete(tmpDir)
+    GraftFs.publish(deltaLogDir.resolve("_last_checkpoint"),
+      s"""{"version":$version,"size":${rows.size}}""")
   }
 
   /** Live data-file paths resolved exactly the way a real Delta reader
@@ -1613,7 +1576,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     // before some historical checkpoint are gone, and a time travel
     // below the newest checkpoint must seed from an intermediate one
     // instead of replaying from version 0
-    val ckptVer: Option[Long] = listDir(deltaLogDir)
+    val ckptVer: Option[Long] = GraftFs.list(deltaLogDir)
       .map(_.getFileName.toString)
       .flatMap(n => """^(\d{20})\.checkpoint\.parquet$""".r
         .findFirstMatchIn(n).map(_.group(1).toLong))
@@ -1628,7 +1591,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     }
     val addRe = """"add":\{"path":"((?:[^"\\]|\\.)*)"""".r
     val rmRe = """"remove":\{"path":"((?:[^"\\]|\\.)*)"""".r
-    val commits = listDir(deltaLogDir)
+    val commits = GraftFs.list(deltaLogDir)
       .filter(_.getFileName.toString.matches("\\d{20}\\.json"))
       .map(p => (p.getFileName.toString.stripSuffix(".json").toLong, p))
       .filter { case (v, _) =>
@@ -1675,7 +1638,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     * next trigger (ST18 chaos-proves the protocol). −1 when no mirror
     * entry exists yet. */
   def mirrorStableVersion: Long = {
-    val nums = listDir(deltaLogDir).map(_.getFileName.toString)
+    val nums = GraftFs.list(deltaLogDir).map(_.getFileName.toString)
       .filter(_.matches("\\d{20}\\.json")).map(_.dropRight(5).toLong)
       .sorted
     if (nums.isEmpty) -1L
@@ -1815,7 +1778,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     // LAZY newest-first scan: stops at the first (newest) commit that
     // carries a metaData action — version 0 always does, so this is
     // bounded by the distance to the last schema change, not log size
-    listDir(deltaLogDir)
+    GraftFs.list(deltaLogDir)
       .filter(_.getFileName.toString.matches("\\d{20}\\.json"))
       .sortBy(_.getFileName.toString).reverseIterator
       .flatMap(p => Files.readString(p).linesIterator
@@ -1872,29 +1835,15 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     // comparison across a writer restart could delete a seconds-old
     // segment (or never reclaim old ones)
     val cutoff = System.currentTimeMillis() - graceMs
-    val dir = Paths.get(path)
-    listDir(dir)
-      .filter(p => p.getFileName.toString.startsWith("seg-"))
-      .filterNot(p => live(p.getFileName.toString))
-      .filter(p => Files.getLastModifiedTime(p).toMillis <= cutoff)
-      .foreach { p =>
-        deleteRecursively(p)
-        // the segment's stats sidecar dies with it
-        deleteRecursively(statsDir.resolve(p.getFileName.toString))
-      }
+    GraftFs.sweep(Paths.get(path), cutoff)(n => n.startsWith("seg-") && !live(n))
+      // the segment's stats sidecar dies with it
+      .foreach(p => GraftFs.delete(statsDir.resolve(p.getFileName.toString)))
     // unreferenced dv bookkeeping: dvlog files the manifest doesn't
     // name and tombstone sidecar dirs no committed entry names
-    val (_, refFiles) = dvState
-    val refSet = refFiles.toSet
-    listDir(dvlogDir)
-      .filterNot(p => refSet(p.getFileName.toString))
-      .filter(p => Files.getLastModifiedTime(p).toMillis <= cutoff)
-      .foreach(Files.deleteIfExists(_))
+    val refSet = dvState._2.toSet
+    GraftFs.sweep(dvlogDir, cutoff)(n => !refSet(n))
     val refDvDirs = dvEntries.map(parseDv(_).dir).toSet
-    listDir(dvRoot)
-      .filterNot(p => refDvDirs(p.getFileName.toString))
-      .filter(p => Files.getLastModifiedTime(p).toMillis <= cutoff)
-      .foreach(deleteRecursively)
+    GraftFs.sweep(dvRoot, cutoff)(n => !refDvDirs(n))
     // superseded CAS commit files: resolution only walks FORWARD from
     // the POINTER, so only files strictly below the pointer's own
     // version are provably never consulted again. Bounding by the
@@ -1909,14 +1858,8 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
       else """"version":(\d+)""".r
         .findFirstMatchIn(Files.readString(manifest))
         .map(_.group(1).toLong).getOrElse(-1L)
-    listDir(commitsDir)
-      .filter { p =>
-        val n = p.getFileName.toString
-        n.startsWith(".tmp.") ||
-          (n.matches("\\d{20}\\.json") && n.dropRight(5).toLong < ptrVer)
-      }
-      .filter(p => Files.getLastModifiedTime(p).toMillis <= cutoff)
-      .foreach(Files.deleteIfExists(_))
+    GraftFs.sweep(commitsDir, cutoff)(n => n.startsWith(".tmp.") ||
+      (n.matches("\\d{20}\\.json") && n.dropRight(5).toLong < ptrVer))
   }
 
   /** Retention core (see [[vacuum]]): compute the horizon checkpoint,
@@ -1937,7 +1880,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     if (requested <= 0) return
     // snap the horizon DOWN to a checkpoint so every retained version
     // reconstructs from checkpoint + contiguous tail
-    val ckpts = listDir(deltaLogDir)
+    val ckpts = GraftFs.list(deltaLogDir)
       .map(_.getFileName.toString)
       .flatMap(n => """^(\d{20})\.checkpoint\.parquet$""".r
         .findFirstMatchIn(n).map(_.group(1).toLong))
@@ -1960,11 +1903,8 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
       val consolidated =
         if (kept.isEmpty) Seq.empty[String]
         else Seq(writeDvlogFile(kept))
-      val tmp = Paths.get(path, s"_graft_manifest.tmp.${System.nanoTime()}")
-      Files.writeString(tmp,
+      GraftFs.publish(manifest,
         manifestJson(ver, "vacuum", segs, Seq.empty, consolidated))
-      Files.move(tmp, manifest, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
       // superseded dvlog files stay on disk for readers holding the
       // previous manifest; touched so vacuum's sweep (which runs right
       // after this, in the same call) grants them the full graceMs
@@ -1973,20 +1913,14 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     }
     // prune the mirror log below the horizon checkpoint; readAt below
     // it now fails the contiguity check with a clean retention error
-    listDir(deltaLogDir).foreach { p =>
+    GraftFs.list(deltaLogDir).foreach { p =>
       val n = p.getFileName.toString
       val v = """^(\d{20})\.json$""".r.findFirstMatchIn(n)
         .orElse("""^(\d{20})\.checkpoint\.parquet$""".r.findFirstMatchIn(n))
         .map(_.group(1).toLong)
-      if (v.exists(_ < cut)) Files.deleteIfExists(p)
+      if (v.exists(_ < cut)) GraftFs.delete(p)
     }
   }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.delete(f))
-    }
 }
 
 object ManagedParquetTable {
@@ -2014,18 +1948,10 @@ object ManagedParquetTable {
   }
 
   private def pathSchema(spark: SparkSession, path: String): StructType = {
-    val conf = spark.sessionState.newHadoopConf()
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(conf)
+    val p = java.nio.file.Paths.get(path)
     val files =
-      if (!fs.exists(hp)) Nil
-      else if (fs.getFileStatus(hp).isDirectory)
-        fs.listStatus(hp).toSeq
-          .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet")
-            && !s.getPath.getName.startsWith("_")
-            && !s.getPath.getName.startsWith("."))
-          .map(_.getPath)
-      else Seq(hp)
+      if (java.nio.file.Files.exists(p)) DirectParquetIo.parquetFiles(Seq(p))
+      else Nil
     if (files.isEmpty || files.size > Cutovers.DriverSchemaMaxFiles)
       spark.read.option("mergeSchema", "true").parquet(path).schema
     else DirectParquetIo.footerSchema(spark, files)

@@ -311,7 +311,8 @@ object Multimodal {
       .iterator().asScala.toSeq
   }
 
-  /** Perf-probe hook (graft.tools.AudioProbe): decode + trivial fold. */
+  /** Warm-up hook (graft.Bench warms the m3 decode path with it):
+    * decode + trivial fold. */
   private[graft] def probeDecode(payload: Array[Byte]): Long = {
     val (sr, samples) = readPcm(payload)
     sr.toLong + samples.length

@@ -1,12 +1,12 @@
 package graft.similarity
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.DirectParquetIo
 
-import graft.io.ManagedParquetTable
+import graft.io.{GraftFs, ManagedParquetTable}
 
 /** Persisted, incrementally-maintained IVF-PQ index — the
   * billion-vector ANN architecture ([[VectorFunctions.ivfPqTopK]],
@@ -148,10 +148,25 @@ final class IncrementalIvfPqIndex(spark: SparkSession,
     val tmp = Paths.get(s"$dest.tmp.${System.nanoTime()}")
     DirectParquetIo.write(df, tmp.toString,
       graft.io.Cutovers.DriverState, "overwrite", singleFile = true)
-    Files.move(tmp, dest, StandardCopyOption.ATOMIC_MOVE)
+    GraftFs.move(tmp, dest)
   }
 
-  private def reorgMarker = Paths.get(indexPath, "_graft_reorg_inflight")
+  private def listsDir = Paths.get(indexPath, "lists")
+  private def stageOf(p: Path) = Paths.get(s"$p.reorg")
+
+  /** The reorg's swap: each piece asides to its `.old` twin and its
+    * `.reorg` staging moves in, behind `_graft_reorg_inflight`. */
+  private val reorgSwap = new GraftFs.AtomicSwap(Paths.get(indexPath),
+    "_graft_reorg_inflight", ".old", Seq("lists", "centroids", "codebooks"),
+    Seq("lists", "centroids", "codebooks").map(p => p -> s"$p.reorg"))
+
+  /** Forged-crash test seam: when ≥ 0, the reorg throws before its
+    * swap rename number `crashBeforeMove` (0-based, counted per reorg
+    * call) — how the spec kills a reorg inside the swap window. */
+  private[graft] def crashBeforeMove: Int =
+    GraftFs.AtomicSwap.crashBeforeMove(reorgSwap.root)
+  private[graft] def crashBeforeMove_=(n: Int): Unit =
+    GraftFs.AtomicSwap.crashBeforeMove(reorgSwap.root, n)
 
   /** Every read/maintenance entry point refuses while a reorg marker
     * is up: inside the swap window, codes and codebooks can disagree —
@@ -161,16 +176,10 @@ final class IncrementalIvfPqIndex(spark: SparkSession,
     * [[recoverReorg]] — discard staging, restore the committed
     * pre-reorg index — never a rebuild. */
   private def requireNoReorg(): Unit =
-    require(!Files.exists(reorgMarker),
+    require(!reorgSwap.inflight,
       s"index at $indexPath has an interrupted reorg (marker " +
-        s"$reorgMarker) — call recoverReorg() (or re-run reorg()) to " +
+        s"${reorgSwap.marker}) — call recoverReorg() (or re-run reorg()) to " +
         "roll back to the committed pre-reorg index; no rebuild needed")
-
-  private def rmDir(p: Path): Unit = {
-    val hp = new org.apache.hadoop.fs.Path(p.toString)
-    hp.getFileSystem(spark.sessionState.newHadoopConf()).delete(hp, true)
-    ()
-  }
 
   /** REORG the index against the live source distribution: retrain
     * the coarse centroids (same nlist) and the PQ codebooks from the
@@ -210,9 +219,8 @@ final class IncrementalIvfPqIndex(spark: SparkSession,
     // a leftover marker from a mid-swap death rolls back FIRST:
     // staging is discarded, the committed pre-reorg index returns to
     // service, and this run re-stages from scratch
-    if (Files.exists(reorgMarker)) recoverReorg()
+    if (reorgSwap.inflight) recoverReorg()
     require(isTrained, s"index at $indexPath is not trained")
-    moveCount = 0
     // mirror-proven head (see refresh): read() below may serve a few
     // rows past it — they replay idempotently on the next refresh
     val headV = math.min(source.version - 1, source.mirrorStableVersion)
@@ -232,18 +240,7 @@ final class IncrementalIvfPqIndex(spark: SparkSession,
     // the next run clears here
     val stageC = stageOf(centroidsDir)
     val stageB = stageOf(codebooksDir)
-    rmDir(stageC); rmDir(stageB); rmDir(stageOf(listsDir))
-    // stale .old twins are garbage from a COMPLETED reorg whose tail
-    // cleanup died (marker already cleared, so the live pieces are
-    // authoritative). They must go BEFORE this run's marker goes up:
-    // a crash inside this run's swap would otherwise leave a mix of
-    // fresh and stale .old dirs, and recoverReorg — which restores
-    // every piece whose .old exists — would roll different pieces
-    // back to DIFFERENT reorgs (codes and codebooks from different
-    // trainings: silently wrong ADC scores, the one state this whole
-    // protocol exists to prevent)
-    rmDir(oldOf(listsDir)); rmDir(oldOf(centroidsDir))
-    rmDir(oldOf(codebooksDir))
+    Seq(stageC, stageB, stageOf(listsDir)).foreach(GraftFs.delete)
     writeFrozen(newCents, stageC)
     writeFrozen(newCbs.select(col("sub"), col("code"), col("centroid")),
       stageB)
@@ -256,68 +253,25 @@ final class IncrementalIvfPqIndex(spark: SparkSession,
       stageOf(listsDir).toString)
     staged.overwrite(clustered(VectorFunctions.ivfPqEncode(
       live, cents2, cbs2, m, ksub, dim, idCol, vecCol), nFull))
-    // marker brackets ONLY the swap renames; not cleared in a finally —
-    // a failure must LEAVE it so entry points refuse the mixed state
-    // until recoverReorg rolls it back
-    Files.createDirectories(Paths.get(indexPath))
-    Files.createFile(reorgMarker)
-    swap(listsDir)
-    swap(centroidsDir)
-    swap(codebooksDir)
+    // marker brackets ONLY the swap renames; a failure LEAVES it so
+    // entry points refuse the mixed state until recoverReorg rolls it
+    // back. Stale .old twins of a completed reorg whose tail cleanup
+    // died go before the marker (the swap drops them): a rollback
+    // restoring a mix of fresh and stale twins would pair codes and
+    // codebooks from different trainings — silently wrong ADC scores
+    reorgSwap.run(())
     // marker down = the swap committed; basis AFTER (see contract)
-    Files.delete(reorgMarker)
     tracker.publish(headV, lineage)
-    rmDir(oldOf(listsDir)); rmDir(oldOf(centroidsDir))
-    rmDir(oldOf(codebooksDir))
-  }
-
-  private def listsDir = Paths.get(indexPath, "lists")
-  private def oldOf(p: Path) = Paths.get(s"$p.old")
-  private def stageOf(p: Path) = Paths.get(s"$p.reorg")
-
-  /** Forged-crash test seam: when ≥ 0, [[moveAtomic]] throws before
-    * performing rename number `crashBeforeMove` (0-based, counted per
-    * reorg call) — how the spec kills a reorg inside the swap window. */
-  private[graft] var crashBeforeMove: Int = -1
-  private var moveCount = 0
-
-  private def moveAtomic(a: Path, b: Path): Unit = {
-    if (crashBeforeMove >= 0 && moveCount >= crashBeforeMove)
-      throw new RuntimeException(
-        s"forged crash before reorg rename #$moveCount")
-    moveCount += 1
-    Files.move(a, b, StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  /** Two-rename swap of one index piece: live → .old, staged → live.
-    * Recovery reverses it from whichever rename a death left behind. */
-  private def swap(live: Path): Unit = {
-    rmDir(oldOf(live))
-    moveAtomic(live, oldOf(live))
-    moveAtomic(stageOf(live), live)
   }
 
   /** Roll BACK an interrupted reorg ("discard staging"): every piece
     * whose `.old` twin exists is restored from it (covering a death
-    * between the two renames of a swap, or after both), staging dirs
+    * after any rename of the swap), staging dirs
     * are removed, the marker clears. The index then serves the
     * committed pre-reorg state exactly as it was — lists, artifacts
     * AND basis (the basis only publishes after a completed swap), so
     * refresh()/topK() resume immediately and `reorg()` can re-run. */
-  def recoverReorg(): Unit = {
-    require(Files.exists(reorgMarker),
-      s"no interrupted reorg at $indexPath")
-    // reverse swap order
-    for (live <- Seq(codebooksDir, centroidsDir, listsDir)) {
-      val old = oldOf(live)
-      if (Files.exists(old)) {
-        rmDir(live) // the staged piece already moved in (or nothing)
-        Files.move(old, live, StandardCopyOption.ATOMIC_MOVE)
-      }
-      rmDir(stageOf(live))
-    }
-    Files.delete(reorgMarker)
-  }
+  def recoverReorg(): Unit = reorgSwap.rollback()
 
   /** Range-cluster an encode batch by centroid_id so each parquet file
     * covers a tight centroid range — what makes the stats sidecar
@@ -410,7 +364,7 @@ final class IncrementalIvfPqIndex(spark: SparkSession,
       policy: IvfPqMaintenancePolicy = IvfPqMaintenancePolicy()):
       Seq[graft.io.MaintenanceAction] = {
     import graft.io.MaintenanceAction
-    if (Files.exists(reorgMarker))
+    if (reorgSwap.inflight)
       return Seq(MaintenanceAction("recoverReorg", "reorg_marker", 1L,
         0L, 0L, "interrupted reorg: roll back to the committed " +
           "pre-reorg index (re-running reorg() also recovers on entry)"))
@@ -456,7 +410,7 @@ final class IncrementalIvfPqIndex(spark: SparkSession,
     }
 
   /** O(1) marker probe — see [[graft.io.IndexMaintainer.needsRecovery]]. */
-  override def needsRecovery(): Boolean = Files.exists(reorgMarker)
+  override def needsRecovery(): Boolean = reorgSwap.inflight
 
   /** The probe plan's file-skipping decision for `queries` at
     * `nprobe`: (files the scan opens, total live index files) —

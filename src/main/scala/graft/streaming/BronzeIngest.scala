@@ -337,7 +337,7 @@ object BronzeIngest {
       batch: DataFrame, batchId: Long, appId: String,
       maintainers: Seq[graft.io.IndexMaintainer],
       maintenanceEvery: Int = 0): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import java.nio.file.{Files, Paths}
     val tag = s"graft-stream:$appId:$batchId"
     // filename: appId sanitized for readability PLUS a CONTENT hash
     // (SHA-256 prefix) of the verbatim appId — sanitization alone can
@@ -409,10 +409,7 @@ object BronzeIngest {
           // floor AFTER the append it names, derived from the append's
           // OWN commit version (manifest versions are 1-based, mirror
           // numbers 0-based); atomic so a reader never sees a torn pair
-          val tmp = Paths.get(s"$floorFile.tmp.${System.nanoTime()}")
-          Files.writeString(tmp, s"${v - 1}\n$tag")
-          Files.move(tmp, floorFile, StandardCopyOption.ATOMIC_MOVE,
-            StandardCopyOption.REPLACE_EXISTING)
+          graft.io.GraftFs.publish(floorFile, s"${v - 1}\n$tag")
         }
       } finally bRdd.unpersist()
     }
@@ -503,34 +500,34 @@ object BronzeIngest {
 final class BufferedFlushSink(spark: SparkSession, targetPath: String,
     stagingPath: String, maxRows: Long, idleMs: Long,
     clock: () => Long = () => System.currentTimeMillis()) {
-  import java.nio.file.{Files, Paths, StandardCopyOption}
+  import java.nio.file.{Files, NoSuchFileException, Paths}
+  import graft.io.GraftFs
   private val target = new graft.io.ManagedParquetTable(spark, targetPath)
   private val staging = new graft.io.ManagedParquetTable(spark, stagingPath)
   private def intentPath = Paths.get(stagingPath, "_graft_flush_intent")
   recoverInterruptedFlush()
   private var staged: Long =
-    if (staging.exists) try staging.read().count() catch { case _: Throwable => 0L }
+    if (staging.exists) try staging.read().count()
+      catch { case _: NoSuchFileException => 0L }
     else 0L
   private var lastAppend: Long = clock()
 
   private def recoverInterruptedFlush(): Unit = {
     // sweep intent tmp files stranded by a crash between write and the
-    // atomic rename (they were never the live marker)
-    if (Files.isDirectory(Paths.get(stagingPath))) {
-      val s = Files.list(Paths.get(stagingPath))
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.toList
-          .filter(_.getFileName.toString.startsWith("_graft_flush_intent.tmp."))
-          .foreach(Files.deleteIfExists)
-      } finally s.close()
-    }
+    // atomic rename (they were never the live marker); older writers
+    // named them without the hidden-dot prefix
+    GraftFs.list(Paths.get(stagingPath))
+      .filter(_.getFileName.toString.stripPrefix(".")
+        .startsWith("_graft_flush_intent.tmp."))
+      .foreach(GraftFs.delete)
     if (Files.exists(intentPath)) {
-      // format: "<preVer>\n<flushId>"; unreadable/legacy → not landed
+      // format: "<preVer>\n<flushId>"; a legacy one-line or malformed
+      // intent → not landed. An IO fault reading the intent or the
+      // target's log propagates: guessing "not landed" would re-append
       val landed = try {
         val ls = Files.readString(intentPath).trim.split("\n", 2)
         ls.length == 2 && target.hasCommitTagged(ls(1).trim, ls(0).trim.toLong)
-      } catch { case _: Throwable => false }
+      } catch { case _: NoSuchFileException | _: NumberFormatException => false }
       if (landed && staging.exists)
         staging.deleteWhere(lit(true)) // promote already committed
       Files.deleteIfExists(intentPath)
@@ -564,12 +561,7 @@ final class BufferedFlushSink(spark: SparkSession, targetPath: String,
       // carries the id as commit userMetadata so a restart can tell
       // whether THIS promote landed (see class doc)
       val flushId = java.util.UUID.randomUUID().toString
-      val tmp = Paths.get(stagingPath,
-        s"_graft_flush_intent.tmp.${System.nanoTime()}")
-      Files.createDirectories(Paths.get(stagingPath))
-      Files.writeString(tmp, s"${target.version}\n$flushId")
-      Files.move(tmp, intentPath, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
+      GraftFs.publish(intentPath, s"${target.version}\n$flushId")
       if (target.exists) target.append(rows, Some(flushId))
       else target.overwrite(rows, Some(flushId))
       staging.deleteWhere(lit(true))

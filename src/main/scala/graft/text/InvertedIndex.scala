@@ -4,7 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.DirectParquetIo
 
-import graft.io.Cutovers
+import java.nio.file.{Files, Paths}
+
+import graft.io.{Cutovers, GraftFs}
 
 /** Inverted token index + positional phrase search + BM25 ranking — the
   * targeted-retrieval layer of a training-data pipeline (find every
@@ -154,13 +156,13 @@ object InvertedIndex {
       nBuckets: Int = DefaultBuckets, mode: String = "overwrite",
       rowsHint: Long = -1L): Seq[String] = {
     val spark = postings.sparkSession
-    if (mode == "overwrite") deleteDir(spark, statsPathOf(path))
+    if (mode == "overwrite") GraftFs.delete(Paths.get(statsPathOf(path)))
     // the files THIS call adds = the dir listing's delta across the
     // write — a driver listing on each side instead of reading the
     // stats sidecar back through a Spark job per maintenance call
     // (on overwrite the dir is replaced wholesale: everything is new)
     val before: Set[String] =
-      if (mode == "append") listBucketFiles(spark, path, None).toSet
+      if (mode == "append") listBucketFiles(path, None).toSet
       else Set.empty
     // a maintenance WINDOW's postings delta (rowsHint = the window's
     // OBSERVED n_tokens, computed by the corpus-scalar aggregate the
@@ -196,14 +198,8 @@ object InvertedIndex {
     * records. */
   private def collectPostingsStats(spark: SparkSession,
       path: String, known: Set[String]): Seq[String] = {
-    import org.apache.hadoop.fs.Path
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    if (!fs.exists(root)) return Seq.empty
-    val files = listBucketFiles(spark, path, None)
     val sp = statsPathOf(path)
-    val fresh = files.filterNot(known)
+    val fresh = listBucketFiles(path, None).filterNot(known)
     if (fresh.isEmpty) return fresh
     // footer reads are independent and a bulk write touches one file
     // per bucket (64 by default) — serial driver reads would bill ~1s
@@ -264,29 +260,23 @@ object InvertedIndex {
     * same metadata any parquet scan of those dirs performs. `prefix`
     * selects the partition-dir family (`bucket=` postings,
     * `dbucket=` doclen). */
-  private def listBucketFiles(spark: SparkSession, path: String,
-      buckets: Option[Seq[Long]],
+  private def listBucketFiles(path: String, buckets: Option[Seq[Long]],
       prefix: String = "bucket="): Seq[String] = {
-    import org.apache.hadoop.fs.Path
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    if (!fs.exists(root)) return Seq.empty
+    val root = Paths.get(path)
     val dirs = buckets match {
-      case Some(bs) => bs.map(b => new Path(path, s"$prefix$b"))
-        .filter(fs.exists(_))
-      case None => fs.listStatus(root).toSeq
-        .filter(s => s.isDirectory &&
-          s.getPath.getName.startsWith(prefix))
-        .map(_.getPath)
+      case Some(bs) => bs.map(b => root.resolve(s"$prefix$b"))
+      case None => GraftFs.list(root).filter(d => Files.isDirectory(d) &&
+        d.getFileName.toString.startsWith(prefix))
     }
-    dirs.flatMap { d =>
-      fs.listStatus(d).toSeq
-        .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-          !s.getPath.getName.startsWith("."))
-        .map(s => s"${d.getName}/${s.getPath.getName}")
-    }
+    dirs.flatMap(d => dataFiles(d).map(f => s"${d.getFileName}/${f.getFileName}"))
   }
+
+  /** The files of `dir` a parquet scan reads (not `_`- or `.`-prefixed). */
+  private def dataFiles(dir: java.nio.file.Path): Seq[java.nio.file.Path] =
+    GraftFs.list(dir).filter { f =>
+      val n = f.getFileName.toString
+      Files.isRegularFile(f) && !n.startsWith("_") && !n.startsWith(".")
+    }
 
   /** The probe plan for `tokens` against a bucketed postings dir:
     * (files the scan will open, total files in the probed buckets).
@@ -318,7 +308,7 @@ object InvertedIndex {
     * one dir listing between planning and the scan it builds. */
   private def planFiles(spark: SparkSession, path: String,
       tokens: Seq[String], buckets: Seq[Long]): (Seq[String], Int) = {
-    val files = listBucketFiles(spark, path, Some(buckets))
+    val files = listBucketFiles(path, Some(buckets))
     // at most one file in EACH probed bucket (fresh build /
     // post-compaction) — skipping could at best reject one file per
     // bucket, which the scan's own row-group stats do for free, so
@@ -329,10 +319,7 @@ object InvertedIndex {
     if (files.groupBy(_.takeWhile(_ != '/')).values
         .forall(_.size <= 1)) return (files, files.size)
     val sp = statsPathOf(path)
-    val fs = new org.apache.hadoop.fs.Path(sp)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(new org.apache.hadoop.fs.Path(sp)))
-      return (files, files.size)
+    if (!Files.exists(Paths.get(sp))) return (files, files.size)
     val conj = graft.io.FileStats.Conjunct("token", "in",
       tokens.map(t =>
         (org.apache.spark.unsafe.types.UTF8String.fromString(t),
@@ -400,11 +387,6 @@ object InvertedIndex {
       .select(col("token"), col("doc_id"), col("pos"))
   }
 
-  private def deleteDir(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
-  }
-
   // ---------------------------------------------------------------------
   // Persisted retrieval index: postings carry the doc length, so a BM25
   // probe needs NOTHING doc-keyed beyond the query terms' own buckets.
@@ -454,18 +436,12 @@ object InvertedIndex {
     * Spark's scan converts it (driver IO, no Spark job); None when the
     * sidecar holds no file yet. */
   private def storedIdType(spark: SparkSession, path: String):
-      Option[org.apache.spark.sql.types.DataType] = {
-    import org.apache.hadoop.fs.Path
-    val dir = new Path(s"$path/doclen")
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(dir)) return None
-    fs.listStatus(dir).toSeq.filter(_.isDirectory)
-      .sortBy(_.getPath.getName).iterator
-      .flatMap(d => fs.listStatus(d.getPath).toSeq)
-      .find(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+      Option[org.apache.spark.sql.types.DataType] =
+    GraftFs.list(Paths.get(path, "doclen")).filter(Files.isDirectory(_))
+      .sortBy(_.getFileName.toString).iterator
+      .flatMap(dataFiles).find(_.getFileName.toString.endsWith(".parquet"))
       .map(f => graft.io.ManagedParquetTable.footerMergedSchema(spark,
-        Seq(f.getPath.toString))("doc_id").dataType)
-  }
+        Seq(f.toString))("doc_id").dataType)
 
   /** The index's bucket count is SELF-DESCRIBING: [[buildIndex]]
     * records it in `_graft_index_meta` and every post-build operation
@@ -473,15 +449,10 @@ object InvertedIndex {
     * pre-meta index). Bucket placement — postings dirs AND doclen
     * dbuckets — depends on the modulus, so a maintenance call passing
     * a different count than the build would otherwise write to /
-    * probe the wrong buckets silently. */
-  private def writeMeta(spark: SparkSession, path: String,
-      nBuckets: Int): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_graft_index_meta")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(p, true)
-    try out.write(s"nBuckets=$nBuckets\n".getBytes("UTF-8"))
-    finally out.close()
-  }
+    * probe the wrong buckets silently. Published atomically: a crash
+    * mid-write leaves the old meta, never a torn one. */
+  private def writeMeta(path: String, nBuckets: Int): Unit =
+    GraftFs.publish(Paths.get(path, "_graft_index_meta"), s"nBuckets=$nBuckets\n")
 
   /** [[indexBuckets]] for callers holding a POSTINGS dir: the meta is
     * at the index root, the postings dir's parent. A raw
@@ -489,7 +460,7 @@ object InvertedIndex {
     * resolves to the fallback — exactly the layout-level contract. */
   private def postingsBuckets(spark: SparkSession, postingsPath: String,
       fallback: Int): Int = {
-    val parent = new org.apache.hadoop.fs.Path(postingsPath).getParent
+    val parent = Paths.get(postingsPath).getParent
     if (parent == null) fallback
     else indexBuckets(spark, parent.toString, fallback)
   }
@@ -501,22 +472,36 @@ object InvertedIndex {
     // (compaction or rebucket died mid-rename) refuse service: the
     // meta and the postings dirs may disagree on the modulus, and a
     // probe would silently read the WRONG buckets
-    requireNoSwap(spark, path)
-    val p = new org.apache.hadoop.fs.Path(s"$path/_graft_index_meta")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) fallback
+    requireNoSwap(path)
+    // only a pre-meta index takes the fallback: a present meta that
+    // does not parse would otherwise send every probe to the caller's
+    // modulus silently
+    val p = Paths.get(path, "_graft_index_meta")
+    if (!Files.exists(p)) fallback
     else {
-      val in = fs.open(p)
-      try {
-        val txt = scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        """nBuckets=(\d+)""".r.findFirstMatchIn(txt)
-          .map(_.group(1).toInt).getOrElse(fallback)
-      } finally in.close()
+      val txt = Files.readString(p)
+      """nBuckets=(\d+)""".r.findFirstMatchIn(txt).map(_.group(1).toInt)
+        .getOrElse(throw new IllegalStateException(s"index meta $p " +
+          s"records no bucket count (holds '${txt.take(64)}') — rebuild " +
+          "the index or restore its meta"))
     }
   }
 
-  private def swapMarker(path: String) =
-    new org.apache.hadoop.fs.Path(s"$path/_graft_swap_inflight")
+  /** Live names a layout swap replaces or drops; each is ASIDED to a
+    * `.pre` twin inside the marker window (rename, never delete) so a
+    * mid-swap death rolls back by restoring the twins — the same
+    * [[GraftFs.AtomicSwap]] as IVF-PQ reorg()'s `.old` protocol. Nothing
+    * ever reads a `.pre` path: probes and maintenance address these
+    * names exactly, so the asides are invisible outside recovery. */
+  private val SwapNames = Seq("postings", "postings_stats", "doclen",
+    "corpus", "tombstones", "_graft_genfiles", "_graft_index_meta")
+
+  /** The layout swap of the index at `path`: the compaction's staged
+    * pieces move in behind `_graft_swap_inflight`. */
+  private def layoutSwap(path: String) = new GraftFs.AtomicSwap(Paths.get(path),
+    "_graft_swap_inflight", ".pre", SwapNames,
+    Seq("postings" -> "postings.compact", "postings_stats" -> "postings.compact_stats",
+      "doclen" -> "doclen.compact", "corpus" -> "corpus.compact"))
 
   /** Refuse while a layout swap (compaction/rebucket dir renames) is
     * in flight or died mid-way: unlike a torn GENERATION (which the
@@ -525,11 +510,11 @@ object InvertedIndex {
     * doubt. Recovery is [[recoverSwap]] (rollback to the committed
     * pre-swap state from the `.pre` aside twins — never a rebuild);
     * [[compactIndex]]/[[rebucket]] run it themselves on entry. */
-  private def requireNoSwap(spark: SparkSession, path: String): Unit = {
-    val p = swapMarker(path)
-    if (p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p))
+  private def requireNoSwap(path: String): Unit = {
+    val swap = layoutSwap(path)
+    if (swap.inflight)
       throw new IllegalStateException(
-        s"index at $path has an interrupted layout swap (marker $p) — " +
+        s"index at $path has an interrupted layout swap (marker ${swap.marker}) — " +
           "a compaction or rebucket died mid-rename and the bucket " +
           "layout may disagree with the meta; call recoverSwap() (or " +
           "re-run compactIndex/rebucket) to roll back to the committed " +
@@ -571,21 +556,16 @@ object InvertedIndex {
     // stale higher-gen tombstone would silently kill fresh gen-0
     // postings (postings/doclen/corpus are overwritten below)
     val spark = docs.sparkSession
-    val tp = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    tp.getFileSystem(spark.sessionState.newHadoopConf()).delete(tp, true)
     // a rebuild is also the blunt recovery path: any in-flight marker
     // (torn generation OR torn layout swap) refers to state the
-    // overwrite below replaces wholesale
-    val ip = new org.apache.hadoop.fs.Path(inflightDir(path))
-    val ifs = ip.getFileSystem(spark.sessionState.newHadoopConf())
-    ifs.delete(ip, true)
-    ifs.delete(swapMarker(path), false)
-    // stale manifests describe the OLD files: drop them FIRST so a
-    // crash mid-build leaves a manifest-less index (repair falls back
-    // to the footer sweep instead of trusting a lying base)
-    val gp = new org.apache.hadoop.fs.Path(genfilesDir(path))
-    gp.getFileSystem(spark.sessionState.newHadoopConf()).delete(gp, true)
-    writeMeta(spark, path, nBuckets)
+    // overwrite below replaces wholesale. Stale manifests describe the
+    // OLD files: drop them FIRST so a crash mid-build leaves a
+    // manifest-less index (repair falls back to the footer sweep
+    // instead of trusting a lying base)
+    Seq(Paths.get(path, "tombstones"), Paths.get(inflightDir(path)),
+      layoutSwap(path).marker, Paths.get(genfilesDir(path)))
+      .foreach(GraftFs.delete)
+    writeMeta(path, nBuckets)
     // one tokenize pass feeds all three artifacts (postings, doclen,
     // corpus scalars) — without the cache each write re-reads and
     // re-tokenizes the full document set
@@ -614,7 +594,7 @@ object InvertedIndex {
         s"$path/corpus", overwrite = true)
       // the build's files are committed state: snapshot them as `base`
       // so crash repair classifies by manifest, never by footer
-      writeGenManifest(spark, path, "base", listAllDataFiles(spark, path))
+      writeGenManifest(path, "base", listAllDataFiles(path))
     } finally toks.unpersist()
   }
 
@@ -657,20 +637,17 @@ object InvertedIndex {
     * sidecar is O(generations) tiny files, footer-read on the shared
     * bounded pool — the same planning-IO class as the table layer's
     * manifest reads; [[compactIndex]] / [[buildIndex]] reset it to one
-    * file, bounding growth by the reorg cadence. */
+    * file, bounding growth by the reorg cadence. Every reader of the
+    * commit record comes through here, so it refuses a torn layout swap
+    * before the corpus dir — possibly asided — is read. */
   private def corpusFooter(spark: SparkSession,
       path: String): Option[(Long, Long, Long)] = {
-    import org.apache.hadoop.fs.Path
-    val dir = new Path(s"$path/corpus")
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(dir)) return None
-    val files = fs.listStatus(dir).toSeq.filter(s => s.isFile &&
-      !s.getPath.getName.startsWith("_") &&
-      !s.getPath.getName.startsWith("."))
+    requireNoSwap(path)
+    val files = dataFiles(Paths.get(path, "corpus"))
     if (files.isEmpty) return None
     val perFile = fanOut(files) { f =>
       val st = graft.io.FileStats.footerStats(spark,
-        f.getPath.toString, f.getPath.getName)
+        f.toString, f.getFileName.toString)
       val rows = st.headOption.map(_.rows).getOrElse(-1L)
       val byCol = st.map(s => s.col -> s).toMap
       (byCol.get("n_docs").flatMap(_.minL),
@@ -704,33 +681,22 @@ object InvertedIndex {
 
   private def inflightDir(path: String): String = s"$path/_graft_inflight"
 
-  private def inflightGens(spark: SparkSession, path: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(inflightDir(path))
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
+  private def inflightGens(path: String): Seq[Long] =
+    GraftFs.list(Paths.get(inflightDir(path))).map(_.getFileName.toString)
       .collect { case s if s.startsWith("gen-") => s.drop(4).toLong }
-  }
 
-  private def markInflight(spark: SparkSession, path: String,
-      gen: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"${inflightDir(path)}/gen-$gen")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.create(p, true).close()
-  }
+  private def markInflight(path: String, gen: Long): Unit =
+    GraftFs.publish(Paths.get(inflightDir(path), s"gen-$gen"), "")
 
-  private def clearInflight(spark: SparkSession, path: String,
-      gen: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"${inflightDir(path)}/gen-$gen")
-    p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, false)
-  }
+  private def clearInflight(path: String, gen: Long): Unit =
+    GraftFs.delete(Paths.get(inflightDir(path), s"gen-$gen"))
 
   /** Whether a dead maintenance call left the writer gate down (an
     * in-flight generation marker) — the cheap probe a basis-tracked
     * maintainer ([[IncrementalInvertedIndex]]) checks before deciding
     * to [[repairIndex]]: one dir listing, no footer reads. */
   def needsRepair(spark: SparkSession, path: String): Boolean =
-    inflightGens(spark, path).nonEmpty
+    inflightGens(path).nonEmpty
 
   // Per-commit file manifests (`_graft_genfiles/`): `base` snapshots the
   // data files a build/compaction left (written at a provably-clean
@@ -749,41 +715,23 @@ object InvertedIndex {
 
   /** All data files of the index as manifest-relative paths
     * (`postings/bucket=…`, `doclen/dbucket=…`). */
-  private def listAllDataFiles(spark: SparkSession,
-      path: String): Seq[String] =
-    listBucketFiles(spark, s"$path/postings", None).map("postings/" + _) ++
-      listBucketFiles(spark, s"$path/doclen", None, "dbucket=")
-        .map("doclen/" + _)
+  private def listAllDataFiles(path: String): Seq[String] =
+    listBucketFiles(s"$path/postings", None).map("postings/" + _) ++
+      listBucketFiles(s"$path/doclen", None, "dbucket=").map("doclen/" + _)
 
-  /** Atomic manifest publish (temp + rename, dest replaced): a crash
-    * mid-write can never leave a TRUNCATED manifest in place — a short
-    * `base` would make repair classify committed files as torn. */
-  private def writeGenManifest(spark: SparkSession, path: String,
-      name: String, files: Seq[String]): Unit = {
-    import org.apache.hadoop.fs.Path
-    val dir = new Path(genfilesDir(path))
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.mkdirs(dir)
-    val tmp = new Path(dir, s".$name.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(files.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    val dest = new Path(dir, name)
-    fs.delete(dest, false) // single-writer: replace, never merge
-    if (!fs.rename(tmp, dest)) throw new IllegalStateException(
-      s"could not publish index manifest $dest")
-  }
+  /** Atomic manifest publish (temp + rename, dest replaced — single
+    * writer: replace, never merge): a crash mid-write can never leave a
+    * TRUNCATED manifest in place — a short `base` would make repair
+    * classify committed files as torn. */
+  private def writeGenManifest(path: String, name: String,
+      files: Seq[String]): Unit =
+    GraftFs.publish(Paths.get(genfilesDir(path), name), files.mkString("\n"))
 
-  private def readGenManifest(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Seq[String] = {
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8")
-      .getLines().filter(_.nonEmpty).toList
-    finally in.close()
-  }
+  private def readGenManifest(p: java.nio.file.Path): Seq[String] =
+    Files.readString(p).linesIterator.filter(_.nonEmpty).toList
 
   private def requireNoInflight(spark: SparkSession, path: String): Unit = {
-    val gens = inflightGens(spark, path)
+    val gens = inflightGens(path)
     if (gens.nonEmpty) throw new IllegalStateException(
       s"index at $path has in-flight generation(s) ${gens.sorted.mkString(",")} " +
         "from a maintenance call that did not commit; run " +
@@ -833,21 +781,17 @@ object InvertedIndex {
     * failed feed window simply replays ([[appendDocs]]'s guard sees
     * none of its docs live). */
   def repairIndex(spark: SparkSession, path: String): Long = {
-    import org.apache.hadoop.fs.Path
     val g = generation(spark, path)
-    val conf = spark.sessionState.newHadoopConf()
-    val gfDir = new Path(genfilesDir(path))
-    val gfs = gfDir.getFileSystem(conf)
-    val hasManifests = gfs.exists(new Path(gfDir, "base"))
+    val gfDir = Paths.get(genfilesDir(path))
     // torn files as (family dir, relative path) pairs
     val torn: Seq[(String, String)] =
-      if (hasManifests) {
-        val committed = (new Path(gfDir, "base") +:
-          gfs.listStatus(gfDir).toSeq.map(_.getPath).filter { p =>
-            val n = p.getName
+      if (Files.exists(gfDir.resolve("base"))) {
+        val committed = (gfDir.resolve("base") +:
+          GraftFs.list(gfDir).filter { p =>
+            val n = p.getFileName.toString
             n.startsWith("gen-") && n.drop(4).toLong < g
-          }).flatMap(readGenManifest(gfs, _)).toSet
-        val candidates = listAllDataFiles(spark, path)
+          }).flatMap(readGenManifest).toSet
+        val candidates = listAllDataFiles(path)
           .filterNot(committed).map { f =>
             val fam = f.takeWhile(_ != '/')
             (fam, f.drop(fam.length + 1))
@@ -859,10 +803,10 @@ object InvertedIndex {
       } else footerSweepTorn(spark, path, g)
     var removed = 0L
     for ((fam, rels) <- torn.groupBy(_._1)) {
-      val dir = s"$path/$fam"
-      val fs = new Path(dir).getFileSystem(conf)
+      val dir = Paths.get(path, fam)
+      // each data file goes with its checksum twin
       rels.foreach { case (_, rel) =>
-        if (fs.delete(new Path(s"$dir/$rel"), false)) removed += 1
+        if (GraftFs.delete(dir.resolve(rel))) removed += 1
       }
       // a torn file can be its partition dir's ONLY file (the dead call
       // appended into a bucket no prior commit had touched) — an empty
@@ -871,28 +815,27 @@ object InvertedIndex {
       // schema-inference error), so drop dirs the deletes emptied
       rels.map { case (_, rel) => rel.takeWhile(_ != '/') }
         .distinct.foreach { d =>
-          val dp = new Path(s"$dir/$d")
-          if (fs.exists(dp) && fs.listStatus(dp).isEmpty)
-            // recursive: listStatus hides checksum remnants (.crc) that
-            // would fail a non-recursive dir delete on a checksummed FS
-            fs.delete(dp, true)
+          // checksum remnants (`.<name>.crc`) do not keep a dir alive
+          val dp = dir.resolve(d)
+          if (Files.exists(dp) && GraftFs.list(dp).forall { f =>
+              val n = f.getFileName.toString
+              n.startsWith(".") && n.endsWith(".crc")
+            }) GraftFs.delete(dp)
         }
     }
     dropStatsRows(spark, statsPathOf(s"$path/postings"),
       torn.collect { case ("postings", rel) => rel }.toSet)
     // stale manifests of the torn generation(s) go with their files —
     // the gen number will be re-attempted and must not inherit a dead
-    // call's file list. Orphaned `.tmp` temps (a crash inside
+    // call's file list. Orphaned hidden `.tmp` temps (a crash inside
     // writeGenManifest, before its rename) are swept too: readers
     // never match them, but each crash would otherwise add one forever
-    if (gfs.exists(gfDir)) gfs.listStatus(gfDir).toSeq.map(_.getPath)
-      .filter { p =>
-        val n = p.getName
-        (n.startsWith("gen-") && n.drop(4).toLong >= g) ||
-          (n.startsWith(".") && n.endsWith(".tmp"))
-      }.foreach(gfs.delete(_, false))
-    val inflight = new Path(inflightDir(path))
-    inflight.getFileSystem(conf).delete(inflight, true)
+    GraftFs.list(gfDir).filter { p =>
+      val n = p.getFileName.toString
+      (n.startsWith("gen-") && n.drop(4).toLong >= g) ||
+        (n.startsWith(".") && n.contains(".tmp"))
+    }.foreach(GraftFs.delete)
+    GraftFs.delete(Paths.get(inflightDir(path)))
     removed
   }
 
@@ -904,7 +847,7 @@ object InvertedIndex {
     Seq(("postings", "bucket="), ("doclen", "dbucket=")).flatMap {
       case (fam, prefix) =>
         val dir = s"$path/$fam"
-        val files = listBucketFiles(spark, dir, None, prefix)
+        val files = listBucketFiles(dir, None, prefix)
         fanOut(files) { rel =>
           if (genProvesTorn(spark, dir, rel, g, unreadableIsTorn = false))
             Some((fam, rel))
@@ -962,11 +905,9 @@ object InvertedIndex {
     * [[repairIndex]] is a no-op on it). */
   private def dropStatsRows(spark: SparkSession, sp: String,
       dead: Set[String]): Unit = {
-    if (dead.isEmpty) return
-    val p = new org.apache.hadoop.fs.Path(sp)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) return
-    val tmp = new org.apache.hadoop.fs.Path(sp + ".repair")
+    val p = Paths.get(sp)
+    if (dead.isEmpty || !Files.exists(p)) return
+    val tmp = Paths.get(sp + ".repair")
     // a driver-read sidecar stays a LocalRelation through the filter, so
     // the rewrite goes driver-direct; an oversized one stays distributed
     val kept = DirectParquetIo.read(spark, Seq(java.nio.file.Paths.get(sp)),
@@ -974,8 +915,8 @@ object InvertedIndex {
       .getOrElse(spark.read.schema(graft.io.FileStats.schema).parquet(sp))
       .where(!col("file").isin(dead.toSeq: _*))
     DirectParquetIo.write(kept, tmp.toString, -1L, "overwrite", singleFile = true)
-    fs.delete(p, true)
-    fs.rename(tmp, p)
+    GraftFs.delete(p)
+    GraftFs.move(tmp, p)
   }
 
   /** Append new documents to an index built by [[buildIndex]]: their
@@ -1044,18 +985,15 @@ object InvertedIndex {
         // committed state as `base` NOW — the writer gate is up and no
         // marker exists, so the current listing is exactly the
         // committed files. One full listing, once per index.
-        val gfs = new org.apache.hadoop.fs.Path(genfilesDir(path))
-          .getFileSystem(spark.sessionState.newHadoopConf())
-        if (!gfs.exists(new org.apache.hadoop.fs.Path(
-            s"${genfilesDir(path)}/base")))
-          writeGenManifest(spark, path, "base",
-            listAllDataFiles(spark, path))
+        if (!Files.exists(Paths.get(genfilesDir(path), "base")))
+          writeGenManifest(path, "base",
+            listAllDataFiles(path))
         // commit protocol: marker BEFORE the first data write, cleared
         // only after the corpus row (the commit record) lands — never
         // in a finally, because a failure here must LEAVE the marker
         // for the writer gate + repairIndex to find
-        markInflight(spark, path, gen)
-        val dlBefore = listBucketFiles(spark, s"$path/doclen",
+        markInflight(path, gen)
+        val dlBefore = listBucketFiles(s"$path/doclen",
           Some(batchBuckets), "dbucket=").toSet
         // the window's corpus delta computes FIRST (one cheap job over
         // the pinned survivors): its n_tokens is the EXACT postings
@@ -1088,18 +1026,18 @@ object InvertedIndex {
         // repartitions on dbucket: one file per touched dir (see build).
         DirectParquetIo.write(dlRows, s"$path/doclen", nFresh, "append",
           partitionBy = Seq("dbucket"))
-        val dlFresh = listBucketFiles(spark, s"$path/doclen",
+        val dlFresh = listBucketFiles(s"$path/doclen",
           Some(batchBuckets), "dbucket=").filterNot(dlBefore)
         // this commit's file manifest lands AFTER its data files and
         // BEFORE the corpus row: if the corpus row commits, the
         // manifest is already durable; if it doesn't, gen >= committed
         // marks the manifest's files torn. Listings are pruned to the
         // batch's dbuckets (the postings delta rides the stats pass).
-        writeGenManifest(spark, path, s"gen-$gen",
+        writeGenManifest(path, s"gen-$gen",
           postFresh.map("postings/" + _) ++ dlFresh.map("doclen/" + _))
         writeCorpusRowRows(spark, corpusRows, corpusScalars.schema,
           s"$path/corpus", overwrite = false)
-        clearInflight(spark, path, gen)
+        clearInflight(path, gen)
       } finally freshRdd.unpersist()
     } finally batchRdd.unpersist()
   }
@@ -1178,20 +1116,15 @@ object InvertedIndex {
         // exist (64 per-dir existence probes would cost 64 driver
         // round-trips on an object store). basePath keeps the dbucket
         // column.
-        val parent = new org.apache.hadoop.fs.Path(s"$path/doclen")
-        val fs = parent.getFileSystem(spark.sessionState.newHadoopConf())
-        val present: Set[String] =
-          if (!fs.exists(parent)) Set.empty
-          else fs.listStatus(parent).toSeq.filter(_.isDirectory)
-            .map(_.getPath.getName).toSet
+        val present = GraftFs.list(Paths.get(path, "doclen"))
+          .filter(Files.isDirectory(_)).map(_.getFileName.toString).toSet
         val existing = bs.filter(b => present(s"dbucket=$b"))
-          .map(b => new org.apache.hadoop.fs.Path(
-            s"$path/doclen/dbucket=$b"))
+          .map(b => s"$path/doclen/dbucket=$b")
         if (existing.isEmpty)
           spark.read.parquet(s"$path/doclen")
             .where(col("dbucket").isin(bs: _*))
         else spark.read.option("basePath", s"$path/doclen")
-          .parquet(existing.map(_.toString): _*)
+          .parquet(existing: _*)
           .where(col("dbucket").isin(bs: _*))
       case None => spark.read.parquet(s"$path/doclen")
     }
@@ -1210,10 +1143,9 @@ object InvertedIndex {
     * + a broadcast-build job per maintenance/probe call; a larger one
     * stays the distributed scan. */
   private def tombstones(spark: SparkSession, path: String): Option[Tombstones] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    if (!p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)) None
-    else Some(DirectParquetIo.read(spark, Seq(java.nio.file.Paths.get(path, "tombstones")),
-        Cutovers.SidecarLocalBytes) match {
+    val p = Paths.get(path, "tombstones")
+    if (!Files.exists(p)) None
+    else Some(DirectParquetIo.read(spark, Seq(p), Cutovers.SidecarLocalBytes) match {
       case Some(local) => Tombstones(local, Some(local.collect()))
       case None => Tombstones(spark.read.parquet(p.toString), None)
     })
@@ -1358,14 +1290,11 @@ object InvertedIndex {
       policy: IndexMaintenancePolicy = IndexMaintenancePolicy()):
       Seq[graft.io.MaintenanceAction] = {
     import graft.io.MaintenanceAction
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(swapMarker(path)))
+    if (layoutSwap(path).inflight)
       return Seq(MaintenanceAction("recoverSwap", "swap_marker", 1L, 0L,
         0L, "interrupted layout swap: roll back to the committed " +
           "pre-swap index (compactIndex/rebucket also recover on entry)"))
-    val gens = inflightGens(spark, path)
+    val gens = inflightGens(path)
     if (gens.nonEmpty)
       return Seq(MaintenanceAction("repairIndex", "inflight_generations",
         gens.size.toLong, 0L, 0L,
@@ -1373,7 +1302,7 @@ object InvertedIndex {
           "every mutating call; probes stay correct meanwhile"))
     val out = Seq.newBuilder[MaintenanceAction]
     val nb = indexBuckets(spark, path, nBuckets)
-    val files = listBucketFiles(spark, s"$path/postings", None)
+    val files = listBucketFiles(s"$path/postings", None)
     val maxPb =
       if (files.isEmpty) 0
       else files.groupBy(_.split("/")(0)).valuesIterator.map(_.size).max
@@ -1409,14 +1338,11 @@ object InvertedIndex {
     out.result()
   }
 
-  /** Live names a layout swap replaces or drops; each is ASIDED to a
-    * `.pre` twin inside the marker window (rename, never delete) so a
-    * mid-swap death rolls back by restoring the twins — the retrieval
-    * analogue of IVF-PQ reorg()'s `.old` protocol. Nothing ever reads
-    * a `.pre` path: probes and maintenance address these names
-    * exactly, so the asides are invisible outside recovery. */
-  private val SwapNames = Seq("postings", "postings_stats", "doclen",
-    "corpus", "tombstones", "_graft_genfiles", "_graft_index_meta")
+  /** True when a leftover swap marker gates the index — the O(1)
+    * probe a per-batch policy loop affords (the full
+    * [[maintenancePlan]] pays listings + the corpus-scalar read). */
+  def needsSwapRecovery(spark: SparkSession, path: String): Boolean =
+    layoutSwap(path).inflight
 
   /** Roll back an interrupted layout swap (compaction/rebucket died
     * inside the marker window): every live piece whose `.pre` aside
@@ -1427,43 +1353,16 @@ object InvertedIndex {
     * [[compactIndex]]/[[rebucket]] call this themselves on a leftover
     * marker, so explicit recovery is only needed to restore PROBE
     * service without re-running the reorg. */
-  /** True when a leftover swap marker gates the index — the O(1)
-    * probe a per-batch policy loop affords (the full
-    * [[maintenancePlan]] pays listings + the corpus-scalar read). */
-  def needsSwapRecovery(spark: SparkSession, path: String): Boolean = {
-    import org.apache.hadoop.fs.Path
-    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-      .exists(swapMarker(path))
-  }
-
-  def recoverSwap(spark: SparkSession, path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(swapMarker(path)),
-      s"no interrupted layout swap at $path")
-    for (n <- SwapNames) {
-      val pre = new Path(s"$path/$n.pre")
-      if (fs.exists(pre)) {
-        fs.delete(new Path(s"$path/$n"), true)
-        fs.rename(pre, new Path(s"$path/$n"))
-      }
-    }
-    for (n <- Seq("postings.compact", "postings.compact_stats",
-        "doclen.compact", "corpus.compact"))
-      fs.delete(new Path(s"$path/$n"), true)
-    fs.delete(swapMarker(path), false)
-  }
+  def recoverSwap(spark: SparkSession, path: String): Unit =
+    layoutSwap(path).rollback()
 
   private def compactCore(spark: SparkSession, path: String,
       fallback: Int, target: Option[Int]): Unit = {
-    import org.apache.hadoop.fs.Path
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = new Path(path).getFileSystem(conf)
+    val swap = layoutSwap(path)
     // a leftover marker from a mid-swap death rolls back FIRST: the
     // committed pre-swap index returns to service and this run
     // re-stages from scratch (same contract as IvfPqIndex.reorg)
-    if (fs.exists(swapMarker(path))) recoverSwap(spark, path)
+    if (swap.inflight) swap.rollback()
     // the PRE-swap modulus resolves only after any rollback (the meta
     // it reads must be the committed one, and requireNoSwap inside
     // indexBuckets would refuse a torn layout); it is both the legacy
@@ -1471,9 +1370,6 @@ object InvertedIndex {
     val preNb = indexBuckets(spark, path, fallback)
     val nb = target.getOrElse(preNb)
     requireNoInflight(spark, path)
-    // stale `.pre` asides with NO marker are post-commit-crash garbage
-    // (the swap completed; cleanup didn't) — sweep before re-staging
-    SwapNames.foreach(n => fs.delete(new Path(s"$path/$n.pre"), true))
     val committed = generation(spark, path) // one footer read for both passes
     val livePost =
       // committed generations only — same contract as probes: torn
@@ -1501,46 +1397,30 @@ object InvertedIndex {
     // or a blind default would, after a mid-swap crash + rollback,
     // publish a meta disagreeing with the restored buckets and send
     // every probe to the wrong modulus silently
-    if (!fs.exists(new Path(s"$path/_graft_index_meta")))
-      writeMeta(spark, path, preNb)
-    // marker brackets ONLY the renames + the meta/manifest republish
-    // (all the expensive staging ran above, into paths the live index
-    // never reads): a death inside leaves a layout whose modulus is in
-    // doubt, requireNoSwap (via indexBuckets) makes every probe and
-    // maintenance call refuse it, and recoverSwap rolls it back —
-    // every live piece is ASIDED to a `.pre` twin (rename, never
-    // delete), so the pre-swap state survives the whole window. The
+    if (!Files.exists(Paths.get(path, "_graft_index_meta")))
+      writeMeta(path, preNb)
+    // the marker brackets ONLY the renames + the meta/manifest
+    // republish (all the expensive staging ran above, into paths the
+    // live index never reads): a death inside leaves a layout whose
+    // modulus is in doubt, requireNoSwap (via indexBuckets) makes every
+    // probe and maintenance call refuse it, and recoverSwap rolls it
+    // back. Stale `.pre` asides of a completed swap go first. The
     // per-commit manifests and tombstones aside too: they describe the
     // PRE-swap files, which is exactly the state a rollback restores;
     // on commit they are dropped with the other asides (the compacted
     // state has its tombstones folded and gets a fresh base manifest).
-    fs.create(swapMarker(path), true).close()
-    for (n <- SwapNames) {
-      val live = new Path(s"$path/$n")
-      if (fs.exists(live)) fs.rename(live, new Path(s"$path/$n.pre"))
+    swap.run {
+      // the meta must agree with the swapped-in layout before the gate
+      // lifts — this is what makes rebucket atomic from a prober's view
+      writeMeta(path, nb)
+      // the fresh base manifest is written INSIDE the marker window
+      // too: a crash between the commit point and a post-commit
+      // manifest write would leave the index with no _graft_genfiles
+      // at all (the old ones are asided) and degrade the next repair to
+      // the full footer sweep; in-window is safe because a rollback
+      // restores _graft_genfiles from its .pre twin over what we wrote
+      writeGenManifest(path, "base", listAllDataFiles(path))
     }
-    fs.rename(new Path(s"$path/postings.compact"),
-      new Path(s"$path/postings"))
-    fs.rename(new Path(s"$path/postings.compact_stats"),
-      new Path(s"$path/postings_stats"))
-    fs.rename(new Path(s"$path/doclen.compact"),
-      new Path(s"$path/doclen"))
-    fs.rename(new Path(s"$path/corpus.compact"),
-      new Path(s"$path/corpus"))
-    // the meta must agree with the swapped-in layout before the gate
-    // lifts — this is what makes rebucket atomic from a prober's view
-    writeMeta(spark, path, nb)
-    // the fresh base manifest is written INSIDE the marker window too:
-    // a crash between the commit point and a post-commit manifest
-    // write would leave the index with no _graft_genfiles at all (the
-    // old ones are asided) and degrade the next repair to the full
-    // footer sweep; in-window is safe because a rollback restores
-    // _graft_genfiles from its .pre twin over whatever we wrote here
-    writeGenManifest(spark, path, "base", listAllDataFiles(spark, path))
-    fs.delete(swapMarker(path), false) // commit point
-    // post-commit cleanup: the asides are garbage now (a crash between
-    // the commit and this sweep leaves them for the next compactCore)
-    SwapNames.foreach(n => fs.delete(new Path(s"$path/$n.pre"), true))
   }
 
   /** Live corpus scalars `(n_docs, n_tokens)`: build/append delta rows

@@ -63,14 +63,12 @@ object DeltaLogReplay {
   private def commits(tablePath: String): Seq[(Long, java.nio.file.Path)] = {
     val dir = Paths.get(tablePath, "_delta_log")
     require(Files.isDirectory(dir), s"no _delta_log at $tablePath")
-    val s = Files.list(dir)
-    try s.iterator().asScala.toSeq.flatMap { p =>
+    graft.io.GraftFs.list(dir).flatMap { p =>
       p.getFileName.toString match {
         case CommitName(v) => Some((v.toLong, p))
         case _ => None
       }
     }.sortBy(_._1)
-    finally s.close()
   }
 
   /** Live relative data-file paths at `asOfVersion` (latest when None),
@@ -148,12 +146,8 @@ object DeltaLogReplay {
     import org.apache.parquet.io.ColumnIOFactory
     import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
     if (!Files.isDirectory(dir)) return Seq.empty
-    val parts = {
-      val s = Files.list(dir)
-      try s.iterator().asScala.toList
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-      finally s.close()
-    }
+    val parts = graft.io.GraftFs.list(dir)
+      .filter(_.getFileName.toString.endsWith(".parquet"))
     val conf = new org.apache.hadoop.conf.Configuration()
     val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
     parts.foreach { p =>

@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graft
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
@@ -23,6 +23,8 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, Pa
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{StringType, StructType}
+
+import _root_.graft.io.GraftFs
 
 /** The driver-side parquet primitives behind every small commit and
   * every planning-sidecar read: one write, one read, and the footer row
@@ -58,8 +60,9 @@ object DirectParquetIo {
     * `executeCollect` (no job for a LocalRelation), sorted by
     * `partitionBy ++ sortBy` with Spark's own `SortOrder` ordering, and
     * written as one `part-00000-<nanotime>` file per partition dir,
-    * each written hidden and renamed into place: a death mid-write
-    * leaves no torn visible file. An overwrite first deletes `dest`;
+    * each written hidden and published by [[GraftFs.move]] (its
+    * checksum twin moves along): a death mid-write leaves no torn
+    * visible file. An overwrite first deletes `dest`;
     * an append of zero rows places nothing.
     *
     * Otherwise the distributed write: repartitioned on `partitionBy`
@@ -143,19 +146,17 @@ object DirectParquetIo {
       // dot-prefixed while in flight: invisible to parquet dir scans
       // and footer sweeps until the rename publishes it
       val tmp = dir.resolve(s".$name.inprogress")
-      placed += dir.resolve(s"..$name.inprogress.crc") // Hadoop's checksum
       placed += tmp
       val writer = factory.newInstance(tmp.toString, dataSchema, ctx)
       try (from until until).foreach { i => data.project(rows(i)); writer.write(data) }
       finally writer.close()
-      Files.move(tmp, dir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
+      GraftFs.move(tmp, dir.resolve(name))
       placed += dir.resolve(name)
     }
 
     try {
       if (mode == "overwrite") {
-        val hp = new org.apache.hadoop.fs.Path(dest)
-        hp.getFileSystem(sessionState.newHadoopConf()).delete(hp, true)
+        GraftFs.delete(root)
         ensureDir(root)
       }
       if (partIdx.isEmpty) {
@@ -173,8 +174,9 @@ object DirectParquetIo {
       }
     } catch {
       case e: Throwable =>
+        // each file goes with its checksum twin (in flight or published)
         placed.reverseIterator.foreach { p =>
-          try Files.deleteIfExists(p)
+          try GraftFs.delete(p)
           catch { case c: java.io.IOException => e.addSuppressed(c) }
         }
         throw e
@@ -237,9 +239,9 @@ object DirectParquetIo {
 
   /** The Spark schema of parquet `files`, merged from their footers on
     * the driver (no Spark job) — see [[mergedSchema]]. */
-  def footerSchema(spark: SparkSession, files: Seq[HadoopPath]): StructType = {
+  def footerSchema(spark: SparkSession, files: Seq[Path]): StructType = {
     val conf = spark.sessionState.newHadoopConf()
-    mergedSchema(spark, files.map(footerOf(_, conf)))
+    mergedSchema(spark, files.map(f => footerOf(new HadoopPath(f.toString), conf)))
   }
 
   private def footerOf(file: HadoopPath, conf: Configuration): Footer =
@@ -258,15 +260,11 @@ object DirectParquetIo {
   /** The parquet files at `paths`: a dir contributes the `.parquet`
     * files directly under it that a Spark scan sees (not `_`- or
     * `.`-prefixed), any other path is taken as a file. */
-  private def parquetFiles(paths: Seq[Path]): Seq[Path] = paths.flatMap { p =>
+  def parquetFiles(paths: Seq[Path]): Seq[Path] = paths.flatMap { p =>
     if (!Files.isDirectory(p)) Seq(p)
-    else {
-      val s = Files.list(p)
-      try s.iterator().asScala.filter { f =>
-        val n = f.getFileName.toString
-        n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-      }.toVector
-      finally s.close()
+    else GraftFs.list(p).filter { f =>
+      val n = f.getFileName.toString
+      n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
     }
   }
 }

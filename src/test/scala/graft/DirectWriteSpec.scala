@@ -17,8 +17,9 @@ import graft.text.InvertedIndex
   * written once with its observed row count at the gate (driver-direct)
   * and once over it (distributed) gives the same partition dirs, the
   * same rows in each, and the same footer min/max — for each write
-  * shape the engine uses. A failed direct write removes what it placed
-  * and rethrows. */
+  * shape the engine uses. A successful write leaves no in-flight name
+  * and no orphaned checksum twin; a failed direct write removes what it
+  * placed and rethrows. */
 class DirectWriteSpec extends SparkSpec {
   import spark.implicits._
 
@@ -37,9 +38,24 @@ class DirectWriteSpec extends SparkSpec {
   private def dirOf(rel: String): String =
     Option(Paths.get(rel).getParent).map(_.toString).getOrElse("")
 
+  /** A successful write leaves no in-flight name under `root`, and
+    * every Hadoop checksum twin (`.<name>.crc`) sits beside its file. */
+  private def assertClean(root: Path): Unit = {
+    val w = Files.walk(root)
+    val all = try w.iterator().asScala.toList finally w.close()
+    assert(!all.exists(_.getFileName.toString.contains(".inprogress")), all)
+    val orphans = all.filter { p =>
+      val n = p.getFileName.toString
+      n.startsWith(".") && n.endsWith(".crc") &&
+        !Files.exists(p.resolveSibling(n.drop(1).dropRight(4)))
+    }
+    assert(orphans.isEmpty, s"orphaned checksum twins: $orphans")
+  }
+
   /** Which side wrote the files under `root`: every file named by the
     * direct writer, or none. */
   private def side(root: Path): String = {
+    assertClean(root)
     val names = dataFiles(root).map(r => Paths.get(r).getFileName.toString)
     assert(names.nonEmpty, s"no data files under $root")
     if (names.forall(DirectName.matches)) "direct"
@@ -97,6 +113,7 @@ class DirectWriteSpec extends SparkSpec {
       dataFiles(root).filterNot(old.contains).map(r => Paths.get(r).getFileName.toString)
     assert(added(direct, before._1).forall(DirectName.matches))
     assert(added(dist, before._2).forall(!DirectName.matches(_)))
+    assertClean(direct); assertClean(dist)
     (direct, dist)
   }
 
@@ -167,6 +184,7 @@ class DirectWriteSpec extends SparkSpec {
         .collect().toSeq.sortBy(_.toString)
     assert(sidecar(direct).nonEmpty)
     assert(sidecar(direct) === sidecar(dist))
+    assertClean(Paths.get(direct + "_stats"))
 
     // one bucket, so one file holds every token: its rows must come out
     // in Spark's byte-wise UTF-8 order, where U+FF21 sorts before U+1F600
