@@ -58,6 +58,17 @@ object Cutovers {
     * broadcast consumers. */
   val FrozenLocalBytes = 32L << 20
 
+  /** Total bytes of the parquet files an index probe plans to open (a
+    * BM25 probe's kept postings files, an IVF-PQ probe's kept lists
+    * files) at or under which the probe is read and scored on the
+    * driver and returned as a LocalRelation: no Spark job, where the
+    * distributed plan costs a job per stage. The driver decodes every
+    * row of those files and keeps the matching ones, so the gate bounds
+    * both the probe's driver time and its memory; above it the
+    * distributed plan is the only path. SCALE.md records the measured
+    * crossover this value sits under. */
+  val ProbeLocalBytes = 4L << 20
+
   /** Parquet files per dir up to which its read schema is merged from
     * footers on the driver (no schema-inference job); a larger dir
     * keeps Spark's distributed inference, so driver footer IO stays

@@ -91,8 +91,10 @@ object GraftFs {
     * and drops the asides. Every step before the commit point keeps the
     * pre-swap state on disk — moved aside, never deleted — so a death
     * anywhere inside the window is undone by [[rollback]]: each piece
-    * with an aside twin is restored from it, staging is dropped, the
-    * marker clears. Readers must refuse service while [[inflight]]:
+    * with an aside twin is restored from it, each piece the marker names
+    * as absent before the swap is deleted (a staged piece moved onto it,
+    * or an in-window write created it), staging is dropped, the marker
+    * clears. Readers must refuse service while [[inflight]]:
     * inside the window the pieces may come from different commits.
     * Staging runs before [[run]], into paths no reader addresses, so a
     * death there leaves only stale staging for the next run. The names
@@ -110,13 +112,14 @@ object GraftFs {
     /** The swap (see the class doc). Runs with no marker up — a caller
       * rolls a leftover one back first — and drops stale asides of a
       * completed swap whose cleanup died before its own marker goes up,
-      * so a rollback can never mix asides of two different swaps. A
-      * failure leaves the marker up. */
+      * so a rollback can never mix asides of two different swaps. The
+      * marker is published naming the pieces absent before the swap,
+      * one a line. A failure leaves the marker up. */
     def run(inWindow: => Unit): Unit = {
       require(!inflight, s"a swap is in flight at $root (marker $marker)")
       pieces.foreach(p => delete(aside(p)))
-      Files.createDirectories(root)
-      Files.createFile(marker)
+      publish(marker, pieces.filterNot(p => Files.exists(root.resolve(p))).mkString("\n"),
+        replace = false)
       val crashAt = AtomicSwap.crashBeforeMove(root)
       var moves = 0
       def rename(a: Path, b: Path): Unit = {
@@ -135,13 +138,16 @@ object GraftFs {
     }
 
     /** Undo an interrupted [[run]] (see the class doc); requires the
-      * marker. */
+      * marker. An empty marker (an older binary's) names no absent
+      * piece. */
     def rollback(): Unit = {
       require(inflight, s"no interrupted swap at $root (marker $marker)")
+      val absent = Files.readString(marker).split("\n").toSet
       pieces.reverse.filter(p => Files.exists(aside(p))).foreach { p =>
         delete(root.resolve(p)) // the staged piece that moved in, if any
         move(aside(p), root.resolve(p))
       }
+      pieces.filter(absent).foreach(p => delete(root.resolve(p)))
       staged.foreach { case (_, s) => delete(root.resolve(s)) }
       delete(marker)
     }

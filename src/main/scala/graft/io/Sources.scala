@@ -378,10 +378,35 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     * [[pruneFiles]] exposes the planning decision for tests/metrics. */
   def readWhere(pred: org.apache.spark.sql.Column): DataFrame = {
     val (kept, total) = pruneFiles(pred)
+    readKept(pred, kept, total)
+  }
+
+  /** [[readWhere]] over the plan [[pruneFiles]] already made for `pred`. */
+  private[graft] def readKept(pred: org.apache.spark.sql.Column,
+      kept: Seq[String], total: Int): DataFrame =
     if (kept.isEmpty && total > 0) read().filter(pred).filter(lit(false))
     else if (kept.size == total) read().filter(pred)
     else scanPaths(kept.map(f => s"$path/$f"), liveDvEntriesFor(kept),
       keepPos = false).filter(pred)
+
+  /** The live rows of the table-relative parquet `files` (as
+    * [[pruneFiles]] names them) decoded on the driver
+    * ([[DirectParquetIo.LocalFiles]]): their merged schema and each
+    * file's rows in file order, minus the row positions its live
+    * deletion vectors name — the rows [[scanPaths]] returns for them.
+    * None when those deletion vectors do not pass
+    * [[Cutovers.DvLocalBytes]]: the caller keeps its distributed scan.
+    * Requires at least one file. */
+  private[graft] def readLocal(files: Seq[String]):
+      Option[(StructType, Seq[org.apache.spark.sql.catalyst.InternalRow])] = {
+    val dvs = liveDvEntriesFor(files)
+    val dead: Option[Set[(String, Long)]] =
+      if (dvs.isEmpty) Some(Set.empty) else dvTombstones(dvDirs(dvs))._2.map(_.toSet)
+    dead.map { d =>
+      val local = new DirectParquetIo.LocalFiles(spark, files.map(Paths.get(path, _)))
+      (local.schema, files.indices.flatMap(i =>
+        local.rows(i, (pos, _) => !d((files(i), pos)))))
+    }
   }
 
   /** (files kept after stats pruning, total live files). Both pruning
@@ -494,8 +519,9 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     * given conjuncts. Sketches are deserialized and probed on the
     * executors; only the (short) list of dead file names is collected —
     * the driver never materializes the sidecar, so probe memory is
-    * O(dead files), not O(files × cols × numBits). Missing/unreadable
-    * sidecar → empty set → no bloom skipping. */
+    * O(dead files), not O(files × cols × numBits). A missing sidecar
+    * skips nothing; an unreadable one throws, naming
+    * [[buildBloomIndex]]. */
   private def bloomDeadFiles(
       conjuncts: Seq[FileStats.Conjunct]): String => Boolean = {
     val probes = conjuncts.filter(_.op == "=")
@@ -518,7 +544,11 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
           if (hashes.exists(h => !bf.mightContainLong(h))) Some(r.getString(0))
           else None
         }.distinct().collect().toSet
-      catch { case _: Throwable => Set.empty[String] }
+      catch {
+        case e: org.apache.spark.SparkException =>
+          throw new IllegalStateException(s"bloom sidecar ${probeDir.get} is " +
+            "unreadable; rebuild it with buildBloomIndex", e)
+      }
     dead
   }
 
@@ -978,10 +1008,25 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
   private def footerRows(rels: Seq[String]): Long =
     DirectParquetIo.parquetRowCount(spark, rels.map(Paths.get(path, _)))
 
-  /** S10: healthy = manifest present, readable, non-empty. */
+  /** S10: healthy = manifest present, readable, non-empty. Only the
+    * corruption [[repair]] moves aside reads as unhealthy — a segment
+    * dir the manifest names is gone, or a data file is missing or does
+    * not read; any other failure (a cancelled job, a transient fault)
+    * propagates, so a healthy table is never moved aside. */
   def isHealthy: Boolean =
     try exists && read().limit(1).count() > 0
-    catch { case _: Throwable => false }
+    catch { case e: Exception if unreadable(e) => false }
+
+  /** Whether `e` is a missing or unreadable file: Spark's missing path
+    * or failed file read, or an IO failure anywhere in its causes. */
+  private def unreadable(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+      case _: java.io.IOException => true
+      case s: org.apache.spark.SparkThrowable => Option(s.getCondition).exists(c =>
+        c == "PATH_NOT_FOUND" || c.startsWith("FAILED_READ_FILE") ||
+          c == "CANNOT_READ_FILE_FOOTER")
+      case _ => false
+    }
 
   /** S10 repair: corrupted table moved aside, fresh state. */
   def repair(): Unit = if (!isHealthy && Files.exists(Paths.get(path))) {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.DirectParquetIo
 
-import graft.io.{GraftFs, ManagedParquetTable}
+import graft.io.{Cutovers, GraftFs, ManagedParquetTable}
 
 /** Persisted, incrementally-maintained IVF-PQ index — the
   * billion-vector ANN architecture ([[VectorFunctions.ivfPqTopK]],
@@ -337,19 +337,48 @@ final class IncrementalIvfPqIndex(spark: SparkSession,
   /** Probe-pruned ADC top-k from the STORED lists — identical scoring
     * to [[VectorFunctions.ivfPqTopK]], but stage 1 reads only the
     * index files whose centroid_id range intersects the probed lists
-    * (stats-sidecar file skipping via readWhere; the probed-id set is
-    * ≤ nlist values — planning state, not data). */
+    * (stats-sidecar file skipping; the probed-id set is ≤ nlist values
+    * — planning state, not data). A probe whose kept lists files pass
+    * [[Cutovers.ProbeLocalBytes]] is scored on the driver and, for a
+    * LocalRelation `queries`, runs no Spark job. */
   def topK(queries: DataFrame, k: Int, nprobe: Int,
-      shards: Int = 64): DataFrame = {
+      shards: Int = 64): DataFrame =
+    topKAt(queries, k, nprobe, shards, Cutovers.ProbeLocalBytes)
+
+  /** [[topK]] with its probe gate as a parameter, so one index can be
+    * probed on both sides. The probe set is derived once, on the driver,
+    * and serves the file plan, the gate, and either side: the local
+    * scorer ([[VectorFunctions.storedIvfPqTopKLocal]]) when the kept
+    * files are non-empty, total at most `localBytes`, their deletion
+    * vectors read driver-side and their id and centroid types are the
+    * probe set's; else the broadcast side of
+    * [[VectorFunctions.storedIvfPqTopK]]. */
+  private[graft] def topKAt(queries: DataFrame, k: Int, nprobe: Int,
+      shards: Int, localBytes: Long): DataFrame = {
     requireNoReorg()
-    val probes = VectorFunctions.ivfPqProbes(queries, centroids,
-      codebooks, m, ksub, dim, nprobe, idCol, vecCol)
-    val probedIds = probes.select(col("centroid_id"))
-      .distinct().collect().map(_.get(0))
-    val lists = table.readWhere(col("centroid_id").isin(probedIds: _*))
-    VectorFunctions.storedIvfPqTopK(lists, probes, m, ksub, k,
-      idCol, shards)
+    val probes = probeSet(queries, nprobe)
+    val pred = col("centroid_id").isin(probes.centroidIds: _*)
+    val (kept, total) = table.pruneFiles(pred)
+    val probeT = probes.frame.schema
+    val local =
+      if (kept.isEmpty ||
+          kept.map(f => Files.size(Paths.get(table.path, f))).sum > localBytes) None
+      else table.readLocal(kept).filter { case (schema, _) =>
+        schema(idCol).dataType == probeT("query_id").dataType &&
+          schema("centroid_id").dataType == probeT("centroid_id").dataType
+      }
+    local match {
+      case Some((schema, rows)) =>
+        VectorFunctions.storedIvfPqTopKLocal(probes, schema, rows, m, ksub, k, idCol)
+      case None => VectorFunctions.storedIvfPqTopK(table.readKept(pred, kept, total),
+        probes.frame, m, ksub, k, idCol, shards)
+    }
   }
+
+  /** The probe set of `queries` at `nprobe`, evaluated on the driver. */
+  private def probeSet(queries: DataFrame, nprobe: Int) =
+    VectorFunctions.ivfPqProbesLocal(queries, centroids, codebooks, m, ksub,
+      dim, nprobe, idCol, vecCol)
 
   /** Telemetry-driven maintenance recommendations — one
     * [[graft.io.MaintenanceAction]] per policy threshold crossed,
@@ -417,12 +446,8 @@ final class IncrementalIvfPqIndex(spark: SparkSession,
     * exposed so tests/metrics can assert probes stay list-local. */
   def probeFilePlan(queries: DataFrame, nprobe: Int): (Int, Int) = {
     requireNoReorg()
-    val probes = VectorFunctions.ivfPqProbes(queries, centroids,
-      codebooks, m, ksub, dim, nprobe, idCol, vecCol)
-    val probedIds = probes.select(col("centroid_id"))
-      .distinct().collect().map(_.get(0))
-    val (kept, total) =
-      table.pruneFiles(col("centroid_id").isin(probedIds: _*))
+    val (kept, total) = table.pruneFiles(
+      col("centroid_id").isin(probeSet(queries, nprobe).centroidIds: _*))
     (kept.size, total)
   }
 }

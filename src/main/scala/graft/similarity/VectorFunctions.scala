@@ -1,8 +1,16 @@
 package graft.similarity
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference,
+  Descending, InterpretedOrdering, Literal, Round, SortOrder}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType,
+  IntegerType, LongType, StructField, StructType}
+
+import graft.expressions.CosineSimExpr
 
 /** Vector similarity search over an embedding column (array<float>).
   *
@@ -724,6 +732,120 @@ object VectorFunctions {
       .withColumn("rn", row_number().over(probeW))
       .filter(col("rn") <= nprobe)
       .select(col("query_id"), col("lut"), col("centroid_id"))
+  }
+
+  /** A probe set evaluated on the driver ([[ivfPqProbesLocal]]): the
+    * LocalRelation `(query_id, lut, centroid_id)` and its internal rows. */
+  private[graft] final case class LocalProbes(frame: DataFrame,
+      rows: Seq[InternalRow]) {
+    /** The distinct probed centroid ids, as external values. */
+    def centroidIds: Seq[Any] = {
+      val t = frame.schema("centroid_id").dataType
+      rows.map(r => CatalystTypeConverters.convertToScala(r.get(2, t), t)).distinct
+    }
+  }
+
+  /** [[ivfPqProbes]] evaluated on the driver — the same rows by the same
+    * kernels: csim by the native cosine kernel under Spark's
+    * `round(·, 6)`, each LUT cell by [[dot]]'s ordered double fold, and
+    * per query_id the `nprobe` centroids by csim descending then
+    * centroid_id ascending. The query rows are collected (no Spark job
+    * for a LocalRelation, one otherwise), as are the centroids and
+    * codebooks; the probe set is (queries × nprobe) rows by contract,
+    * the size [[storedIvfPqTopK]] already broadcasts. */
+  private[graft] def ivfPqProbesLocal(queries: DataFrame, centroids: DataFrame,
+      codebooks: DataFrame, m: Int, ksub: Int, dim: Int, nprobe: Int,
+      idCol: String, vecCol: String): LocalProbes = {
+    val cb = collectCodebook(codebooks, m, ksub).map(_.map(_.toArray))
+    val sd = dim / m
+    val q = queries.select(col(idCol).as("query_id"), col(vecCol))
+    val c = centroids.select(col(idCol).as("centroid_id"), col(vecCol))
+    val Seq(qIdT, qVecT, cIdT, cVecT) =
+      Seq(q.schema(0), q.schema(1), c.schema(0), c.schema(1)).map(_.dataType)
+    val cRows = c.queryExecution.executedPlan.executeCollect()
+    val cosine = CosineSimExpr(BoundReference(0, qVecT, nullable = true),
+      BoundReference(1, cVecT, nullable = true))
+    val byCsim = new InterpretedOrdering(Seq(
+      SortOrder(BoundReference(0, DoubleType, nullable = true), Descending),
+      SortOrder(BoundReference(1, cIdT, nullable = true), Ascending)))
+    def lut(v: ArrayData): ArrayData = {
+      val x = doubles(v, qVecT)
+      new GenericArrayData(cb.indices.flatMap { s =>
+        cb(s).map { cv =>
+          var acc = 0.0
+          var i = 0
+          while (i < cv.length) { acc += x(s * sd + i) * cv(i); i += 1 }
+          acc
+        }
+      }.toArray[Any])
+    }
+    val byQuery = q.queryExecution.executedPlan.executeCollect().toSeq.groupBy(_.get(0, qIdT))
+    val rows = byQuery.toSeq.flatMap { case (qid, qs) =>
+      qs.flatMap { qr =>
+        val l = Option(qr.getArray(1)).map(lut).orNull
+        cRows.map { cr =>
+          val csim = round6(cosine.eval(InternalRow(qr.getArray(1), cr.getArray(1))))
+          (InternalRow(csim, cr.get(0, cIdT)), l)
+        }
+      }.sortBy(_._1)(byCsim).take(nprobe)
+        .map { case (key, l) => InternalRow(qid, l, key.get(1, cIdT)) }
+    }
+    val schema = StructType(Seq(q.schema(0),
+      StructField("lut", ArrayType(DoubleType, containsNull = true)), c.schema(0)))
+    LocalProbes(org.apache.spark.sql.graft.DirectParquetIo.localFrame(
+      queries.sparkSession, schema, rows), rows)
+  }
+
+  /** Spark's `round(d, 6)` of a double (or null), evaluated by its own
+    * expression. */
+  private def round6(d: Any): Any = Round6.eval(InternalRow(d))
+  private val Round6 = Round(BoundReference(0, DoubleType, nullable = true), Literal(6))
+
+  /** The elements of a numeric array as doubles (the `cast("double")`
+    * [[dot]] applies). */
+  private def doubles(a: ArrayData, t: DataType): Array[Double] =
+    t.asInstanceOf[ArrayType].elementType match {
+      case FloatType => a.toFloatArray().map(_.toDouble)
+      case DoubleType => a.toDoubleArray()
+      case IntegerType => a.toIntArray().map(_.toDouble)
+      case LongType => a.toLongArray().map(_.toDouble)
+      case other => throw new IllegalArgumentException(s"bad element: $other")
+    }
+
+  /** [[storedIvfPqTopK]] evaluated on the driver over decoded lists rows
+    * `lists` (of `schema`: idCol, centroid_id, codes) and a probe set:
+    * each probe row scores the rows of its list except the query itself
+    * — sim the rounded ordered fold of LUT lookups ([[pqScoreExpr]]) —
+    * and each query keeps its k best by sim descending then neighbor_id
+    * ascending, ranked 1..k. A LocalRelation with the distributed side's
+    * schema. */
+  private[graft] def storedIvfPqTopKLocal(probes: LocalProbes, schema: StructType,
+      lists: Seq[InternalRow], m: Int, ksub: Int, k: Int, idCol: String): DataFrame = {
+    val Seq(ni, ci, ki) = Seq(idCol, "centroid_id", "codes").map(schema.fieldIndex)
+    val (nT, cT) = (schema(ni).dataType, schema(ci).dataType)
+    val qField = probes.frame.schema("query_id")
+    val byList = lists.filterNot(_.isNullAt(ci)).groupBy(_.get(ci, cT))
+    val bySim = new InterpretedOrdering(Seq(
+      SortOrder(BoundReference(3, DoubleType, nullable = true), Descending),
+      SortOrder(BoundReference(2, nT, nullable = true), Ascending)))
+    val scored = probes.rows.flatMap { p =>
+      val qid = p.get(0, qField.dataType)
+      val lut = p.getArray(1).toDoubleArray()
+      byList.getOrElse(p.get(2, cT), Nil).collect {
+        case r if qid != null && !r.isNullAt(ni) && r.get(ni, nT) != qid =>
+          val codes = r.getArray(ki)
+          var acc = 0.0
+          var s = 0
+          while (s < m) { acc += lut(s * ksub + codes.getInt(s)); s += 1 }
+          InternalRow(qid, 0, r.get(ni, nT), round6(acc))
+      }
+    }
+    val rows = scored.groupBy(_.get(0, qField.dataType)).values.toSeq.flatMap { rs =>
+      rs.sorted(bySim).take(k).zipWithIndex.map { case (r, i) => r.setInt(1, i + 1); r }
+    }
+    org.apache.spark.sql.graft.DirectParquetIo.localFrame(probes.frame.sparkSession,
+      StructType(Seq(qField, StructField("rank", IntegerType, nullable = false),
+        StructField("neighbor_id", nT), StructField("sim", DoubleType))), rows)
   }
 
   /** ADC top-k over a STORED IVF-PQ index frame ([[ivfPqEncode]] rows:

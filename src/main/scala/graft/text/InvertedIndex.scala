@@ -349,7 +349,16 @@ object InvertedIndex {
   private def prunedPostings(spark: SparkSession, path: String,
       tokens: Seq[String], nBuckets: Int): DataFrame = {
     val buckets = bucketsFor(spark, tokens, nBuckets)
-    val (kept, total) = planFiles(spark, path, tokens, buckets)
+    postingsScan(spark, path, tokens, buckets,
+      planFiles(spark, path, tokens, buckets))
+  }
+
+  /** [[prunedPostings]] over the bucket set and file plan (kept, total)
+    * the caller already made. */
+  private def postingsScan(spark: SparkSession, path: String,
+      tokens: Seq[String], buckets: Seq[Long],
+      plan: (Seq[String], Int)): DataFrame = {
+    val (kept, total) = plan
     val base =
       if (kept.size == total || kept.isEmpty)
         // kept.isEmpty: every file provably dead — the dir scan with
@@ -1483,34 +1492,45 @@ object InvertedIndex {
     * gen), so probes over a torn index read exactly the last
     * committed state. */
   def openIndex(spark: SparkSession, path: String, tokens: Seq[String],
-      nBuckets: Int = DefaultBuckets): DataFrame =
-    openIndexAt(spark, path, tokens, nBuckets, generation(spark, path),
-      tombstones(spark, path))
-
-  /** [[openIndex]] core taking the caller's already-resolved committed
-    * generation and tombstones ([[bm25TopKIndexed]] shares ONE
-    * corpus-footer read and ONE tombstone read between this gate and
-    * [[corpusStats]] per probe). */
-  private def openIndexAt(spark: SparkSession, path: String,
-      tokens: Seq[String], nBuckets: Int, committed: Long,
-      ts: Option[Tombstones]): DataFrame = {
+      nBuckets: Int = DefaultBuckets): DataFrame = {
+    val committed = generation(spark, path)
+    val ts = tombstones(spark, path)
     require(tokens.nonEmpty, "empty token list")
-    val post = prunedPostings(spark, s"$path/postings", tokens,
-      indexBuckets(spark, path, nBuckets))
-      .where(col("gen") < lit(committed))
-      .select(col("token"), col("doc_id"), col("pos"), col("dl"), col("gen"))
+    livePostings(prunedPostings(spark, s"$path/postings", tokens,
+      indexBuckets(spark, path, nBuckets)), committed, ts)
+  }
+
+  /** The committed, untombstoned rows of a postings scan `post`, as
+    * `(token, doc_id, pos, dl)`: the caller resolved the committed
+    * generation and the tombstones once ([[bm25TopKIndexed]] shares ONE
+    * corpus-footer read and ONE tombstone read between this gate and
+    * the corpus scalars per probe). */
+  private def livePostings(post: DataFrame, committed: Long,
+      ts: Option[Tombstones]): DataFrame =
     // generation-scoped: a tombstone kills only OLDER postings of its
     // doc — literal predicate when tiny, broadcast anti-join otherwise
-    killTombstoned(ts, post).drop("gen")
-  }
+    killTombstoned(ts, post.where(col("gen") < lit(committed))
+      .select(col("token"), col("doc_id"), col("pos"), col("dl"), col("gen")))
+      .drop("gen")
 
   /** BM25 top-k served ENTIRELY from the persisted index: reads the
     * query terms' buckets and the one-row corpus sidecar, nothing else —
     * probe cost is O(query-term postings) regardless of corpus size.
     * Bit-identical to [[bm25TopK]] over the same live documents (same
-    * integer-exact scoring; df derived from the probed postings). */
+    * integer-exact scoring; df derived from the probed postings). A
+    * probe whose kept postings files pass [[Cutovers.ProbeLocalBytes]]
+    * is scored on the driver and runs no Spark job. */
   def bm25TopKIndexed(spark: SparkSession, path: String, query: String,
-      k: Int, nBuckets: Int = DefaultBuckets): DataFrame = {
+      k: Int, nBuckets: Int = DefaultBuckets): DataFrame =
+    bm25TopKIndexedAt(spark, path, query, k, nBuckets, Cutovers.ProbeLocalBytes)
+
+  /** [[bm25TopKIndexed]] with its probe gate as a parameter, so one
+    * index can be probed on both sides. The local side ([[bm25Local]])
+    * needs the corpus scalars on the driver (the corpus footer, and no
+    * tombstones or tombstones read driver-side) and a non-empty file
+    * plan of at most `localBytes`; otherwise the distributed plan. */
+  private[graft] def bm25TopKIndexedAt(spark: SparkSession, path: String,
+      query: String, k: Int, nBuckets: Int, localBytes: Long): DataFrame = {
     val terms = queryTokens(query).distinct
     require(terms.nonEmpty, "empty query")
     // ONE corpus-footer read serves both the committed-generation gate
@@ -1520,31 +1540,100 @@ object InvertedIndex {
     val committed = footer.map(_._1).getOrElse(
       spark.read.parquet(s"$path/corpus").count())
     val ts = tombstones(spark, path)
-    val post = openIndexAt(spark, path, terms, nBuckets, committed, ts)
-    val tf = post.groupBy(col("doc_id"), col("token"))
-      .agg(count(lit(1)).as("tf"), first(col("dl")).as("dl"))
-    val df = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
-    val withCorpus = corpusScalarsLocal(footer, ts) match {
-      // scalars known on the driver → literal columns (no one-row
-      // broadcast build job per probe); else the broadcast cross-join
-      case Some((n, t)) => tf.join(broadcast(df), "token")
-        .withColumn("__n", lit(n)).withColumn("__t", lit(t))
-      case None => tf.join(broadcast(df), "token")
-        .crossJoin(broadcast(corpusStatsFrom(spark, path, footer, ts)))
+    val postPath = s"$path/postings"
+    val buckets = bucketsFor(spark, terms, indexBuckets(spark, path, nBuckets))
+    val (kept, total) = planFiles(spark, postPath, terms, buckets)
+    val files = kept.map(f => Paths.get(postPath, f))
+    val scalars = corpusScalarsLocal(footer, ts)
+    scalars match {
+      case Some((n, t)) if files.nonEmpty && files.map(Files.size(_)).sum <= localBytes =>
+        bm25Local(spark, files, terms, k, committed, n, t, ts)
+      case _ =>
+        val post = livePostings(postingsScan(spark, postPath, terms, buckets,
+          (kept, total)), committed, ts)
+        val tf = post.groupBy(col("doc_id"), col("token"))
+          .agg(count(lit(1)).as("tf"), first(col("dl")).as("dl"))
+        val df = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
+        val withCorpus = scalars match {
+          // scalars known on the driver → literal columns (no one-row
+          // broadcast build job per probe); else the broadcast cross-join
+          case Some((n, t)) => tf.join(broadcast(df), "token")
+            .withColumn("__n", lit(n)).withColumn("__t", lit(t))
+          case None => tf.join(broadcast(df), "token")
+            .crossJoin(broadcast(corpusStatsFrom(spark, path, footer, ts)))
+        }
+        withCorpus
+          .withColumn("__s",
+            expr("(((__n * 1000) div df) * (tf * 22 * __t)) div " +
+              "(10 * __t * tf + 3 * __t + 9 * dl * __n)"))
+          .groupBy(col("doc_id"))
+          .agg(sum(col("__s")).as("score"), count(lit(1)).as("n_terms"))
+          .orderBy(col("score").desc, col("doc_id"))
+          .limit(k)
+          .withColumn("rank",
+            row_number().over(org.apache.spark.sql.expressions.Window
+              .orderBy(col("score").desc, col("doc_id"))))
+          .select(col("rank").cast("long").as("rank"), col("doc_id"),
+            col("score"), col("n_terms"))
     }
-    withCorpus
-      .withColumn("__s",
-        expr("(((__n * 1000) div df) * (tf * 22 * __t)) div " +
-          "(10 * __t * tf + 3 * __t + 9 * dl * __n)"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("__s")).as("score"), count(lit(1)).as("n_terms"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
-      .withColumn("rank",
-        row_number().over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("score").desc, col("doc_id"))))
-      .select(col("rank").cast("long").as("rank"), col("doc_id"),
-        col("score"), col("n_terms"))
+  }
+
+  /** The local side of [[bm25TopKIndexedAt]]: the kept postings `files`
+    * decoded on the driver and scored as the distributed plan scores
+    * them. A row counts when its token is a query term, its generation
+    * is committed and no tombstone of its doc carries a newer one; tf
+    * and dl per (doc, token), df per token, the same integer formula
+    * with every operation exact (ANSI Spark throws on overflow too),
+    * scores summed per doc, ordered by score descending then doc_id in
+    * Spark's order of its type, the first k ranked 1..k. A
+    * LocalRelation with the distributed side's schema. */
+  private def bm25Local(spark: SparkSession, files: Seq[java.nio.file.Path],
+      terms: Seq[String], k: Int, committed: Long, n: Long, t: Long,
+      ts: Option[Tombstones]): DataFrame = {
+    import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+    import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference,
+      Descending, InterpretedOrdering, SortOrder}
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    import org.apache.spark.unsafe.types.UTF8String
+    import Math.{addExact => add, multiplyExact => mul}
+    val local = new DirectParquetIo.LocalFiles(spark, files)
+    val docT = local.schema("doc_id").dataType
+    val Seq(ti, di, li, gi) = Seq("token", "doc_id", "dl", "gen").map(local.schema.fieldIndex)
+    val toDoc = CatalystTypeConverters.createToCatalystConverter(docT)
+    val killGen: Map[Any, Long] = ts.flatMap(_.rows).getOrElse(Array.empty)
+      .groupMapReduce(r => toDoc(r.getAs[Any]("doc_id")))(_.getAs[Long]("gen"))(math.max)
+    val termSet = terms.map(UTF8String.fromString).toSet
+    // (doc_id, token) → (tf, dl) over the rows the distributed plan keeps
+    val tf = scala.collection.mutable.HashMap.empty[(Any, UTF8String), Array[Long]]
+    files.indices.foreach { i =>
+      local.rows(i, (_, r) => !r.isNullAt(ti) && termSet(r.getUTF8String(ti)) &&
+        !r.isNullAt(gi) && r.getLong(gi) < committed &&
+        !killGen.get(r.get(di, docT)).exists(r.getLong(gi) < _))
+        .foreach { r =>
+          tf.getOrElseUpdate((r.get(di, docT), r.getUTF8String(ti)),
+            Array(0L, r.getLong(li)))(0) += 1
+        }
+    }
+    val df = tf.keys.toSeq.groupMapReduce(_._2)(_ => 1L)(_ + _)
+    // doc_id → (score, n_terms)
+    val byDoc = scala.collection.mutable.HashMap.empty[Any, Array[Long]]
+    tf.foreach { case ((doc, tok), Array(f, dl)) =>
+      val s = mul(mul(n, 1000L) / df(tok), mul(mul(f, 22L), t)) /
+        add(add(mul(mul(10L, t), f), mul(3L, t)), mul(mul(9L, dl), n))
+      val acc = byDoc.getOrElseUpdate(doc, Array(0L, 0L))
+      acc(0) = add(acc(0), s)
+      acc(1) += 1
+    }
+    val top = byDoc.toSeq.map { case (doc, Array(score, nt)) => InternalRow(0L, doc, score, nt) }
+      .sorted(new InterpretedOrdering(Seq(
+        SortOrder(BoundReference(2, LongType, nullable = true), Descending),
+        SortOrder(BoundReference(1, docT, nullable = true), Ascending))))
+      .take(k)
+    top.zipWithIndex.foreach { case (r, i) => r.setLong(0, i + 1L) }
+    DirectParquetIo.localFrame(spark, StructType(Seq(
+      StructField("rank", LongType, nullable = false), StructField("doc_id", docT),
+      StructField("score", LongType), StructField("n_terms", LongType, nullable = false))),
+      top)
   }
 
   /** BM25-ranked top-k documents for a bag-of-words query, with

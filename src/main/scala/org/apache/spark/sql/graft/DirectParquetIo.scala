@@ -201,11 +201,21 @@ object DirectParquetIo {
     val files = parquetFiles(dirs)
     if (files.map(Files.size(_)).sum > maxBytes) return None
     require(files.nonEmpty, s"no parquet file under ${dirs.mkString(", ")}")
-    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val conf = session.sessionState.conf
-    val hadoopConf = session.sessionState.newHadoopConf()
-    val footers = files.map(f => footerOf(new HadoopPath(f.toString), hadoopConf))
-    val schema = mergedSchema(spark, footers).asNullable
+    val local = new LocalFiles(spark, files)
+    Some(localFrame(spark, local.schema,
+      files.indices.flatMap(local.rows(_, (_, _) => true))))
+  }
+
+  /** Parquet `files` opened for a driver-side decode: each footer read
+    * once, their schema merged as [[read]] documents, and a per-file
+    * decode under that schema by Spark's own row-based reader — the one
+    * parquet decode of the engine. Requires at least one file. */
+  final class LocalFiles(spark: SparkSession, files: Seq[Path]) {
+    require(files.nonEmpty, "no parquet file to decode")
+    private val conf = spark.sessionState.conf
+    private val hadoopConf = spark.sessionState.newHadoopConf()
+    private val footers = files.map(f => footerOf(new HadoopPath(f.toString), hadoopConf))
+    val schema: StructType = mergedSchema(spark, footers).asNullable
     hadoopConf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, schema.json)
     // the reader's schema converter takes these from the Hadoop conf,
     // where a Spark scan sets them from the session
@@ -213,20 +223,31 @@ object DirectParquetIo {
         SQLConf.PARQUET_INT96_AS_TIMESTAMP, SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
         SQLConf.LEGACY_PARQUET_NANOS_AS_LONG)
       .foreach(e => hadoopConf.set(e.key, conf.getConfString(e.key)))
-    val options = new ParquetOptions(Map.empty[String, String], conf)
-    val rows = footers.flatMap { footer =>
+    private val options = new ParquetOptions(Map.empty[String, String], conf)
+
+    /** Copies of the rows of file `i`, in file order, that `keep` accepts;
+      * `keep` sees each row's position in its file (what a Spark scan
+      * reports as `_metadata.row_index`) and the reader's reused row. */
+    def rows(i: Int, keep: (Long, InternalRow) => Boolean): Vector[InternalRow] = {
+      val footer = footers(i)
       val meta = footer.getParquetMetadata.getFileMetaData.getKeyValueMetaData
       val support = new ParquetReadSupport(None, enableVectorizedReader = false,
         DataSourceUtils.datetimeRebaseSpec(meta.get, options.datetimeRebaseModeInRead),
         DataSourceUtils.int96RebaseSpec(meta.get, options.int96RebaseModeInRead))
       val reader = ParquetReader.builder(support, footer.getFile).withConf(hadoopConf).build()
-      // the reader reuses its row: keep a deep copy of each
-      try Iterator.continually(reader.read()).takeWhile(_ != null).map(_.copy()).toVector
+      try Iterator.continually(reader.read()).takeWhile(_ != null).zipWithIndex
+        .collect { case (row, pos) if keep(pos.toLong, row) => row.copy() }.toVector
       finally reader.close()
     }
-    Some(org.apache.spark.sql.classic.Dataset.ofRows(session,
-      LocalRelation(DataTypeUtils.toAttributes(schema), rows)))
   }
+
+  /** `rows` (internal rows of `schema`) as a LocalRelation frame: its
+    * collect runs no Spark job. */
+  def localFrame(spark: SparkSession, schema: StructType,
+      rows: Seq[InternalRow]): DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      LocalRelation(DataTypeUtils.toAttributes(schema), rows))
 
   /** Sum of the footer row counts of the parquet files at `paths` (see
     * [[parquetFiles]]): a driver metadata read, no Spark job — the

@@ -4,7 +4,6 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graft.DirectParquetIo
@@ -47,29 +46,6 @@ class DirectReadSpec extends SparkSpec {
     assert(local.schema === dist.schema)
     assert(sorted(local) === sorted(dist))
     local
-  }
-
-  /** Spark jobs started while `body` runs, counted with a listener. A
-    * sentinel job after `body` drains the listener bus: events arrive in
-    * order, so once the sentinel is seen every earlier job has been. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val sentinel = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == "sentinel"))
-          sentinel.countDown()
-        else jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobGroup("sentinel", "drain the listener bus")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(sentinel.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      jobs.get
-    } finally sc.removeSparkListener(listener)
   }
 
   private def subdirs(d: Path): Seq[Path] =

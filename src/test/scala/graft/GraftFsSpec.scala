@@ -97,6 +97,34 @@ class GraftFsSpec extends SparkSpec {
     assert(state == Map("x" -> "x1", "y" -> "y1", "w" -> "in-window"))
   }
 
+  test("AtomicSwap rollback deletes a piece absent before the swap and " +
+      "written inside its window; an older binary's empty marker keeps it") {
+    val root = tmp("fs_swap_absent")
+    def put(name: String, v: String): Unit = {
+      Files.createDirectories(root.resolve(name))
+      Files.writeString(root.resolve(name).resolve("v"), v)
+    }
+    def names = GraftFs.list(root).map(_.getFileName.toString).toSet
+    val swap = new AtomicSwap(root, "_inflight", ".old", Seq("x", "meta"),
+      Seq("x" -> "x.new"))
+    put("x", "x0")
+    def dieInWindow(): Unit = {
+      put("x.new", "x1")
+      intercept[IllegalStateException](swap.run {
+        Files.writeString(root.resolve("meta"), "target")
+        throw new IllegalStateException("died inside the window")
+      })
+      assert(swap.inflight)
+    }
+    dieInWindow()
+    swap.rollback()
+    assert(names == Set("x") && Files.readString(root.resolve("x/v")) == "x0")
+    dieInWindow()
+    Files.writeString(swap.marker, "")
+    swap.rollback()
+    assert(names == Set("x", "meta") && Files.readString(root.resolve("x/v")) == "x0")
+  }
+
   test("compactIndex and rebucket killed at every swap rename: probes " +
       "and maintenance refuse the torn state, recoverSwap restores the " +
       "pre-swap probe exactly, a re-run completes, maintained == rebuilt") {

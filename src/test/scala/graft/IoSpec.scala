@@ -1787,4 +1787,56 @@ class IoSpec extends SparkSpec {
       s"a missing live segment must preempt every sizing row, got $pr")
     assert(pr.head.metric == "missing_segments" && pr.head.value >= 1L)
   }
+
+  test("an unreadable bloom sidecar makes an equality readWhere throw, " +
+      "naming buildBloomIndex") {
+    val dir = tmp("mptbad") + "/tbl"
+    val t = new ManagedParquetTable(spark, dir)
+    t.append((0 to 100).map(i => (i.toLong, s"v$i")).toDF("id", "v").coalesce(1))
+    t.buildBloomIndex(Seq("id"), expectedItemsPerFile = 1024)
+    val idx = Paths.get(dir, "_graft_blooms", "idx")
+    graft.io.GraftFs.list(idx).foreach(graft.io.GraftFs.delete)
+    Files.writeString(idx.resolve("part-00000-garbage.parquet"), "not a parquet file")
+    val e = intercept[IllegalStateException](t.readWhere(col("id") === 42L).count())
+    assert(e.getMessage.contains("buildBloomIndex"), e.getMessage)
+  }
+
+  test("repair() moves aside only a table that does not read: a cancelled " +
+      "health-check job throws and the table stays in place") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val dir = tmp("mptheal") + "/tbl"
+    val t = new ManagedParquetTable(spark, dir)
+    t.append(Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
+    // four sleeping tasks hold the four local cores, so the health
+    // check's job is still pending when the listener cancels it
+    val started = new java.util.concurrent.CountDownLatch(4)
+    val blocker = new Thread(() => {
+      sc.setJobGroup("blocker", "hold the cores")
+      sc.parallelize(1 to 4, 4).foreach { _ => Thread.sleep(3000) }
+    })
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == "blocker"))
+          (1 to 4).foreach(_ => started.countDown())
+        else sc.cancelJob(e.jobId)
+    }
+    sc.addSparkListener(listener)
+    try {
+      blocker.start()
+      assert(started.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      Thread.sleep(500)
+      intercept[org.apache.spark.SparkException](t.repair())
+    } finally {
+      sc.removeSparkListener(listener)
+      blocker.join()
+    }
+    assert(Files.isDirectory(Paths.get(dir)) && t.read().count() == 2)
+    // a segment dir the manifest names is gone: unhealthy, moved aside
+    graft.io.GraftFs.list(Paths.get(dir)).filter(_.getFileName.toString.startsWith("seg-"))
+      .foreach(graft.io.GraftFs.delete)
+    assert(!t.isHealthy)
+    t.repair()
+    assert(!Files.exists(Paths.get(dir)))
+  }
 }

@@ -99,13 +99,9 @@ class PlanSpec extends SparkSpec {
       "c3_budget_select" -> "Ranking histogram offsets (bounded coarse keys)",
       "f16_sequential_id" -> "25-row lookup frame (reference-exact)",
       "t15_bm25" -> "row_number over the top-k frame AFTER limit(k) (≤20 rows)",
-      "t16_bm25_indexed" -> "row_number over the top-k frame AFTER limit(k) (≤20 rows)",
       "t18_hybrid_rrf" -> ("two top-k frames: bm25TopK's row_number AFTER " +
         "limit(30) + rrfFuse's row_number AFTER limit(20) — fusion input " +
         "is O(lists*k) by contract, never corpus-sized"),
-      "t19_index_refresh" -> ("bm25TopKIndexed's row_number over the " +
-        "top-k frame AFTER limit(k) (≤20 rows) — same audited shape as " +
-        "t16, reached through the maintainer"),
       "t20_hybrid_recall" -> ("t18's audited top-k frames twice over " +
         "(bm25TopK's post-limit row_number + one per rrfFuse limit(20)) " +
         "feeding a ≤20-row recall join — every global window ranks a " +
