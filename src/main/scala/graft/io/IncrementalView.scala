@@ -137,15 +137,11 @@ final class IncrementalAggView(
     * and ONE scan of just those files rebuilds their partials
     * DV-applied — O(touched files), never O(table). */
   def refresh(): Unit = {
-    // version + lineage BEFORE the file snapshot (the order every
-    // maintainer uses): the published basis must never be newer than
-    // the snapshot the fold covered — a stale basis merely replays.
-    // Clamped to the MIRROR-proven head (see
-    // IncrementalInvertedIndex.refresh): with uncoordinated writers a
-    // foreign commit's mirror entry can be in flight right now, and
-    // the bounded file snapshot below must name the same state the
-    // published basis claims.
-    val headV = math.min(table.version - 1, table.mirrorStableVersion)
+    // mirror-proven head + lineage BEFORE the file snapshot (the order
+    // every maintainer uses; see ManagedParquetTable.foldHead): the
+    // bounded file snapshot below names the state the published basis
+    // claims.
+    val headV = table.foldHead
     if (headV < 0) { lastRefresh = "noop"; return }
     val lineage = table.tableId
     val nowFiles = table.deltaSnapshotFiles(Some(headV)).toSet

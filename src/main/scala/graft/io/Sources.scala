@@ -90,10 +90,52 @@ final class ConcurrentWriteException(msg: String)
   * (object stores swap the rename for a putIfAbsent/conditional-put). */
 final class ManagedParquetTable(spark: SparkSession, val path: String) {
   import java.nio.file.{Files, Paths}
+  import ManagedParquetTable.Snapshot
 
   private def manifest = Paths.get(path, "_graft_manifest")
   private def commitsDir = Paths.get(path, "_graft_commits")
-  private def commitFile(v: Long) = commitsDir.resolve(f"$v%020d.json")
+  private def commitFile(v: Long) = logFile(commitsDir, v)
+
+  // ---- numbered log names ------------------------------------------------
+
+  private val Json = ".json"
+  private val Checkpoint = ".checkpoint.parquet"
+
+  /** `NNN<suffix>` (twenty digits) in `dir`: a CAS commit file under
+    * `_graft_commits`, a mirror entry or checkpoint under `_delta_log`. */
+  private def logFile(dir: java.nio.file.Path, v: Long, suffix: String = Json) =
+    dir.resolve(f"$v%020d$suffix")
+
+  /** The version a numbered log name carries — the one parser of the
+    * names [[logFile]] builds. */
+  private def logVersion(name: String, suffix: String = Json): Option[Long] =
+    if (name.length == 20 + suffix.length && name.endsWith(suffix) &&
+        name.take(20).forall(_.isDigit)) Some(name.take(20).toLong)
+    else None
+
+  /** (version, file) of every numbered `suffix` entry of `dir`,
+    * unordered; a missing dir has none. */
+  private def logEntries(dir: java.nio.file.Path,
+      suffix: String = Json): Seq[(Long, java.nio.file.Path)] =
+    GraftFs.list(dir).flatMap(p =>
+      logVersion(p.getFileName.toString, suffix).map(_ -> p))
+
+  /** The `"version"` field of a manifest or commit file. */
+  private def versionOf(json: String): Option[Long] =
+    """"version":(\d+)""".r.findFirstMatchIn(json).map(_.group(1).toLong)
+
+  /** The `_graft_manifest` pointer's own version (−1 when absent): the
+    * version resolution walks forward from, so commit files below it
+    * are never consulted again. */
+  private def pointerVersion: Long =
+    if (!Files.exists(manifest)) -1L
+    else versionOf(Files.readString(manifest)).getOrElse(-1L)
+
+  /** A `_graft_commits` entry that is superseded garbage once the
+    * pointer is at `ptrVer`: a stranded `.tmp.` link source, or a commit
+    * file below the pointer. */
+  private def supersededCommit(ptrVer: Long)(name: String): Boolean =
+    name.startsWith(".tmp.") || logVersion(name).exists(_ < ptrVer)
 
   def exists: Boolean =
     Files.exists(manifest) || resolvedManifest().isDefined
@@ -111,16 +153,15 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     * with reduced dv bookkeeping, which the version-stamped commit
     * file does not see. */
   private def resolvedManifest(): Option[(Long, String)] = {
-    def verOf(s: String): Long = """"version":(\d+)""".r
-      .findFirstMatchIn(s).map(_.group(1).toLong).getOrElse(0L)
     var cur: Option[(Long, String)] =
       if (!Files.exists(manifest)) None
-      else { val s = Files.readString(manifest); Some((verOf(s), s)) }
-    if (cur.isEmpty && Files.isDirectory(commitsDir)) {
+      else {
+        val s = Files.readString(manifest)
+        Some((versionOf(s).getOrElse(0L), s))
+      }
+    if (cur.isEmpty) {
       // very-first-commit crash window: CAS landed, pointer never did
-      val max = GraftFs.list(commitsDir).map(_.getFileName.toString)
-        .filter(_.matches("\\d{20}\\.json")).map(_.dropRight(5).toLong)
-        .maxOption
+      val max = logEntries(commitsDir).map(_._1).maxOption
       cur = max.map(v => (v, Files.readString(commitFile(v))))
     }
     while (cur.exists { case (v, _) => Files.exists(commitFile(v + 1)) }) {
@@ -141,17 +182,18 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     * never segments, schema, or any row a retained version can see,
     * so version-keyed caches of table CONTENT stay valid; only the
     * byte identity of the manifest is not version-stable. */
-  def version: Long = snapshot().map(_._1).getOrElse(0L)
+  def version: Long = snapshot().version
 
-  /** Committed snapshot: (version, segment dir names). */
-  private def snapshot(): Option[(Long, Seq[String])] =
-    resolvedManifest().map { case (ver, s) => (ver, parseSegments(s)) }
+  private def snapshot(): Snapshot = resolvedManifest()
+    .map { case (ver, s) => Snapshot(ver, arrayField(s, "segments")) }
+    .getOrElse(Snapshot(0L, Seq.empty))
 
-  /** The "segments" array of a commit/manifest JSON — the ONE parser
-    * shared by [[snapshot]] and the mirror backfill, so the two can
-    * never disagree on the same bytes. */
-  private def parseSegments(s: String): Seq[String] =
-    """"segments":\[([^\]]*)\]""".r.findFirstMatchIn(s)
+  /** A string-array field of a commit/manifest JSON (empty if absent)
+    * — the ONE parser of "segments" shared by [[snapshot]] and the
+    * mirror backfill, so the two can never disagree on the same bytes,
+    * and of the dv arrays. */
+  private def arrayField(s: String, name: String): Seq[String] =
+    (s""""$name":\\[([^\\]]*)\\]""").r.findFirstMatchIn(s)
       .map(_.group(1).split(",").toSeq.map(_.trim.stripPrefix("\"")
         .stripSuffix("\"")).filter(_.nonEmpty))
       .getOrElse(Seq.empty)
@@ -182,13 +224,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
   private def dvState: (Seq[String], Seq[String]) =
     resolvedManifest() match {
       case None => (Seq.empty, Seq.empty)
-      case Some((_, s)) =>
-        def field(name: String): Seq[String] =
-          (s""""$name":\\[([^\\]]*)\\]""").r.findFirstMatchIn(s)
-            .map(_.group(1).split(",").toSeq.map(_.trim.stripPrefix("\"")
-              .stripSuffix("\"")).filter(_.nonEmpty))
-            .getOrElse(Seq.empty)
-        (field("dvs"), field("dvfiles"))
+      case Some((_, s)) => (arrayField(s, "dvs"), arrayField(s, "dvfiles"))
     }
 
   private def dvlogDir = Paths.get(path, "_graft_dvlog")
@@ -266,7 +302,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     * referenced dvlog names), never O(table history).
     *
     * SELF-ENFORCING single-writer contract: `base` is the snapshot
-    * version the caller derived `segments` from (0 for a new table).
+    * the caller derived `segments` from (version 0 for a new table).
     * The publish is a compare-and-swap on `base + 1`: the full
     * manifest JSON is written to a temp file and HARD-LINKED into
     * `_graft_commits/{base+1}.json` — link creation is an atomic
@@ -290,20 +326,24 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     * a crash between the commit and the delta-log mirror write can
     * never strand a committed-but-unrecognizable append (the mirror's
     * userMetadata copy is only the fast scan path; [[hasCommitTagged]]
-    * consults both). */
-  private def commit(segments: Seq[String], mode: String,
+    * consults both).
+    *
+    * Commit is the ONE writer of live mirror entries: after the CAS,
+    * the pointer rewrite and the segment touch it heals any earlier
+    * mirror gap and writes this version's entry ([[writeMirrorEntry]]),
+    * derived from the commit itself — a crash before that leaves a
+    * gap [[repairMirror]] fills by the same derivation. */
+  private def commit(base: Snapshot, segments: Seq[String], mode: String,
       dv: Option[(Seq[String], Seq[String])] = None,
-      base: Long, tag: String = ""): Long = {
+      tag: String = ""): Long = {
     Files.createDirectories(Paths.get(path))
-    val snap = snapshot()
-    val cur = snap.map(_._1).getOrElse(0L)
-    if (cur != base) throw new ConcurrentWriteException(
+    val cur = snapshot().version
+    if (cur != base.version) throw new ConcurrentWriteException(
       s"concurrent writer detected at $path: this commit was derived " +
-        s"from version $base but the table is now at $cur — the " +
-        "single-writer contract is violated; nothing was published " +
+        s"from version ${base.version} but the table is now at $cur — " +
+        "the single-writer contract is violated; nothing was published " +
         "(the table still serves the other writer's commit)")
-    val prevSegs = snap.map(_._2).getOrElse(Seq.empty)
-    val ver = base + 1
+    val ver = base.version + 1
     val (inline, dvFiles) = dv.getOrElse(dvState)
     val json = manifestJson(ver, mode, segments, inline, dvFiles, tag)
     Files.createDirectories(commitsDir)
@@ -323,7 +363,9 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     // window must run from the moment a reader could last have resolved
     // them (now), not from their creation time — else a long-lived
     // segment dies the instant it is dropped
-    (prevSegs.toSet -- segments.toSet).foreach(s => GraftFs.touch(Paths.get(path, s)))
+    (base.segments.toSet -- segments.toSet).foreach(s => GraftFs.touch(Paths.get(path, s)))
+    repairMirrorUpTo(ver - 2)
+    writeMirrorEntry(ver, mode, base.segments, segments, tag, healed = false)
     ver
   }
 
@@ -418,7 +460,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     * absence (negative membership on an equality conjunct — blooms
     * have no false negatives). */
   def pruneFiles(pred: org.apache.spark.sql.Column): (Seq[String], Int) = {
-    val segs = snapshot().map(_._2).getOrElse(Seq.empty)
+    val segs = snapshot().segments
     require(segs.nonEmpty, s"no committed snapshot at $path")
     val files = segs.flatMap(segmentFiles).map(_._1)
     val conjuncts = FileStats.prunableConjuncts(read(), pred)
@@ -474,7 +516,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
     import org.apache.spark.sql.catalyst.expressions.{XxHash64, Literal => CatLit}
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    val segs = snapshot().map(_._2).getOrElse(Seq.empty)
+    val segs = snapshot().segments
     require(segs.nonEmpty, s"no committed snapshot at $path")
     val numBits = org.apache.spark.util.sketch.BloomFilter
       .optimalNumOfBits(expectedItemsPerFile, fpp)
@@ -585,17 +627,12 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
   def compact(targetFiles: Int = 1, zCols: Seq[String] = Nil,
       bits: Int = 12): Unit = {
     val snap = snapshot()
-    val prev = snap.map(_._2).getOrElse(Seq.empty)
-    require(prev.nonEmpty, s"no committed snapshot at $path")
+    require(snap.segments.nonEmpty, s"no committed snapshot at $path")
     val cur = read()
     val shaped =
       if (zCols.nonEmpty) clusterShape(cur, zCols, targetFiles, bits)
       else cur.repartition(targetFiles)
-    val seg = writeSegment(shaped)
-    val v = commit(Seq(seg), "compact", base = snap.map(_._1).getOrElse(0L))
-    mirrorDeltaLog(v, "compact", added = segmentFiles(seg),
-      removed = prev.flatMap(segmentFiles).map(_._1),
-      schemaJson = shaped.schema.json, dataChange = false)
+    commit(snap, Seq(writeSegment(shaped)), "compact")
   }
 
   /** S7: append tolerating evolving schemas (mergeSchema on read).
@@ -615,11 +652,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     * landing in between. */
   def append(df: DataFrame, tag: Option[String] = None,
       rowsHint: Long = -1L): Long = {
-    val seg = writeSegment(df, rowsHint)
-    val v = commitBlindAppend(seg, tag.getOrElse(""))
-    mirrorDeltaLog(v, "append", added = segmentFiles(seg), removed = Nil,
-      schemaJson = df.schema.json, userMetadata = tag.getOrElse(""))
-    v
+    commitBlindAppend(writeSegment(df, rowsHint), tag.getOrElse(""))
   }
 
   /** Optimistic-concurrency rebase for BLIND appends (Delta/Iceberg
@@ -644,8 +677,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     var attempt = 0
     while (true) {
       val snap = snapshot()
-      try return commit(snap.map(_._2).getOrElse(Seq.empty) :+ seg,
-        "append", base = snap.map(_._1).getOrElse(0L), tag = tag)
+      try return commit(snap, snap.segments :+ seg, "append", tag = tag)
       catch {
         case e: ConcurrentWriteException =>
           attempt += 1
@@ -668,14 +700,8 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
   def overwrite(df: DataFrame, tag: Option[String] = None,
       rowsHint: Long = -1L): Long = {
     val snap = snapshot()
-    val prev = snap.map(_._2).getOrElse(Seq.empty)
-    val seg = writeSegment(df, rowsHint)
-    val v = commit(Seq(seg), "overwrite",
-      base = snap.map(_._1).getOrElse(0L), tag = tag.getOrElse(""))
-    mirrorDeltaLog(v, "overwrite", added = segmentFiles(seg),
-      removed = prev.flatMap(segmentFiles).map(_._1),
-      schemaJson = df.schema.json, userMetadata = tag.getOrElse(""))
-    v
+    commit(snap, Seq(writeSegment(df, rowsHint)), "overwrite",
+      tag = tag.getOrElse(""))
   }
 
   /** True iff some commit made at-or-after manifest version
@@ -693,11 +719,10 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     * caller re-does its work (at-least-once), never loses it. */
   def hasCommitTagged(tag: String, sinceVersion: Long): Boolean = {
     val mirrorNeedle = s""""userMetadata":"${jsonEsc(tag)}""""
-    val mirrorHit = Files.exists(deltaLogDir) && GraftFs.list(deltaLogDir)
-      .filter(_.getFileName.toString.matches("\\d{20}\\.json"))
-      .filter(_.getFileName.toString.dropRight(5).toLong >= sinceVersion)
-      .exists(p => try Files.readString(p).contains(mirrorNeedle)
-        catch { case _: java.nio.file.NoSuchFileException => false })
+    val mirrorHit = logEntries(deltaLogDir)
+      .exists { case (v, p) => v >= sinceVersion &&
+        (try Files.readString(p).contains(mirrorNeedle)
+         catch { case _: java.nio.file.NoSuchFileException => false }) }
     if (mirrorHit) return true
     // commit files, probed by NUMBER from the floor to the resolved
     // head when the window is narrow (the per-batch norm: floor is
@@ -721,14 +746,11 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
         v += 1
       }
       false
-    } else Files.isDirectory(commitsDir) && GraftFs.list(commitsDir)
-      .filter(_.getFileName.toString.matches("\\d{20}\\.json"))
-      .filter(_.getFileName.toString.dropRight(5).toLong >= lo)
-      .exists(readHas)
+    } else logEntries(commitsDir).exists { case (v, p) => v >= lo && readHas(p) }
   }
 
   def read(): DataFrame = {
-    val segs = snapshot().map(_._2).getOrElse(Seq.empty)
+    val segs = snapshot().segments
     require(segs.nonEmpty, s"no committed snapshot at $path")
     scanSegments(segs, liveDvEntries(segs), keepPos = false)
   }
@@ -867,7 +889,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
   private def deleteDVCore(doomed: DataFrame => DataFrame): Unit = {
     import org.apache.spark.sql.functions.col
     val snap = snapshot()
-    val segs = snap.map(_._2).getOrElse(Seq.empty)
+    val segs = snap.segments
     require(segs.nonEmpty, s"no committed snapshot at $path")
     val doomedRows = doomed(scanSegments(segs, liveDvEntries(segs),
         keepPos = true))
@@ -899,7 +921,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     // the entry records the MIRROR version this commit creates (commit
     // files are 0-based and count manifest commits), so readAt can
     // scope tombstones to any historical version
-    val mirrorVer = snap.map(_._1).getOrElse(0L) // = next mirror file no.
+    val mirrorVer = snap.version // = next mirror file no.
     val entry = s"$mirrorVer:$dir:${touched.mkString(";")}"
     // the entry rides a fresh dvlog file the commit NAMES — never the
     // manifest body, so a CDC-heavy table's commit never rewrites its
@@ -912,34 +934,16 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     // touch) and left for vacuum's unreferenced-dvlog sweep, which
     // applies the same graceMs contract segments get.
     val (inline, dvFiles) = dvState
-    val base = snap.map(_._1).getOrElse(0L)
-    // the mirror's userMetadata (graft-dv:<dir>) doubles as the commit
-    // tag so a lost-mirror backfill ([[repairMirror]]) can reproduce
-    // the sidecar pointer a graft-aware replay needs
-    val v =
-      if (inline.nonEmpty || dvFiles.size >= DvlogConsolidateAt) {
-        val all = inline ++ dvFiles.flatMap(readDvlogFile) :+ entry
-        val consolidated = writeDvlogFile(all)
-        val cv = commit(segs, "delete-dv",
-          Some((Seq.empty, Seq(consolidated))),
-          base = base, tag = s"graft-dv:$dir")
-        touchDvlogFiles(dvFiles)
-        cv
-      } else {
-        val nf = writeDvlogFile(Seq(entry))
-        commit(segs, "delete-dv", Some((Seq.empty, dvFiles :+ nf)),
-          base = base, tag = s"graft-dv:$dir")
-      }
-    // structural mirror: the protocol's DV form needs reader-version-3
-    // feature flags; this mirror stays at reader v1, so a DV delete is
-    // a data-changing commit with no file actions (external FILE-level
-    // replays see an unchanged file set). The sidecar dir is named in
-    // commitInfo.userMetadata — informational per the protocol (real
-    // Delta readers ignore commitInfo), but it lets a graft-aware
-    // replay (tools/DeltaLogReplay) apply the tombstones and agree
-    // with the writer's row counts at every version.
-    mirrorDeltaLog(v, "delete", added = Nil, removed = Nil,
-      schemaJson = read().schema.json, userMetadata = s"graft-dv:$dir")
+    // the commit tag (graft-dv:<dir>) is the mirror entry's
+    // userMetadata: the entry has no file actions (see
+    // [[writeMirrorEntry]]), so it is how a graft-aware replay
+    // (tools/DeltaLogReplay) finds the tombstones to apply
+    val consolidate = inline.nonEmpty || dvFiles.size >= DvlogConsolidateAt
+    val named =
+      if (consolidate) Seq(writeDvlogFile(inline ++ dvFiles.flatMap(readDvlogFile) :+ entry))
+      else dvFiles :+ writeDvlogFile(Seq(entry))
+    commit(snap, segs, "delete-dv", Some((Seq.empty, named)), tag = s"graft-dv:$dir")
+    if (consolidate) touchDvlogFiles(dvFiles)
   }
 
   /** REORG-style tombstone purge: rewrite every live segment whose
@@ -959,7 +963,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
       s"threshold must be in (0, 1], got $threshold")
     import org.apache.spark.sql.functions.{col, count, lit, split}
     val snap = snapshot()
-    val segs = snap.map(_._2).getOrElse(Seq.empty)
+    val segs = snap.segments
     if (segs.isEmpty) return 0
     val live = liveDvEntries(segs)
     if (live.isEmpty) return 0
@@ -981,19 +985,8 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     val kept = segs.filterNot(affected.contains)
     // a fully-tombstoned segment set still commits one (possibly
     // empty) segment when nothing else remains, keeping the schema
-    if (!survivors.isEmpty || kept.isEmpty) {
-      val seg = writeSegment(survivors)
-      val v = commit(kept :+ seg, "reorg",
-        base = snap.map(_._1).getOrElse(0L))
-      mirrorDeltaLog(v, "reorg", added = segmentFiles(seg),
-        removed = affected.flatMap(segmentFiles).map(_._1),
-        schemaJson = survivors.schema.json, dataChange = false)
-    } else {
-      val v = commit(kept, "reorg", base = snap.map(_._1).getOrElse(0L))
-      mirrorDeltaLog(v, "reorg", added = Nil,
-        removed = affected.flatMap(segmentFiles).map(_._1),
-        schemaJson = survivors.schema.json, dataChange = false)
-    }
+    val seg = Option.when(!survivors.isEmpty || kept.isEmpty)(writeSegment(survivors))
+    commit(snap, kept ++ seg, "reorg")
     affected.size
   }
 
@@ -1001,8 +994,8 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     * committed snapshot's file row counts summed (dv tombstones only
     * shrink the true count). Driver metadata read, no job; None when
     * there is no snapshot. An unreadable footer throws. */
-  def liveRowBound: Option[Long] =
-    snapshot().map(s => footerRows(s._2.flatMap(segmentFiles).map(_._1)))
+  def liveRowBound: Option[Long] = Some(snapshot()).filter(_.version > 0)
+    .map(s => footerRows(s.segments.flatMap(segmentFiles).map(_._1)))
 
   /** Footer-only row count of table-relative parquet files or dirs. */
   private def footerRows(rels: Seq[String]): Long =
@@ -1057,9 +1050,8 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
   def maintenancePlan(
       policy: TableMaintenancePolicy = TableMaintenancePolicy()):
       Seq[MaintenanceAction] = {
-    val snap = snapshot()
-    if (snap.isEmpty) return Seq.empty // nothing committed: no upkeep
-    val (ver, segs) = snap.get
+    val Snapshot(ver, segs) = snapshot()
+    if (ver == 0) return Seq.empty // nothing committed: no upkeep
     // corruption preempts as the only row (metadata-only check: a
     // manifest naming a segment dir that is gone means the snapshot
     // cannot read — no sizing signal over it is trustworthy)
@@ -1074,9 +1066,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     // expected number (manifest version - 1; mirror numbers are
     // 0-based). Entries below the retention floor were pruned, not
     // lost, so only the head-side gap counts as lag.
-    val newestMirror = GraftFs.list(deltaLogDir).map(_.getFileName.toString)
-      .filter(_.matches("\\d{20}\\.json")).map(_.dropRight(5).toLong)
-      .maxOption.getOrElse(-1L)
+    val newestMirror = logEntries(deltaLogDir).map(_._1).maxOption.getOrElse(-1L)
     val mirrorLag = (ver - 1L) - newestMirror
     if (mirrorLag > policy.maxMirrorLag)
       out += MaintenanceAction("repairMirror", "mirror_lag", mirrorLag,
@@ -1133,14 +1123,9 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     val staleSegs = GraftFs.list(Paths.get(path))
       .map(_.getFileName.toString)
       .count(n => n.startsWith("seg-") && !liveSet(n))
-    val ptrVer =
-      if (!Files.exists(manifest)) -1L
-      else """"version":(\d+)""".r
-        .findFirstMatchIn(Files.readString(manifest))
-        .map(_.group(1).toLong).getOrElse(-1L)
-    val staleCommits = GraftFs.list(commitsDir).map(_.getFileName.toString)
-      .count(n => n.startsWith(".tmp.") ||
-        (n.matches("\\d{20}\\.json") && n.dropRight(5).toLong < ptrVer))
+    val superseded = supersededCommit(pointerVersion) _
+    val staleCommits = GraftFs.list(commitsDir)
+      .count(p => superseded(p.getFileName.toString))
     val (_, refFiles) = dvState
     val refSet = refFiles.toSet
     val staleDvlog = GraftFs.list(dvlogDir)
@@ -1184,7 +1169,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
       survivors: DataFrame => DataFrame): Unit = {
     import org.apache.spark.sql.functions.col
     val snap = snapshot()
-    val prev = snap.map(_._2).getOrElse(Seq.empty)
+    val prev = snap.segments
     require(prev.nonEmpty, s"no committed snapshot at $path")
     val dvs = liveDvEntries(prev)
     // one scan, bounded output: at most one rel path per live data file
@@ -1201,21 +1186,8 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     val surv = survivors(affectedRead)
     // a fully-matched segment set with no survivors still commits one
     // empty segment so the table keeps a readable schema
-    val keepSeg = !surv.isEmpty || affected == prev
-    val kept = prev.filterNot(affected.contains)
-    if (keepSeg) {
-      val seg = writeSegment(surv)
-      val v = commit(kept :+ seg, "delete",
-        base = snap.map(_._1).getOrElse(0L))
-      mirrorDeltaLog(v, "delete", added = segmentFiles(seg),
-        removed = affected.flatMap(segmentFiles).map(_._1),
-        schemaJson = surv.schema.json)
-    } else {
-      val v = commit(kept, "delete", base = snap.map(_._1).getOrElse(0L))
-      mirrorDeltaLog(v, "delete", added = Nil,
-        removed = affected.flatMap(segmentFiles).map(_._1),
-        schemaJson = surv.schema.json)
-    }
+    val seg = Option.when(!surv.isEmpty || affected == prev)(writeSegment(surv))
+    commit(snap, prev.filterNot(affected.contains) ++ seg, "delete")
   }
 
   /** Delta-style MERGE (upsert): rows of `updates` REPLACE current rows
@@ -1236,7 +1208,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     require(keyCols.nonEmpty, "merge requires at least one key column")
     import org.apache.spark.sql.functions.col
     val snap = snapshot()
-    val prev = snap.map(_._2).getOrElse(Seq.empty)
+    val prev = snap.segments
     require(prev.nonEmpty, s"no committed snapshot at $path")
     val dvs = liveDvEntries(prev)
     val k = updates.select(keyCols.map(col): _*)
@@ -1255,11 +1227,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
         // schema evolution (S7) — survivors null-fill columns only the
         // updates carry, and vice versa, instead of failing the merge
         .unionByName(updates, allowMissingColumns = true)
-    val seg = writeSegment(merged)
-    val v = commit(kept :+ seg, "merge", base = snap.map(_._1).getOrElse(0L))
-    mirrorDeltaLog(v, "merge", added = segmentFiles(seg),
-      removed = affected.flatMap(segmentFiles).map(_._1),
-      schemaJson = merged.schema.json)
+    commit(snap, kept :+ writeSegment(merged), "merge")
   }
 
   /** Key-set delete: remove every row whose key appears in `keys` —
@@ -1290,7 +1258,6 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
 
   /** (relative path, size bytes) of a segment's parquet data files. */
   private def segmentFiles(seg: String): Seq[(String, Long)] = {
-    import scala.jdk.CollectionConverters._
     val segDir = Paths.get(path, seg)
     GraftFs.list(segDir)
       .filter(p => p.getFileName.toString.endsWith(".parquet"))
@@ -1305,59 +1272,28 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     case c => c.toString
   }
 
-  /** `committedVer` is the manifest version [[commit]] just RETURNED
-    * for the commit this call mirrors — the mirror number is that
-    * minus one (manifest 1-based, mirror 0-based). Threading the
-    * return value is load-bearing three ways: a listing max+1 would
-    * re-issue numbers after log retention; a file count would do the
-    * same; and RE-READING `this.version` here would race any other
-    * commit landing between the commit and its mirror (two CAS
-    * commits can both succeed at consecutive versions — contract-
-    * violating but undetected when they serialize cleanly — and the
-    * re-read would then stamp this entry with the OTHER commit's
-    * number, silently replacing its mirror). The caller's own version
-    * is immune to all three; a crash before this call leaves a GAP,
-    * which [[repairMirror]] backfills from the commit files (and an
-    * unhealable one surfaces loudly in the contiguity checks instead
-    * of shifting numbers). */
-  private def mirrorDeltaLog(committedVer: Long, mode: String,
-      added: Seq[(String, Long)], removed: Seq[String],
-      schemaJson: String, dataChange: Boolean = true,
-      userMetadata: String = ""): Unit = {
-    Files.createDirectories(deltaLogDir)
-    val version = committedVer - 1
-    repairMirrorUpTo(version - 1)
-    writeMirrorEntry(version, mode, added, removed, schemaJson,
-      dataChange, userMetadata)
-  }
-
   /** Backfill delta-log mirror entries whose manifest commit landed
-    * but whose mirror write was lost to a crash. [[mirrorDeltaLog]]
-    * derives every mirror number from its own just-committed manifest
-    * version, so a commit→mirror crash leaves a numbering GAP, never
-    * a silent desync — and a gap is healable: the CAS commit files
-    * record each version's mode, idempotence tag and segment set, so
-    * the missing entry's add/remove actions (and its userMetadata —
-    * the append tag / dv-sidecar pointer) reconstruct exactly from
-    * the segment diff against the prior version. Heals only what it
+    * but whose mirror write was lost to a crash. [[commit]] numbers
+    * every mirror entry from its own just-committed manifest version,
+    * so a commit→mirror crash leaves a numbering GAP, never a silent
+    * desync — and a gap is healable: the CAS commit files record each
+    * version's mode, idempotence tag and segment set, which is all
+    * [[writeMirrorEntry]] derives an entry from. Heals only what it
     * can prove: both commit files must still exist (vacuum keeps
     * superseded ones for graceMs — far longer than any crash→restart
     * window) and every diffed segment dir must still be on disk; an
     * unprovable gap stays and fails the contiguity checks loudly
-    * instead of guessing. A healed entry re-emits no metaData action
-    * (it reuses the last-emitted schema; if the lost commit evolved
-    * the schema, the NEXT real commit re-emits it — the sidecar was
-    * never advanced). Writer-side only, per the single-writer
+    * instead of guessing. Writer-side only, per the single-writer
     * contract: called by the streaming sink before index maintenance
-    * (`BronzeIngest.indexedIngestBatch`) and by every mirror write
-    * that notices its predecessor missing. */
+    * (`BronzeIngest.indexedIngestBatch`) and by every commit that
+    * notices its predecessor's entry missing. */
   def repairMirror(): Unit = repairMirrorUpTo(version - 1, fastPath = false)
 
   /** `fastPath` skips the scan when the newest expected entry exists —
     * right for the inline per-commit call (its gaps are RECENT, at
     * `limit` itself). The public [[repairMirror]] always scans: an
     * interior gap whose first heal attempt failed TRANSIENTLY (a
-    * backfill error is swallowed by design) must be retried — the
+    * backfill IO error is swallowed by design) must be retried — the
     * streaming sink calls repairMirror() every batch, so such a gap
     * self-heals on the next trigger; standalone writers can invoke it
     * after an incident. The scan is one directory listing — the same
@@ -1365,11 +1301,8 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
   private def repairMirrorUpTo(limit: Long,
       fastPath: Boolean = true): Unit = {
     if (limit < 0) return
-    if (fastPath &&
-        Files.exists(deltaLogDir.resolve(f"$limit%020d.json"))) return
-    Files.createDirectories(deltaLogDir)
-    val existing = GraftFs.list(deltaLogDir).map(_.getFileName.toString)
-      .filter(_.matches("\\d{20}\\.json")).map(_.dropRight(5).toLong)
+    if (fastPath && Files.exists(logFile(deltaLogDir, limit))) return
+    val existing = logEntries(deltaLogDir).map(_._1)
     // entries below the oldest retained one were PRUNED by retention,
     // not lost to a crash — only fill above it
     val floor = existing.minOption.getOrElse(0L)
@@ -1379,58 +1312,33 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
   }
 
   /** One gap entry, reconstructed from commit files g and g+1 (mirror
-    * g records the transition INTO manifest version g+1). Best-effort
-    * by contract: ANY failure (unreadable/corrupt commit file, torn
-    * escape in a tag, IO error mid-write) means the gap is unprovable
-    * and stays — swallowing here is what keeps a healing attempt from
-    * wedging every future commit of the table, since this runs inside
-    * each mirror write; the un-healed gap still fails the contiguity
-    * checks loudly downstream. */
+    * g records the transition INTO manifest version g+1). A commit
+    * file or segment that vanished or cannot be read means the gap is
+    * unprovable and stays: swallowing that IO failure is what keeps a
+    * healing attempt from wedging every future commit of the table,
+    * since this runs inside each commit; the un-healed gap still fails
+    * the contiguity checks loudly downstream, and [[maintenancePlan]]
+    * reports it as `repairMirror`. */
   private def backfillMirrorEntry(g: Long): Unit =
-    try backfillMirrorEntryCore(g)
-    catch { case scala.util.control.NonFatal(_) => () }
-
-  private def backfillMirrorEntryCore(g: Long): Unit = {
-    val after = commitFile(g + 1)
-    if (!Files.exists(after)) return
-    val (mode, segs, tag) = parseCommitFields(Files.readString(after))
-    val prevSegs: Seq[String] =
-      if (g == 0) Seq.empty
-      else if (Files.exists(commitFile(g)))
-        parseCommitFields(Files.readString(commitFile(g)))._2
-      else return
-    val addedSegs = segs.filterNot(prevSegs.contains)
-    val removedSegs = prevSegs.filterNot(segs.contains)
-    if ((addedSegs ++ removedSegs)
-        .exists(s => !Files.isDirectory(Paths.get(path, s)))) return
-    val added = addedSegs.flatMap(segmentFiles)
-    val removed = removedSegs.flatMap(segmentFiles).map(_._1)
-    // op + userMetadata exactly as the lost write would have emitted
-    // them: dv deletes mirror as op "delete" whose userMetadata names
-    // the sidecar dir (stored as the commit's tag for this purpose);
-    // physical rewrites mirror with dataChange=false
-    val op = if (mode == "delete-dv") "delete" else mode
-    writeMirrorEntry(g, op, added, removed,
-      schemaJson = backfillSchema(added),
-      dataChange = mode != "compact" && mode != "reorg",
-      userMetadata = tag, allowCheckpoint = false)
-  }
-
-  /** Schema for a backfilled mirror entry: the sidecar's last-emitted
-    * schema when present (⇒ no spurious metaData action), else — a
-    * first-commit backfill on a log with no sidecar yet — the parquet
-    * footer schema of the entry's own files. */
-  private def backfillSchema(added: Seq[(String, Long)]): String =
-    readMetaSidecar().map(_._2).filter(_.nonEmpty).getOrElse {
-      if (added.isEmpty) read().schema.json
-      else spark.read.parquet(
-        added.map { case (f, _) => s"$path/$f" }: _*).schema.json
+    try {
+      val after = commitFile(g + 1)
+      if (!Files.exists(after)) return
+      val (mode, segs, tag) = parseCommitFields(Files.readString(after))
+      val prevSegs: Seq[String] =
+        if (g == 0) Seq.empty
+        else if (Files.exists(commitFile(g)))
+          parseCommitFields(Files.readString(commitFile(g)))._2
+        else return
+      if ((segs.filterNot(prevSegs.contains) ++ prevSegs.filterNot(segs.contains))
+          .exists(s => !Files.isDirectory(Paths.get(path, s)))) return
+      writeMirrorEntry(g + 1, mode, prevSegs, segs, tag, healed = true)
+    } catch {
+      case _: java.io.IOException | _: java.io.UncheckedIOException => ()
     }
 
   private def metaSidecar = deltaLogDir.resolve(".graft_table_meta")
 
-  /** (table id, last-emitted schema) from the mirror's meta sidecar —
-    * the one reader [[writeMirrorEntry]] and [[backfillSchema]] share. */
+  /** (table id, last-emitted schema) from the mirror's meta sidecar. */
   private def readMetaSidecar(): Option[(String, String)] =
     if (!Files.exists(metaSidecar)) None
     else {
@@ -1444,7 +1352,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
       .map(_.group(1)).getOrElse("")
     val tag = """"tag":"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(s)
       .map(m => jsonUnesc(m.group(1))).getOrElse("")
-    (mode, parseSegments(s), tag)
+    (mode, arrayField(s, "segments"), tag)
   }
 
   /** Inverse of [[jsonEsc]] (handles every escape it emits). */
@@ -1471,44 +1379,68 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     sb.toString
   }
 
-  private def writeMirrorEntry(version: Long, mode: String,
-      added: Seq[(String, Long)], removed: Seq[String],
-      schemaJson: String, dataChange: Boolean, userMetadata: String,
-      allowCheckpoint: Boolean = true): Unit = {
+  /** The schema [[read]] serves over `segs`: their footer-merged schema
+    * (the per-path cache [[scanPaths]] plans with), relaxed to nullable
+    * as a Spark file scan reports it. */
+  private def servedSchema(segs: Seq[String]): StructType =
+    org.apache.spark.sql.graft.SchemaBridge.asNullable(
+      ManagedParquetTable.footerMergedSchema(spark, segs.map(s => s"$path/$s")))
+
+  /** Mirror entry `ver - 1` (manifest versions are 1-based, mirror
+    * numbers 0-based): the commit of mode `mode` and tag `tag` that took
+    * the table from segments `prev` to `segs`. The ONE builder of mirror
+    * entries — [[commit]] calls it with the version it just won, and
+    * the gap backfill with the version it heals — so a healed entry
+    * carries the same actions as the lost one. The number is never a
+    * listing's max+1 (handed out again after log retention) nor a re-read head
+    * (another commit landing in between would get its entry replaced);
+    * a crash before the write leaves a gap instead. The entry holds:
+    *  - remove/add actions from the segment diff;
+    *  - the tag as commitInfo.userMetadata (the append's idempotence
+    *    mark; a dv delete's `graft-dv:<dir>` sidecar pointer);
+    *  - a dv delete (`delete-dv`) as op DELETE with no file actions: the
+    *    protocol's DV form needs reader-version-3 features and this
+    *    mirror stays at reader v1, so external FILE-level replays see
+    *    an unchanged file set, while the userMetadata lets a graft-aware
+    *    replay (tools/DeltaLogReplay) apply the tombstones;
+    *  - `dataChange=false` for the physical rewrites (compact, reorg);
+    *  - a metaData action when the schema [[read]] serves over `segs`
+    *    ([[servedSchema]]) differs from the last-emitted one, so a Delta
+    *    reader resolving the LATEST metaData sees every evolved column.
+    * A `healed` entry reuses the last-emitted schema (no metaData; if
+    * the lost commit evolved the schema, the next real commit re-emits
+    * it) and writes no checkpoint. */
+  private def writeMirrorEntry(ver: Long, mode: String, prev: Seq[String],
+      segs: Seq[String], tag: String, healed: Boolean): Unit = {
+    val version = ver - 1
     val now = System.currentTimeMillis()
-    // stable table id + last-emitted schema live in a sidecar so that
-    // schema-evolving appends (S7) re-emit metaData — a Delta reader
-    // resolves the LATEST metaData action, and without this an evolved
-    // column would be silently dropped by readers of the mirror.
+    val added = segs.filterNot(prev.contains).flatMap(segmentFiles)
+    val removed = prev.filterNot(segs.contains).flatMap(segmentFiles).map(_._1)
+    val dataChange = mode != "compact" && mode != "reorg"
+    val op = if (mode == "delete-dv") "delete" else mode
+    // stable table id + last-emitted schema live in a sidecar.
     // Fallback for logs predating the sidecar: recover both from the
     // newest metaData action already in the log (keeps the table id
     // stable — Delta requires one id for the log's lifetime).
     val fromSidecar = readMetaSidecar()
-    val sidecarMissing = fromSidecar.isEmpty
     val (tableId, lastSchema) = fromSidecar.getOrElse(
       recoverMetaFromLog().getOrElse(
         (java.util.UUID.randomUUID().toString, "")))
-    // the table's schema is the MERGE across live segments (read uses
-    // mergeSchema), so an append whose frame lacks a previously-evolved
-    // column must NOT narrow the emitted schemaString; overwrite/delete
-    // replace the snapshot, so their frame schema IS the table schema
-    val effectiveSchema =
-      if (mode == "append") mergeSchemaJson(lastSchema, schemaJson)
-      else schemaJson
+    val schema =
+      if (healed && lastSchema.nonEmpty) lastSchema else servedSchema(segs).json
     val sb = new StringBuilder
     if (version == 0)
       sb ++= s"""{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}\n"""
-    val emitMeta = version == 0 || effectiveSchema != lastSchema
+    val emitMeta = version == 0 || schema != lastSchema
     if (emitMeta) {
       sb ++= s"""{"metaData":{"id":"$tableId",""" +
         s""""format":{"provider":"parquet","options":{}},""" +
-        s""""schemaString":"${jsonEsc(effectiveSchema)}",""" +
+        s""""schemaString":"${jsonEsc(schema)}",""" +
         s""""partitionColumns":[],"configuration":{},""" +
         s""""createdTime":$now}}\n"""
     }
-    val um = if (userMetadata.isEmpty) ""
-      else s""","userMetadata":"${jsonEsc(userMetadata)}""""
-    sb ++= s"""{"commitInfo":{"timestamp":$now,"operation":"${mode.toUpperCase}"$um}}\n"""
+    val um = if (tag.isEmpty) "" else s""","userMetadata":"${jsonEsc(tag)}""""
+    sb ++= s"""{"commitInfo":{"timestamp":$now,"operation":"${op.toUpperCase}"$um}}\n"""
     removed.foreach { f =>
       sb ++= s"""{"remove":{"path":"${jsonEsc(f)}","deletionTimestamp":$now,""" +
         s""""dataChange":$dataChange}}\n"""
@@ -1517,26 +1449,23 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
       sb ++= s"""{"add":{"path":"${jsonEsc(f)}","partitionValues":{},""" +
         s""""size":$size,"modificationTime":$now,"dataChange":$dataChange}}\n"""
     }
-    GraftFs.publish(deltaLogDir.resolve(f"$version%020d.json"), sb.toString,
-      replace = false)
+    GraftFs.publish(logFile(deltaLogDir, version), sb.toString, replace = false)
     // periodic checkpoint: real Delta readers (and the reference's own
     // health probe, gold/bronzeToGold.py:17-42) expect _last_checkpoint
     // beyond ~10 commits so recovery is O(commits since checkpoint),
     // not O(log). Written AFTER the commit file: a crash in between
-    // costs only a missed checkpoint, never a dangling pointer.
-    // Suppressed on backfill (allowCheckpoint=false): writeCheckpoint
-    // snapshots the CURRENT manifest, which is ahead of a healed
-    // historical version — a checkpoint stamped with its number would
-    // claim future files.
-    if (allowCheckpoint && version > 0 && version % CheckpointInterval == 0)
-      writeCheckpoint(version, tableId, effectiveSchema, now)
+    // costs only a missed checkpoint, never a dangling pointer. Not on
+    // a heal: that version is behind the head, and a checkpoint stamped
+    // with its number must not be mistaken for a fresher one.
+    if (!healed && version > 0 && version % CheckpointInterval == 0)
+      writeCheckpoint(version, tableId, schema, now, segs)
     // sidecar update AFTER the commit file lands, and atomically: a
     // crash in between only re-emits a harmless duplicate metaData on
     // the next commit (a stale sidecar can never SUPPRESS one). Also
     // (re)write it when it was absent — a legacy table would otherwise
     // re-scan the whole log on EVERY commit
-    if (emitMeta || sidecarMissing)
-      GraftFs.publish(metaSidecar, s"$tableId\n$effectiveSchema")
+    if (emitMeta || fromSidecar.isEmpty)
+      GraftFs.publish(metaSidecar, s"$tableId\n$schema")
   }
 
   /** Checkpoint cadence in commits (Delta's own default is 10). */
@@ -1545,11 +1474,10 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
   /** Delta-protocol checkpoint: ONE parquet file holding the full
     * reconstructed state at `version` (protocol + metaData + one add
     * per live data file), plus the `_last_checkpoint` pointer. Live
-    * state comes from the manifest snapshot (committed immediately
-    * before the mirror runs), so no log replay is needed to produce it. */
+    * state is the segment set `segs` the commit just published, so no
+    * log replay is needed to produce it. */
   private def writeCheckpoint(version: Long, tableId: String,
-      schemaJson: String, now: Long): Unit = {
-    import scala.jdk.CollectionConverters._
+      schemaJson: String, now: Long, segs: Seq[String]): Unit = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val addType = StructType(Seq(
@@ -1574,7 +1502,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
       StructField("protocol", protoType),
       StructField("metaData", metaType),
       StructField("add", addType)))
-    val live = snapshot().map(_._2).getOrElse(Seq.empty).flatMap(segmentFiles)
+    val live = segs.flatMap(segmentFiles)
     val empty = Map.empty[String, String]
     val rows: Seq[Row] =
       Row(Row(1, 2), null, null) +:
@@ -1591,8 +1519,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     val part = GraftFs.list(tmpDir)
       .find(_.getFileName.toString.endsWith(".parquet"))
       .getOrElse(throw new IllegalStateException("checkpoint write produced no parquet"))
-    GraftFs.move(part, deltaLogDir.resolve(f"$version%020d.checkpoint.parquet"),
-      replace = true)
+    GraftFs.move(part, logFile(deltaLogDir, version, Checkpoint), replace = true)
     GraftFs.delete(tmpDir)
     GraftFs.publish(deltaLogDir.resolve("_last_checkpoint"),
       s"""{"version":$version,"size":${rows.size}}""")
@@ -1614,31 +1541,25 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     * needed commit files are gone — time travel is bounded by log and
     * segment retention, exactly as in real Delta. */
   def deltaSnapshotFiles(asOfVersion: Option[Long]): Seq[String] = {
-    import scala.jdk.CollectionConverters._
     // newest checkpoint at or before the target, by LISTING checkpoint
     // files (what real Delta does) rather than trusting only the
     // `_last_checkpoint` pointer: after log retention the commits
     // before some historical checkpoint are gone, and a time travel
     // below the newest checkpoint must seed from an intermediate one
     // instead of replaying from version 0
-    val ckptVer: Option[Long] = GraftFs.list(deltaLogDir)
-      .map(_.getFileName.toString)
-      .flatMap(n => """^(\d{20})\.checkpoint\.parquet$""".r
-        .findFirstMatchIn(n).map(_.group(1).toLong))
+    val ckptVer: Option[Long] = logEntries(deltaLogDir, Checkpoint).map(_._1)
       .filter(v => asOfVersion.forall(v <= _))
       .maxOption
     val live = scala.collection.mutable.LinkedHashSet.empty[String]
     ckptVer.foreach { v =>
       spark.read
-        .parquet(deltaLogDir.resolve(f"$v%020d.checkpoint.parquet").toString)
+        .parquet(logFile(deltaLogDir, v, Checkpoint).toString)
         .select("add.path").na.drop("all")
         .collect().foreach(r => live += r.getString(0))
     }
     val addRe = """"add":\{"path":"((?:[^"\\]|\\.)*)"""".r
     val rmRe = """"remove":\{"path":"((?:[^"\\]|\\.)*)"""".r
-    val commits = GraftFs.list(deltaLogDir)
-      .filter(_.getFileName.toString.matches("\\d{20}\\.json"))
-      .map(p => (p.getFileName.toString.stripSuffix(".json").toLong, p))
+    val commits = logEntries(deltaLogDir)
       .filter { case (v, _) =>
         ckptVer.forall(v > _) && asOfVersion.forall(v <= _)
       }
@@ -1662,6 +1583,26 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     live.toSeq.sorted
   }
 
+  /** The mirror version a change-feed maintainer folds to: the
+    * manifest head (`version - 1`; mirror numbers are 0-based) clamped
+    * to the newest mirror entry reachable contiguously from the
+    * retention floor (one directory listing). With uncoordinated OCC
+    * writers a just-landed foreign commit's mirror entry may still be
+    * IN FLIGHT for a few milliseconds — a maintainer that derived its
+    * head from the manifest in that window would publish a basis
+    * claiming rows the change feed cannot yet serve, and the window
+    * would be lost forever. Folding to THIS head leaves the in-flight
+    * tail for the next trigger (ST18 chaos-proves the protocol). Read
+    * it before the data the fold covers: a stale head merely replays.
+    * −1 when there is nothing to fold yet. */
+  def foldHead: Long = {
+    val head = version - 1
+    val nums = logEntries(deltaLogDir).map(_._1).sorted
+    if (nums.isEmpty) -1L
+    else math.min(head,
+      nums.tail.foldLeft(nums.head)((h, n) => if (n == h + 1) n else h))
+  }
+
   /** File-granularity change feed between delta-log `version`
     * (exclusive) and the current snapshot: rows in files added since
     * are tagged `_change_type` 'insert', rows in files removed since
@@ -1672,37 +1613,14 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     * consumers that need net-row changes anti-join the two sides;
     * consumers of append-only tables (the ingest norm) get exact row
     * inserts with no rewrite noise. */
-  /** The newest delta-log version the MIRROR can prove: the largest
-    * mirror entry number reachable contiguously from the retention
-    * floor (one directory listing). With uncoordinated OCC writers a
-    * just-landed foreign commit's mirror entry may still be IN FLIGHT
-    * for a few milliseconds — a maintainer that derives its fold head
-    * from the manifest in that window publishes a basis claiming rows
-    * the change feed cannot yet serve, and the window is lost forever.
-    * Folding to THIS head instead leaves the in-flight tail for the
-    * next trigger (ST18 chaos-proves the protocol). −1 when no mirror
-    * entry exists yet. */
-  def mirrorStableVersion: Long = {
-    val nums = GraftFs.list(deltaLogDir).map(_.getFileName.toString)
-      .filter(_.matches("\\d{20}\\.json")).map(_.dropRight(5).toLong)
-      .sorted
-    if (nums.isEmpty) -1L
-    else {
-      var h = nums.head
-      nums.drop(1).foreach(n => if (n == h + 1) h = n)
-      h
-    }
-  }
-
   def changesSince(version: Long): DataFrame =
     changesSinceCore(version, None)
 
   /** [[changesSince]] bounded at mirror version `upTo` (inclusive) —
     * the window (version, upTo] exactly. The maintainer protocol:
-    * fold `changesSince(basis, head)` with
-    * `head = min(version - 1, mirrorStableVersion)` so the fold and
-    * the basis it publishes name the SAME provable state even while
-    * other writers are mid-commit. */
+    * fold `changesSince(basis, head)` with `head = foldHead` (read
+    * first), so the fold and the basis it publishes name the SAME
+    * provable state even while other writers are mid-commit. */
   def changesSince(version: Long, upTo: Long): DataFrame =
     changesSinceCore(version, Some(upTo))
 
@@ -1773,7 +1691,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     * window's schema already matches. An empty snapshot (nothing to
     * align to) passes through. */
   private def alignToSnapshotSchema(df: DataFrame): DataFrame = {
-    if (snapshot().map(_._2).getOrElse(Seq.empty).isEmpty) return df
+    if (snapshot().segments.isEmpty) return df
     val tbl = read().schema
     if (tbl.fields.map(_.name).toSeq == df.columns.toSeq.filter(_ != "_change_type"))
       return df
@@ -1806,44 +1724,24 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     * a recreated source fails loudly even when the new lineage's head
     * has caught up past the recorded version (a version-only guard
     * cannot see that). None before the first commit. */
-  def tableId: Option[String] = {
-    val sidecar = deltaLogDir.resolve(".graft_table_meta")
-    if (Files.exists(sidecar))
-      Files.readString(sidecar).split("\n", 2).headOption.map(_.trim)
-        .filter(_.nonEmpty)
-    else recoverMetaFromLog().map(_._1)
+  def tableId: Option[String] = readMetaSidecar() match {
+    case Some((id, _)) => Some(id.trim).filter(_.nonEmpty)
+    case None => recoverMetaFromLog().map(_._1)
   }
 
   /** Newest (table id, schemaString) already in the log, if any. */
   private def recoverMetaFromLog(): Option[(String, String)] = {
-    import scala.jdk.CollectionConverters._
-    if (!Files.isDirectory(deltaLogDir)) return None
     val metaRe =
       """"metaData":\{"id":"([^"]+)".*"schemaString":"((?:[^"\\]|\\.)*)"""".r
     // LAZY newest-first scan: stops at the first (newest) commit that
     // carries a metaData action — version 0 always does, so this is
     // bounded by the distance to the last schema change, not log size
-    GraftFs.list(deltaLogDir)
-      .filter(_.getFileName.toString.matches("\\d{20}\\.json"))
-      .sortBy(_.getFileName.toString).reverseIterator
-      .flatMap(p => Files.readString(p).linesIterator
+    logEntries(deltaLogDir).sortBy(_._1).reverseIterator
+      .flatMap(e => Files.readString(e._2).linesIterator
         .flatMap(metaRe.findFirstMatchIn(_))
         .map(m => (m.group(1), jsonUnesc(m.group(2)))))
       .nextOption()
   }
-
-  /** Field-union of two schema JSONs: fields of the newer win on name
-    * clash, previously-evolved columns are retained — matching what a
-    * mergeSchema read serves. */
-  private def mergeSchemaJson(prevJson: String, nextJson: String): String =
-    if (prevJson.isEmpty) nextJson
-    else {
-      import org.apache.spark.sql.types.{DataType, StructType}
-      val prev = DataType.fromJson(prevJson).asInstanceOf[StructType]
-      val next = DataType.fromJson(nextJson).asInstanceOf[StructType]
-      val extra = prev.fields.filterNot(f => next.fieldNames.contains(f.name))
-      StructType(next.fields ++ extra).json
-    }
 
   /** Reclaim storage the committed snapshot no longer needs.
     *
@@ -1874,7 +1772,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
   def vacuum(graceMs: Long = 15 * 60 * 1000L,
       retainVersions: Option[Long] = None): Unit = {
     retainVersions.foreach(applyRetention)
-    val live = snapshot().map(_._2).getOrElse(Seq.empty).toSet
+    val live = snapshot().segments.toSet
     // WALL-CLOCK file mtimes, not the nanoTime stamp in the segment
     // name: nanoTime origins are arbitrary per JVM, so a name-stamp
     // comparison across a writer restart could delete a seconds-old
@@ -1898,13 +1796,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     // would silently regress the table to the pointer AND let a later
     // commit re-claim the deleted version, forking history. Files at
     // or above the pointer stay; stranded .tmp link sources die too.
-    val ptrVer =
-      if (!Files.exists(manifest)) -1L
-      else """"version":(\d+)""".r
-        .findFirstMatchIn(Files.readString(manifest))
-        .map(_.group(1).toLong).getOrElse(-1L)
-    GraftFs.sweep(commitsDir, cutoff)(n => n.startsWith(".tmp.") ||
-      (n.matches("\\d{20}\\.json") && n.dropRight(5).toLong < ptrVer))
+    GraftFs.sweep(commitsDir, cutoff)(supersededCommit(pointerVersion))
   }
 
   /** Retention core (see [[vacuum]]): compute the horizon checkpoint,
@@ -1917,19 +1809,15 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     * keyed by version stay valid. */
   private def applyRetention(retain: Long): Unit = {
     require(retain >= 1, s"retainVersions must be >= 1, got $retain")
-    val snap = snapshot()
-    if (snap.isEmpty) return
-    val (ver, segs) = snap.get
+    val Snapshot(ver, segs) = snapshot()
+    if (ver == 0) return
     val head = ver - 1 // newest mirror version
     val requested = head - retain + 1 // oldest version asked to keep
     if (requested <= 0) return
     // snap the horizon DOWN to a checkpoint so every retained version
     // reconstructs from checkpoint + contiguous tail
-    val ckpts = GraftFs.list(deltaLogDir)
-      .map(_.getFileName.toString)
-      .flatMap(n => """^(\d{20})\.checkpoint\.parquet$""".r
-        .findFirstMatchIn(n).map(_.group(1).toLong))
-    val cut = ckpts.filter(_ <= requested).maxOption.getOrElse(return)
+    val cut = logEntries(deltaLogDir, Checkpoint).map(_._1)
+      .filter(_ <= requested).maxOption.getOrElse(return)
     if (cut <= 0) return
     // dv entries needed by some retained version v >= cut: entries at
     // or after the cut, plus older entries whose touched segments are
@@ -1958,17 +1846,16 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     }
     // prune the mirror log below the horizon checkpoint; readAt below
     // it now fails the contiguity check with a clean retention error
-    GraftFs.list(deltaLogDir).foreach { p =>
-      val n = p.getFileName.toString
-      val v = """^(\d{20})\.json$""".r.findFirstMatchIn(n)
-        .orElse("""^(\d{20})\.checkpoint\.parquet$""".r.findFirstMatchIn(n))
-        .map(_.group(1).toLong)
-      if (v.exists(_ < cut)) GraftFs.delete(p)
-    }
+    (logEntries(deltaLogDir) ++ logEntries(deltaLogDir, Checkpoint))
+      .foreach { case (v, p) => if (v < cut) GraftFs.delete(p) }
   }
 }
 
 object ManagedParquetTable {
+  /** A committed snapshot: its manifest version and live segment dir
+    * names. Version 0 with no segments when nothing is committed. */
+  private final case class Snapshot(version: Long, segments: Seq[String])
+
   /** Per-path read-schema cache: the dirs read here (segments, MV
     * partials) are nanotime-unique and never mutate, so a key can never
     * alias different content. Metadata only; no data is cached. */

@@ -221,9 +221,9 @@ final class IncrementalIvfPqIndex(spark: SparkSession,
     // service, and this run re-stages from scratch
     if (reorgSwap.inflight) recoverReorg()
     require(isTrained, s"index at $indexPath is not trained")
-    // mirror-proven head (see refresh): read() below may serve a few
-    // rows past it — they replay idempotently on the next refresh
-    val headV = math.min(source.version - 1, source.mirrorStableVersion)
+    // mirror-proven head: read() below may serve a few rows past it —
+    // they replay idempotently on the next refresh
+    val headV = source.foldHead
     val lineage = source.tableId
     val live = source.read()
     val sample = trainOn.getOrElse(live)
@@ -291,13 +291,12 @@ final class IncrementalIvfPqIndex(spark: SparkSession,
   }
 
   /** Bring the index up to the source table's mirror-proven version
-    * (head clamped to `mirrorStableVersion` — see
-    * IncrementalInvertedIndex.refresh for the OCC race this closes). */
+    * ([[graft.io.ManagedParquetTable.foldHead]]). */
   def refresh(): Unit = {
     requireNoReorg()
     require(isTrained, s"index at $indexPath must be trained before refresh")
     val (cents, cbs) = (centroids, codebooks)
-    val head = math.min(source.version - 1, source.mirrorStableVersion)
+    val head = source.foldHead
     if (head < 0) { lastRefresh = "noop"; return }
     lastRefresh = tracker.refreshTo(head, source.tableId) {
       val full = source.read()

@@ -60,12 +60,9 @@ final class IncrementalVectorIndex(spark: SparkSession,
   def read(): DataFrame = table.read()
 
   /** Bring the index up to the source table's mirror-proven version
-    * (head clamped to `mirrorStableVersion` — see
-    * IncrementalInvertedIndex.refresh for the OCC race this closes). */
+    * ([[graft.io.ManagedParquetTable.foldHead]]). */
   def refresh(): Unit = {
-    // newest delta-log mirror version: manifest versions are 1-based,
-    // mirror file numbers 0-based, so head mirror = manifest - 1
-    val head = math.min(source.version - 1, source.mirrorStableVersion)
+    val head = source.foldHead
     if (head < 0) { lastRefresh = "noop"; return }
     lastRefresh = tracker.refreshTo(head, source.tableId) {
       table.overwrite(

@@ -112,13 +112,34 @@ object BronzeIngest {
   def applyCdc(changes: DataFrame, keyCols: Seq[String], seqCol: String,
       opCol: String): DataFrame = {
     require(keyCols.nonEmpty, "applyCdc requires at least one key column")
+    latestPerKey(changes, keyCols, seqCol)
+      .filter(col(opCol) =!= "d").drop(opCol, seqCol)
+  }
+
+  /** The CDC fold every apply shares: each key's latest change (max
+    * `seqCol`), one shuffle on key. */
+  private def latestPerKey(changes: DataFrame, keyCols: Seq[String],
+      seqCol: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(keyCols.map(col): _*)
       .orderBy(col(seqCol).desc)
-    changes
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1 && col(opCol) =!= "d")
-      .drop("_rn", opCol, seqCol)
+    changes.withColumn("_rn", row_number().over(w))
+      .filter(col("_rn") === 1).drop("_rn")
+  }
+
+  /** Fold `changes` to each key's latest change and apply it: winning
+    * non-deletes `upsert`, winning deletes' keys `delete`; an empty side
+    * is never called. One aggregate over the fold answers both emptiness
+    * probes, so they cost one evaluation of the window, not two. */
+  private def applyLatest(changes: DataFrame, keyCols: Seq[String],
+      seqCol: String, opCol: String)(upsert: DataFrame => Unit,
+      delete: DataFrame => Unit): Unit = {
+    val latest = latestPerKey(changes, keyCols, seqCol)
+    val isDel = col(opCol) === "d"
+    val n = latest.agg(count(when(!isDel, lit(1))), count(when(isDel, lit(1))))
+      .head()
+    if (n.getLong(0) > 0) upsert(latest.filter(!isDel).drop(opCol, seqCol))
+    if (n.getLong(1) > 0) delete(latest.filter(isDel).select(keyCols.map(col): _*))
   }
 
   /** ST11: the per-micro-batch half of a streaming CDC UPSERT sink —
@@ -134,19 +155,9 @@ object BronzeIngest {
     * transaction script would give. */
   def upsertCdcBatch(table: graft.io.ManagedParquetTable,
       changes: DataFrame, keyCols: Seq[String], seqCol: String,
-      opCol: String): Unit = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keyCols.map(col): _*)
-      .orderBy(col(seqCol).desc)
-    val latest = changes.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-    val ups = latest.filter(col(opCol) =!= "d")
-      .drop("_rn", opCol, seqCol)
-    val dels = latest.filter(col(opCol) === "d")
-      .select(keyCols.map(col): _*)
-    if (!ups.isEmpty) table.merge(ups, keyCols)
-    if (!dels.isEmpty) table.deleteMatching(dels, keyCols)
-  }
+      opCol: String): Unit =
+    applyLatest(changes, keyCols, seqCol, opCol)(
+      table.merge(_, keyCols), table.deleteMatching(_, keyCols))
 
   /** [[upsertCdcBatch]] with the delete half landing as DELETION
     * VECTORS: a micro-batch of scattered streaming tombstones writes
@@ -166,17 +177,8 @@ object BronzeIngest {
   def upsertCdcBatchDV(table: graft.io.ManagedParquetTable,
       changes: DataFrame, keyCols: Seq[String], seqCol: String,
       opCol: String, purgeThreshold: Double = 0.5): Unit = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keyCols.map(col): _*)
-      .orderBy(col(seqCol).desc)
-    val latest = changes.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-    val ups = latest.filter(col(opCol) =!= "d")
-      .drop("_rn", opCol, seqCol)
-    val dels = latest.filter(col(opCol) === "d")
-      .select(keyCols.map(col): _*)
-    if (!ups.isEmpty) table.merge(ups, keyCols)
-    if (!dels.isEmpty) table.deleteMatchingDV(dels, keyCols)
+    applyLatest(changes, keyCols, seqCol, opCol)(
+      table.merge(_, keyCols), table.deleteMatchingDV(_, keyCols))
     table.compactDeletes(purgeThreshold)
   }
 
@@ -366,7 +368,9 @@ object BronzeIngest {
         Some((ls(0).trim.toLong,
           if (ls.length > 1 && ls(1).trim.nonEmpty) Some(ls(1).trim)
           else None))
-      } catch { case scala.util.control.NonFatal(_) => None }
+      } catch {
+        case _: java.io.IOException | _: NumberFormatException => None
+      }
     // floor files named by an EARLIER scheme (sanitized+hashCode,
     // sanitized-only) fall back on VERBATIM ownership proof, not the
     // name: the recorded tag embeds the verbatim appId, so a legacy

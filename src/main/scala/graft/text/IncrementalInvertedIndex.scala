@@ -55,14 +55,10 @@ final class IncrementalInvertedIndex(spark: SparkSession,
 
   def basis: Option[Long] = tracker.basis
 
-  /** Bring the index up to the source table's mirror-proven version.
-    * The fold head is clamped to [[ManagedParquetTable
-    * .mirrorStableVersion]]: with uncoordinated OCC writers a foreign
-    * commit's mirror entry can be in flight at this instant, and a
-    * manifest-derived head would publish a basis past rows the feed
-    * cannot serve yet — the in-flight tail folds next trigger. */
+  /** Bring the index up to the source table's mirror-proven version
+    * ([[ManagedParquetTable.foldHead]]). */
   def refresh(): Unit = {
-    val head = math.min(source.version - 1, source.mirrorStableVersion)
+    val head = source.foldHead
     if (head < 0) { lastRefresh = "noop"; return }
     lastRefresh = tracker.refreshTo(head, source.tableId) {
       // buildIndex overwrites wholesale and clears any stale gate.

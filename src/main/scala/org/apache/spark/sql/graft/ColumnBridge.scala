@@ -64,4 +64,7 @@ object SchemaBridge {
   /** The same pairwise merge `mergeSchemasInParallel` folds with. */
   def merge(spark: SparkSession, a: StructType, b: StructType): StructType =
     a.merge(b, spark.sessionState.conf.caseSensitiveAnalysis)
+
+  /** `s` with every field nullable, as a Spark file scan reports it. */
+  def asNullable(s: StructType): StructType = s.asNullable
 }

@@ -781,6 +781,104 @@ class IoSpec extends SparkSpec {
     // a reader resolving the LATEST metaData sees the evolved column,
     // matching what the table itself serves via mergeSchema
     assert(t.read().columns.contains("extra"))
+    // the latest schemaString is the schema read() serves, after every
+    // op — narrowed ones included, each touching only pre-evolution
+    // segments (whose own frames lack `extra`)
+    def latestSchema(): String = {
+      val meta = Files.list(logDir).iterator().asScala.map(_.getFileName.toString)
+        .filter(_.matches("\\d{20}\\.json")).toSeq.sorted
+        .flatMap(actions).filter(_.contains("\"metaData\"")).last
+      new com.fasterxml.jackson.databind.ObjectMapper().readTree(meta)
+        .path("metaData").path("schemaString").asText()
+    }
+    def assertServed(op: String): Unit =
+      assert(latestSchema() == t.read().schema.json,
+        s"after $op the latest schemaString must be the schema read() serves")
+    assertServed("the narrower append")
+    t.deleteWhere(col("id") === 1)
+    assertServed("a narrowed deleteWhere")
+    t.merge(Seq((2, "B")).toDF("id", "v"), Seq("id"))
+    assertServed("a merge whose updates lack the evolved column")
+    t.deleteWhereDV(col("id") === 4)
+    assertServed("deleteWhereDV")
+    assert(t.compactDeletes(0.3) == 1)
+    assertServed("compactDeletes")
+    assert(t.read().columns.contains("extra"))
+    assert(t.read().as[(Int, String, Option[Long])].collect().sortBy(_._1)
+      .toSeq == Seq((2, "B", None), (3, "c", Some(9L))))
+  }
+
+  test("a healed mirror entry equals the live one, for every commit mode") {
+    val dir = tmp("mpt_heal_modes") + "/tbl"
+    val t = new ManagedParquetTable(spark, dir)
+    val logDir = Paths.get(dir, "_delta_log")
+    // timestamps differ between the two writes; a heal re-emits no
+    // metaData action by contract
+    def norm(entry: String): Seq[String] = entry.linesIterator
+      .filterNot(_.contains("\"metaData\""))
+      .map(_.replaceAll("\"(timestamp|deletionTimestamp|modificationTime)\":\\d+",
+        "\"$1\":0"))
+      .toSeq
+    def assertHeals(op: String): Unit = {
+      val v = t.version - 1
+      val f = logDir.resolve(f"$v%020d.json")
+      val live = Files.readString(f)
+      Files.delete(f)
+      Files.deleteIfExists(logDir.resolve(f".$v%020d.json.crc"))
+      t.repairMirror()
+      assert(Files.exists(f), s"$op: repairMirror must heal entry $v")
+      assert(norm(Files.readString(f)) == norm(live),
+        s"$op: healed entry differs from the live one\n" +
+          s"live:\n$live\nhealed:\n${Files.readString(f)}")
+      assert(t.readAt(v).count() == t.read().count(), op)
+    }
+    t.overwrite((1 to 6).map(i => (i, s"v$i")).toDF("id", "v"))
+    assertHeals("overwrite")
+    t.append(Seq((7, "v7", 70L), (8, "v8", 80L)).toDF("id", "v", "extra"),
+      Some("tag-7"))
+    assertHeals("append")
+    t.merge(Seq((2, "B"), (9, "I")).toDF("id", "v"), Seq("id"))
+    assertHeals("merge")
+    t.deleteWhere(col("id") === 7)
+    assertHeals("deleteWhere")
+    t.deleteWhereDV(col("id") === 8)
+    assertHeals("deleteWhereDV")
+    assert(t.compactDeletes(0.3) == 1)
+    assertHeals("compactDeletes")
+    t.deleteWhereDV(col("id") === 1)
+    assert(t.compactDeletes(0.1) == 1)
+    assertHeals("compactDeletes with survivors")
+    t.compact()
+    assertHeals("compact")
+    // the last segment holding `extra` was purged, so read() dropped it
+    assert(t.read().as[(Int, String)].collect().sortBy(_._1).toSeq ==
+      Seq((2, "B"), (3, "v3"), (4, "v4"), (5, "v5"), (6, "v6"), (9, "I")))
+  }
+
+  test("a mirror gap whose commit file cannot be read stays open, is " +
+      "reported, and the next commit still lands") {
+    val dir = tmp("mpt_gap_dir") + "/tbl"
+    val t = new ManagedParquetTable(spark, dir)
+    t.append(Seq((1, "a")).toDF("id", "v"))
+    val v = t.append(Seq((2, "b")).toDF("id", "v"))
+    val logDir = Paths.get(dir, "_delta_log")
+    val gap = logDir.resolve(f"${v - 1}%020d.json")
+    // the head's mirror write was lost, and its commit file became a
+    // directory (the pointer still serves the head)
+    Files.delete(gap)
+    val cf = Paths.get(dir, "_graft_commits", f"$v%020d.json")
+    Files.delete(cf)
+    Files.createDirectories(cf)
+    def mirrorLag = t.maintenancePlan().filter(_.action == "repairMirror")
+    t.repairMirror()
+    assert(!Files.exists(gap), "an unprovable gap must not be guessed")
+    assert(mirrorLag.map(_.value) == Seq(1L))
+    val v2 = t.append(Seq((3, "c")).toDF("id", "v"))
+    assert(v2 == v + 1 && t.version == v + 1)
+    assert(t.read().count() == 3)
+    assert(!Files.exists(gap), "the gap stays open")
+    assert(Files.exists(logDir.resolve(f"$v%020d.json")),
+      "the next commit writes its own entry")
   }
 
   test("jsonl shard export: round-trip, shard membership input-invariant") {

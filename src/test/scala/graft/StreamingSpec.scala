@@ -896,6 +896,38 @@ class StreamingSpec extends SparkSpec {
         "be ignored, not trusted")
   }
 
+  test("ST15 floor sidecar: a floor file that holds garbage or is a " +
+      "directory reads as untrusted — the replay is recognized from the " +
+      "logs and the sink keeps landing batches") {
+    import graft.io.ManagedParquetTable
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_st15g").toString
+    val t = new ManagedParquetTable(spark, s"$dir/docs")
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+      .select($"doc_id", $"text").limit(40)
+    val b0 = docs.where($"doc_id" % 2 === 0)
+    val b1 = docs.where($"doc_id" % 2 === 1)
+    BronzeIngest.indexedIngestBatch(t, b0, 0L, "g", Nil)
+    val floor = new java.io.File(s"$dir/docs").listFiles()
+      .find(_.getName.startsWith("_graft_sink_floor_g_")).get.toPath
+    val rows = t.read().count()
+    val v = t.version
+    Files.writeString(floor, "not-a-version\n")
+    BronzeIngest.indexedIngestBatch(t, b0, 0L, "g", Nil)
+    assert(t.read().count() == rows && t.version == v,
+      "a garbage floor must not turn a replay into a re-append")
+    val n1 = b1.count()
+    BronzeIngest.indexedIngestBatch(t, b1, 1L, "g", Nil)
+    assert(t.version == v + 1 && t.read().count() == rows + n1)
+    assert(Files.readString(floor) == s"$v\ngraft-stream:g:1",
+      "the next landed batch rewrites the floor")
+    Files.delete(floor)
+    Files.createDirectories(floor)
+    BronzeIngest.indexedIngestBatch(t, b1, 1L, "g", Nil)
+    assert(t.version == v + 1 && t.read().count() == rows + n1,
+      "a floor that is a directory must not turn a replay into a re-append")
+  }
+
   test("ST15 crash between the append's COMMIT and its mirror write: " +
       "the replay is recognized from the commit-file tag (no duplicate " +
       "rows), the mirror gap heals, and the maintained index equals a " +
