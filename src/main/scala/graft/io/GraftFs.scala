@@ -38,9 +38,12 @@ object GraftFs {
   }
 
   /** Atomic rename of `src` onto `dest` (`replace` adds
-    * REPLACE_EXISTING). A checksum twin of `src` moves along; a
-    * replaced `dest`'s twin is dropped when `src` has none, so no stale
-    * checksum outlives the file it described. */
+    * REPLACE_EXISTING). Without `replace` this is still `rename(2)`,
+    * which replaces an existing file target on POSIX: callers move onto
+    * fresh names, and a name that must never be replaced goes through
+    * [[publish]] with `replace = false`. A checksum twin of `src` moves
+    * along; a replaced `dest`'s twin is dropped when `src` has none, so
+    * no stale checksum outlives the file it described. */
   def move(src: Path, dest: Path, replace: Boolean = false): Unit = {
     if (replace) Files.move(src, dest, StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
@@ -54,12 +57,19 @@ object GraftFs {
   /** Publish `text` at `dest`: written to a hidden temp beside it,
     * then [[move]]d over it, so a reader sees the old content or the
     * new, never a torn file, and a crash leaves at most the hidden
-    * `.<name>.tmp.<nanotime>` temp. Creates the parent dirs. */
+    * `.<name>.tmp.<nanotime>` temp. Creates the parent dirs.
+    *
+    * Without `replace` the publish is a put-if-absent: the temp is
+    * hard-linked onto `dest`, which POSIX creates atomically or
+    * refuses, so of two writers racing one name exactly one wins and
+    * the other gets `FileAlreadyExistsException` with `dest`'s bytes
+    * untouched. The temp is deleted either way. */
   def publish(dest: Path, text: String, replace: Boolean = true): Unit = {
     Files.createDirectories(dest.getParent)
     val tmp = dest.resolveSibling(s".${dest.getFileName}.tmp.${System.nanoTime()}")
     Files.writeString(tmp, text)
-    move(tmp, dest, replace)
+    if (replace) move(tmp, dest, replace = true)
+    else try Files.createLink(dest, tmp) finally Files.deleteIfExists(tmp)
   }
 
   /** Start `p`'s [[sweep]] grace window now (its mtime becomes the

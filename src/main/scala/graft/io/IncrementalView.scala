@@ -137,11 +137,11 @@ final class IncrementalAggView(
     * and ONE scan of just those files rebuilds their partials
     * DV-applied — O(touched files), never O(table). */
   def refresh(): Unit = {
-    // mirror-proven head + lineage BEFORE the file snapshot (the order
-    // every maintainer uses; see ManagedParquetTable.foldHead): the
+    // committed head + lineage BEFORE the file snapshot (the order
+    // every maintainer uses; see ManagedParquetTable.changesSince): the
     // bounded file snapshot below names the state the published basis
     // claims.
-    val headV = table.foldHead
+    val headV = table.version - 1
     if (headV < 0) { lastRefresh = "noop"; return }
     val lineage = table.tableId
     val nowFiles = table.deltaSnapshotFiles(Some(headV)).toSet

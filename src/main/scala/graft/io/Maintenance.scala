@@ -38,14 +38,9 @@ final case class MaintenanceAction(
   *     compactDeletes() cadence — every live dv entry's sidecar is
   *     opened per scan, and tombstoned rows are read-and-dropped on
   *     every pass over their files.
-  *   - `maxMirrorLag`: commits the delta-log mirror is allowed to
-  *     trail the manifest before repairMirror() is recommended (the
-  *     change feed and every basis-tracked maintainer fail loudly on
-  *     a mirror gap; checkpoint freshness follows the mirror, so this
-  *     is also the checkpoint-staleness bound).
-  *   - `maxStaleObjects`: unreferenced segment dirs + superseded CAS
-  *     commit files + orphaned dv bookkeeping before vacuum() is
-  *     recommended — dead weight every listing pays for. */
+  *   - `maxStaleObjects`: unreferenced segment dirs + orphaned dv
+  *     bookkeeping before vacuum() is recommended — dead weight every
+  *     listing pays for. */
 final case class TableMaintenancePolicy(
     maxLiveFiles: Int = 512,
     smallFileBytes: Long = 16L << 20,
@@ -53,5 +48,4 @@ final case class TableMaintenancePolicy(
     targetFileBytes: Long = 128L << 20,
     maxLiveDvEntries: Int = 64,
     maxTombstonePermille: Long = 200L,
-    maxMirrorLag: Long = 0L,
     maxStaleObjects: Int = 64)

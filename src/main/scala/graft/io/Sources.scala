@@ -10,10 +10,10 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * The runtime image carries no Delta/Kafka/POI jars (verified against
   * /opt/spark/jars), so:
   *  - Delta tables → [[ManagedParquetTable]]: parquet + a versioned
-  *    commit manifest giving append/overwrite atomicity and a health
-  *    check (S5-S11 semantics), with every commit mirrored as a
-  *    Delta-protocol `_delta_log` entry so real Delta readers can
-  *    resolve the same snapshots.
+  *    commit log giving append/overwrite atomicity and a health check
+  *    (S5-S11 semantics); every commit IS a Delta-protocol
+  *    `_delta_log` entry, so real Delta readers resolve the same
+  *    snapshots.
   *  - Kafka → the streaming module's source abstraction (raw value
   *    column; file-backed here, format("kafka") where available).
   *  - XLSX → [[XlsxSource]]: JDK-only zip+StAX reader, no POI (S16).
@@ -77,12 +77,14 @@ final class ConcurrentWriteException(msg: String)
 /** Delta-semantics table on plain parquet: a delta-log-lite commit
   * protocol (S5-S10 semantics, reference gold/bronzeToGold.py:17-42).
   *
-  * Layout: immutable parquet segment dirs (`seg-<nano>/`) plus ONE
-  * manifest file naming the committed snapshot's segments. Every write
-  * lands in a FRESH segment, then the manifest is swapped in with an
-  * atomic rename — so a concurrent reader resolves either the old or the
-  * new snapshot, never a partial one (old segments are never mutated and
-  * only reclaimed by an explicit [[vacuum]], the Delta VACUUM analogue).
+  * Layout: immutable parquet segment dirs (`seg-<nano>/`), one
+  * `_delta_log/NNN.json` entry per commit (published put-if-absent —
+  * the entry IS the commit, see [[commit]]) and a `_graft_manifest`
+  * pointer caching the newest snapshot. Every write lands in a FRESH
+  * segment, then its entry is published — so a concurrent reader
+  * resolves either the old or the new snapshot, never a partial one
+  * (old segments are never mutated and only reclaimed by an explicit
+  * [[vacuum]], the Delta VACUUM analogue).
   *
   * Scale note: the manifest is O(commits), data files are plain parquet —
   * readers prune partitions/columns exactly as any parquet scan; at real
@@ -93,16 +95,14 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
   import ManagedParquetTable.Snapshot
 
   private def manifest = Paths.get(path, "_graft_manifest")
-  private def commitsDir = Paths.get(path, "_graft_commits")
-  private def commitFile(v: Long) = logFile(commitsDir, v)
 
   // ---- numbered log names ------------------------------------------------
 
   private val Json = ".json"
   private val Checkpoint = ".checkpoint.parquet"
 
-  /** `NNN<suffix>` (twenty digits) in `dir`: a CAS commit file under
-    * `_graft_commits`, a mirror entry or checkpoint under `_delta_log`. */
+  /** `NNN<suffix>` (twenty digits) in `dir`: a log entry or checkpoint
+    * under `_delta_log`. */
   private def logFile(dir: java.nio.file.Path, v: Long, suffix: String = Json) =
     dir.resolve(f"$v%020d$suffix")
 
@@ -120,55 +120,49 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     GraftFs.list(dir).flatMap(p =>
       logVersion(p.getFileName.toString, suffix).map(_ -> p))
 
-  /** The `"version"` field of a manifest or commit file. */
+  /** The `"version"` field of the manifest pointer. */
   private def versionOf(json: String): Option[Long] =
     """"version":(\d+)""".r.findFirstMatchIn(json).map(_.group(1).toLong)
-
-  /** The `_graft_manifest` pointer's own version (−1 when absent): the
-    * version resolution walks forward from, so commit files below it
-    * are never consulted again. */
-  private def pointerVersion: Long =
-    if (!Files.exists(manifest)) -1L
-    else versionOf(Files.readString(manifest)).getOrElse(-1L)
-
-  /** A `_graft_commits` entry that is superseded garbage once the
-    * pointer is at `ptrVer`: a stranded `.tmp.` link source, or a commit
-    * file below the pointer. */
-  private def supersededCommit(ptrVer: Long)(name: String): Boolean =
-    name.startsWith(".tmp.") || logVersion(name).exists(_ < ptrVer)
 
   def exists: Boolean =
     Files.exists(manifest) || resolvedManifest().isDefined
 
-  /** The committed manifest JSON and its version, resolved CAS-first:
-    * `_graft_manifest` is a POINTER CACHE of the newest per-version
-    * commit file under `_graft_commits/` (the CAS device [[commit]]
-    * publishes through). A writer that died between its CAS publish
-    * and the pointer rewrite leaves the pointer one-or-more versions
-    * behind; the commit files are authoritative, so resolution walks
-    * forward from the pointer (one `Files.exists` in the common
-    * up-to-date case) and the next successful commit heals the
-    * pointer. At EQUAL versions the pointer wins — a retention pass
+  /** The committed manifest JSON and its version, resolved log-first:
+    * `_graft_manifest` is a POINTER CACHE of the newest `_delta_log`
+    * entry, whose commitInfo carries the same graft fields (entry n
+    * commits manifest version n + 1). A writer that died between its
+    * entry publish and the pointer rewrite leaves the pointer
+    * one-or-more versions behind; the entries are authoritative, so
+    * resolution walks forward from the pointer while the next entry
+    * exists (one `Files.exists` in the common up-to-date case) and the
+    * next successful commit heals the pointer. With no pointer (the
+    * very first commit died before writing it) the newest entry is the
+    * head. At EQUAL versions the pointer wins — a retention pass
     * ([[applyRetention]]) rewrites it in place at the same version
-    * with reduced dv bookkeeping, which the version-stamped commit
-    * file does not see. */
+    * with reduced dv bookkeeping, which the entry does not see. */
   private def resolvedManifest(): Option[(Long, String)] = {
     var cur: Option[(Long, String)] =
-      if (!Files.exists(manifest)) None
-      else {
+      if (Files.exists(manifest)) {
         val s = Files.readString(manifest)
         Some((versionOf(s).getOrElse(0L), s))
-      }
-    if (cur.isEmpty) {
-      // very-first-commit crash window: CAS landed, pointer never did
-      val max = logEntries(commitsDir).map(_._1).maxOption
-      cur = max.map(v => (v, Files.readString(commitFile(v))))
-    }
-    while (cur.exists { case (v, _) => Files.exists(commitFile(v + 1)) }) {
-      val v = cur.get._1 + 1
-      cur = Some((v, Files.readString(commitFile(v))))
+      } else logEntries(deltaLogDir).map(_._1).maxOption.map(n => (n + 1, graftFields(n)))
+    while (cur.exists { case (v, _) => Files.exists(logFile(deltaLogDir, v)) }) {
+      val v = cur.get._1
+      cur = Some((v + 1, graftFields(v)))
     }
     cur
+  }
+
+  /** The commitInfo line of log entry `n`, which holds the manifest
+    * fields [[commit]] wrote into it (every field parser here is
+    * field-extracting, so the line reads like a pointer). An entry
+    * without them was not written by [[commit]] and fails loudly. */
+  private def graftFields(n: Long): String = {
+    val entry = Files.readString(logFile(deltaLogDir, n))
+    entry.linesIterator.find(l => l.startsWith("""{"commitInfo":""") &&
+        l.contains(""","graft":{"version":"""))
+      .getOrElse(throw new IllegalStateException(
+        s"log entry $n of $path carries no graft snapshot fields"))
   }
 
   /** Committed snapshot version (0 when the table does not exist yet).
@@ -188,17 +182,15 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     .map { case (ver, s) => Snapshot(ver, arrayField(s, "segments")) }
     .getOrElse(Snapshot(0L, Seq.empty))
 
-  /** A string-array field of a commit/manifest JSON (empty if absent)
-    * — the ONE parser of "segments" shared by [[snapshot]] and the
-    * mirror backfill, so the two can never disagree on the same bytes,
-    * and of the dv arrays. */
+  /** A string-array field of the manifest JSON (empty if absent) — the
+    * ONE parser of "segments" and of the dv arrays. */
   private def arrayField(s: String, name: String): Seq[String] =
     (s""""$name":\\[([^\\]]*)\\]""").r.findFirstMatchIn(s)
       .map(_.group(1).split(",").toSeq.map(_.trim.stripPrefix("\"")
         .stripSuffix("\"")).filter(_.nonEmpty))
       .getOrElse(Seq.empty)
 
-  /** Deletion-vector entries ("mirrorVer:dvDir:seg1;seg2" — the third
+  /** Deletion-vector entries ("logVer:dvDir:seg1;seg2" — the third
     * field records the segment dirs the entry's tombstones touch;
     * entries written before that upgrade lack it). Entries accumulate
     * across the table's life (bounded only by [[vacuum]]'s retention
@@ -231,7 +223,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
 
   /** Consolidation cadence: a dv commit folding the named files into
     * one when their count reaches this keeps manifest-referenced dvlog
-    * files O(1) — same shape as the delta mirror's checkpoint-10. */
+    * files O(1) — same shape as the delta log's checkpoint-10. */
   private val DvlogConsolidateAt = 10
 
   /** Entry lines of one committed dvlog file. A referenced-but-missing
@@ -301,38 +293,31 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     * no dv commit, no dv rewrite, so commit cost is O(live segments +
     * referenced dvlog names), never O(table history).
     *
+    * The commit IS the Delta-protocol log entry `_delta_log/{base}.json`
+    * ([[logEntry]]): its file actions, the tag as
+    * commitInfo.userMetadata, and the manifest fields (version, mode,
+    * segments, dvs, dvfiles, tag) inside commitInfo, which the protocol
+    * leaves free-form.
+    *
     * SELF-ENFORCING single-writer contract: `base` is the snapshot
     * the caller derived `segments` from (version 0 for a new table).
-    * The publish is a compare-and-swap on `base + 1`: the full
-    * manifest JSON is written to a temp file and HARD-LINKED into
-    * `_graft_commits/{base+1}.json` — link creation is an atomic
-    * put-if-absent on POSIX (an object-store deployment swaps in a
-    * conditional put), so of two writers racing the same version
-    * exactly one wins and the loser throws [[ConcurrentWriteException]]
-    * LOUDLY with nothing published — which for a BLIND APPEND the
-    * engine itself absorbs by rebasing onto the new head (see
+    * The entry is published put-if-absent on number `base`
+    * ([[GraftFs.publish]] with `replace = false`; an object-store
+    * deployment swaps in a conditional put) — that publish is the
+    * compare-and-swap. Of two writers racing the same number exactly
+    * one wins and the loser throws [[ConcurrentWriteException]] LOUDLY
+    * with nothing published — which for a BLIND APPEND the engine
+    * itself absorbs by rebasing onto the new head (see
     * [[commitBlindAppend]]); read-modify-write commits surface it to
-    * the caller. A plain REPLACE-rename onto one
-    * pointer file would let the second writer silently erase the
-    * first's commit; threading the caller's `base` (rather than
-    * re-reading the head here) also catches the wider read-modify-
-    * write race where another commit landed while this one was
-    * staging its segments. The `_graft_manifest` pointer is rewritten
-    * AFTER the CAS as a read cache — a crash in between is healed by
-    * [[resolvedManifest]]'s forward walk.
+    * the caller. Threading the caller's `base` (rather than re-reading
+    * the head here) also catches the wider read-modify-write race where
+    * another commit landed while this one was staging its segments.
     *
-    * `tag` is the caller's idempotence mark (see [[append]]); it lands
-    * IN the commit file so the commit and its tag are one atomic CAS —
-    * a crash between the commit and the delta-log mirror write can
-    * never strand a committed-but-unrecognizable append (the mirror's
-    * userMetadata copy is only the fast scan path; [[hasCommitTagged]]
-    * consults both).
-    *
-    * Commit is the ONE writer of live mirror entries: after the CAS,
-    * the pointer rewrite and the segment touch it heals any earlier
-    * mirror gap and writes this version's entry ([[writeMirrorEntry]]),
-    * derived from the commit itself — a crash before that leaves a
-    * gap [[repairMirror]] fills by the same derivation. */
+    * After the entry: the `_graft_manifest` pointer is rewritten as a
+    * read cache, segments just dropped are touched, and every tenth
+    * entry gets a checkpoint. A crash anywhere after the entry leaves a
+    * committed version with a complete log entry; [[resolvedManifest]]
+    * walks past a stale pointer. */
   private def commit(base: Snapshot, segments: Seq[String], mode: String,
       dv: Option[(Seq[String], Seq[String])] = None,
       tag: String = ""): Long = {
@@ -346,10 +331,20 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     val ver = base.version + 1
     val (inline, dvFiles) = dv.getOrElse(dvState)
     val json = manifestJson(ver, mode, segments, inline, dvFiles, tag)
-    Files.createDirectories(commitsDir)
-    val ctmp = commitsDir.resolve(s".tmp.${System.nanoTime()}")
-    Files.writeString(ctmp, json)
-    try Files.createLink(commitFile(ver), ctmp)
+    // stable table id + last-emitted schema live in a sidecar.
+    // Fallback for logs predating the sidecar: recover both from the
+    // newest metaData action already in the log (keeps the table id
+    // stable — Delta requires one id for the log's lifetime).
+    val fromSidecar = readMetaSidecar()
+    val (tableId, lastSchema) = fromSidecar.getOrElse(
+      recoverMetaFromLog().getOrElse(
+        (java.util.UUID.randomUUID().toString, "")))
+    val schema = servedSchema(segments).json
+    val emitMeta = base.version == 0 || schema != lastSchema
+    val now = System.currentTimeMillis()
+    val entry = logEntry(base.version, mode, base.segments, segments, tag,
+      json, Option.when(emitMeta)((tableId, schema)), now)
+    try GraftFs.publish(logFile(deltaLogDir, base.version), entry, replace = false)
     catch {
       case _: java.nio.file.FileAlreadyExistsException =>
         throw new ConcurrentWriteException(
@@ -357,15 +352,27 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
             "claimed by another writer while this commit was being " +
             "prepared — the single-writer contract is violated; this " +
             "commit was NOT published (the table stays consistent)")
-    } finally Files.deleteIfExists(ctmp)
+    }
     GraftFs.publish(manifest, json)
     // touch segments that just became unreferenced: vacuum's grace
     // window must run from the moment a reader could last have resolved
     // them (now), not from their creation time — else a long-lived
     // segment dies the instant it is dropped
     (base.segments.toSet -- segments.toSet).foreach(s => GraftFs.touch(Paths.get(path, s)))
-    repairMirrorUpTo(ver - 2)
-    writeMirrorEntry(ver, mode, base.segments, segments, tag, healed = false)
+    // periodic checkpoint: real Delta readers (and the reference's own
+    // health probe, gold/bronzeToGold.py:17-42) expect _last_checkpoint
+    // beyond ~10 commits so recovery is O(commits since checkpoint),
+    // not O(log). Written AFTER the entry: a crash in between costs
+    // only a missed checkpoint, never a dangling pointer.
+    if (base.version > 0 && base.version % CheckpointInterval == 0)
+      writeCheckpoint(base.version, tableId, schema, now, segments)
+    // sidecar update AFTER the entry lands, and atomically: a crash in
+    // between only re-emits a harmless duplicate metaData on the next
+    // commit (a stale sidecar can never SUPPRESS one). Also (re)write
+    // it when it was absent — a legacy table would otherwise re-scan
+    // the whole log on EVERY commit
+    if (emitMeta || fromSidecar.isEmpty)
+      GraftFs.publish(metaSidecar, s"$tableId\n$schema")
     ver
   }
 
@@ -617,9 +624,9 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
   /** OPTIMIZE-style compaction: rewrite the CURRENT snapshot into
     * ~`targetFiles` files (z-ordered when `zCols` given) as one
     * commit. Readers of the pre-compaction snapshot keep their
-    * immutable segments until vacuum; the delta-log mirror records the
+    * immutable segments until vacuum; the log entry records the
     * rewrite with `dataChange: false` (per the Delta protocol, so
-    * streaming readers of the mirror know no rows changed). The
+    * streaming readers of the log know no rows changed). The
     * small-file problem this solves is a first-order 100 TB concern:
     * a long-lived ingest writer produces one file per micro-batch, and
     * scan/listing cost degrades linearly with file count until
@@ -640,14 +647,11 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     * txn/appId device) so a crashed writer can later tell whether
     * THIS append committed — version arithmetic alone cannot
     * distinguish it from an unrelated commit (compact, merge) that
-    * raced into the crash window. The tag lands ATOMICALLY in the CAS
-    * commit file itself (commit and tag are one event — a crash
-    * anywhere after [[commit]] returns can never strand a committed
-    * append whose tag is missing everywhere) and is COPIED into the
-    * mirrored commit's commitInfo.userMetadata as the fast scan path.
-    * Returns the committed manifest version (1-based; the commit's
-    * mirror file number is this minus one) so a caller's idempotence
-    * bookkeeping can name ITS OWN commit instead of re-reading
+    * raced into the crash window. The tag lands in the commit's log
+    * entry as commitInfo.userMetadata, so commit and tag are one
+    * atomic publish. Returns the committed manifest version (1-based;
+    * the commit's log entry number is this minus one) so a caller's
+    * idempotence bookkeeping can name ITS OWN commit instead of re-reading
     * `version` after the fact — a re-read races any other commit
     * landing in between. */
   def append(df: DataFrame, tag: Option[String] = None,
@@ -669,7 +673,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     * get no such loop — their staged segments were derived FROM a
     * snapshot that is now stale, so they keep failing loudly.
     * Jittered backoff breaks symmetric races; the attempt bound turns
-    * pathological contention (or a commit-dir permission wall
+    * pathological contention (or a log-dir permission wall
     * masquerading as contention) into the loud failure rather than a
     * livelock. */
   private def commitBlindAppend(seg: String, tag: String): Long = {
@@ -684,7 +688,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
           if (attempt >= MaxRebases) throw new ConcurrentWriteException(
             s"blind-append rebase at $path gave up after $MaxRebases " +
               s"lost races — contention is pathological or the commit " +
-              s"dir is failing CAS for a non-race reason; last: " +
+              s"log dir is failing CAS for a non-race reason; last: " +
               e.getMessage)
           // full jitter, capped: desynchronizes herds without making
           // a quiet two-writer race pay a long sleep
@@ -705,48 +709,20 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
   }
 
   /** True iff some commit made at-or-after manifest version
-    * `sinceVersion` carries `tag` (see [[append]]). Two homes are
-    * consulted: the mirror's commitInfo.userMetadata (fast path,
-    * subject to mirror-log retention) and the CAS commit files — the
-    * tag's ATOMIC home, which still answers for an append whose
-    * mirror write was lost to a crash (the head commit file also
-    * survives [[vacuum]]'s superseded-commit sweep, so the LAST
-    * append's tag outlives mirror retention). Mirror file numbers are
+    * `sinceVersion` carries `tag` (see [[append]]) in its log entry's
+    * commitInfo.userMetadata, the tag's one home. Entry numbers are
     * 0-based while manifest versions are 1-based, so the first commit
-    * AFTER manifest version V is mirror file V = commit file V+1 —
-    * the floors are an optimization only (tags are unique); if log
-    * files were cleaned away the answer degrades to false and the
-    * caller re-does its work (at-least-once), never loses it. */
+    * AFTER manifest version V is entry V — the floor is an optimization
+    * only (tags are unique); if log retention pruned the entry the
+    * answer degrades to false and the caller re-does its work
+    * (at-least-once), never loses it. An entry that vanishes between
+    * the listing and its read counts as pruned; any other IO failure
+    * throws. */
   def hasCommitTagged(tag: String, sinceVersion: Long): Boolean = {
-    val mirrorNeedle = s""""userMetadata":"${jsonEsc(tag)}""""
-    val mirrorHit = logEntries(deltaLogDir)
-      .exists { case (v, p) => v >= sinceVersion &&
-        (try Files.readString(p).contains(mirrorNeedle)
-         catch { case _: java.nio.file.NoSuchFileException => false }) }
-    if (mirrorHit) return true
-    // commit files, probed by NUMBER from the floor to the resolved
-    // head when the window is narrow (the per-batch norm: floor is
-    // last trigger's append) — O(commits since the floor), the same
-    // bound as the mirror scan. A WIDE window (floor 0 on a long
-    // table: fresh checkpoint, untrusted legacy floor) would pay one
-    // stat per number, so it falls back to a single listing instead —
-    // O(retained files), tiny after vacuum. Files vacuumed away skip
-    // either way.
-    val commitNeedle = s""""tag":"${jsonEsc(tag)}""""
-    def readHas(p: java.nio.file.Path): Boolean =
-      try Files.readString(p).contains(commitNeedle)
-      catch { case _: java.nio.file.NoSuchFileException => false }
-    val head = version
-    val lo = sinceVersion + 1
-    if (head - lo < 256) {
-      var v = lo
-      while (v <= head) {
-        if (Files.exists(commitFile(v)) && readHas(commitFile(v)))
-          return true
-        v += 1
-      }
-      false
-    } else logEntries(commitsDir).exists { case (v, p) => v >= lo && readHas(p) }
+    val needle = s""""userMetadata":"${jsonEsc(tag)}""""
+    logEntries(deltaLogDir).exists { case (v, p) => v >= sinceVersion &&
+      (try Files.readString(p).contains(needle)
+       catch { case _: java.nio.file.NoSuchFileException => false }) }
   }
 
   def read(): DataFrame = {
@@ -918,11 +894,11 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
       return
     }
     val touched = touchedFiles(doomedSet).map(_.split("/")(0)).distinct
-    // the entry records the MIRROR version this commit creates (commit
-    // files are 0-based and count manifest commits), so readAt can
+    // the entry records the LOG entry number this commit creates (log
+    // entries are 0-based and count manifest commits), so readAt can
     // scope tombstones to any historical version
-    val mirrorVer = snap.version // = next mirror file no.
-    val entry = s"$mirrorVer:$dir:${touched.mkString(";")}"
+    val logVer = snap.version // = this commit's log entry no.
+    val entry = s"$logVer:$dir:${touched.mkString(";")}"
     // the entry rides a fresh dvlog file the commit NAMES — never the
     // manifest body, so a CDC-heavy table's commit never rewrites its
     // dv history. At the consolidation cadence (or on the first dv
@@ -934,9 +910,9 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     // touch) and left for vacuum's unreferenced-dvlog sweep, which
     // applies the same graceMs contract segments get.
     val (inline, dvFiles) = dvState
-    // the commit tag (graft-dv:<dir>) is the mirror entry's
+    // the commit tag (graft-dv:<dir>) is the log entry's
     // userMetadata: the entry has no file actions (see
-    // [[writeMirrorEntry]]), so it is how a graft-aware replay
+    // [[logEntry]]), so it is how a graft-aware replay
     // (tools/DeltaLogReplay) finds the tombstones to apply
     val consolidate = inline.nonEmpty || dvFiles.size >= DvlogConsolidateAt
     val named =
@@ -952,11 +928,11 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     * segments' dv entries drop out of [[liveDvEntries]] automatically
     * — after a purge the hot read path anti-joins ONLY tombstones of
     * still-live segments, so scan cost tracks live deletes, not table
-    * history ([[readAt]] keeps the full list). The mirror emits the
-    * remove+add actions with dataChange=false (the logical content is
-    * unchanged), which is also where a footer-based external replay
+    * history ([[readAt]] keeps the full list). The log entry carries
+    * the remove+add actions with dataChange=false (the logical content
+    * is unchanged), which is also where a footer-based external replay
     * re-converges with reality for rows it could not see leave
-    * (reader-v1 mirrors carry no dv file actions).
+    * (a reader-v1 log carries no dv file actions).
     * Returns the number of segments rewritten. */
   def compactDeletes(threshold: Double = 0.3): Int = {
     require(threshold > 0 && threshold <= 1,
@@ -1032,19 +1008,14 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     * indexes got (`InvertedIndex.maintenancePlan`,
     * `IncrementalIvfPqIndex.maintenancePlan`): one
     * [[MaintenanceAction]] per threshold crossed, empty when the table
-    * needs nothing, so compact / compactDeletes / vacuum /
-    * repairMirror cadence is a measured decision instead of the
-    * operator's guesswork. Every signal is metadata-only — manifest
-    * resolution, directory listings, and parquet FOOTER row counts
-    * (the same cost class [[compactDeletes]]' own planning pays; no
-    * data page is ever read), and the footer sweeps only run when a
-    * cheaper listing says they could matter (a delete-free table pays
-    * pure listings). Ordering: a mirror gap is reported FIRST — the
-    * change feed and every basis-tracked maintainer fail loudly on
-    * one, and checkpoint freshness follows the mirror — but it does
-    * not preempt the file/tombstone rows (reads and commits are
-    * unaffected by a lagging mirror, unlike an index's torn swap).
-    * An unreadable table (manifest naming segment dirs that are gone)
+    * needs nothing, so compact / compactDeletes / vacuum cadence is a
+    * measured decision instead of the operator's guesswork. Every
+    * signal is metadata-only — manifest resolution, directory listings,
+    * and parquet FOOTER row counts (the same cost class
+    * [[compactDeletes]]' own planning pays; no data page is ever read),
+    * and the footer sweeps only run when a cheaper listing says they
+    * could matter (a delete-free table pays pure listings). An
+    * unreadable table (manifest naming segment dirs that are gone)
     * preempts as the only row: sizing signals over a table in doubt
     * are garbage. */
   def maintenancePlan(
@@ -1062,19 +1033,6 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
         s"$missingSegs live segment dir(s) named by the manifest are " +
           "gone; repair() moves the table aside"))
     val out = Seq.newBuilder[MaintenanceAction]
-    // mirror/checkpoint staleness: newest mirror entry vs the newest
-    // expected number (manifest version - 1; mirror numbers are
-    // 0-based). Entries below the retention floor were pruned, not
-    // lost, so only the head-side gap counts as lag.
-    val newestMirror = logEntries(deltaLogDir).map(_._1).maxOption.getOrElse(-1L)
-    val mirrorLag = (ver - 1L) - newestMirror
-    if (mirrorLag > policy.maxMirrorLag)
-      out += MaintenanceAction("repairMirror", "mirror_lag", mirrorLag,
-        policy.maxMirrorLag, 0L,
-        "delta-log mirror trails the manifest (writer died between " +
-          "commit and mirror write); change-feed consumers and " +
-          "basis-tracked maintainers fail loudly on the gap, and " +
-          "checkpoints only advance with the mirror")
     // live-file pressure: count + small-file histogram from the
     // segment listings (sizes come with the listing; no file opened)
     val files = segs.flatMap(segmentFiles)
@@ -1123,9 +1081,6 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     val staleSegs = GraftFs.list(Paths.get(path))
       .map(_.getFileName.toString)
       .count(n => n.startsWith("seg-") && !liveSet(n))
-    val superseded = supersededCommit(pointerVersion) _
-    val staleCommits = GraftFs.list(commitsDir)
-      .count(p => superseded(p.getFileName.toString))
     val (_, refFiles) = dvState
     val refSet = refFiles.toSet
     val staleDvlog = GraftFs.list(dvlogDir)
@@ -1133,13 +1088,13 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     val refDvDirs = dvEntries.map(parseDv(_).dir).toSet
     val staleDvDirs = GraftFs.list(dvRoot)
       .count(p => !refDvDirs(p.getFileName.toString))
-    val stale = staleSegs + staleCommits + staleDvlog + staleDvDirs
+    val stale = staleSegs + staleDvlog + staleDvDirs
     if (stale >= policy.maxStaleObjects)
       out += MaintenanceAction("vacuum", "stale_objects", stale.toLong,
         policy.maxStaleObjects.toLong, 0L,
-        s"$staleSegs dead segment dirs + $staleCommits superseded " +
-          s"commit files + ${staleDvlog + staleDvDirs} orphaned dv " +
-          "artifacts: unreferenced weight every listing walks past")
+        s"$staleSegs dead segment dirs + ${staleDvlog + staleDvDirs} " +
+          "orphaned dv artifacts: unreferenced weight every listing " +
+          "walks past")
     out.result()
   }
 
@@ -1243,10 +1198,10 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
       _.join(k, keyCols, "left_anti"))
   }
 
-  // ---- Delta-protocol commit mirror -------------------------------------
+  // ---- Delta-protocol commit log -----------------------------------------
 
-  /** Every commit is mirrored as a Delta-protocol transaction-log entry
-    * under `_delta_log/` (ECMA-404 JSON actions per the public Delta
+  /** Every commit is a Delta-protocol transaction-log entry under
+    * `_delta_log/` (ECMA-404 JSON actions per the public Delta
     * protocol: protocol + metaData at version 0, add/remove per commit,
     * relative data-file paths) — so a real Delta reader pointed at the
     * table root resolves the same snapshots this class serves. The
@@ -1272,88 +1227,15 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     case c => c.toString
   }
 
-  /** Backfill delta-log mirror entries whose manifest commit landed
-    * but whose mirror write was lost to a crash. [[commit]] numbers
-    * every mirror entry from its own just-committed manifest version,
-    * so a commit→mirror crash leaves a numbering GAP, never a silent
-    * desync — and a gap is healable: the CAS commit files record each
-    * version's mode, idempotence tag and segment set, which is all
-    * [[writeMirrorEntry]] derives an entry from. Heals only what it
-    * can prove: both commit files must still exist (vacuum keeps
-    * superseded ones for graceMs — far longer than any crash→restart
-    * window) and every diffed segment dir must still be on disk; an
-    * unprovable gap stays and fails the contiguity checks loudly
-    * instead of guessing. Writer-side only, per the single-writer
-    * contract: called by the streaming sink before index maintenance
-    * (`BronzeIngest.indexedIngestBatch`) and by every commit that
-    * notices its predecessor's entry missing. */
-  def repairMirror(): Unit = repairMirrorUpTo(version - 1, fastPath = false)
-
-  /** `fastPath` skips the scan when the newest expected entry exists —
-    * right for the inline per-commit call (its gaps are RECENT, at
-    * `limit` itself). The public [[repairMirror]] always scans: an
-    * interior gap whose first heal attempt failed TRANSIENTLY (a
-    * backfill IO error is swallowed by design) must be retried — the
-    * streaming sink calls repairMirror() every batch, so such a gap
-    * self-heals on the next trigger; standalone writers can invoke it
-    * after an incident. The scan is one directory listing — the same
-    * cost class as every tag scan on these paths. */
-  private def repairMirrorUpTo(limit: Long,
-      fastPath: Boolean = true): Unit = {
-    if (limit < 0) return
-    if (fastPath && Files.exists(logFile(deltaLogDir, limit))) return
-    val existing = logEntries(deltaLogDir).map(_._1)
-    // entries below the oldest retained one were PRUNED by retention,
-    // not lost to a crash — only fill above it
-    val floor = existing.minOption.getOrElse(0L)
-    val have = existing.toSet
-    (floor to limit).filterNot(have.contains)
-      .foreach(backfillMirrorEntry)
-  }
-
-  /** One gap entry, reconstructed from commit files g and g+1 (mirror
-    * g records the transition INTO manifest version g+1). A commit
-    * file or segment that vanished or cannot be read means the gap is
-    * unprovable and stays: swallowing that IO failure is what keeps a
-    * healing attempt from wedging every future commit of the table,
-    * since this runs inside each commit; the un-healed gap still fails
-    * the contiguity checks loudly downstream, and [[maintenancePlan]]
-    * reports it as `repairMirror`. */
-  private def backfillMirrorEntry(g: Long): Unit =
-    try {
-      val after = commitFile(g + 1)
-      if (!Files.exists(after)) return
-      val (mode, segs, tag) = parseCommitFields(Files.readString(after))
-      val prevSegs: Seq[String] =
-        if (g == 0) Seq.empty
-        else if (Files.exists(commitFile(g)))
-          parseCommitFields(Files.readString(commitFile(g)))._2
-        else return
-      if ((segs.filterNot(prevSegs.contains) ++ prevSegs.filterNot(segs.contains))
-          .exists(s => !Files.isDirectory(Paths.get(path, s)))) return
-      writeMirrorEntry(g + 1, mode, prevSegs, segs, tag, healed = true)
-    } catch {
-      case _: java.io.IOException | _: java.io.UncheckedIOException => ()
-    }
-
   private def metaSidecar = deltaLogDir.resolve(".graft_table_meta")
 
-  /** (table id, last-emitted schema) from the mirror's meta sidecar. */
+  /** (table id, last-emitted schema) from the log's meta sidecar. */
   private def readMetaSidecar(): Option[(String, String)] =
     if (!Files.exists(metaSidecar)) None
     else {
       val ls = Files.readString(metaSidecar).split("\n", 2)
       Some((ls(0), if (ls.length > 1) ls(1) else ""))
     }
-
-  /** (mode, segments, unescaped tag) of a commit/manifest JSON. */
-  private def parseCommitFields(s: String): (String, Seq[String], String) = {
-    val mode = """"mode":"([^"]*)"""".r.findFirstMatchIn(s)
-      .map(_.group(1)).getOrElse("")
-    val tag = """"tag":"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(s)
-      .map(m => jsonUnesc(m.group(1))).getOrElse("")
-    (mode, arrayField(s, "segments"), tag)
-  }
 
   /** Inverse of [[jsonEsc]] (handles every escape it emits). */
   private def jsonUnesc(s: String): String = {
@@ -1386,53 +1268,37 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     org.apache.spark.sql.graft.SchemaBridge.asNullable(
       ManagedParquetTable.footerMergedSchema(spark, segs.map(s => s"$path/$s")))
 
-  /** Mirror entry `ver - 1` (manifest versions are 1-based, mirror
-    * numbers 0-based): the commit of mode `mode` and tag `tag` that took
-    * the table from segments `prev` to `segs`. The ONE builder of mirror
-    * entries — [[commit]] calls it with the version it just won, and
-    * the gap backfill with the version it heals — so a healed entry
-    * carries the same actions as the lost one. The number is never a
-    * listing's max+1 (handed out again after log retention) nor a re-read head
-    * (another commit landing in between would get its entry replaced);
-    * a crash before the write leaves a gap instead. The entry holds:
+  /** Log entry `n`: the commit of mode `mode` and tag `tag` that took
+    * the table from segments `prev` to `segs` (manifest version n + 1;
+    * manifest versions are 1-based, entry numbers 0-based). The ONE
+    * builder of log entries, called by [[commit]] with the number it is
+    * about to claim. The entry holds:
     *  - remove/add actions from the segment diff;
     *  - the tag as commitInfo.userMetadata (the append's idempotence
     *    mark; a dv delete's `graft-dv:<dir>` sidecar pointer);
+    *  - the manifest JSON `graft` as commitInfo.graft, which
+    *    [[resolvedManifest]] reads back;
     *  - a dv delete (`delete-dv`) as op DELETE with no file actions: the
     *    protocol's DV form needs reader-version-3 features and this
-    *    mirror stays at reader v1, so external FILE-level replays see
+    *    log stays at reader v1, so external FILE-level replays see
     *    an unchanged file set, while the userMetadata lets a graft-aware
     *    replay (tools/DeltaLogReplay) apply the tombstones;
     *  - `dataChange=false` for the physical rewrites (compact, reorg);
-    *  - a metaData action when the schema [[read]] serves over `segs`
-    *    ([[servedSchema]]) differs from the last-emitted one, so a Delta
-    *    reader resolving the LATEST metaData sees every evolved column.
-    * A `healed` entry reuses the last-emitted schema (no metaData; if
-    * the lost commit evolved the schema, the next real commit re-emits
-    * it) and writes no checkpoint. */
-  private def writeMirrorEntry(ver: Long, mode: String, prev: Seq[String],
-      segs: Seq[String], tag: String, healed: Boolean): Unit = {
-    val version = ver - 1
-    val now = System.currentTimeMillis()
+    *  - a metaData action with `meta` (table id, schema) when given:
+    *    entry 0, and every commit whose [[servedSchema]] differs from
+    *    the last-emitted one, so a Delta reader resolving the LATEST
+    *    metaData sees every evolved column. */
+  private def logEntry(n: Long, mode: String, prev: Seq[String],
+      segs: Seq[String], tag: String, graft: String,
+      meta: Option[(String, String)], now: Long): String = {
     val added = segs.filterNot(prev.contains).flatMap(segmentFiles)
     val removed = prev.filterNot(segs.contains).flatMap(segmentFiles).map(_._1)
     val dataChange = mode != "compact" && mode != "reorg"
     val op = if (mode == "delete-dv") "delete" else mode
-    // stable table id + last-emitted schema live in a sidecar.
-    // Fallback for logs predating the sidecar: recover both from the
-    // newest metaData action already in the log (keeps the table id
-    // stable — Delta requires one id for the log's lifetime).
-    val fromSidecar = readMetaSidecar()
-    val (tableId, lastSchema) = fromSidecar.getOrElse(
-      recoverMetaFromLog().getOrElse(
-        (java.util.UUID.randomUUID().toString, "")))
-    val schema =
-      if (healed && lastSchema.nonEmpty) lastSchema else servedSchema(segs).json
     val sb = new StringBuilder
-    if (version == 0)
+    if (n == 0)
       sb ++= s"""{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}\n"""
-    val emitMeta = version == 0 || schema != lastSchema
-    if (emitMeta) {
+    meta.foreach { case (tableId, schema) =>
       sb ++= s"""{"metaData":{"id":"$tableId",""" +
         s""""format":{"provider":"parquet","options":{}},""" +
         s""""schemaString":"${jsonEsc(schema)}",""" +
@@ -1440,7 +1306,8 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
         s""""createdTime":$now}}\n"""
     }
     val um = if (tag.isEmpty) "" else s""","userMetadata":"${jsonEsc(tag)}""""
-    sb ++= s"""{"commitInfo":{"timestamp":$now,"operation":"${op.toUpperCase}"$um}}\n"""
+    sb ++= s"""{"commitInfo":{"timestamp":$now,"operation":"${op.toUpperCase}"$um,""" +
+      s""""graft":$graft}}\n"""
     removed.foreach { f =>
       sb ++= s"""{"remove":{"path":"${jsonEsc(f)}","deletionTimestamp":$now,""" +
         s""""dataChange":$dataChange}}\n"""
@@ -1449,23 +1316,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
       sb ++= s"""{"add":{"path":"${jsonEsc(f)}","partitionValues":{},""" +
         s""""size":$size,"modificationTime":$now,"dataChange":$dataChange}}\n"""
     }
-    GraftFs.publish(logFile(deltaLogDir, version), sb.toString, replace = false)
-    // periodic checkpoint: real Delta readers (and the reference's own
-    // health probe, gold/bronzeToGold.py:17-42) expect _last_checkpoint
-    // beyond ~10 commits so recovery is O(commits since checkpoint),
-    // not O(log). Written AFTER the commit file: a crash in between
-    // costs only a missed checkpoint, never a dangling pointer. Not on
-    // a heal: that version is behind the head, and a checkpoint stamped
-    // with its number must not be mistaken for a fresher one.
-    if (!healed && version > 0 && version % CheckpointInterval == 0)
-      writeCheckpoint(version, tableId, schema, now, segs)
-    // sidecar update AFTER the commit file lands, and atomically: a
-    // crash in between only re-emits a harmless duplicate metaData on
-    // the next commit (a stale sidecar can never SUPPRESS one). Also
-    // (re)write it when it was absent — a legacy table would otherwise
-    // re-scan the whole log on EVERY commit
-    if (emitMeta || fromSidecar.isEmpty)
-      GraftFs.publish(metaSidecar, s"$tableId\n$schema")
+    sb.toString
   }
 
   /** Checkpoint cadence in commits (Delta's own default is 10). */
@@ -1583,26 +1434,6 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     live.toSeq.sorted
   }
 
-  /** The mirror version a change-feed maintainer folds to: the
-    * manifest head (`version - 1`; mirror numbers are 0-based) clamped
-    * to the newest mirror entry reachable contiguously from the
-    * retention floor (one directory listing). With uncoordinated OCC
-    * writers a just-landed foreign commit's mirror entry may still be
-    * IN FLIGHT for a few milliseconds — a maintainer that derived its
-    * head from the manifest in that window would publish a basis
-    * claiming rows the change feed cannot yet serve, and the window
-    * would be lost forever. Folding to THIS head leaves the in-flight
-    * tail for the next trigger (ST18 chaos-proves the protocol). Read
-    * it before the data the fold covers: a stale head merely replays.
-    * −1 when there is nothing to fold yet. */
-  def foldHead: Long = {
-    val head = version - 1
-    val nums = logEntries(deltaLogDir).map(_._1).sorted
-    if (nums.isEmpty) -1L
-    else math.min(head,
-      nums.tail.foldLeft(nums.head)((h, n) => if (n == h + 1) n else h))
-  }
-
   /** File-granularity change feed between delta-log `version`
     * (exclusive) and the current snapshot: rows in files added since
     * are tagged `_change_type` 'insert', rows in files removed since
@@ -1616,11 +1447,12 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
   def changesSince(version: Long): DataFrame =
     changesSinceCore(version, None)
 
-  /** [[changesSince]] bounded at mirror version `upTo` (inclusive) —
+  /** [[changesSince]] bounded at log version `upTo` (inclusive) —
     * the window (version, upTo] exactly. The maintainer protocol:
-    * fold `changesSince(basis, head)` with `head = foldHead` (read
-    * first), so the fold and the basis it publishes name the SAME
-    * provable state even while other writers are mid-commit. */
+    * fold `changesSince(basis, head)` with `head = version - 1`, the
+    * committed head, read BEFORE the data the fold covers, so the fold
+    * and the basis it publishes name the SAME state even while other
+    * writers commit (a stale head merely replays next time). */
   def changesSince(version: Long, upTo: Long): DataFrame =
     changesSinceCore(version, Some(upTo))
 
@@ -1756,11 +1588,11 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     *
     * With `retainVersions = Some(r)`, ALSO retire table history beyond
     * a retention horizon — Delta's own VACUUM contract: [[readAt]] /
-    * [[changesSince]] stay exact for (at least) the `r` newest mirror
+    * [[changesSince]] stay exact for (at least) the `r` newest log
     * versions and error CLEANLY below the horizon; dv entries provably
     * inert for every retained version leave the manifest (their
     * sidecars become unreferenced and are reclaimed by the same pass),
-    * and mirror commits + checkpoints below the horizon are deleted.
+    * and log entries + checkpoints below the horizon are deleted.
     * The horizon snaps DOWN to the newest delta-log checkpoint at or
     * before `head - r + 1` so every retained version still resolves
     * from a checkpoint + contiguous tail (no checkpoint that old yet →
@@ -1787,21 +1619,11 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     GraftFs.sweep(dvlogDir, cutoff)(n => !refSet(n))
     val refDvDirs = dvEntries.map(parseDv(_).dir).toSet
     GraftFs.sweep(dvRoot, cutoff)(n => !refDvDirs(n))
-    // superseded CAS commit files: resolution only walks FORWARD from
-    // the POINTER, so only files strictly below the pointer's own
-    // version are provably never consulted again. Bounding by the
-    // RESOLVED head would be wrong: with the pointer lagging (a writer
-    // died between CAS and pointer rewrite), files between pointer and
-    // head are the very walk the next read performs — deleting one
-    // would silently regress the table to the pointer AND let a later
-    // commit re-claim the deleted version, forking history. Files at
-    // or above the pointer stay; stranded .tmp link sources die too.
-    GraftFs.sweep(commitsDir, cutoff)(supersededCommit(pointerVersion))
   }
 
   /** Retention core (see [[vacuum]]): compute the horizon checkpoint,
     * drop dv entries inert for every retained version, and prune the
-    * mirror log below the horizon. Rewrites the manifest IN PLACE
+    * log below the horizon. Rewrites the manifest IN PLACE
     * (same version — only dv bookkeeping changes; single-writer
     * contract, atomic rename). This is the one documented exception
     * to the version-increments-per-commit invariant — see [[version]]:
@@ -1811,7 +1633,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     require(retain >= 1, s"retainVersions must be >= 1, got $retain")
     val Snapshot(ver, segs) = snapshot()
     if (ver == 0) return
-    val head = ver - 1 // newest mirror version
+    val head = ver - 1 // newest log version
     val requested = head - retain + 1 // oldest version asked to keep
     if (requested <= 0) return
     // snap the horizon DOWN to a checkpoint so every retained version
@@ -1844,7 +1666,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
       // window from unreference time
       touchDvlogFiles(dvFiles)
     }
-    // prune the mirror log below the horizon checkpoint; readAt below
+    // prune the log below the horizon checkpoint; readAt below
     // it now fails the contiguity check with a clean retention error
     (logEntries(deltaLogDir) ++ logEntries(deltaLogDir, Checkpoint))
       .foreach { case (v, p) => if (v < cut) GraftFs.delete(p) }

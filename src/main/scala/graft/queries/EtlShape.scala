@@ -687,7 +687,7 @@ object EtlShape {
             ORDER BY o_orderkey"""))
 
   /** S28: time travel — `readAt(v)` reconstructs the historical
-    * snapshot from the delta-log mirror (checkpoint + commit replay),
+    * snapshot from the delta log (checkpoint + commit replay),
     * the contract `bronze/test7.py:76-80` exercises against real
     * Delta with versionAsOf. */
   val timeTravel: GQuery = GQuery(

@@ -221,9 +221,9 @@ final class IncrementalIvfPqIndex(spark: SparkSession,
     // service, and this run re-stages from scratch
     if (reorgSwap.inflight) recoverReorg()
     require(isTrained, s"index at $indexPath is not trained")
-    // mirror-proven head: read() below may serve a few rows past it —
-    // they replay idempotently on the next refresh
-    val headV = source.foldHead
+    // committed head, read before the data: read() below may serve a
+    // few rows past it — they replay idempotently on the next refresh
+    val headV = source.version - 1
     val lineage = source.tableId
     val live = source.read()
     val sample = trainOn.getOrElse(live)
@@ -290,13 +290,13 @@ final class IncrementalIvfPqIndex(spark: SparkSession,
       .sortWithinPartitions("centroid_id", idCol)
   }
 
-  /** Bring the index up to the source table's mirror-proven version
-    * ([[graft.io.ManagedParquetTable.foldHead]]). */
+  /** Bring the index up to the source table's committed head
+    * (`version - 1`, read before the data the fold covers). */
   def refresh(): Unit = {
     requireNoReorg()
     require(isTrained, s"index at $indexPath must be trained before refresh")
     val (cents, cbs) = (centroids, codebooks)
-    val head = source.foldHead
+    val head = source.version - 1
     if (head < 0) { lastRefresh = "noop"; return }
     lastRefresh = tracker.refreshTo(head, source.tableId) {
       val full = source.read()
@@ -304,32 +304,9 @@ final class IncrementalIvfPqIndex(spark: SparkSession,
       table.overwrite(clustered(VectorFunctions.ivfPqEncode(
         full, cents, cbs, m, ksub, dim, idCol, vecCol), nFull))
     } { b =>
-      val ch = source.changesSince(b, head)
-      val ins = ch.filter(col("_change_type") === "insert")
-        .drop("_change_type")
-      val delKeys = ch.filter(col("_change_type") === "delete")
-        .select(col(idCol))
-      // ONE aggregate answers the emptiness probe AND the insert count
-      // (the isEmpty + count pair each re-ran the change-feed subtree,
-      // broadcast builds included — guide §1.2: fewer actions)
-      val counts = ch.groupBy(col("_change_type")).count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val nIns = counts.getOrElse("insert", 0L)
-      val nDel = counts.getOrElse("delete", 0L)
-      // window keys drop FIRST (deletes ∪ re-inserted ids, one dv
-      // commit), then fresh encodings append — pure appends delete
-      // nothing, rewrites net to replace, a crash-replayed window
-      // converges (same protocol as IncrementalVectorIndex)
-      val dropKeys = delKeys.union(ins.select(col(idCol))).distinct()
-      if (nDel + nIns > 0) table.deleteMatchingDV(dropKeys, Seq(idCol))
-      if (nIns > 0)
-        // nIns is the OBSERVED window insert count (encode is
-        // row-local, one output row per insert) — under the
-        // small-commit gate the encoded batch writes driver-direct
-        table.append(clustered(VectorFunctions.ivfPqEncode(
-          ins, cents, cbs, m, ksub, dim, idCol, vecCol), nIns),
-          rowsHint = nIns)
-      table.compactDeletes(0.3)
+      IncrementalVectorIndex.foldWindow(table, source.changesSince(b, head),
+        idCol)((ins, nIns) => clustered(VectorFunctions.ivfPqEncode(
+          ins, cents, cbs, m, ksub, dim, idCol, vecCol), nIns))
     }
   }
 

@@ -59,41 +59,49 @@ final class IncrementalVectorIndex(spark: SparkSession,
 
   def read(): DataFrame = table.read()
 
-  /** Bring the index up to the source table's mirror-proven version
-    * ([[graft.io.ManagedParquetTable.foldHead]]). */
+  /** Bring the index up to the source table's committed head
+    * (`version - 1`, read before the data the fold covers). */
   def refresh(): Unit = {
-    val head = source.foldHead
+    val head = source.version - 1
     if (head < 0) { lastRefresh = "noop"; return }
     lastRefresh = tracker.refreshTo(head, source.tableId) {
       table.overwrite(
         VectorFunctions.buildQuantizedIndex(source.read(), idCol, vecCol))
     } { b =>
-      val ch = source.changesSince(b, head)
-      val ins = ch.filter(col("_change_type") === "insert")
-        .drop("_change_type")
-      val delKeys = ch.filter(col("_change_type") === "delete")
-        .select(col(idCol))
-      // ONE aggregate answers both emptiness probes (the two isEmpty
-      // calls each re-ran the change-feed subtree, broadcast builds
-      // included — guide §1.2: fewer actions over the same subtree)
-      val counts = ch.groupBy(col("_change_type")).count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val nIns = counts.getOrElse("insert", 0L)
-      val nDel = counts.getOrElse("delete", 0L)
-      // the window's keys drop FIRST (deletes ∪ re-inserted ids, one
-      // dv commit), then fresh encodings append: pure appends delete
-      // nothing (new keys match no live row → no commit), rewrites
-      // net to replace, and a crash-replayed window converges
-      val dropKeys = delKeys.union(ins.select(col(idCol))).distinct()
-      if (nDel + nIns > 0) table.deleteMatchingDV(dropKeys, Seq(idCol))
-      if (nIns > 0)
-        // nIns is the OBSERVED window insert count (quantizeU8 is
-        // row-local, one output row per insert) — under the
-        // small-commit gate the encoded batch writes driver-direct
-        table.append(
-          VectorFunctions.buildQuantizedIndex(ins, idCol, vecCol),
-          rowsHint = nIns)
-      table.compactDeletes(0.3)
+      IncrementalVectorIndex.foldWindow(table, source.changesSince(b, head),
+        idCol)((ins, _) => VectorFunctions.buildQuantizedIndex(ins, idCol, vecCol))
     }
+  }
+}
+
+object IncrementalVectorIndex {
+
+  /** One change window folded into a keyed vector index table — the
+    * incremental step of both vector maintainers, which differ only in
+    * `encode`. The window's keys drop FIRST (deletes ∪ re-inserted ids,
+    * one dv commit), then the encoded inserts append: pure appends
+    * delete nothing (new keys match no live row → no commit), rewrites
+    * net to replace, and a crash-replayed window converges. ONE
+    * aggregate answers both emptiness probes and the insert count (two
+    * isEmpty calls would each re-run the change-feed subtree, broadcast
+    * builds included). `encode(inserts, nIns)` gets the OBSERVED
+    * window insert count; both encoders are row-local, one output row
+    * per insert, so it is also the append's rowsHint — under the
+    * small-commit gate the encoded batch writes driver-direct. */
+  private[similarity] def foldWindow(table: ManagedParquetTable,
+      ch: DataFrame, idCol: String)(
+      encode: (DataFrame, Long) => DataFrame): Unit = {
+    val ins = ch.filter(col("_change_type") === "insert")
+      .drop("_change_type")
+    val delKeys = ch.filter(col("_change_type") === "delete")
+      .select(col(idCol))
+    val counts = ch.groupBy(col("_change_type")).count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val nIns = counts.getOrElse("insert", 0L)
+    val nDel = counts.getOrElse("delete", 0L)
+    val dropKeys = delKeys.union(ins.select(col(idCol))).distinct()
+    if (nDel + nIns > 0) table.deleteMatchingDV(dropKeys, Seq(idCol))
+    if (nIns > 0) table.append(encode(ins, nIns), rowsHint = nIns)
+    table.compactDeletes(0.3)
   }
 }

@@ -313,28 +313,28 @@ object BronzeIngest {
     * Pass the stream's checkpoint-scoped identity as `appId` (stable
     * across restarts, unique per sink — e.g. the checkpoint path).
     * The tag scan starts at THIS SINK's own floor: a sidecar next to
-    * the table records the mirror number AND the tag of the sink's
+    * the table records the log entry number AND the tag of the sink's
     * last landed append, written strictly AFTER that append commits.
     * The number is the append's OWN committed version (returned by
     * `ManagedParquetTable.append` — never a post-append re-read of
     * `table.version`, which would race any foreign commit landing in
     * between and over-advance the floor past the tag a replay must
-    * find), so it is always ≤ the mirror number of any append a
+    * find), so it is always ≤ the entry number of any append a
     * replay could be looking for (a crash between append and floor
     * write just leaves the previous floor — the scan starts one
     * append earlier, still sound). O(commits since the previous
-    * batch) mirror reads per trigger instead of O(stream lifetime) —
+    * batch) log reads per trigger instead of O(stream lifetime) —
     * and unlike a maintainer-basis floor, immune to OTHER commits (a
     * second sink, a compaction, a merge) landing between the append
     * and anything else: only this sink's own appends advance its
     * floor. The recorded TAG makes the replay of the sink's LAST
     * batch (the only batch a checkpointed stream can re-present)
-    * recognizable even after mirror-log retention pruned its tagged
-    * commit file — without it, `hasCommitTagged` would degrade to
+    * recognizable even after log retention pruned its tagged
+    * entry — without it, `hasCommitTagged` would degrade to
     * false and the "at-least-once re-work" would be a raw re-append,
     * i.e. duplicate rows. Re-presentation of an OLDER batch (only
     * possible outside the checkpointed-stream contract) still
-    * requires mirror retention to exceed the sink's downtime. */
+    * requires log retention to exceed the sink's downtime. */
   def indexedIngestBatch(table: graft.io.ManagedParquetTable,
       batch: DataFrame, batchId: Long, appId: String,
       maintainers: Seq[graft.io.IndexMaintainer],
@@ -355,7 +355,7 @@ object BronzeIngest {
       .take(16).map("%02x".format(_)).mkString
     val floorFile = Paths.get(table.path,
       s"_graft_sink_floor_${san}_$appIdHash")
-    // sidecar: line 1 = mirror number of the last landed append,
+    // sidecar: line 1 = log entry number of the last landed append,
     // line 2 = its tag (legacy one-line files parse as tag-less).
     // A corrupt/unreadable file parses as None = untrusted, never a
     // thrown wedge: floor 0 is always SOUND (a full retained-log
@@ -379,8 +379,8 @@ object BronzeIngest {
     // OTHER sink's file cannot pass that check (its tag carries ITS
     // verbatim appId), so the fallback re-imports none of the
     // ambiguity the rename fixed. A tag-less legacy file proves
-    // nothing and stays untrusted: floor 0 — a full retained-mirror +
-    // commit-file scan, sound when retention exceeds the sink's
+    // nothing and stays untrusted: floor 0 — a full retained-log
+    // scan, sound when retention exceeds the sink's
     // downtime across the upgrade (the caveat any long-idle sink
     // already carries). The first new append rewrites the new-named
     // sidecar and the fallback never fires again.
@@ -411,7 +411,7 @@ object BronzeIngest {
         if (n > 0) {
           val v = table.append(b, Some(tag))
           // floor AFTER the append it names, derived from the append's
-          // OWN commit version (manifest versions are 1-based, mirror
+          // OWN commit version (manifest versions are 1-based, log
           // numbers 0-based); atomic so a reader never sees a torn pair
           graft.io.GraftFs.publish(floorFile, s"${v - 1}\n$tag")
         }
@@ -422,13 +422,7 @@ object BronzeIngest {
     // behind the table (a noop resolves in one basis read otherwise).
     // Guarded on table existence: a stream whose first batches are
     // empty has no source version for the maintainers to track yet.
-    // repairMirror first: a crash between the append's COMMIT and its
-    // mirror write leaves a mirror gap that would fail every
-    // maintainer's changesSince contiguity check — the replayed batch
-    // (recognized as committed by its commit-file tag) must heal the
-    // gap before folding, or the indexes stay loudly stuck.
     if (table.exists) {
-      table.repairMirror()
       maintainers.foreach { m =>
         // the POLICY LOOP (maintenanceEvery > 0 turns it on): recovery
         // first and on EVERY batch — a torn swap/reorg left by a
@@ -491,13 +485,13 @@ object BronzeIngest {
   * marker (pre-append target version + a fresh flush id, written
   * atomically next to the staging table) brackets the pair, and the
   * append itself carries the flush id as commitInfo.userMetadata in
-  * the target's log mirror (real Delta's idempotent-writer device).
+  * the target's log entry (real Delta's idempotent-writer device).
   * Recovery on construction looks for a commit TAGGED with the
   * recorded flush id — found means the promote landed, so staging is
   * cleared without re-appending; absent means it never landed, so
   * staging is kept for a later flush. A bare version comparison could
   * not tell the append apart from an unrelated commit (compact,
-  * merge) racing into the crash window. If the mirrored log files
+  * merge) racing into the crash window. If the log entries
   * were themselves cleaned, the check degrades to "not landed" —
   * at-least-once, never silent loss. Either way the marker is removed
   * and no row is promoted twice. */

@@ -55,10 +55,10 @@ final class IncrementalInvertedIndex(spark: SparkSession,
 
   def basis: Option[Long] = tracker.basis
 
-  /** Bring the index up to the source table's mirror-proven version
-    * ([[ManagedParquetTable.foldHead]]). */
+  /** Bring the index up to the source table's committed head
+    * (`version - 1`, read before the data the fold covers). */
   def refresh(): Unit = {
-    val head = source.foldHead
+    val head = source.version - 1
     if (head < 0) { lastRefresh = "noop"; return }
     lastRefresh = tracker.refreshTo(head, source.tableId) {
       // buildIndex overwrites wholesale and clears any stale gate.

@@ -7,10 +7,10 @@ import scala.jdk.CollectionConverters._
 /** Independent delta-log reader: snapshot reconstruction by pure JSON
   * commit replay, sharing NO code or state with the writer.
   *
-  * [[graft.io.ManagedParquetTable]] mirrors every commit as a
+  * [[graft.io.ManagedParquetTable]] writes every commit as a
   * Delta-protocol transaction log (`_delta_log/NNN.json` + periodic
   * checkpoint parquet). The runtime image carries no external Delta
-  * reader to prove the mirror is consumable, so this object closes the
+  * reader to prove the log is consumable, so this object closes the
   * interop gap as far as an offline image allows: it resolves the live
   * file set the way the PROTOCOL says — replay add/remove actions in
   * version order — while deliberately ignoring everything the writer's
@@ -29,7 +29,7 @@ object DeltaLogReplay {
   private val CommitName = """(\d{20})\.json""".r
   private val AddPath = """"add"\s*:\s*\{\s*"path"\s*:\s*"((?:[^"\\]|\\.)*)"""".r
   private val RemovePath = """"remove"\s*:\s*\{\s*"path"\s*:\s*"((?:[^"\\]|\\.)*)"""".r
-  // a reader-v1 mirror cannot carry protocol deletion-vector file
+  // a reader-v1 log cannot carry protocol deletion-vector file
   // actions; the writer instead names the tombstone sidecar in
   // commitInfo.userMetadata (informational per the protocol — real
   // Delta readers ignore commitInfo, so conformance is unharmed).

@@ -46,6 +46,39 @@ class GraftFsSpec extends SparkSpec {
     assert(GraftFs.list(root).isEmpty)
   }
 
+  test("publish without replace is a put-if-absent: an existing target " +
+      "throws and keeps its bytes, no temp is left, and of two threads " +
+      "racing one name exactly one wins") {
+    val root = tmp("fs_pia")
+    val dest = root.resolve("entry")
+    GraftFs.publish(dest, "first", replace = false)
+    intercept[java.nio.file.FileAlreadyExistsException] {
+      GraftFs.publish(dest, "second", replace = false)
+    }
+    assert(Files.readString(dest) == "first")
+    assert(GraftFs.list(root).map(_.getFileName.toString) == Seq("entry"))
+    for (round <- 0 until 20) {
+      val name = root.resolve(s"race-$round")
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val won = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+      val lost = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+      val ts = (0 until 2).map { w =>
+        new Thread(() => {
+          start.await()
+          try { GraftFs.publish(name, s"w$w", replace = false); won.add(w) }
+          catch { case e: Throwable => lost.add(e) }
+        })
+      }
+      ts.foreach(_.start()); start.countDown(); ts.foreach(_.join())
+      assert(won.size == 1, s"round $round: winners ${won.asScala.toSeq}")
+      assert(lost.size == 1 &&
+        lost.peek().isInstanceOf[java.nio.file.FileAlreadyExistsException],
+        s"round $round: ${lost.asScala.toSeq}")
+      assert(Files.readString(name) == s"w${won.peek()}")
+    }
+    assert(GraftFs.list(root).forall(!_.getFileName.toString.contains(".tmp.")))
+  }
+
   test("a move and a delete keep a Hadoop checksum twin with its file; " +
       "publish leaves no temp and replaces in place") {
     val root = tmp("fs_crc")
@@ -208,7 +241,7 @@ class GraftFsSpec extends SparkSpec {
   }
 
   test("flush-intent recovery throws on an unreadable log instead of " +
-      "re-appending: tagged commit file and mirror file replaced by dirs") {
+      "re-appending: the tagged log entry replaced by a dir") {
     import graft.streaming.BufferedFlushSink
     val dir = tmp("fs_bfs").toString
     val target = new ManagedParquetTable(spark, s"$dir/target")
@@ -223,7 +256,6 @@ class GraftFsSpec extends SparkSpec {
       Files.delete(p)
       Files.createDirectory(p)
     }
-    replaceByDir(Paths.get(s"$dir/target/_graft_commits", f"${1}%020d.json"))
     replaceByDir(Paths.get(s"$dir/target/_delta_log", f"${0}%020d.json"))
     intercept[java.io.IOException] {
       new BufferedFlushSink(spark, s"$dir/target", s"$dir/staging",
@@ -237,6 +269,8 @@ class GraftFsSpec extends SparkSpec {
   test("no file under src/main/scala/graft but the seam names an atomic " +
       "move or an unclosed listing, and none reads graft's own files " +
       "through Hadoop's FileSystem (external-data readers excepted)") {
+    // also: only the seam names a hard link (the one put-if-absent),
+    // and no file names the retired commit dir or mirror heal
     val root = Paths.get("src/main/scala/graft")
     assert(Files.isDirectory(root), s"run from the repo root: $root missing")
     val seam = root.resolve(Paths.get("io", "GraftFs.scala"))
@@ -247,11 +281,22 @@ class GraftFsSpec extends SparkSpec {
       .flatMap { p =>
         val src = Files.readString(p)
         val fsOk = external.contains(p) || p.startsWith(root.resolve("tools"))
-        (Seq("ATOMIC_MOVE", "Files.list(", "Files.walk(") ++
+        (Seq("ATOMIC_MOVE", "Files.list(", "Files.walk(", "Files.createLink") ++
           (if (fsOk) Nil else Seq("getFileSystem")))
           .filter(src.contains).map(b => s"$p: $b")
       }.toList
     finally w.close()
     assert(offenders.isEmpty, offenders.mkString("\n"))
+    // the table's one log: no second commit home and no heal for a
+    // gap between two of them, in any file, the seam included
+    val w2 = Files.walk(root)
+    val retired = try w2.iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val src = Files.readString(p)
+        Seq("_graft_commits", "repairMirror").filter(src.contains).map(b => s"$p: $b")
+      }.toList
+    finally w2.close()
+    assert(retired.isEmpty, retired.mkString("\n"))
   }
 }

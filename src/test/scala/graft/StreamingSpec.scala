@@ -828,7 +828,7 @@ class StreamingSpec extends SparkSpec {
     BronzeIngest.indexedIngestBatch(t, bB, 0L, "a_b", Nil)
     assert(t.read().count() == rows && t.version == v,
       "sanitization-colliding appIds must not share a floor")
-    // retention prunes the mirror log past BOTH tagged commits (a
+    // retention prunes the log past BOTH tagged commits (a
     // long-idle sink on a busy table): hasCommitTagged degrades to
     // false, so only the floor-recorded tag can prove the last batch
     // already landed — without it the replay raw-appends duplicates
@@ -841,7 +841,7 @@ class StreamingSpec extends SparkSpec {
     BronzeIngest.indexedIngestBatch(t, bB, 0L, "a_b", Nil)
     assert(t.read().count() == rows && t.version == v,
       "last-batch replay must be recognized from the floor tag when " +
-        "the mirror log no longer holds the tagged commit")
+        "the log no longer holds the tagged commit")
   }
 
   test("ST15 floor-file upgrade: a legacy-named floor is trusted only " +
@@ -860,7 +860,7 @@ class StreamingSpec extends SparkSpec {
     val v = t.version
     // forge a pre-upgrade deployment: the floor lives under the OLD
     // sanitized+hashCode name, and BOTH other homes of the tag are
-    // gone (mirror retention + vacuumed superseded commit files — the
+    // gone (log retention — the
     // long-idle-sink worst case)
     def sha(s: String) = java.security.MessageDigest
       .getInstance("SHA-256").digest(s.getBytes("UTF-8"))
@@ -928,10 +928,9 @@ class StreamingSpec extends SparkSpec {
       "a floor that is a directory must not turn a replay into a re-append")
   }
 
-  test("ST15 crash between the append's COMMIT and its mirror write: " +
-      "the replay is recognized from the commit-file tag (no duplicate " +
-      "rows), the mirror gap heals, and the maintained index equals a " +
-      "fresh rebuild") {
+  test("ST15 crash after the append's log entry landed: the replay is " +
+      "recognized from the entry's tag (no duplicate rows) and the " +
+      "maintained index equals a fresh rebuild") {
     import graft.io.ManagedParquetTable
     import graft.text.{IncrementalInvertedIndex, InvertedIndex}
     import spark.implicits._
@@ -944,26 +943,20 @@ class StreamingSpec extends SparkSpec {
     val b0 = all.where($"doc_id" % 3 === 0)
     val b1 = all.where($"doc_id" % 3 === 1)
     BronzeIngest.indexedIngestBatch(t, b0, 0L, "st15g", Seq(idx))
-    // forge batch 1 dying at the WORST point: the append's manifest
-    // commit landed, but the process was killed before the mirror
-    // write, the floor-sidecar write, and the index refresh. Calling
-    // append directly (commit+mirror) and deleting the mirror file
-    // reproduces that state byte-for-byte.
+    // forge batch 1 dying at the WORST point: the append's log entry
+    // landed (the commit), but the process was killed before the
+    // floor-sidecar write and the index refresh. Calling append
+    // directly reproduces that state byte-for-byte.
     val v = t.append(b1, Some("graft-stream:st15g:1"))
-    val logDir = java.nio.file.Paths.get(s"$dir/docs/_delta_log")
-    java.nio.file.Files.delete(logDir.resolve(f"${v - 1}%020d.json"))
-    java.nio.file.Files.deleteIfExists(
-      logDir.resolve(f".${v - 1}%020d.json.crc"))
     val rows = t.read().count()
     // the checkpointed stream re-presents batch 1: the sink must
-    // recognize the append from the commit file's atomic tag (the
-    // mirror copy is gone, the floor still names batch 0), heal the
-    // mirror gap, and fold the missing window into the index
+    // recognize the append from the entry's tag (the floor still
+    // names batch 0) and fold the missing window into the index
     BronzeIngest.indexedIngestBatch(t, b1, 1L, "st15g", Seq(idx))
     assert(t.read().count() == rows && t.version == v,
-      "a commit whose mirror write was lost must not re-append on replay")
-    assert(java.nio.file.Files.exists(logDir.resolve(f"${v - 1}%020d.json")),
-      "the replayed batch must heal the mirror gap before maintenance")
+      "a landed commit must not re-append on replay")
+    assert(idx.basis.contains(v - 1),
+      "the replayed batch must fold the missing window into the index")
     // a further batch keeps flowing and the index ends ≡ fresh rebuild
     BronzeIngest.indexedIngestBatch(t, all.where($"doc_id" % 3 === 2),
       2L, "st15g", Seq(idx))

@@ -84,7 +84,7 @@ class TableLifecycleSpec extends SparkSpec {
       maxLiveFiles = 6, smallFileBytes = 1L << 20,
       maxSmallFilePermille = 1001L, targetFileBytes = 1L << 30,
       maxLiveDvEntries = 3, maxTombstonePermille = 250L,
-      maxMirrorLag = 0L, maxStaleObjects = 12)
+      maxStaleObjects = 12)
     val oracle = scala.collection.mutable.Map.empty[Long, Long]
     var nextId = 0L
     var nCompact, nCdel, nVac = 0
@@ -117,7 +117,6 @@ class TableLifecycleSpec extends SparkSpec {
             t.compact(targetFiles = a.suggestion.toInt); nCompact += 1
           case "compactDeletes" => t.compactDeletes(0.01); nCdel += 1
           case "vacuum" => t.vacuum(graceMs = 0L); nVac += 1
-          case "repairMirror" => t.repairMirror()
           case other => fail(s"window $w: unexpected recommendation $other")
         }
       }
@@ -146,7 +145,6 @@ class TableLifecycleSpec extends SparkSpec {
           case "compact" => t.compact(targetFiles = a.suggestion.toInt)
           case "compactDeletes" => t.compactDeletes(0.01)
           case "vacuum" => t.vacuum(graceMs = 0L)
-          case "repairMirror" => t.repairMirror()
           case other => fail(s"final sweep: unexpected $other")
         }
       }
