@@ -100,11 +100,14 @@ object Bench {
       // gates setup is plan construction (~ms) and query carries
       // everything, so the split costs nothing and changes nothing.
       val t0 = System.nanoTime()
+      // harness: a failing gate is timed and scored as empty, so one
+      // broken gate cannot sink the whole catalog's bench line
       val df = try Some(fn(spark, sfDir))
         catch { case _: Throwable => None }
       val t1 = System.nanoTime()
       // count() after a no-op projection forces full evaluation of every
       // output column (a bare count lets Catalyst prune the query body)
+      // harness: as above, for a gate whose plan fails at execution
       try df.foreach(_.queryExecution.toRdd.count())
       catch { case _: Throwable => () }
       val t2 = System.nanoTime()

@@ -19,6 +19,7 @@ object Explain {
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n===== $n =====")
+      // harness: a gate that fails to plan is reported, the rest explain
       try Catalog.byName(n).run(spark, sfDir).explain("formatted")
       catch { case e: Throwable => println(s"explain failed: $e") }
     }

@@ -58,6 +58,8 @@ object Verify {
         System.err.println(
           f"[verify] $name ok in ${(System.nanoTime() - t0) / 1e9}%.1fs")
       } catch { case e: Throwable =>
+        // harness: a failed query is reported by name and the run goes
+        // on, so oracle_sql.json still lists every query
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }

@@ -72,15 +72,6 @@ object Dedup {
     when(uni === 0, lit(0.0)).otherwise(round(inter / uni, 6))
   }
 
-  /** Token-set Jaccard (unigram variant). */
-  def tokenJaccard(a: Column, b: Column): Column = {
-    val sa = tokenSet(a)
-    val sb = tokenSet(b)
-    val uni = size(array_union(sa, sb)).cast("double")
-    when(uni === 0, lit(0.0))
-      .otherwise(round(size(array_intersect(sa, sb)) / uni, 6))
-  }
-
   /** Exact dedup: keep the lowest-id row per identical normalized text.
     * Shuffles only (digest, id) — not the payload. The fingerprint is
     * materialized ONCE as a column (normalizedText is two regexp passes

@@ -95,13 +95,6 @@ object DataGen {
   def imageWidth(id: Long): Int = 16 + ((id * 7) % 48).toInt
   def imageHeight(id: Long): Int = 16 + ((id * 13) % 48).toInt
   def imageFormat(id: Long): String = if (id % 3 == 0) "bmp" else "png"
-  /** dHash of the generated pattern: solid gray (even id) compares equal
-    * everywhere → 0; strictly-increasing horizontal gradient (odd id) →
-    * every adjacent-pixel comparison true → all 64 bits set = -1. Block
-    * averaging preserves both (means of disjoint consecutive strictly-
-    * increasing column groups are strictly increasing). */
-  def imagePhash(id: Long): Long = if (id % 2 == 0) 0L else -1L
-
   /** Encode a real PNG/BMP via `javax.imageio` with dimensions, format
     * and dHash that are pure functions of `id` — so a SQL oracle can
     * state the expected decode output arithmetically. */

@@ -110,9 +110,5 @@ object Models {
 
   final case class ValidationReport(
       futureDates: Seq[Int], negativeDistances: Seq[Int],
-      invalidSportDistances: Seq[Int]) {
-    def isClean: Boolean =
-      futureDates.isEmpty && negativeDistances.isEmpty &&
-        invalidSportDistances.isEmpty
-  }
+      invalidSportDistances: Seq[Int])
 }

@@ -122,8 +122,6 @@ object TextHashExpressions {
   import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
 
   def poly_hash(c: Column): Column = column(PolyHashExpr(expression(c)))
-  def poly_hash32(c: Column): Column =
-    column(PolyHashExpr(expression(c), 4294967296L))
   def minhash_sig(shingles: Column, as: Seq[Long], bs: Seq[Long]): Column =
     column(MinHashSigExpr(expression(shingles), as, bs))
   def simhash32(tokens: Column): Column =

@@ -91,6 +91,24 @@ object GraftFs {
     gone
   }
 
+  /** Matches an exception that says a file is missing or unreadable:
+    * Spark's missing path or failed file read, or an IO failure
+    * anywhere in its causes. The one classifier for callers that treat
+    * such a file as absent or corrupt (`catch { case
+    * GraftFs.Unreadable(e) => … }`); any other failure (a cancelled
+    * job, a bug, an Error) does not match and propagates. */
+  object Unreadable {
+    def unapply(e: Throwable): Option[Throwable] =
+      Some(e).filter(_.isInstanceOf[Exception]).filter(
+        Iterator.iterate(_)(_.getCause).takeWhile(_ != null).exists {
+          case _: java.io.IOException => true
+          case s: org.apache.spark.SparkThrowable => Option(s.getCondition).exists(c =>
+            c == "PATH_NOT_FOUND" || c.startsWith("FAILED_READ_FILE") ||
+              c == "CANNOT_READ_FILE_FOOTER")
+          case _ => false
+        })
+  }
+
   private def crcOf(p: Path): Path = p.resolveSibling(s".${p.getFileName}.crc")
 
   /** The crash-safe replacement of several pieces (dirs or files) under

@@ -57,8 +57,15 @@ object FileStats {
     import scala.jdk.CollectionConverters._
 
     val conf = spark.sessionState.newHadoopConf()
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new HadoopPath(absFile), conf))
+    val reader =
+      try ParquetFileReader.open(HadoopInputFile.fromPath(new HadoopPath(absFile), conf))
+      catch {
+        // parquet reports a file that is not parquet (bad magic, short
+        // footer) as a bare RuntimeException: surface it as the
+        // unreadable file it is, so GraftFs.Unreadable classifies it
+        case e: RuntimeException =>
+          throw new java.io.IOException(s"$absFile is not a readable parquet file", e)
+      }
     try {
       val blocks = reader.getFooter.getBlocks.asScala.toSeq
       val rows = blocks.map(_.getRowCount).sum

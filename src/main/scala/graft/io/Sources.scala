@@ -191,8 +191,8 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
       .getOrElse(Seq.empty)
 
   /** Deletion-vector entries ("logVer:dvDir:seg1;seg2" — the third
-    * field records the segment dirs the entry's tombstones touch;
-    * entries written before that upgrade lack it). Entries accumulate
+    * field records the segment dirs the entry's tombstones touch; an
+    * entry without it throws, see [[parseDv]]). Entries accumulate
     * across the table's life (bounded only by [[vacuum]]'s retention
     * horizon): an entry whose rows' files have since been rewritten or
     * dropped is inert (its (file, row) keys can never match a live
@@ -204,19 +204,20 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     * (consolidated every [[DvlogConsolidateAt]] dv commits), so a
     * non-dv commit rewrites no dv history and a dv commit appends one
     * tiny file — manifest size tracks live segments, not CDC history. */
-  private[graft] def dvEntries: Seq[String] = {
-    val (inline, files) = dvState
-    inline ++ files.flatMap(readDvlogFile)
-  }
+  private[graft] def dvEntries: Seq[String] = dvState.flatMap(readDvlogFile)
 
-  /** Committed dv bookkeeping: (legacy inline entries, dvlog file
-    * names). Inline entries exist only on manifests written before the
-    * dvlog upgrade; the first dv commit or retention pass migrates
-    * them into a consolidated dvlog file. */
-  private def dvState: (Seq[String], Seq[String]) =
+  /** Committed dv bookkeeping: the dvlog file names the manifest
+    * names. A manifest carrying dv entries inline (a `dvs` array, the
+    * layout before dvlog files) throws: ignoring them would bring
+    * deleted rows back. */
+  private def dvState: Seq[String] =
     resolvedManifest() match {
-      case None => (Seq.empty, Seq.empty)
-      case Some((_, s)) => (arrayField(s, "dvs"), arrayField(s, "dvfiles"))
+      case None => Seq.empty
+      case Some((_, s)) =>
+        if (arrayField(s, "dvs").nonEmpty) throw new IllegalStateException(
+          s"the manifest of $path carries inline dv entries (a dvs array, " +
+            "a layout no current writer produces); re-create the table from its source")
+        arrayField(s, "dvfiles")
     }
 
   private def dvlogDir = Paths.get(path, "_graft_dvlog")
@@ -252,16 +253,19 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
   private def touchDvlogFiles(names: Seq[String]): Unit =
     names.foreach(f => GraftFs.touch(dvlogDir.resolve(f)))
 
-  /** Parsed dv entry. `touched` is None for legacy entries (unknown
-    * touch set → conservatively treated as always-live). */
+  /** Parsed dv entry: its log entry number, its tombstone sidecar dir
+    * and the segment dirs its tombstones touch. */
   private[io] final case class DvEntry(ver: Long, dir: String,
-      touched: Option[Set[String]])
+      touched: Set[String])
 
+  /** An entry without a touch set (two fields, the layout before touch
+    * sets) throws: no reader could tell which scans it applies to. */
   private[io] def parseDv(e: String): DvEntry = {
     val parts = e.split(":", 3)
-    DvEntry(parts(0).toLong, parts(1),
-      if (parts.length < 3) None
-      else Some(parts(2).split(";").filter(_.nonEmpty).toSet))
+    if (parts.length < 3) throw new IllegalStateException(
+      s"dv entry '$e' of $path records no touched segments (a layout no " +
+        "current writer produces); re-create the table from its source")
+    DvEntry(parts(0).toLong, parts(1), parts(2).split(";").filter(_.nonEmpty).toSet)
   }
 
   /** The dv entries that can still affect a scan of `segs`: an entry
@@ -281,22 +285,21 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
   private[io] def liveDvEntriesFor(relFiles: Seq[String]): Seq[String] =
     touchingDv(dvEntries, relFiles.map(_.split("/")(0)).toSet)
 
-  /** Of `entries`, those whose touch set intersects `segs` (legacy
-    * entries with no recorded touch set are conservatively kept). */
+  /** Of `entries`, those whose touch set intersects `segs`. */
   private def touchingDv(entries: Seq[String],
       segs: Set[String]): Seq[String] =
-    entries.filter(e => parseDv(e).touched.forall(_.exists(segs.contains)))
+    entries.filter(e => parseDv(e).touched.exists(segs.contains))
 
   /** Atomically publish a new snapshot and return its committed
-    * version. `dv` replaces the dv bookkeeping (inline entries, dvlog
-    * file names) when given; by default both carry forward VERBATIM —
+    * version. `dv` replaces the dv bookkeeping (the dvlog file names)
+    * when given; by default the names carry forward VERBATIM —
     * no dv commit, no dv rewrite, so commit cost is O(live segments +
     * referenced dvlog names), never O(table history).
     *
     * The commit IS the Delta-protocol log entry `_delta_log/{base}.json`
     * ([[logEntry]]): its file actions, the tag as
     * commitInfo.userMetadata, and the manifest fields (version, mode,
-    * segments, dvs, dvfiles, tag) inside commitInfo, which the protocol
+    * segments, dvfiles, tag) inside commitInfo, which the protocol
     * leaves free-form.
     *
     * SELF-ENFORCING single-writer contract: `base` is the snapshot
@@ -319,7 +322,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     * committed version with a complete log entry; [[resolvedManifest]]
     * walks past a stale pointer. */
   private def commit(base: Snapshot, segments: Seq[String], mode: String,
-      dv: Option[(Seq[String], Seq[String])] = None,
+      dv: Option[Seq[String]] = None,
       tag: String = ""): Long = {
     Files.createDirectories(Paths.get(path))
     val cur = snapshot().version
@@ -329,8 +332,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
         "the single-writer contract is violated; nothing was published " +
         "(the table still serves the other writer's commit)")
     val ver = base.version + 1
-    val (inline, dvFiles) = dv.getOrElse(dvState)
-    val json = manifestJson(ver, mode, segments, inline, dvFiles, tag)
+    val json = manifestJson(ver, mode, segments, dv.getOrElse(dvState), tag)
     // stable table id + last-emitted schema live in a sidecar.
     // Fallback for logs predating the sidecar: recover both from the
     // newest metaData action already in the log (keeps the table id
@@ -377,11 +379,9 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
   }
 
   private def manifestJson(ver: Long, mode: String, segments: Seq[String],
-      inlineDvs: Seq[String], dvFiles: Seq[String],
-      tag: String = ""): String =
+      dvFiles: Seq[String], tag: String = ""): String =
     s"""{"version":$ver,"mode":"$mode","segments":[""" +
       segments.map("\"" + _ + "\"").mkString(",") +
-      s"""],"dvs":[""" + inlineDvs.map("\"" + _ + "\"").mkString(",") +
       s"""],"dvfiles":[""" + dvFiles.map("\"" + _ + "\"").mkString(",") +
       // field emitted only when tagged: untagged commits keep the
       // pre-tag byte format (every parser here is field-extracting)
@@ -487,19 +487,6 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
   // a spurious "All paths were ignored" on every sidecar read)
   private def bloomDir = Paths.get(path, "_graft_blooms", "idx")
 
-  /** Bloom sidecar to probe: `idx/` when present, else the pre-idx
-    * layout that wrote part files directly under `_graft_blooms` — a
-    * table indexed by the older code keeps its skipping (instead of it
-    * silently turning off) until [[buildBloomIndex]] re-runs. */
-  private def bloomProbeDir: Option[java.nio.file.Path] = {
-    if (Files.isDirectory(bloomDir)) return Some(bloomDir)
-    val legacy = Paths.get(path, "_graft_blooms")
-    if (Files.isDirectory(legacy) &&
-        GraftFs.list(legacy).exists(_.getFileName.toString.endsWith(".parquet")))
-      Some(legacy)
-    else None
-  }
-
   /** Per-(file, column) BLOOM file-skipping tier — the equality
     * complement of the min/max sidecar: after an overlapping ingest or
     * without clustering, every file's [min,max] can span the whole key
@@ -548,12 +535,6 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     }
     spark.createDataFrame(sidecarRows, bloomSchema)
       .coalesce(8).write.mode("overwrite").parquet(bloomDir.toString)
-    // a rebuild retires any pre-idx-layout sidecar files lingering at
-    // the legacy root (idx/ shadows them on probe, but leaving them
-    // invites a stale fallback if idx/ is ever lost)
-    GraftFs.list(Paths.get(path, "_graft_blooms"))
-      .filterNot(Files.isDirectory(_))
-      .foreach(Files.deleteIfExists(_))
   }
 
   private val bloomSchema = org.apache.spark.sql.types.StructType(Seq(
@@ -568,20 +549,20 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     * given conjuncts. Sketches are deserialized and probed on the
     * executors; only the (short) list of dead file names is collected —
     * the driver never materializes the sidecar, so probe memory is
-    * O(dead files), not O(files × cols × numBits). A missing sidecar
-    * skips nothing; an unreadable one throws, naming
+    * O(dead files), not O(files × cols × numBits). A missing `idx/`
+    * sidecar skips nothing (files anywhere else under `_graft_blooms`
+    * are never read); an unreadable one throws, naming
     * [[buildBloomIndex]]. */
   private def bloomDeadFiles(
       conjuncts: Seq[FileStats.Conjunct]): String => Boolean = {
     val probes = conjuncts.filter(_.op == "=")
       .map(c => c.colName.toLowerCase -> FileStats.hashLiteral(c))
-    val probeDir = bloomProbeDir
-    if (probes.isEmpty || probeDir.isEmpty)
+    if (probes.isEmpty || !Files.isDirectory(bloomDir))
       return (_: String) => false
     val byCol = probes.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
     val byColBc = spark.sparkContext.broadcast(byCol)
     val dead: Set[String] =
-      try spark.read.parquet(probeDir.get.toString)
+      try spark.read.parquet(bloomDir.toString)
         .filter(org.apache.spark.sql.functions.col("col")
           .isin(byCol.keys.toSeq: _*))
         .select("file", "col", "sketch")
@@ -595,7 +576,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
         }.distinct().collect().toSet
       catch {
         case e: org.apache.spark.SparkException =>
-          throw new IllegalStateException(s"bloom sidecar ${probeDir.get} is " +
+          throw new IllegalStateException(s"bloom sidecar $bloomDir is " +
             "unreadable; rebuild it with buildBloomIndex", e)
       }
     dead
@@ -901,24 +882,23 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     val entry = s"$logVer:$dir:${touched.mkString(";")}"
     // the entry rides a fresh dvlog file the commit NAMES — never the
     // manifest body, so a CDC-heavy table's commit never rewrites its
-    // dv history. At the consolidation cadence (or on the first dv
-    // commit after a legacy inline-dvs manifest) all named files fold
+    // dv history. At the consolidation cadence all named files fold
     // into one, keeping the referenced-file list O(1); the superseded
     // files are NOT deleted here — a concurrent reader holding the
     // pre-consolidation manifest still resolves them — they are only
     // mtime-touched (unreference time, mirroring commit's segment
     // touch) and left for vacuum's unreferenced-dvlog sweep, which
     // applies the same graceMs contract segments get.
-    val (inline, dvFiles) = dvState
+    val dvFiles = dvState
     // the commit tag (graft-dv:<dir>) is the log entry's
     // userMetadata: the entry has no file actions (see
     // [[logEntry]]), so it is how a graft-aware replay
     // (tools/DeltaLogReplay) finds the tombstones to apply
-    val consolidate = inline.nonEmpty || dvFiles.size >= DvlogConsolidateAt
+    val consolidate = dvFiles.size >= DvlogConsolidateAt
     val named =
-      if (consolidate) Seq(writeDvlogFile(inline ++ dvFiles.flatMap(readDvlogFile) :+ entry))
+      if (consolidate) Seq(writeDvlogFile(dvFiles.flatMap(readDvlogFile) :+ entry))
       else dvFiles :+ writeDvlogFile(Seq(entry))
-    commit(snap, segs, "delete-dv", Some((Seq.empty, named)), tag = s"graft-dv:$dir")
+    commit(snap, segs, "delete-dv", Some(named), tag = s"graft-dv:$dir")
     if (consolidate) touchDvlogFiles(dvFiles)
   }
 
@@ -984,18 +964,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     * propagates, so a healthy table is never moved aside. */
   def isHealthy: Boolean =
     try exists && read().limit(1).count() > 0
-    catch { case e: Exception if unreadable(e) => false }
-
-  /** Whether `e` is a missing or unreadable file: Spark's missing path
-    * or failed file read, or an IO failure anywhere in its causes. */
-  private def unreadable(e: Throwable): Boolean =
-    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
-      case _: java.io.IOException => true
-      case s: org.apache.spark.SparkThrowable => Option(s.getCondition).exists(c =>
-        c == "PATH_NOT_FOUND" || c.startsWith("FAILED_READ_FILE") ||
-          c == "CANNOT_READ_FILE_FOOTER")
-      case _ => false
-    }
+    catch { case GraftFs.Unreadable(_) => false }
 
   /** S10 repair: corrupted table moved aside, fresh state. */
   def repair(): Unit = if (!isHealthy && Files.exists(Paths.get(path))) {
@@ -1081,8 +1050,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     val staleSegs = GraftFs.list(Paths.get(path))
       .map(_.getFileName.toString)
       .count(n => n.startsWith("seg-") && !liveSet(n))
-    val (_, refFiles) = dvState
-    val refSet = refFiles.toSet
+    val refSet = dvState.toSet
     val staleDvlog = GraftFs.list(dvlogDir)
       .count(p => !refSet(p.getFileName.toString))
     val refDvDirs = dvEntries.map(parseDv(_).dir).toSet
@@ -1615,7 +1583,7 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
       .foreach(p => GraftFs.delete(statsDir.resolve(p.getFileName.toString)))
     // unreferenced dv bookkeeping: dvlog files the manifest doesn't
     // name and tombstone sidecar dirs no committed entry names
-    val refSet = dvState._2.toSet
+    val refSet = dvState.toSet
     GraftFs.sweep(dvlogDir, cutoff)(n => !refSet(n))
     val refDvDirs = dvEntries.map(parseDv(_).dir).toSet
     GraftFs.sweep(dvRoot, cutoff)(n => !refDvDirs(n))
@@ -1645,21 +1613,20 @@ final class ManagedParquetTable(spark: SparkSession, val path: String) {
     // or after the cut, plus older entries whose touched segments are
     // live AT the cut (segment liveness is a contiguous interval, so a
     // file live at any v >= cut that an old entry touches is live at
-    // the cut too). Legacy entries with no recorded touch set are
-    // conservatively kept.
+    // the cut too).
     val segsAtCut = deltaSnapshotFiles(Some(cut)).map(_.split("/")(0)).toSet
     val all = dvEntries
     val kept = all.filter { e =>
       val d = parseDv(e)
-      d.ver >= cut || d.touched.forall(_.exists(segsAtCut.contains))
+      d.ver >= cut || d.touched.exists(segsAtCut.contains)
     }
-    val (inline, dvFiles) = dvState
-    if (kept.size != all.size || inline.nonEmpty || dvFiles.size > 1) {
+    val dvFiles = dvState
+    if (kept.size != all.size || dvFiles.size > 1) {
       val consolidated =
         if (kept.isEmpty) Seq.empty[String]
         else Seq(writeDvlogFile(kept))
       GraftFs.publish(manifest,
-        manifestJson(ver, "vacuum", segs, Seq.empty, consolidated))
+        manifestJson(ver, "vacuum", segs, consolidated))
       // superseded dvlog files stay on disk for readers holding the
       // previous manifest; touched so vacuum's sweep (which runs right
       // after this, in the same call) grants them the full graceMs

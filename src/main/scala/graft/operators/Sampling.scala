@@ -32,11 +32,6 @@ object Sampling {
     df.filter(pmod(hashCol, lit(denom)) < rateCol)
   }
 
-  /** Uniform (stratum-free) deterministic sample at rate/denom. */
-  def hashSample(df: DataFrame, hashCol: Column, rate: Int,
-      denom: Int = 1000): DataFrame =
-    df.filter(pmod(hashCol, lit(denom)) < lit(rate))
-
   /** Deterministic weighted sample WITHOUT replacement — sequential
     * Poisson sampling (Ohlsson 1998; the order-sampling family behind
     * priority sampling): each row gets priority u(id)/weight for a

@@ -356,47 +356,21 @@ object BronzeIngest {
     val floorFile = Paths.get(table.path,
       s"_graft_sink_floor_${san}_$appIdHash")
     // sidecar: line 1 = log entry number of the last landed append,
-    // line 2 = its tag (legacy one-line files parse as tag-less).
-    // A corrupt/unreadable file parses as None = untrusted, never a
-    // thrown wedge: floor 0 is always SOUND (a full retained-log
-    // scan), so degrading is strictly safer than downing the sink on
-    // every trigger over a zero-byte artifact or a foreign file that
-    // happens to match the name.
-    def parseFloor(p: java.nio.file.Path): Option[(Long, Option[String])] =
-      try {
-        val ls = Files.readString(p).split("\n", 2)
-        Some((ls(0).trim.toLong,
-          if (ls.length > 1 && ls(1).trim.nonEmpty) Some(ls(1).trim)
-          else None))
+    // line 2 = its tag. Only this name is read; a file without the tag
+    // line, or a corrupt or unreadable one, reads as untrusted (floor
+    // 0, no tag), never a thrown wedge: floor 0 is always SOUND (a
+    // full retained-log scan), so degrading is strictly safer than
+    // downing the sink on every trigger over a zero-byte artifact or a
+    // foreign file that happens to match the name.
+    val (floor, floorTag) =
+      (try {
+        val ls = Files.readString(floorFile).split("\n", 2)
+        if (ls.length < 2 || ls(1).trim.isEmpty) None
+        else Some((ls(0).trim.toLong, ls(1).trim))
       } catch {
         case _: java.io.IOException | _: NumberFormatException => None
-      }
-    // floor files named by an EARLIER scheme (sanitized+hashCode,
-    // sanitized-only) fall back on VERBATIM ownership proof, not the
-    // name: the recorded tag embeds the verbatim appId, so a legacy
-    // file is trusted exactly when its tag parses as
-    // graft-stream:<THIS appId>:<digits> — a sanitization-colliding
-    // OTHER sink's file cannot pass that check (its tag carries ITS
-    // verbatim appId), so the fallback re-imports none of the
-    // ambiguity the rename fixed. A tag-less legacy file proves
-    // nothing and stays untrusted: floor 0 — a full retained-log
-    // scan, sound when retention exceeds the sink's
-    // downtime across the upgrade (the caveat any long-idle sink
-    // already carries). The first new append rewrites the new-named
-    // sidecar and the fallback never fires again.
-    val (floor, floorTag) =
-      (if (Files.exists(floorFile)) parseFloor(floorFile)
-       else Seq(
-           Paths.get(table.path,
-             s"_graft_sink_floor_${san}_${appId.hashCode.toHexString}"),
-           Paths.get(table.path, s"_graft_sink_floor_$san"))
-         .filter(Files.exists(_)).flatMap(parseFloor(_))
-         .find(_._2.exists { t =>
-           val rest = t.stripPrefix(s"graft-stream:$appId:")
-           rest != t && rest.nonEmpty && rest.forall(_.isDigit)
-         }))
-        .getOrElse((0L, None))
-    val alreadyCommitted = floorTag.contains(tag) ||
+      }).getOrElse((0L, ""))
+    val alreadyCommitted = floorTag == tag ||
       (table.exists && table.hasCommitTagged(tag, floor))
     if (!alreadyCommitted) {
       // pin the batch: the empty-gate and the tagged append must see
@@ -512,14 +486,12 @@ final class BufferedFlushSink(spark: SparkSession, targetPath: String,
 
   private def recoverInterruptedFlush(): Unit = {
     // sweep intent tmp files stranded by a crash between write and the
-    // atomic rename (they were never the live marker); older writers
-    // named them without the hidden-dot prefix
+    // atomic rename (they were never the live marker)
     GraftFs.list(Paths.get(stagingPath))
-      .filter(_.getFileName.toString.stripPrefix(".")
-        .startsWith("_graft_flush_intent.tmp."))
+      .filter(_.getFileName.toString.startsWith("._graft_flush_intent.tmp."))
       .foreach(GraftFs.delete)
     if (Files.exists(intentPath)) {
-      // format: "<preVer>\n<flushId>"; a legacy one-line or malformed
+      // format: "<preVer>\n<flushId>"; a one-line or malformed
       // intent → not landed. An IO fault reading the intent or the
       // target's log propagates: guessing "not landed" would re-append
       val landed = try {

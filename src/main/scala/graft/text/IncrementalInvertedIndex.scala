@@ -75,7 +75,7 @@ final class IncrementalInvertedIndex(spark: SparkSession,
       if (InvertedIndex.needsRepair(spark, indexPath))
         InvertedIndex.repairIndex(spark, indexPath)
       InvertedIndex.applyChanges(source.changesSince(b, head), textCol,
-        idCol, indexPath, nBuckets)
+        idCol, indexPath)
     }
   }
 
@@ -87,14 +87,13 @@ final class IncrementalInvertedIndex(spark: SparkSession,
   override def maintenancePlan(): Seq[graft.io.MaintenanceAction] =
     if (!java.nio.file.Files.isDirectory(
         java.nio.file.Paths.get(indexPath))) Seq.empty
-    else InvertedIndex.maintenancePlan(spark, indexPath, nBuckets, policy)
+    else InvertedIndex.maintenancePlan(spark, indexPath, policy)
 
   override def runMaintenance(a: graft.io.MaintenanceAction): Unit =
     a.action match {
       case "recoverSwap" => InvertedIndex.recoverSwap(spark, indexPath)
       case "repairIndex" => InvertedIndex.repairIndex(spark, indexPath)
-      case "compactIndex" =>
-        InvertedIndex.compactIndex(spark, indexPath, nBuckets)
+      case "compactIndex" => InvertedIndex.compactIndex(spark, indexPath)
       case "rebucket" =>
         InvertedIndex.rebucket(spark, indexPath, a.suggestion.toInt)
       case other => super.runMaintenance(a)

@@ -131,12 +131,6 @@ object InvertedIndex {
       .withColumnRenamed("__pid", "phrase_id")
   }
 
-  /** Union of every phrase's token set — the narrowing set to pass
-    * [[openIndex]] (or, for a raw build-once postings dir,
-    * [[openBuckets]]) before a [[multiPhraseSearch]]. */
-  def phraseTokens(phrases: Seq[String]): Seq[String] =
-    phrases.flatMap(queryTokens).distinct
-
   /** Number of `bucket=` partition dirs a persisted index uses. */
   val DefaultBuckets = 64
 
@@ -293,13 +287,12 @@ object InvertedIndex {
       tokens: Seq[String], nBuckets: Int = DefaultBuckets):
       (Seq[String], Int) = {
     require(tokens.nonEmpty, "empty token list")
-    // resolve the SELF-DESCRIBING bucket count like every other
-    // post-build operation: the meta sits at the index root, the
-    // sibling of this postings dir — a caller holding a
-    // non-default-bucket index and the default parameter must still
-    // plan the right bucket set (raw writeBuckets dirs have no meta
-    // and keep the parameter)
-    val nb = postingsBuckets(spark, path, nBuckets)
+    // an index's postings dir plans with the bucket count its meta
+    // records (the meta sits at the index root, this dir's parent) —
+    // a caller holding a non-default-bucket index and the default
+    // parameter must still plan the right bucket set; a raw
+    // writeBuckets dir has no meta and keeps the parameter
+    val nb = postingsBuckets(path, nBuckets)
     planFiles(spark, path, tokens, bucketsFor(spark, tokens, nb))
   }
 
@@ -391,8 +384,7 @@ object InvertedIndex {
     // same sibling-meta resolution as probeFilePlan: a raw writeBuckets
     // dir has no meta and keeps the parameter; a full index's postings
     // dir resolves the build's recorded count
-    prunedPostings(spark, path, tokens,
-      postingsBuckets(spark, path, nBuckets))
+    prunedPostings(spark, path, tokens, postingsBuckets(path, nBuckets))
       .select(col("token"), col("doc_id"), col("pos"))
   }
 
@@ -453,47 +445,51 @@ object InvertedIndex {
         Seq(f.toString))("doc_id").dataType)
 
   /** The index's bucket count is SELF-DESCRIBING: [[buildIndex]]
-    * records it in `_graft_index_meta` and every post-build operation
-    * resolves it from there (falling back to its parameter only for a
-    * pre-meta index). Bucket placement — postings dirs AND doclen
-    * dbuckets — depends on the modulus, so a maintenance call passing
-    * a different count than the build would otherwise write to /
-    * probe the wrong buckets silently. Published atomically: a crash
-    * mid-write leaves the old meta, never a torn one. */
+    * records it in `_graft_index_meta`, [[rebucket]] republishes it,
+    * and every index-rooted operation takes it from there and nowhere
+    * else ([[indexBuckets]]). Bucket placement — postings dirs AND
+    * doclen dbuckets — depends on the modulus, so a count passed by a
+    * caller could write to / probe the wrong buckets silently.
+    * Published atomically: a crash mid-write leaves the old meta,
+    * never a torn one. */
   private def writeMeta(path: String, nBuckets: Int): Unit =
-    GraftFs.publish(Paths.get(path, "_graft_index_meta"), s"nBuckets=$nBuckets\n")
+    GraftFs.publish(Paths.get(path, MetaName), s"nBuckets=$nBuckets\n")
 
-  /** [[indexBuckets]] for callers holding a POSTINGS dir: the meta is
-    * at the index root, the postings dir's parent. A raw
-    * [[writeBuckets]] dir has no meta there (or no parent at all) and
-    * resolves to the fallback — exactly the layout-level contract. */
-  private def postingsBuckets(spark: SparkSession, postingsPath: String,
-      fallback: Int): Int = {
+  private val MetaName = "_graft_index_meta"
+
+  /** The bucket count to plan a POSTINGS dir with: the one its index
+    * records when the dir's parent is an index root (it holds the
+    * meta, or a layout swap that may have asided it — which refuses);
+    * `nBuckets` for a raw [[writeBuckets]] dir, which has no meta by
+    * contract — the layout-level readers' parameter. */
+  private def postingsBuckets(postingsPath: String, nBuckets: Int): Int = {
     val parent = Paths.get(postingsPath).getParent
-    if (parent == null) fallback
-    else indexBuckets(spark, parent.toString, fallback)
+    if (parent == null) nBuckets
+    else {
+      requireNoSwap(parent.toString)
+      if (Files.exists(parent.resolve(MetaName))) indexBuckets(parent.toString)
+      else nBuckets
+    }
   }
 
-  private def indexBuckets(spark: SparkSession, path: String,
-      fallback: Int): Int = {
-    // EVERY index-rooted operation resolves its bucket count here, so
-    // this is the one gate that makes a torn bucket-layout swap
-    // (compaction or rebucket died mid-rename) refuse service: the
-    // meta and the postings dirs may disagree on the modulus, and a
-    // probe would silently read the WRONG buckets
+  /** The bucket count of the index at `path`, from its meta. EVERY
+    * index-rooted operation resolves it here, so this is also the one
+    * gate that makes a torn bucket-layout swap (compaction or rebucket
+    * died mid-rename) refuse service: the meta and the postings dirs
+    * may disagree on the modulus, and a probe would silently read the
+    * WRONG buckets. A missing meta (the index was not written by
+    * [[buildIndex]]) or one that does not parse throws. */
+  private def indexBuckets(path: String): Int = {
     requireNoSwap(path)
-    // only a pre-meta index takes the fallback: a present meta that
-    // does not parse would otherwise send every probe to the caller's
-    // modulus silently
-    val p = Paths.get(path, "_graft_index_meta")
-    if (!Files.exists(p)) fallback
-    else {
-      val txt = Files.readString(p)
-      """nBuckets=(\d+)""".r.findFirstMatchIn(txt).map(_.group(1).toInt)
-        .getOrElse(throw new IllegalStateException(s"index meta $p " +
-          s"records no bucket count (holds '${txt.take(64)}') — rebuild " +
-          "the index or restore its meta"))
-    }
+    val p = Paths.get(path, MetaName)
+    if (!Files.exists(p)) throw new IllegalStateException(
+      s"index at $path has no $MetaName recording its bucket count (a " +
+        "layout no current writer produces) — rebuild it with buildIndex")
+    val txt = Files.readString(p)
+    """nBuckets=(\d+)""".r.findFirstMatchIn(txt).map(_.group(1).toInt)
+      .getOrElse(throw new IllegalStateException(s"index meta $p " +
+        s"records no bucket count (holds '${txt.take(64)}') — rebuild " +
+        "the index with buildIndex or restore its meta"))
   }
 
   /** Live names a layout swap replaces or drops; each is ASIDED to a
@@ -503,7 +499,7 @@ object InvertedIndex {
     * ever reads a `.pre` path: probes and maintenance address these
     * names exactly, so the asides are invisible outside recovery. */
   private val SwapNames = Seq("postings", "postings_stats", "doclen",
-    "corpus", "tombstones", "_graft_genfiles", "_graft_index_meta")
+    "corpus", "tombstones", "_graft_genfiles", MetaName)
 
   /** The layout swap of the index at `path`: the compaction's staged
     * pieces move in behind `_graft_swap_inflight`. */
@@ -717,8 +713,9 @@ object InvertedIndex {
   // (a file in a gen-k manifest with k ≥ g belongs to the dead call; a
   // file in NO manifest belongs to a call that died before its manifest
   // write — both correctly torn). Manifests are planning metadata the
-  // probes never read; absence of `base` (a legacy index) degrades
-  // repair to the footer sweep.
+  // probes never read; absence of `base` (a build that died between
+  // its corpus row and its `base` write) degrades repair to the footer
+  // sweep.
 
   private def genfilesDir(path: String): String = s"$path/_graft_genfiles"
 
@@ -757,7 +754,7 @@ object InvertedIndex {
     * index this engine builds or appends to does), the manifests
     * narrow the CANDIDATE set to files no committed manifest names
     * (one listing pass + O(generations) tiny manifest reads), and each
-    * candidate is then confirmed by the same gen proof the legacy
+    * candidate is then confirmed by the same gen proof the footer
     * sweep uses before anything is deleted — so repair's data IO is
     * O(candidates) ≈ O(torn files), and a candidate whose proof shows
     * a COMMITTED generation is kept, not deleted: a listing anomaly or
@@ -765,14 +762,15 @@ object InvertedIndex {
     * unlisted-but-live file (probes read it; absent stats rows mean
     * never-skip), never to silent data loss. The confirmation ladder:
     * constant footer gen ≥ g (or a resolve read proving it) → torn,
-    * delete; gen < g → committed, keep; UNREADABLE → torn, delete —
+    * delete; gen < g → committed, keep; missing or UNREADABLE
+    * ([[GraftFs.Unreadable]]) → torn, delete —
     * unique to the manifest path, because a committed file is by
     * construction a successfully closed parquet part while a dead call
     * can die mid-write (and the index is a derived artifact: the
     * maintained ≡ rebuild differentials would surface any divergence);
     * valid parquet with null/mixed gens → out-of-band actor, abort
-    * LOUDLY with the markers in place. A legacy manifest-less index
-    * falls back to the full footer sweep, where unreadable is also a
+    * LOUDLY with the markers in place; any other failure propagates
+    * with the markers in place too. A manifest-less index falls back to the full footer sweep, where unreadable is also a
     * loud abort (no manifest proof exists that the file was never
     * committed) — clearing the gate around an unproven file would let
     * the next append REUSE the torn generation number and
@@ -848,7 +846,7 @@ object InvertedIndex {
     removed
   }
 
-  /** The legacy torn-file classification (a manifest-less index): the
+  /** The torn-file classification of a manifest-less index: the
     * gen proof over EVERY data file — see [[repairIndex]]. Returns
     * (family, relative path) pairs. */
   private def footerSweepTorn(spark: SparkSession, path: String,
@@ -874,7 +872,7 @@ object InvertedIndex {
     * UNREADABLE file is torn only when the caller brings outside proof
     * it was never committed (`unreadableIsTorn`: the manifest path's
     * candidates — a committed file is a successfully closed parquet
-    * part); the legacy sweep has no such proof and propagates the read
+    * part); the footer sweep has no such proof and propagates the read
     * failure instead. */
   private def genProvesTorn(spark: SparkSession, dir: String, rel: String,
       g: Long, unreadableIsTorn: Boolean): Boolean =
@@ -901,10 +899,9 @@ object InvertedIndex {
             " repair (in-flight markers left in place)")
       }
     } catch {
-      // read failures only — the loud IllegalStateException refusals
-      // above must propagate on BOTH paths
-      case e: IllegalStateException => throw e
-      case scala.util.control.NonFatal(_) if unreadableIsTorn => true
+      // a missing or unreadable file only: the loud refusals above, a
+      // cancelled job or any other failure propagate on BOTH paths
+      case GraftFs.Unreadable(_) if unreadableIsTorn => true
     }
 
   /** Rewrite a FileStats sidecar without the rows of `dead` files —
@@ -956,10 +953,10 @@ object InvertedIndex {
     * [[repairIndex]] removes the torn files so the failed window can
     * simply replay — no rebuild. */
   def appendDocs(docs: DataFrame, textCol: String, idCol: String,
-      path: String, nBuckets: Int = DefaultBuckets): Unit = {
+      path: String): Unit = {
     val spark = docs.sparkSession
     requireNoInflight(spark, path)
-    val nb = indexBuckets(spark, path, nBuckets)
+    val nb = indexBuckets(path)
     val gen = generation(spark, path)
     // pin the batch: the dbucket set, the replay guard and the writes
     // must all see the SAME rows — a non-deterministic source whose
@@ -990,8 +987,8 @@ object InvertedIndex {
         // a fully-replayed batch appends nothing — and must not bump
         // the generation with an empty corpus delta row
         if (nFresh == 0) return
-        // legacy index (built before commit manifests): snapshot the
-        // committed state as `base` NOW — the writer gate is up and no
+        // manifest-less index (its build died before the `base`
+        // write): snapshot the committed state as `base` NOW — the writer gate is up and no
         // marker exists, so the current listing is exactly the
         // committed files. One full listing, once per index.
         if (!Files.exists(Paths.get(genfilesDir(path), "base")))
@@ -1069,14 +1066,13 @@ object InvertedIndex {
     * The delete batch is broadcast (trickle-sized by contract); a
     * corpus with heavy churn should periodically [[buildIndex]]
     * fresh. */
-  def deleteDocs(docs: DataFrame, idCol: String, path: String,
-      nBuckets: Int = DefaultBuckets): Unit = {
+  def deleteDocs(docs: DataFrame, idCol: String, path: String): Unit = {
     val spark = docs.sparkSession
     // the tombstone write itself is a single-file append (atomic at
     // job commit), but the generation stamp must not race a torn
     // append's number — same writer gate as appendDocs
     requireNoInflight(spark, path)
-    val nb = indexBuckets(spark, path, nBuckets)
+    val nb = indexBuckets(path)
     val gen = generation(spark, path)
     // pinned for the same reason as appendDocs: the bucket set and the
     // victim lookup must agree on the batch's ids — dtype-aligned so
@@ -1200,7 +1196,7 @@ object InvertedIndex {
     * `ManagedParquetTable.changesSince` output (`_change_type`
     * insert/delete) over a table carrying (idCol, textCol). */
   def applyChanges(changes: DataFrame, textCol: String, idCol: String,
-      path: String, nBuckets: Int = DefaultBuckets): Unit = {
+      path: String): Unit = {
     val ins = changes.where(col("_change_type") === "insert")
       .select(col(idCol), col(textCol))
     val del = changes.where(col("_change_type") === "delete")
@@ -1212,8 +1208,8 @@ object InvertedIndex {
     // deletes FIRST: the tombstones stamp the pre-append generation, so
     // the appends (same doc id or not) stay live — a rewriting table
     // commit's survivor rows (delete + insert pairs) round-trip
-    if (counts.getOrElse("delete", 0L) > 0) deleteDocs(del, idCol, path, nBuckets)
-    if (counts.getOrElse("insert", 0L) > 0) appendDocs(ins, textCol, idCol, path, nBuckets)
+    if (counts.getOrElse("delete", 0L) > 0) deleteDocs(del, idCol, path)
+    if (counts.getOrElse("insert", 0L) > 0) appendDocs(ins, textCol, idCol, path)
   }
 
   /** REORG the index: rewrite every bucket to its LIVE postings
@@ -1227,13 +1223,8 @@ object InvertedIndex {
     * maintenance refuse a torn layout via [[indexBuckets]]); a crash
     * mid-swap is CRASH-RECOVERABLE — see [[recoverSwap]] and the
     * protocol note on [[compactCore]]; never a rebuild. */
-  def compactIndex(spark: SparkSession, path: String,
-      nBuckets: Int = DefaultBuckets): Unit =
-    // the bucket count resolves INSIDE compactCore, after its
-    // recoverSwap-on-entry step: resolving it here would hit
-    // requireNoSwap on a leftover marker and make compactIndex unable
-    // to recover the very tear it promises to roll back
-    compactCore(spark, path, nBuckets, None)
+  def compactIndex(spark: SparkSession, path: String): Unit =
+    compactCore(spark, path, None)
 
   /** REBUCKET the index to `newBuckets` — the layout reorg a corpus
     * that outgrew its build-time bucket count needs: nBuckets freezes
@@ -1244,24 +1235,17 @@ object InvertedIndex {
     * same tombstone fold, same generation reset, same swap-marker
     * commit protocol) writing the live postings and doclens under the
     * NEW modulus and republishing the meta with it — maintenance and
-    * probes resolve the new count from the meta on their next call
-    * (their `nBuckets` parameter is only a pre-meta fallback). Cost is
+    * probes resolve the new count from the meta on their next call,
+    * as the old one came from the meta before. Cost is
     * one full postings scan — the same class as compaction, scheduled
     * at the same operational cadence; probes serve the OLD layout
     * until the swap and refuse during it (the rename window), never a
     * mix. Crash contract: a death inside the rename window rolls back
     * via [[recoverSwap]] — the pre-swap index returns to service
     * exactly as committed; never a rebuild. */
-  def rebucket(spark: SparkSession, path: String, newBuckets: Int,
-      oldBuckets: Int = DefaultBuckets): Unit = {
+  def rebucket(spark: SparkSession, path: String, newBuckets: Int): Unit = {
     require(newBuckets >= 1, s"newBuckets must be >= 1, got $newBuckets")
-    // `oldBuckets` matters only for a PRE-META index: the legacy pin
-    // must record the modulus the existing layout was actually built
-    // with (a rollback restores THAT layout), and a meta-less index
-    // can't tell us — a caller who rebuckets one built with a
-    // non-default count must say so here. Indexes with a meta (all
-    // post-v2 builds) ignore it.
-    compactCore(spark, path, oldBuckets, Some(newBuckets))
+    compactCore(spark, path, Some(newBuckets))
   }
 
   /** Thresholds for [[maintenancePlan]]. Defaults size for a large
@@ -1295,7 +1279,6 @@ object InvertedIndex {
     * drives its reorgs FROM this plan (IndexLifecycleSpec), so the
     * policy is load-bearing, not advisory prose. */
   def maintenancePlan(spark: SparkSession, path: String,
-      nBuckets: Int = DefaultBuckets,
       policy: IndexMaintenancePolicy = IndexMaintenancePolicy()):
       Seq[graft.io.MaintenanceAction] = {
     import graft.io.MaintenanceAction
@@ -1310,7 +1293,7 @@ object InvertedIndex {
         s"uncommitted generation(s) ${gens.sorted.mkString(",")} gate " +
           "every mutating call; probes stay correct meanwhile"))
     val out = Seq.newBuilder[MaintenanceAction]
-    val nb = indexBuckets(spark, path, nBuckets)
+    val nb = indexBuckets(path)
     val files = listBucketFiles(s"$path/postings", None)
     val maxPb =
       if (files.isEmpty) 0
@@ -1366,18 +1349,19 @@ object InvertedIndex {
     layoutSwap(path).rollback()
 
   private def compactCore(spark: SparkSession, path: String,
-      fallback: Int, target: Option[Int]): Unit = {
+      target: Option[Int]): Unit = {
     val swap = layoutSwap(path)
     // a leftover marker from a mid-swap death rolls back FIRST: the
     // committed pre-swap index returns to service and this run
     // re-stages from scratch (same contract as IvfPqIndex.reorg)
     if (swap.inflight) swap.rollback()
-    // the PRE-swap modulus resolves only after any rollback (the meta
-    // it reads must be the committed one, and requireNoSwap inside
-    // indexBuckets would refuse a torn layout); it is both the legacy
-    // pin value and, for compaction, the rewrite target
-    val preNb = indexBuckets(spark, path, fallback)
-    val nb = target.getOrElse(preNb)
+    // the committed bucket count resolves only after any rollback (the
+    // meta it reads must be the committed one, and requireNoSwap inside
+    // indexBuckets would refuse a torn layout) — a rebucket too resolves
+    // it, so a meta-less index is refused; for compaction it is the
+    // rewrite target
+    val committedNb = indexBuckets(path)
+    val nb = target.getOrElse(committedNb)
     requireNoInflight(spark, path)
     val committed = generation(spark, path) // one footer read for both passes
     val livePost =
@@ -1399,15 +1383,6 @@ object InvertedIndex {
       spark.read.parquet(s"$path/doclen.compact")
         .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("n_tokens")),
       s"$path/corpus.compact", overwrite = true)
-    // a pre-meta (legacy) index gets its meta PINNED before the swap:
-    // a rollback must restore a layout whose modulus is readable, and
-    // the pin must record the modulus the EXISTING layout was built
-    // with (the caller-resolved pre-swap count) — pinning the target
-    // or a blind default would, after a mid-swap crash + rollback,
-    // publish a meta disagreeing with the restored buckets and send
-    // every probe to the wrong modulus silently
-    if (!Files.exists(Paths.get(path, "_graft_index_meta")))
-      writeMeta(path, preNb)
     // the marker brackets ONLY the renames + the meta/manifest
     // republish (all the expensive staging ran above, into paths the
     // live index never reads): a death inside leaves a layout whose
@@ -1491,13 +1466,13 @@ object InvertedIndex {
     * stats resolve per file for free (each file carries one constant
     * gen), so probes over a torn index read exactly the last
     * committed state. */
-  def openIndex(spark: SparkSession, path: String, tokens: Seq[String],
-      nBuckets: Int = DefaultBuckets): DataFrame = {
+  def openIndex(spark: SparkSession, path: String,
+      tokens: Seq[String]): DataFrame = {
     val committed = generation(spark, path)
     val ts = tombstones(spark, path)
     require(tokens.nonEmpty, "empty token list")
     livePostings(prunedPostings(spark, s"$path/postings", tokens,
-      indexBuckets(spark, path, nBuckets)), committed, ts)
+      indexBuckets(path)), committed, ts)
   }
 
   /** The committed, untombstoned rows of a postings scan `post`, as
@@ -1521,8 +1496,8 @@ object InvertedIndex {
     * probe whose kept postings files pass [[Cutovers.ProbeLocalBytes]]
     * is scored on the driver and runs no Spark job. */
   def bm25TopKIndexed(spark: SparkSession, path: String, query: String,
-      k: Int, nBuckets: Int = DefaultBuckets): DataFrame =
-    bm25TopKIndexedAt(spark, path, query, k, nBuckets, Cutovers.ProbeLocalBytes)
+      k: Int): DataFrame =
+    bm25TopKIndexedAt(spark, path, query, k, Cutovers.ProbeLocalBytes)
 
   /** [[bm25TopKIndexed]] with its probe gate as a parameter, so one
     * index can be probed on both sides. The local side ([[bm25Local]])
@@ -1530,7 +1505,7 @@ object InvertedIndex {
     * tombstones or tombstones read driver-side) and a non-empty file
     * plan of at most `localBytes`; otherwise the distributed plan. */
   private[graft] def bm25TopKIndexedAt(spark: SparkSession, path: String,
-      query: String, k: Int, nBuckets: Int, localBytes: Long): DataFrame = {
+      query: String, k: Int, localBytes: Long): DataFrame = {
     val terms = queryTokens(query).distinct
     require(terms.nonEmpty, "empty query")
     // ONE corpus-footer read serves both the committed-generation gate
@@ -1541,7 +1516,7 @@ object InvertedIndex {
       spark.read.parquet(s"$path/corpus").count())
     val ts = tombstones(spark, path)
     val postPath = s"$path/postings"
-    val buckets = bucketsFor(spark, terms, indexBuckets(spark, path, nBuckets))
+    val buckets = bucketsFor(spark, terms, indexBuckets(path))
     val (kept, total) = planFiles(spark, postPath, terms, buckets)
     val files = kept.map(f => Paths.get(postPath, f))
     val scalars = corpusScalarsLocal(footer, ts)

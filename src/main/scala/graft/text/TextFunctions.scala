@@ -54,15 +54,6 @@ object TextFunctions {
         j => concat_ws(" ", slice(t, j + 1, lit(n)))))
   }
 
-  /** Character n-grams of the normalized (lower, collapsed-space) text. */
-  def charNgrams(text: Column, n: Int): Column = {
-    val s = regexp_replace(lower(trim(text)), "\\s+", " ")
-    when(length(s) < n, array().cast("array<string>"))
-      .otherwise(transform(
-        sequence(lit(0), length(s) - n),
-        j => substring(s, j + 1, lit(n))))
-  }
-
   /** Deterministic polynomial rolling hash of a string, mod 1e9+7 —
     * cross-engine reproducible (same fold in DuckDB via list_reduce).
     * Used as the base hash for fingerprints, MinHash, and SimHash so the
@@ -272,24 +263,6 @@ object TextFunctions {
     when(length(text) === 0, lit(0.0)).otherwise(
       (length(text) - length(regexp_replace(lower(text), "[a-z ]", "")))
         .cast("double") / length(text))
-
-  /** Mean token length (0 for empty). */
-  def meanTokenLen(text: Column): Column = {
-    val t = tokens(text)
-    when(size(t) === 0, lit(0.0)).otherwise(
-      aggregate(t, lit(0L), (acc, x) => acc + length(x)).cast("double") / size(t))
-  }
-
-  /** Composite document-quality score in [0,1] — linear mix of coverage
-    * signals (kept linear so the score is exactly cross-engine
-    * reproducible; no transcendental functions). */
-  def qualityScore(text: Column): Column =
-    round(
-      least(tokenCount(text).cast("double") / 100.0, lit(1.0)) * 0.3
-        + alphaRatio(text) * 0.3
-        + (lit(1.0) - punctRatio(text)) * 0.2
-        + stopwordRatio(text) * 0.2,
-      4)
 
   // ---- language ID (marker-token heuristic) ----
 

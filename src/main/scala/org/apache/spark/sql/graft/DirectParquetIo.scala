@@ -174,7 +174,9 @@ object DirectParquetIo {
       }
     } catch {
       case e: Throwable =>
-        // each file goes with its checksum twin (in flight or published)
+        // any failure removes what this write placed, then rethrows
+        // unchanged; each file goes with its checksum twin (in flight or
+        // published)
         placed.reverseIterator.foreach { p =>
           try GraftFs.delete(p)
           catch { case c: java.io.IOException => e.addSuppressed(c) }

@@ -73,11 +73,11 @@ class DirectReadSpec extends SparkSpec {
     val docs = (0 until 40).map(i => (i.toLong, s"w${i % 5} common w${i % 3}"))
       .toDF("doc_id", "text")
     InvertedIndex.buildIndex(docs, "text", "doc_id", dir, nBuckets = 4)
-    InvertedIndex.deleteDocs(Seq(3L, 8L).toDF("doc_id"), "doc_id", dir, nBuckets = 4)
-    InvertedIndex.deleteDocs(Seq(11L).toDF("doc_id"), "doc_id", dir, nBuckets = 4)
+    InvertedIndex.deleteDocs(Seq(3L, 8L).toDF("doc_id"), "doc_id", dir)
+    InvertedIndex.deleteDocs(Seq(11L).toDF("doc_id"), "doc_id", dir)
     val ts = bothSides(Seq(Paths.get(dir, "tombstones")))
     assert(ts.select("doc_id").as[Long].collect().sorted.toSeq === Seq(3L, 8L, 11L))
-    val got = InvertedIndex.bm25TopKIndexed(spark, dir, "common", k = 100, nBuckets = 4)
+    val got = InvertedIndex.bm25TopKIndexed(spark, dir, "common", k = 100)
       .select("doc_id").as[Long].collect().toSet
     assert(got === (0L until 40L).toSet -- Set(3L, 8L, 11L))
   }
@@ -98,7 +98,7 @@ class DirectReadSpec extends SparkSpec {
     val mk = (ids: Range, p: String) =>
       ids.map(i => (i.toLong, s"${p}_a ${p}_b$i")).toDF("doc_id", "text")
     InvertedIndex.buildIndex(mk(0 until 30, "alpha"), "text", "doc_id", idx, nBuckets = 2)
-    InvertedIndex.appendDocs(mk(100 until 130, "zulu"), "text", "doc_id", idx, nBuckets = 2)
+    InvertedIndex.appendDocs(mk(100 until 130, "zulu"), "text", "doc_id", idx)
     bothSides(Seq(Paths.get(idx, "postings_stats")))
   }
 
@@ -127,20 +127,19 @@ class DirectReadSpec extends SparkSpec {
           else col("doc_id").cast("timestamp")).cast(t))
       InvertedIndex.buildIndex(docs, "text", "doc_id", dir, nBuckets = 4)
       val victims = docs.where(col("text").startsWith("w1 "))
-      InvertedIndex.deleteDocs(victims.select("doc_id"), "doc_id", dir, nBuckets = 4)
+      InvertedIndex.deleteDocs(victims.select("doc_id"), "doc_id", dir)
       val tombDir = Paths.get(dir, "tombstones")
       assert(DirectParquetIo.read(spark, Seq(tombDir), Cutovers.SidecarLocalBytes).isDefined, t)
       bothSides(Seq(tombDir))
       val live = docs.join(victims.select("doc_id"), Seq("doc_id"), "left_anti")
-      val probed = InvertedIndex.bm25TopKIndexed(spark, dir, "shared w2", k = 50, nBuckets = 4)
+      val probed = InvertedIndex.bm25TopKIndexed(spark, dir, "shared w2", k = 50)
       val scanned = InvertedIndex.bm25TopK(live, "text", "doc_id", "shared w2", k = 50)
       assert(sorted(probed) === sorted(scanned), t)
       assert(probed.schema("doc_id").dataType.simpleString == t)
       // the stored dtype resolves from the footer: a batch with no
       // lossless widening into it is refused by name
       val err = intercept[IllegalArgumentException] {
-        InvertedIndex.appendDocs(Seq(("x", "y")).toDF("doc_id", "text"), "text", "doc_id", dir,
-          nBuckets = 4)
+        InvertedIndex.appendDocs(Seq(("x", "y")).toDF("doc_id", "text"), "text", "doc_id", dir)
       }
       assert(err.getMessage.contains(s"stores doc_id as ${docs.schema("doc_id").dataType}"), t)
     }

@@ -223,20 +223,24 @@ class GraftFsSpec extends SparkSpec {
     assert(lens(dir) == lens(rebuilt))
   }
 
-  test("a present index meta that does not parse makes a probe throw; an " +
-      "absent one keeps the caller's bucket count") {
+  test("a present index meta that does not parse makes a probe throw; so " +
+      "does an absent one, naming buildIndex") {
     val dir = tmp("fs_meta").toString
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select($"doc_id", $"text")
     InvertedIndex.buildIndex(docs, "text", "doc_id", dir, nBuckets = 4)
     def probe() = InvertedIndex.bm25TopKIndexed(spark, dir, "hash join table",
-      k = 10, nBuckets = 4).collect().toSeq
+      k = 10).collect().toSeq
     val ref = probe()
     val meta = Paths.get(dir, "_graft_index_meta")
     Files.writeString(meta, "\u0000garbage")
     val e = intercept[IllegalStateException] { probe() }
     assert(e.getMessage.contains("_graft_index_meta"), e.getMessage)
     Files.delete(meta)
+    val absent = intercept[IllegalStateException] { probe() }
+    assert(absent.getMessage.contains("buildIndex"), absent.getMessage)
+    // restoring the meta restores the probe
+    Files.writeString(meta, "nBuckets=4\n")
     assert(probe() == ref)
   }
 

@@ -20,7 +20,7 @@ class IncrementalInvertedIndexSpec extends SparkSpec {
     .select($"doc_id", $"text")
 
   private def probe(path: String) =
-    InvertedIndex.bm25TopKIndexed(spark, path, Q, k = 20, nBuckets = NB)
+    InvertedIndex.bm25TopKIndexed(spark, path, Q, k = 20)
       .as[(Long, Long, Long, Long)].collect().toSeq
 
   private def freshRef(src: ManagedParquetTable): Seq[(Long, Long, Long, Long)] = {

@@ -76,7 +76,7 @@ class IndexLifecycleSpec extends SparkSpec {
       val q = Seq.fill(2 + rnd.nextInt(2))(Vocab(rnd.nextInt(Vocab.size)))
         .distinct.mkString(" ")
       val got = InvertedIndex.bm25TopKIndexed(spark, s"$root/idx", q,
-        k = 10, nBuckets = nb).as[(Long, Long, Long, Long)].collect().toSeq
+        k = 10).as[(Long, Long, Long, Long)].collect().toSeq
       val want =
         if (oracle.isEmpty) Seq.empty
         else InvertedIndex.bm25TopK(liveDf(oracle), "text", "doc_id",
@@ -134,7 +134,7 @@ class IndexLifecycleSpec extends SparkSpec {
       // corpus outgrowing its modulus re-shards to the plan's
       // suggested bucket count (probes and the maintainer must resolve
       // each new modulus from the meta and stay oracle-exact)
-      InvertedIndex.maintenancePlan(spark, s"$root/idx", nBuckets = nb,
+      InvertedIndex.maintenancePlan(spark, s"$root/idx",
           policy = pol).foreach { a =>
         a.action match {
           case "rebucket" =>
@@ -145,11 +145,9 @@ class IndexLifecycleSpec extends SparkSpec {
             // the rebucket above already folded everything; a second
             // compaction is harmless but pointless — run it only if
             // the signal still stands
-            if (InvertedIndex.maintenancePlan(spark, s"$root/idx",
-                nBuckets = nb, policy = pol)
+            if (InvertedIndex.maintenancePlan(spark, s"$root/idx", policy = pol)
                 .exists(_.action == "compactIndex")) {
-              InvertedIndex.compactIndex(spark, s"$root/idx",
-                nBuckets = nb)
+              InvertedIndex.compactIndex(spark, s"$root/idx")
               compactions += 1
               assert(maxFilesPerBucket() == 1,
                 s"window $w: compaction must fold every bucket to one file")
@@ -191,8 +189,8 @@ class IndexLifecycleSpec extends SparkSpec {
     def check(tag: String): Unit = {
       val q = Seq.fill(2 + rnd.nextInt(2))(Vocab(rnd.nextInt(Vocab.size)))
         .distinct.mkString(" ")
-      val got = InvertedIndex.bm25TopKIndexed(spark, dir, q, k = 10,
-        nBuckets = nb).as[(Long, Long, Long, Long)].collect().toSeq
+      val got = InvertedIndex.bm25TopKIndexed(spark, dir, q, k = 10)
+        .as[(Long, Long, Long, Long)].collect().toSeq
       val want =
         if (oracle.isEmpty) Seq.empty
         else InvertedIndex.bm25TopK(liveDf(oracle), "text", "doc_id",
@@ -215,8 +213,7 @@ class IndexLifecycleSpec extends SparkSpec {
           // indexed text stays authoritative)
           val batch = rnd.shuffle(pool).take(1 + rnd.nextInt(10))
             .map(id => id -> mkText(rnd))
-          InvertedIndex.appendDocs(batchDf(batch), "text", "doc_id", dir,
-            nBuckets = nb)
+          InvertedIndex.appendDocs(batchDf(batch), "text", "doc_id", dir)
           batch.foreach { case (id, t) =>
             if (!oracle.contains(id)) oracle(id) = t }
           check(s"op$op-append")
@@ -224,15 +221,13 @@ class IndexLifecycleSpec extends SparkSpec {
           // sometimes immediately re-inserts a victim with new text
           // (the tombstone must kill only OLDER postings)
           val victims = rnd.shuffle(pool).take(1 + rnd.nextInt(8))
-          InvertedIndex.deleteDocs(victims.toDF("doc_id"), "doc_id", dir,
-            nBuckets = nb)
+          InvertedIndex.deleteDocs(victims.toDF("doc_id"), "doc_id", dir)
           victims.foreach(oracle.remove)
           check(s"op$op-delete")
           if (rnd.nextBoolean() && victims.nonEmpty) {
             val re = victims.take(1 + rnd.nextInt(victims.size))
               .map(id => id -> mkText(rnd))
-            InvertedIndex.appendDocs(batchDf(re), "text", "doc_id", dir,
-              nBuckets = nb)
+            InvertedIndex.appendDocs(batchDf(re), "text", "doc_id", dir)
             re.foreach { case (id, t) => oracle(id) = t }
             check(s"op$op-reinsert")
           }
@@ -251,7 +246,7 @@ class IndexLifecycleSpec extends SparkSpec {
             val before = corpusFiles().map(_.getName).toSet
             val gen = InvertedIndex.generation(spark, dir)
             InvertedIndex.appendDocs(batchDf(absent), "text", "doc_id",
-              dir, nBuckets = nb)
+              dir)
             val rec = corpusFiles().filterNot(p => before(p.getName))
             assert(rec.size == 1, s"seed=$seed op$op commit record")
             fs.delete(rec.head, false)
@@ -264,13 +259,13 @@ class IndexLifecycleSpec extends SparkSpec {
             check(s"op$op-repaired")
             if (rnd.nextBoolean()) {
               InvertedIndex.appendDocs(batchDf(absent), "text", "doc_id",
-                dir, nBuckets = nb)
+                dir)
               absent.foreach { case (id, t) => oracle(id) = t }
               check(s"op$op-replayed")
             }
           }
         case 3 => // REORG: fold append files + tombstones, reset gens
-          InvertedIndex.compactIndex(spark, dir, nBuckets = nb)
+          InvertedIndex.compactIndex(spark, dir)
           check(s"op$op-compact")
       }
     }

@@ -102,7 +102,7 @@ class InvertedIndexSpec extends SparkSpec {
     InvertedIndex.buildIndex(mk(0 until 60, "alpha"),
       "text", "doc_id", dir, nBuckets = 4)
     InvertedIndex.appendDocs(mk(100 until 160, "zulu"),
-      "text", "doc_id", dir, nBuckets = 4)
+      "text", "doc_id", dir)
     val (kept, total) = InvertedIndex.probeFilePlan(
       spark, s"$dir/postings", Seq("zulu_common"), nBuckets = 4)
     assert(total >= 2,
@@ -119,7 +119,7 @@ class InvertedIndexSpec extends SparkSpec {
     assert(kept.nonEmpty, "the zulu file itself must be kept")
     // the pruned probe is exact: every zulu doc scores, no alpha doc
     val got = InvertedIndex.bm25TopKIndexed(spark, dir, "zulu_common",
-      k = 100, nBuckets = 4).select($"doc_id").as[Long].collect().toSet
+      k = 100).select($"doc_id").as[Long].collect().toSet
     assert(got == (100L until 160L).toSet)
     // a file with no stats row is never skipped: drop the sidecar and
     // the same probe reads everything, same result
@@ -133,7 +133,7 @@ class InvertedIndexSpec extends SparkSpec {
     assert(keptNoStats.size == totalNoStats,
       "absent sidecar must degrade to never-skip")
     val got2 = InvertedIndex.bm25TopKIndexed(spark, dir, "zulu_common",
-      k = 100, nBuckets = 4).select($"doc_id").as[Long].collect().toSet
+      k = 100).select($"doc_id").as[Long].collect().toSet
     assert(got2 == got)
   }
 
@@ -169,7 +169,7 @@ class InvertedIndexSpec extends SparkSpec {
     // and a replayed append through the pruned guard is still a no-op
     val gen0 = InvertedIndex.generation(spark, dir)
     InvertedIndex.appendDocs(docs.where($"doc_id".isin(batchIds: _*)),
-      "text", "doc_id", dir, nBuckets = 8)
+      "text", "doc_id", dir)
     assert(InvertedIndex.generation(spark, dir) == gen0,
       "re-appending live ids must not bump the generation")
   }
@@ -190,12 +190,11 @@ class InvertedIndexSpec extends SparkSpec {
     // no live rows, and the replay double-appends
     val intBatch = docs.limit(30).withColumn("doc_id", $"doc_id".cast("int"))
     val gen0 = InvertedIndex.generation(spark, dir)
-    InvertedIndex.appendDocs(intBatch, "text", "doc_id", dir, nBuckets = 8)
+    InvertedIndex.appendDocs(intBatch, "text", "doc_id", dir)
     assert(nDocs() == before && InvertedIndex.generation(spark, dir) == gen0,
       "replayed INT-id batch must be an exact no-op against a BIGINT index")
     // deleteDocs victim lookup must also see through the narrower dtype
-    InvertedIndex.deleteDocs(intBatch.select($"doc_id"), "doc_id", dir,
-      nBuckets = 8)
+    InvertedIndex.deleteDocs(intBatch.select($"doc_id"), "doc_id", dir)
     val tombs = spark.read.parquet(s"$dir/tombstones").count()
     assert(tombs == 30,
       s"INT-id delete batch must tombstone all 30 live victims, got $tombs")
@@ -203,7 +202,7 @@ class InvertedIndexSpec extends SparkSpec {
     val err = intercept[IllegalArgumentException] {
       InvertedIndex.appendDocs(
         docs.limit(5).withColumn("doc_id", $"doc_id".cast("double")),
-        "text", "doc_id", dir, nBuckets = 8)
+        "text", "doc_id", dir)
     }
     assert(err.getMessage.contains("lossless"))
   }
@@ -251,14 +250,14 @@ class InvertedIndexSpec extends SparkSpec {
     t.append(docs.where($"doc_id" % 3 === 2))
     t.deleteWhere($"doc_id" % 10 === 7)
     InvertedIndex.applyChanges(t.changesSince(v0), "text", "doc_id",
-      s"$root/idx", nBuckets = 16)
+      s"$root/idx")
     InvertedIndex.buildIndex(t.read(), "text", "doc_id", s"$root/fresh",
       nBuckets = 16)
     val q = "hash join table"
-    val inc = InvertedIndex.bm25TopKIndexed(spark, s"$root/idx", q, k = 20,
-      nBuckets = 16).as[(Long, Long, Long, Long)].collect().toSeq
-    val ref = InvertedIndex.bm25TopKIndexed(spark, s"$root/fresh", q, k = 20,
-      nBuckets = 16).as[(Long, Long, Long, Long)].collect().toSeq
+    val inc = InvertedIndex.bm25TopKIndexed(spark, s"$root/idx", q, k = 20)
+      .as[(Long, Long, Long, Long)].collect().toSeq
+    val ref = InvertedIndex.bm25TopKIndexed(spark, s"$root/fresh", q, k = 20)
+      .as[(Long, Long, Long, Long)].collect().toSeq
     assert(inc === ref)
     assert(inc.nonEmpty)
   }
@@ -270,12 +269,12 @@ class InvertedIndexSpec extends SparkSpec {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select($"doc_id", $"text")
     val q = "hash join table"
-    def probe() = InvertedIndex.bm25TopKIndexed(spark, dir, q, k = 20,
-      nBuckets = 8).as[(Long, Long, Long, Long)].collect().toSeq
+    def probe() = InvertedIndex.bm25TopKIndexed(spark, dir, q, k = 20)
+      .as[(Long, Long, Long, Long)].collect().toSeq
     InvertedIndex.buildIndex(docs.where($"doc_id" % 3 =!= 2),
       "text", "doc_id", dir, nBuckets = 8)
     InvertedIndex.appendDocs(docs.where($"doc_id" % 6 === 2),
-      "text", "doc_id", dir, nBuckets = 8)
+      "text", "doc_id", dir)
     val committed = probe()
     assert(committed.nonEmpty)
     // forge the torn state a crash between the doclen and corpus
@@ -289,7 +288,7 @@ class InvertedIndexSpec extends SparkSpec {
       .map(_.getPath).filter(p => !p.getName.startsWith("_"))
     val beforeCommit = corpusFiles().map(_.getName).toSet
     InvertedIndex.appendDocs(docs.where($"doc_id" % 6 === 5),
-      "text", "doc_id", dir, nBuckets = 8)
+      "text", "doc_id", dir)
     val commitRecord = corpusFiles().filterNot(p => beforeCommit(p.getName))
     assert(commitRecord.size == 1)
     fs.delete(commitRecord.head, false)
@@ -301,8 +300,7 @@ class InvertedIndexSpec extends SparkSpec {
     // 2) the next mutating call refuses loudly instead of re-using the
     //    torn generation number
     val ex = intercept[IllegalStateException] {
-      InvertedIndex.appendDocs(docs.limit(1), "text", "doc_id", dir,
-        nBuckets = 8)
+      InvertedIndex.appendDocs(docs.limit(1), "text", "doc_id", dir)
     }
     assert(ex.getMessage.contains("repairIndex"))
     // 3) repair removes exactly the torn files (footer-proven gen 2:
@@ -330,13 +328,13 @@ class InvertedIndexSpec extends SparkSpec {
     //    indistinguishable from a history where the crash never
     //    happened (fresh build over the full set)
     InvertedIndex.appendDocs(docs.where($"doc_id" % 6 === 5),
-      "text", "doc_id", dir, nBuckets = 8)
+      "text", "doc_id", dir)
     val fresh = java.nio.file.Files
       .createTempDirectory("graft_invidx_torn_ref").toString
     InvertedIndex.buildIndex(docs, "text", "doc_id", fresh, nBuckets = 8)
     val healed = probe()
-    val ref = InvertedIndex.bm25TopKIndexed(spark, fresh, q, k = 20,
-      nBuckets = 8).as[(Long, Long, Long, Long)].collect().toSeq
+    val ref = InvertedIndex.bm25TopKIndexed(spark, fresh, q, k = 20)
+      .as[(Long, Long, Long, Long)].collect().toSeq
     assert(healed === ref)
   }
 
@@ -390,8 +388,7 @@ class InvertedIndexSpec extends SparkSpec {
     assert(fs.exists(new org.apache.hadoop.fs.Path(
       s"$dir/_graft_inflight/gen-1")))
     intercept[IllegalStateException] {
-      InvertedIndex.appendDocs(docs.limit(1), "text", "doc_id", dir,
-        nBuckets = 4)
+      InvertedIndex.appendDocs(docs.limit(1), "text", "doc_id", dir)
     }
   }
 
@@ -405,7 +402,7 @@ class InvertedIndexSpec extends SparkSpec {
     InvertedIndex.buildIndex(docs.limit(200), "text", "doc_id", dir,
       nBuckets = 4)
     val before = InvertedIndex.bm25TopKIndexed(spark, dir,
-      "hash join table", k = 10, nBuckets = 4)
+      "hash join table", k = 10)
       .as[(Long, Long, Long, Long)].collect().toSeq
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sessionState.newHadoopConf())
@@ -429,7 +426,7 @@ class InvertedIndexSpec extends SparkSpec {
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$victim")),
       "repair deleted a committed file the manifest merely failed to list")
     val after = InvertedIndex.bm25TopKIndexed(spark, dir,
-      "hash join table", k = 10, nBuckets = 4)
+      "hash join table", k = 10)
       .as[(Long, Long, Long, Long)].collect().toSeq
     assert(after === before, "probe results changed across repair")
   }
@@ -461,9 +458,69 @@ class InvertedIndexSpec extends SparkSpec {
     assert(!InvertedIndex.needsRepair(spark, dir))
     // and the index still probes + maintains normally afterwards
     InvertedIndex.appendDocs(docs.limit(300).where($"doc_id" % 2 === 1),
-      "text", "doc_id", dir, nBuckets = 4)
+      "text", "doc_id", dir)
     assert(InvertedIndex.bm25TopKIndexed(spark, dir, "hash join table",
-      k = 5, nBuckets = 4).count() == 5)
+      k = 5).count() == 5)
+  }
+
+  test("repairIndex propagates a failure that is not a missing or " +
+      "unreadable file: a cancelled resolve read throws, and the " +
+      "candidate file and the in-flight markers stay") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_invidx_cancel").toString
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+      .select($"doc_id", $"text")
+    InvertedIndex.buildIndex(docs.limit(200), "text", "doc_id", dir,
+      nBuckets = 4)
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    val marker = new org.apache.hadoop.fs.Path(s"$dir/_graft_inflight/gen-1")
+    fs.mkdirs(marker.getParent)
+    fs.create(marker, true).close()
+    // a candidate whose footer cannot prove its generation (it spans
+    // two), so repair confirms it with a resolve read — the read this
+    // test cancels
+    val tmp = java.nio.file.Files
+      .createTempDirectory("graft_invidx_cancel_f").toString
+    Seq(("tok", 1L, 0L, 1L, 1L), ("tok", 2L, 0L, 1L, 2L))
+      .toDF("token", "doc_id", "pos", "dl", "gen")
+      .coalesce(1).write.mode("overwrite").parquet(tmp)
+    val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp)).toSeq
+      .map(_.getPath).filter(p => p.getName.startsWith("part-")).head
+    val bucketDir = fs.listStatus(new org.apache.hadoop.fs.Path(
+      s"$dir/postings")).toSeq.map(_.getPath)
+      .filter(_.getName.startsWith("bucket=")).head
+    val forged = new org.apache.hadoop.fs.Path(bucketDir, "part-forged.parquet")
+    org.apache.hadoop.fs.FileUtil.copy(fs, part, fs, forged, false,
+      spark.sessionState.newHadoopConf())
+    // four sleeping tasks hold the four local cores, so repair's job is
+    // still pending when the listener cancels it
+    val started = new java.util.concurrent.CountDownLatch(4)
+    val blocker = new Thread(() => {
+      sc.setJobGroup("blocker", "hold the cores")
+      sc.parallelize(1 to 4, 4).foreach { _ => Thread.sleep(3000) }
+    })
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == "blocker"))
+          (1 to 4).foreach(_ => started.countDown())
+        else sc.cancelJob(e.jobId)
+    }
+    sc.addSparkListener(listener)
+    try {
+      blocker.start()
+      assert(started.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      Thread.sleep(500)
+      intercept[org.apache.spark.SparkException](InvertedIndex.repairIndex(spark, dir))
+    } finally {
+      sc.removeSparkListener(listener)
+      blocker.join()
+    }
+    assert(fs.exists(forged), "a cancelled read must not delete the candidate")
+    assert(fs.exists(marker), "a cancelled read must not clear the gate")
+    assert(InvertedIndex.needsRepair(spark, dir))
   }
 
   test("buildIndex over an existing path drops stale tombstones") {
@@ -481,7 +538,7 @@ class InvertedIndexSpec extends SparkSpec {
     assert(stats.getLong(0) == docs.count(),
       s"stale tombstones still subtract: ${stats.getLong(0)}")
     val got = InvertedIndex.bm25TopKIndexed(spark, dir, "hash join table",
-      k = 15, nBuckets = 8).as[(Long, Long, Long, Long)].collect().toSeq
+      k = 15).as[(Long, Long, Long, Long)].collect().toSeq
     val ref = InvertedIndex.bm25TopK(docs, "text", "doc_id",
       "hash join table", k = 15)
       .as[(Long, Long, Long, Long)].collect().toSeq
@@ -497,27 +554,27 @@ class InvertedIndexSpec extends SparkSpec {
     InvertedIndex.buildIndex(docs.where($"doc_id" % 4 === 0),
       "text", "doc_id", dir, nBuckets = 8)
     InvertedIndex.appendDocs(docs.where($"doc_id" % 4 === 1),
-      "text", "doc_id", dir, nBuckets = 8)
+      "text", "doc_id", dir)
     InvertedIndex.appendDocs(docs.where($"doc_id" % 4 >= 2),
-      "text", "doc_id", dir, nBuckets = 8)
+      "text", "doc_id", dir)
     InvertedIndex.deleteDocs(docs.where($"doc_id" % 10 === 7),
       "doc_id", dir)
     InvertedIndex.deleteDocs(docs.where($"doc_id" % 10 === 3),
       "doc_id", dir)
     val q = "hash join table"
-    val before = InvertedIndex.bm25TopKIndexed(spark, dir, q, k = 20,
-      nBuckets = 8).as[(Long, Long, Long, Long)].collect().toSeq
+    val before = InvertedIndex.bm25TopKIndexed(spark, dir, q, k = 20)
+      .as[(Long, Long, Long, Long)].collect().toSeq
     val filesBefore = new java.io.File(s"$dir/postings").listFiles()
       .filter(_.getName.startsWith("bucket=")).flatMap(_.listFiles())
       .count(_.getName.endsWith(".parquet"))
-    InvertedIndex.compactIndex(spark, dir, nBuckets = 8)
-    val after = InvertedIndex.bm25TopKIndexed(spark, dir, q, k = 20,
-      nBuckets = 8).as[(Long, Long, Long, Long)].collect().toSeq
+    InvertedIndex.compactIndex(spark, dir)
+    val after = InvertedIndex.bm25TopKIndexed(spark, dir, q, k = 20)
+      .as[(Long, Long, Long, Long)].collect().toSeq
     assert(after === before)
     assert(before.nonEmpty)
     val ph = InvertedIndex.phraseSearch(
       InvertedIndex.openIndex(spark, dir,
-        InvertedIndex.queryTokens("big order scan"), nBuckets = 8),
+        InvertedIndex.queryTokens("big order scan")),
       "big order scan").count()
     val phRef = InvertedIndex.phraseSearch(InvertedIndex.postings(
       docs.where($"doc_id" % 10 =!= 7 && $"doc_id" % 10 =!= 3),
@@ -541,13 +598,13 @@ class InvertedIndexSpec extends SparkSpec {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select($"doc_id", $"text")
     val q = "hash join table"
-    def probe() = InvertedIndex.bm25TopKIndexed(spark, dir, q, k = 20,
-      nBuckets = 8).as[(Long, Long, Long, Long)].collect().toSeq
+    def probe() = InvertedIndex.bm25TopKIndexed(spark, dir, q, k = 20)
+      .as[(Long, Long, Long, Long)].collect().toSeq
     // churn under 8 buckets: build + append + tombstones
     InvertedIndex.buildIndex(docs.where($"doc_id" % 3 === 0),
       "text", "doc_id", dir, nBuckets = 8)
     InvertedIndex.appendDocs(docs.where($"doc_id" % 3 =!= 0),
-      "text", "doc_id", dir, nBuckets = 8)
+      "text", "doc_id", dir)
     InvertedIndex.deleteDocs(docs.where($"doc_id" % 10 === 7),
       "doc_id", dir)
     val before = probe()
@@ -557,10 +614,10 @@ class InvertedIndexSpec extends SparkSpec {
     // layout really is 19-way now: meta + physical bucket dirs agree
     assert(new java.io.File(s"$dir/postings").listFiles()
       .count(_.getName.startsWith("bucket=")) > 8)
-    // maintenance AFTER the rebucket places by the NEW modulus (its
-    // own nBuckets arg is a pre-meta fallback, the meta must win)
+    // maintenance AFTER the rebucket places by the NEW modulus, which
+    // it reads from the meta
     InvertedIndex.deleteDocs(docs.where($"doc_id" % 10 === 3),
-      "doc_id", dir, nBuckets = 8)
+      "doc_id", dir)
     val live = docs.where($"doc_id" % 10 =!= 7 && $"doc_id" % 10 =!= 3)
     val ref = InvertedIndex.bm25TopK(live, "text", "doc_id", q, k = 20)
       .as[(Long, Long, Long, Long)].collect().toSeq
@@ -573,8 +630,7 @@ class InvertedIndexSpec extends SparkSpec {
     assert(marker.createNewFile())
     intercept[IllegalStateException] { probe() }
     intercept[IllegalStateException] {
-      InvertedIndex.appendDocs(docs.limit(1), "text", "doc_id", dir,
-        nBuckets = 8)
+      InvertedIndex.appendDocs(docs.limit(1), "text", "doc_id", dir)
     }
     // compactIndex/rebucket are the RECOVERY entry points: a leftover
     // marker rolls back first (here: a bare marker with no asides =
@@ -599,7 +655,7 @@ class InvertedIndexSpec extends SparkSpec {
     InvertedIndex.buildIndex(docs.where($"doc_id" % 3 =!= 2),
       "text", "doc_id", dir, nBuckets = 4)
     InvertedIndex.appendDocs(docs.where($"doc_id" % 3 === 2),
-      "text", "doc_id", dir, nBuckets = 4)
+      "text", "doc_id", dir)
     InvertedIndex.deleteDocs(docs.where($"doc_id" % 10 === 7),
       "doc_id", dir)
     val before = probe()
@@ -644,66 +700,83 @@ class InvertedIndexSpec extends SparkSpec {
   }
 
   test("compactIndex recovers a torn swap itself: a leftover marker " +
-      "rolls back on entry (bucket count resolves AFTER recovery), and " +
-      "a meta-less legacy index pins the caller-resolved modulus, " +
-      "never the blind default") {
+      "rolls back on entry (bucket count resolves AFTER recovery), then " +
+      "compacts at the committed modulus") {
     import java.nio.file.{Files => JFiles, Paths => JPaths, StandardCopyOption}
     val dir = JFiles.createTempDirectory("graft_invidx_cir").toString
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select($"doc_id", $"text")
     val q = "hash join table"
-    def probe() = InvertedIndex.bm25TopKIndexed(spark, dir, q, k = 20,
-      nBuckets = 4).as[(Long, Long, Long, Long)].collect().toSeq
-    // a LEGACY index: built with a NON-default bucket count, meta
-    // removed (pre-meta format) — readers carry nBuckets=4 by hand
+    def probe() = InvertedIndex.bm25TopKIndexed(spark, dir, q, k = 20)
+      .as[(Long, Long, Long, Long)].collect().toSeq
+    // a NON-default bucket count, so a compaction that resolved the
+    // wrong modulus would show in the layout
     InvertedIndex.buildIndex(docs.where($"doc_id" % 3 =!= 2),
       "text", "doc_id", dir, nBuckets = 4)
     InvertedIndex.appendDocs(docs.where($"doc_id" % 3 === 2),
-      "text", "doc_id", dir, nBuckets = 4)
+      "text", "doc_id", dir)
     InvertedIndex.deleteDocs(docs.where($"doc_id" % 10 === 7),
-      "doc_id", dir, nBuckets = 4)
-    JFiles.delete(JPaths.get(dir, "_graft_index_meta"))
+      "doc_id", dir)
     val before = probe()
-    // forge a mid-swap death (postings asided, torn meta, marker up):
-    // compactIndex ITSELF must recover — resolving the bucket count
-    // eagerly would hit requireNoSwap and loop on the very error
-    // message that says re-running it works
-    JFiles.writeString(JPaths.get(dir, "_graft_index_meta"),
-      "nBuckets=7\n") // torn: a half-committed target meta
+    // forge a mid-swap death: the meta asided and republished with a
+    // torn target modulus, postings asided, marker up. compactIndex
+    // ITSELF must recover — resolving the bucket count eagerly would
+    // hit requireNoSwap and loop on the very error message that says
+    // re-running it works
+    JFiles.move(JPaths.get(dir, "_graft_index_meta"),
+      JPaths.get(dir, "_graft_index_meta.pre"), StandardCopyOption.ATOMIC_MOVE)
+    JFiles.writeString(JPaths.get(dir, "_graft_index_meta"), "nBuckets=7\n")
     JFiles.move(JPaths.get(dir, "postings"),
       JPaths.get(dir, "postings.pre"), StandardCopyOption.ATOMIC_MOVE)
     JFiles.createFile(JPaths.get(dir, "_graft_swap_inflight"))
     intercept[IllegalStateException] { probe() }
-    InvertedIndex.recoverSwap(spark, dir) // restores postings, but the
-    // torn meta had no .pre twin (legacy index) — drop it again so the
-    // index is back to its true pre-meta state
-    JFiles.delete(JPaths.get(dir, "_graft_index_meta"))
-    assert(probe() === before)
-    // now the headline: marker forged again, compactIndex(nBuckets=4)
-    // recovers AND completes in one call
-    JFiles.move(JPaths.get(dir, "postings"),
-      JPaths.get(dir, "postings.pre"), StandardCopyOption.ATOMIC_MOVE)
-    JFiles.createFile(JPaths.get(dir, "_graft_swap_inflight"))
-    InvertedIndex.compactIndex(spark, dir, nBuckets = 4)
+    InvertedIndex.compactIndex(spark, dir)
     assert(!JFiles.exists(JPaths.get(dir, "_graft_swap_inflight")))
     assert(probe() === before,
       "compactIndex after a torn swap must roll back, then compact")
-    // the published meta carries the CALLER-resolved modulus (4), not
-    // DefaultBuckets — a legacy index compacted at its true count must
-    // never come out claiming 64 over a 4-way layout
+    // the compaction ran at the rolled-back committed modulus (4), not
+    // the torn target's 7 nor DefaultBuckets
     assert(JFiles.readString(JPaths.get(dir, "_graft_index_meta"))
       .contains("nBuckets=4"))
     assert(new java.io.File(s"$dir/postings").listFiles()
       .count(_.getName.startsWith("bucket=")) <= 4)
     assert(!JFiles.exists(JPaths.get(dir, "tombstones")))
-    // and a legacy index REBUCKET threads its pre-swap modulus the
-    // same way: meta-less, oldBuckets says 4, target 9 — completes,
-    // probes resolve 9 from the fresh meta regardless of fallback
-    JFiles.delete(JPaths.get(dir, "_graft_index_meta"))
-    InvertedIndex.rebucket(spark, dir, newBuckets = 9, oldBuckets = 4)
-    assert(JFiles.readString(JPaths.get(dir, "_graft_index_meta"))
-      .contains("nBuckets=9"))
-    assert(probe() === before)
+    assert(!JFiles.exists(JPaths.get(dir, "postings.pre")) &&
+      !JFiles.exists(JPaths.get(dir, "_graft_index_meta.pre")))
+  }
+
+  test("an index root without _graft_index_meta is refused by every " +
+      "index-rooted operation, naming buildIndex") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_invidx_nometa").toString
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+      .select($"doc_id", $"text")
+    InvertedIndex.buildIndex(docs.where($"doc_id" % 2 === 0),
+      "text", "doc_id", dir, nBuckets = 4)
+    InvertedIndex.deleteDocs(docs.where($"doc_id" % 10 === 4), "doc_id", dir)
+    java.nio.file.Files.delete(java.nio.file.Paths.get(dir, "_graft_index_meta"))
+    val odd = docs.where($"doc_id" % 2 === 1)
+    val ops: Seq[(String, () => Any)] = Seq(
+      "appendDocs" -> (() => InvertedIndex.appendDocs(odd, "text", "doc_id", dir)),
+      "deleteDocs" -> (() => InvertedIndex.deleteDocs(odd, "doc_id", dir)),
+      "applyChanges" -> (() => InvertedIndex.applyChanges(
+        odd.withColumn("_change_type", lit("insert")), "text", "doc_id", dir)),
+      "compactIndex" -> (() => InvertedIndex.compactIndex(spark, dir)),
+      "rebucket" -> (() => InvertedIndex.rebucket(spark, dir, newBuckets = 8)),
+      "maintenancePlan" -> (() => InvertedIndex.maintenancePlan(spark, dir)),
+      "openIndex" -> (() => InvertedIndex.openIndex(spark, dir, Seq("hash"))),
+      "bm25TopKIndexed" -> (() => InvertedIndex.bm25TopKIndexed(spark, dir,
+        "hash join table", k = 10)))
+    for ((name, op) <- ops) {
+      val e = intercept[IllegalStateException](op())
+      assert(e.getMessage.contains("buildIndex"), s"$name: ${e.getMessage}")
+    }
+    // nothing was written: the refused calls left no generation, no
+    // meta and no tombstones beyond the build's
+    assert(InvertedIndex.generation(spark, dir) == 1L)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_graft_index_meta")))
+    assert(spark.read.parquet(s"$dir/tombstones").count() ==
+      docs.where($"doc_id" % 10 === 4).count())
   }
 
   test("maintenancePlan: each signal fires when its fixture crosses the " +
@@ -718,20 +791,20 @@ class InvertedIndexSpec extends SparkSpec {
       maxTombstonePermille = 200, minDocsPerBucket = 1,
       maxDocsPerBucket = 1000000, targetDocsPerBucket = 5)
     def plan(p: IndexMaintenancePolicy = pol) =
-      InvertedIndex.maintenancePlan(spark, dir, nBuckets = 4, policy = p)
+      InvertedIndex.maintenancePlan(spark, dir, policy = p)
     InvertedIndex.buildIndex(docs.where($"doc_id" % 4 === 0),
       "text", "doc_id", dir, nBuckets = 4)
     assert(plan().isEmpty, s"fresh index needs nothing: ${plan()}")
     // append windows accumulate one file per touched bucket
     InvertedIndex.appendDocs(docs.where($"doc_id" % 4 === 1),
-      "text", "doc_id", dir, nBuckets = 4)
+      "text", "doc_id", dir)
     InvertedIndex.appendDocs(docs.where($"doc_id" % 4 === 2),
-      "text", "doc_id", dir, nBuckets = 4)
+      "text", "doc_id", dir)
     val p1 = plan()
     assert(p1.exists(a => a.action == "compactIndex" &&
       a.metric == "files_per_bucket_max" && a.value >= 3),
       s"3 commits = 3 files/bucket must recommend compaction: $p1")
-    InvertedIndex.compactIndex(spark, dir, nBuckets = 4)
+    InvertedIndex.compactIndex(spark, dir)
     assert(plan().isEmpty, "compaction satisfies the plan")
     // tombstone pressure
     InvertedIndex.deleteDocs(docs.where($"doc_id" % 4 === 0 &&
@@ -740,7 +813,7 @@ class InvertedIndexSpec extends SparkSpec {
     assert(p2.exists(a => a.action == "compactIndex" &&
       a.metric == "tombstone_permille" && a.value >= 200),
       s"~2/3 tombstoned must recommend compaction: $p2")
-    InvertedIndex.compactIndex(spark, dir, nBuckets = 4)
+    InvertedIndex.compactIndex(spark, dir)
     assert(plan().isEmpty)
     // bucket sizing: tighten the band so the live corpus overflows it;
     // the suggestion is sized by targetDocsPerBucket
@@ -753,7 +826,7 @@ class InvertedIndexSpec extends SparkSpec {
       rb.get.suggestion == (live + 4) / 5,
       s"live=$live under max=2/bucket must recommend rebucket: $p3")
     InvertedIndex.rebucket(spark, dir,
-      newBuckets = rb.get.suggestion.toInt, oldBuckets = 4)
+      newBuckets = rb.get.suggestion.toInt)
     assert(plan(tight.copy(maxDocsPerBucket = 5)).isEmpty,
       "the suggested modulus sits inside the widened band")
     // a torn swap preempts everything else
@@ -819,15 +892,15 @@ class InvertedIndexSpec extends SparkSpec {
       .select($"doc_id", $"text")
     InvertedIndex.buildIndex(docs, "text", "doc_id", dir, nBuckets = 16)
     val query = "hash join table"
-    val a = InvertedIndex.bm25TopKIndexed(spark, dir, query, k = 15,
-      nBuckets = 16).as[(Long, Long, Long, Long)].collect().toSeq
+    val a = InvertedIndex.bm25TopKIndexed(spark, dir, query, k = 15)
+      .as[(Long, Long, Long, Long)].collect().toSeq
     val b = InvertedIndex.bm25TopK(docs, "text", "doc_id", query, k = 15)
       .as[(Long, Long, Long, Long)].collect().toSeq
     assert(a === b)
     // the indexed probe reads only the query terms' buckets
     import org.apache.spark.sql.execution.FileSourceScanExec
     val probe = InvertedIndex.openIndex(spark, dir,
-      InvertedIndex.queryTokens(query).distinct, nBuckets = 16)
+      InvertedIndex.queryTokens(query).distinct)
     val expected = InvertedIndex.queryTokens(query).distinct.toDF("token")
       .select(pmod(xxhash64($"token"), lit(16L))).as[Long].collect().toSet
     val scan = probe.queryExecution.executedPlan.collect {
@@ -853,7 +926,7 @@ class InvertedIndexSpec extends SparkSpec {
       .filter(_.getName.startsWith("bucket=")).flatMap(_.listFiles())
       .map(f => f.getPath -> f.lastModified()).toMap
     InvertedIndex.appendDocs(docs.where($"doc_id" % 3 === 2),
-      "text", "doc_id", dir, nBuckets = 16)
+      "text", "doc_id", dir)
     InvertedIndex.deleteDocs(docs.where($"doc_id" % 10 === 7),
       "doc_id", dir)
     val after = new java.io.File(s"$dir/postings").listFiles()
@@ -864,10 +937,10 @@ class InvertedIndexSpec extends SparkSpec {
     val live = docs.where($"doc_id" % 10 =!= 7)
     InvertedIndex.buildIndex(live, "text", "doc_id", fresh, nBuckets = 16)
     for (q <- Seq("hash join table", "big order scan")) {
-      val inc = InvertedIndex.bm25TopKIndexed(spark, dir, q, k = 20,
-        nBuckets = 16).as[(Long, Long, Long, Long)].collect().toSeq
-      val ref = InvertedIndex.bm25TopKIndexed(spark, fresh, q, k = 20,
-        nBuckets = 16).as[(Long, Long, Long, Long)].collect().toSeq
+      val inc = InvertedIndex.bm25TopKIndexed(spark, dir, q, k = 20)
+        .as[(Long, Long, Long, Long)].collect().toSeq
+      val ref = InvertedIndex.bm25TopKIndexed(spark, fresh, q, k = 20)
+        .as[(Long, Long, Long, Long)].collect().toSeq
       assert(inc === ref, s"query '$q' diverged after incremental update")
       assert(inc.nonEmpty)
     }
@@ -875,7 +948,7 @@ class InvertedIndexSpec extends SparkSpec {
     // must not surface
     val ph = InvertedIndex.phraseSearch(
       InvertedIndex.openIndex(spark, dir,
-        InvertedIndex.queryTokens("big order scan"), nBuckets = 16),
+        InvertedIndex.queryTokens("big order scan")),
       "big order scan").select($"doc_id").as[Long].collect().toSet
     val phRef = InvertedIndex.phraseSearch(
       InvertedIndex.postings(live, "text", "doc_id"), "big order scan")

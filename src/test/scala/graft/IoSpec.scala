@@ -371,7 +371,8 @@ class IoSpec extends SparkSpec {
     assert(t.readWhere(col("id") === 42L).count() == 2)
   }
 
-  test("bloom probe falls back to the pre-idx sidecar layout; rebuild retires it") {
+  test("bloom files at the _graft_blooms root (outside idx/) are never " +
+      "read: readWhere's rows are unchanged and nothing is skipped") {
     val dir = tmp("mptbl") + "/tbl"
     val t = new ManagedParquetTable(spark, dir)
     t.append((0 to 100 by 2).map(i => (i.toLong, s"e$i")).toDF("id", "v")
@@ -379,30 +380,22 @@ class IoSpec extends SparkSpec {
     t.append((1 to 101 by 2).map(i => (i.toLong, s"o$i")).toDF("id", "v")
       .coalesce(1))
     t.buildBloomIndex(Seq("id"), expectedItemsPerFile = 1024)
-    // degrade to the legacy layout: part files directly under
-    // _graft_blooms, no idx/ subdir — what the pre-idx code wrote
+    // part files directly under _graft_blooms, no idx/ subdir
     val idx = Paths.get(dir, "_graft_blooms", "idx")
     val root = Paths.get(dir, "_graft_blooms")
-    val moved = Files.list(idx).iterator()
-    while (moved.hasNext) {
-      val p = moved.next()
-      Files.move(p, root.resolve(p.getFileName))
-    }
+    graft.io.GraftFs.list(idx).foreach(p => Files.move(p, root.resolve(p.getFileName)))
     Files.delete(idx)
     val (kept, total) = t.pruneFiles(col("id") === 42L)
-    assert(total == 2 && kept.size == 1,
-      s"legacy sidecar must keep bloom skipping alive: $kept")
-    // a rebuild writes idx/ AND retires the legacy part files so a
-    // later idx/ loss cannot resurrect a stale sidecar
+    assert(total == 2 && kept.size == 2, s"old-root files must skip nothing: $kept")
+    val want = t.read().filter(col("id") === 42L).collect().toSeq
+    assert(want.size == 1)
+    assert(t.readWhere(col("id") === 42L).collect().toSeq === want)
+    // a rebuild writes idx/ and skips again; the old-root files stay
+    // where they are, still unread
     t.buildBloomIndex(Seq("id"), expectedItemsPerFile = 1024)
-    assert(Files.isDirectory(idx))
-    val leftovers = Files.list(root).iterator()
-    var staleFiles = 0
-    while (leftovers.hasNext)
-      if (!Files.isDirectory(leftovers.next())) staleFiles += 1
-    assert(staleFiles == 0, "rebuild must retire legacy sidecar files")
-    val (kept2, _) = t.pruneFiles(col("id") === 42L)
-    assert(kept2.size == 1)
+    assert(t.pruneFiles(col("id") === 42L)._1.size == 1)
+    assert(graft.io.GraftFs.list(root).exists(_.getFileName.toString.endsWith(".parquet")))
+    assert(t.readWhere(col("id") === 42L).collect().toSeq === want)
   }
 
   test("bloom index: ONE data scan per build (any column count); probe " +
@@ -1700,8 +1693,13 @@ class IoSpec extends SparkSpec {
     assert(t.dvEntries.size == 50)
     val manifestTxt = Files.readString(Paths.get(s"$dir/_graft_manifest"))
     assert(!manifestTxt.contains("dv-0"), "no inline entries expected")
-    assert(""""dvs":\[\]""".r.findFirstIn(manifestTxt).isDefined,
-      "inline dv list must stay empty on dvlog-era manifests")
+    // dv entries live only in dvlog files: neither the pointer nor the
+    // log entry carries an inline "dvs" field
+    val newestEntry = graft.io.GraftFs.list(Paths.get(s"$dir/_delta_log"))
+      .map(_.getFileName.toString).filter(_.endsWith(".json")).max
+    val entryTxt = Files.readString(Paths.get(s"$dir/_delta_log", newestEntry))
+    assert(!manifestTxt.contains("\"dvs\"") && !entryTxt.contains("\"dvs\""),
+      s"no inline dv field may be written: $manifestTxt")
     // consolidation keeps the manifest-REFERENCED file count bounded.
     // Superseded files are NOT deleted on the commit path (a reader
     // holding the pre-consolidation manifest must keep resolving
@@ -1730,36 +1728,68 @@ class IoSpec extends SparkSpec {
     assert(t.readAt(25L).count() == 2000 - 25)
   }
 
-  test("legacy inline-dvs manifest: reads work; first dv commit migrates to dvlog") {
-    val dir = tmp("dvmig") + "/tbl"
+  test("a manifest carrying inline dv entries is refused, naming the " +
+      "table — from the pointer and from the log entry alike") {
+    val dir = tmp("dvinline") + "/tbl"
     val t = new ManagedParquetTable(spark, dir)
     t.append((0 until 100).map(i => (i, "x")).toDF("id", "s").coalesce(1))
     t.deleteWhereDV(col("id") < 5)
     t.deleteWhereDV(col("id") === 50)
-    // rewrite the manifest to the PRE-dvlog shape: entries inline
     val entries = t.dvEntries
     assert(entries.size == 2)
+    // the layout before dvlog files: the entries inline in "dvs", no
+    // dvlog file named or on disk
+    def inline(json: String): String = json
+      .replaceAll(""""dvfiles":\[[^\]]*\]""",
+        s""""dvs":[${entries.map("\"" + _ + "\"").mkString(",")}],"dvfiles":[]""")
+    graft.io.GraftFs.delete(Paths.get(s"$dir/_graft_dvlog"))
     val mPath = Paths.get(s"$dir/_graft_manifest")
-    val legacy = Files.readString(mPath)
-      .replaceAll(""""dvs":\[[^\]]*\]""",
-        s""""dvs":[${entries.map("\"" + _ + "\"").mkString(",")}]""")
-      .replaceAll(""","dvfiles":\[[^\]]*\]""", "")
-    Files.writeString(mPath, legacy)
-    // kill the dvlog dir entirely — a legacy table has none
-    Files.walk(Paths.get(s"$dir/_graft_dvlog"))
-      .sorted(java.util.Comparator.reverseOrder()).forEach(Files.delete(_))
-    val t2 = new ManagedParquetTable(spark, dir)
-    assert(t2.dvEntries == entries, "inline entries must read back")
-    assert(t2.read().count() == 94)
-    // the next dv commit migrates: inline list empties, entries move
-    // to ONE consolidated dvlog file, nothing is lost
-    t2.deleteWhereDV(col("id") === 60)
-    val after = Files.readString(mPath)
-    assert(""""dvs":\[\]""".r.findFirstIn(after).isDefined,
-      s"inline entries must migrate out: $after")
-    assert(t2.dvEntries.size == 3)
-    assert(t2.read().count() == 93)
-    assert(t2.readAt(1L).count() == 95)
+    Files.writeString(mPath, inline(Files.readString(mPath)))
+    def refused(what: String): Unit = {
+      val t2 = new ManagedParquetTable(spark, dir)
+      for ((op, run) <- Seq[(String, () => Any)](
+          "read" -> (() => t2.read().count()),
+          "readAt" -> (() => t2.readAt(1L).count()),
+          "append" -> (() => t2.append(Seq((200, "y")).toDF("id", "s"))),
+          "deleteWhereDV" -> (() => t2.deleteWhereDV(col("id") === 60)))) {
+        val e = intercept[IllegalStateException](run())
+        assert(e.getMessage.contains(dir) && e.getMessage.contains("inline dv"),
+          s"$what/$op: ${e.getMessage}")
+      }
+    }
+    refused("pointer")
+    // no pointer: the head resolves from the newest log entry's graft
+    // fields, which carry the same inline list
+    Files.delete(mPath)
+    val log = Paths.get(s"$dir/_delta_log")
+    val newest = graft.io.GraftFs.list(log).map(_.getFileName.toString)
+      .filter(_.endsWith(".json")).max
+    Files.writeString(log.resolve(newest), inline(Files.readString(log.resolve(newest))))
+    refused("log entry")
+    assert(new ManagedParquetTable(spark, dir).version == 3L,
+      "the refused calls committed nothing")
+  }
+
+  test("a dv entry without its touched-segment field is refused") {
+    val dir = tmp("dvtwo") + "/tbl"
+    val t = new ManagedParquetTable(spark, dir)
+    t.append((0 until 100).map(i => (i, "x")).toDF("id", "s").coalesce(1))
+    t.deleteWhereDV(col("id") < 5)
+    val entry = t.dvEntries.head
+    assert(entry.split(":").length == 3, entry)
+    // the layout before touch sets: "logVer:dvDir" only
+    val two = entry.split(":").take(2).mkString(":")
+    graft.io.GraftFs.list(Paths.get(s"$dir/_graft_dvlog"))
+      .foreach(p => Files.writeString(p, Files.readString(p).replace(entry, two)))
+    for ((op, run) <- Seq[(String, () => Any)](
+        "read" -> (() => t.read().count()),
+        "readAt" -> (() => t.readAt(1L).count()),
+        "changesSince" -> (() => t.changesSince(0L).count()),
+        "compactDeletes" -> (() => t.compactDeletes(0.01)))) {
+      val e = intercept[IllegalStateException](run())
+      assert(e.getMessage.contains(two) && e.getMessage.contains("touched"),
+        s"$op: ${e.getMessage}")
+    }
   }
 
   test("vacuum retention: aged dv entries + sidecars + mirror commits retire; " +

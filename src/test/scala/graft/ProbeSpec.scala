@@ -31,15 +31,15 @@ class ProbeSpec extends SparkSpec {
 
   /** Run one BM25 probe on both sides and against [[InvertedIndex.bm25TopK]]
     * over `live`; returns the rows. */
-  private def bm25BothSides(dir: String, q: String, k: Int, live: DataFrame,
-      nBuckets: Int = InvertedIndex.DefaultBuckets): Seq[Row] = {
+  private def bm25BothSides(dir: String, q: String, k: Int,
+      live: DataFrame): Seq[Row] = {
     val post = s"$dir/postings"
     val (kept, _) = InvertedIndex.probeFilePlan(spark, post,
-      InvertedIndex.queryTokens(q).distinct, nBuckets)
+      InvertedIndex.queryTokens(q).distinct)
     val bytes = kept.map(f => Files.size(Paths.get(post, f))).sum
     assert(bytes > 0, s"probe '$q' keeps no postings file")
-    val local = InvertedIndex.bm25TopKIndexedAt(spark, dir, q, k, nBuckets, bytes)
-    val dist = InvertedIndex.bm25TopKIndexedAt(spark, dir, q, k, nBuckets, bytes - 1)
+    val local = InvertedIndex.bm25TopKIndexedAt(spark, dir, q, k, bytes)
+    val dist = InvertedIndex.bm25TopKIndexedAt(spark, dir, q, k, bytes - 1)
     assert(isLocal(local) && !isLocal(dist))
     // the distributed side keeps its audited shape: one global window,
     // ranking the frame its top-k limit already cut to k rows
@@ -79,22 +79,20 @@ class ProbeSpec extends SparkSpec {
     val dir = tmp("probe_maint")
     InvertedIndex.buildIndex(docs.where($"doc_id" % 3 =!= 2), "text", "doc_id", dir,
       nBuckets = 8)
-    InvertedIndex.appendDocs(docs.where($"doc_id" % 6 === 2), "text", "doc_id", dir,
-      nBuckets = 8)
-    InvertedIndex.deleteDocs(docs.where($"doc_id" % 10 === 7), "doc_id", dir, nBuckets = 8)
+    InvertedIndex.appendDocs(docs.where($"doc_id" % 6 === 2), "text", "doc_id", dir)
+    InvertedIndex.deleteDocs(docs.where($"doc_id" % 10 === 7), "doc_id", dir)
     val live = docs.where($"doc_id" % 3 =!= 2 || $"doc_id" % 6 === 2)
       .where($"doc_id" % 10 =!= 7)
     val q = "hash join table"
-    val before = bm25BothSides(dir, q, 20, live, nBuckets = 8)
+    val before = bm25BothSides(dir, q, 20, live)
     // a torn generation: the next append's files stay, its commit row goes
     val corpus = Paths.get(dir, "corpus")
     def corpusFiles() = graft.io.GraftFs.list(corpus)
       .filter(_.getFileName.toString.endsWith(".parquet")).toSet
     val committed = corpusFiles()
-    InvertedIndex.appendDocs(docs.where($"doc_id" % 6 === 5), "text", "doc_id", dir,
-      nBuckets = 8)
+    InvertedIndex.appendDocs(docs.where($"doc_id" % 6 === 5), "text", "doc_id", dir)
     (corpusFiles() -- committed).foreach(graft.io.GraftFs.delete)
-    assert(bm25BothSides(dir, q, 20, live, nBuckets = 8) === before)
+    assert(bm25BothSides(dir, q, 20, live) === before)
   }
 
   test("bm25 probe: both sides equal over decimal and string doc ids and " +
@@ -106,7 +104,7 @@ class ProbeSpec extends SparkSpec {
         twin.select(concat(lit("d"), $"doc_id").as("doc_id"), $"text")).foreach { d =>
       val dir = tmp("probe_types")
       InvertedIndex.buildIndex(d, "text", "doc_id", dir, nBuckets = 16)
-      val rows = bm25BothSides(dir, "hash join table", 30, d, nBuckets = 16)
+      val rows = bm25BothSides(dir, "hash join table", 30, d)
       assert(rows.map(_.getLong(2)).sliding(2).exists(p => p.head == p.last),
         "no score tie in the probe")
     }

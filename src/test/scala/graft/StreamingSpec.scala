@@ -690,12 +690,12 @@ class StreamingSpec extends SparkSpec {
       .select($"doc_id", $"text").limit(200)
       .as[(Long, String)].collect().toSeq
     def probe() = InvertedIndex.bm25TopKIndexed(spark, s"$dir/idx", Q,
-      k = 20, nBuckets = 8).as[(Long, Long, Long, Long)].collect().toSeq
+      k = 20).as[(Long, Long, Long, Long)].collect().toSeq
     def freshRef() = {
       val ref = Files.createTempDirectory("graft_st15_ref").toString
       InvertedIndex.buildIndex(t.read().select($"doc_id", $"text"),
         "text", "doc_id", ref, nBuckets = 8)
-      InvertedIndex.bm25TopKIndexed(spark, ref, Q, k = 20, nBuckets = 8)
+      InvertedIndex.bm25TopKIndexed(spark, ref, Q, k = 20)
         .as[(Long, Long, Long, Long)].collect().toSeq
     }
     // committed snapshots, recorded inside the sink AFTER each refresh
@@ -798,7 +798,7 @@ class StreamingSpec extends SparkSpec {
     InvertedIndex.buildIndex(t.read().select($"doc_id", $"text"),
       "text", "doc_id", ref, nBuckets = 8)
     def probe(p: String) = InvertedIndex.bm25TopKIndexed(spark, p,
-      "hash join table", k = 20, nBuckets = 8)
+      "hash join table", k = 20)
       .as[(Long, Long, Long, Long)].collect().toSeq
     assert(probe(s"$dir/idx") === probe(ref))
   }
@@ -844,8 +844,9 @@ class StreamingSpec extends SparkSpec {
         "the log no longer holds the tagged commit")
   }
 
-  test("ST15 floor-file upgrade: a legacy-named floor is trusted only " +
-      "on a verbatim-appId tag match") {
+  test("ST15 floor files under an earlier name, and a floor without " +
+      "its tag line, are ignored: the replay is recognized by the log " +
+      "tag and a batch that never landed appends") {
     import graft.io.ManagedParquetTable
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_st15u").toString
@@ -855,45 +856,37 @@ class StreamingSpec extends SparkSpec {
     val bA = docs.where($"doc_id" % 2 === 0)
     val bB = docs.where($"doc_id" % 2 === 1)
     BronzeIngest.indexedIngestBatch(t, bA, 0L, "a/b", Nil)
-    t.compact() // a later commit: the sink's append is no longer head
     val rows = t.read().count()
     val v = t.version
-    // forge a pre-upgrade deployment: the floor lives under the OLD
-    // sanitized+hashCode name, and BOTH other homes of the tag are
-    // gone (log retention — the
-    // long-idle-sink worst case)
     def sha(s: String) = java.security.MessageDigest
       .getInstance("SHA-256").digest(s.getBytes("UTF-8"))
       .take(16).map("%02x".format(_)).mkString
-    val floorNew = java.nio.file.Paths.get(s"$dir/docs",
+    val floor = java.nio.file.Paths.get(s"$dir/docs",
       s"_graft_sink_floor_a_b_${sha("a/b")}")
-    val floorOld = java.nio.file.Paths.get(s"$dir/docs",
-      s"_graft_sink_floor_a_b_${"a/b".hashCode.toHexString}")
-    java.nio.file.Files.move(floorNew, floorOld)
-    val logDir = new java.io.File(s"$dir/docs/_delta_log")
-    logDir.listFiles().filter(_.getName.matches("\\d{20}\\.json"))
-      .foreach { f =>
-        assert(f.delete()); new java.io.File(logDir, s".${f.getName}.crc").delete()
-      }
-    t.vacuum(graceMs = 0L)
-    // replay: only the legacy floor's tag can prove batch 0 landed —
-    // and it is trusted because its tag embeds THIS sink's verbatim
-    // appId
+    // floors under the two earlier names (sanitized + hashCode,
+    // sanitized only) claim batch 1 landed; it never did, and the
+    // sink's own floor is gone
+    Files.delete(floor)
+    for (old <- Seq(s"_graft_sink_floor_a_b_${"a/b".hashCode.toHexString}",
+        "_graft_sink_floor_a_b"))
+      Files.writeString(java.nio.file.Paths.get(s"$dir/docs", old),
+        s"${v - 1}\ngraft-stream:a/b:1")
+    // replay of batch 0: its tagged log entry proves it landed
     BronzeIngest.indexedIngestBatch(t, bA, 0L, "a/b", Nil)
     assert(t.read().count() == rows && t.version == v,
-      "a verbatim-matching legacy floor must be trusted across the " +
-        "filename-scheme upgrade")
-    // a sanitization-COLLIDING sink must NOT trust that file: move it
-    // to the oldest (shared, sanitized-only) name; sink a_b sees it as
-    // its only floor candidate, rejects the foreign tag, and its
-    // never-committed batch appends (at-least-once, never silent skip)
-    java.nio.file.Files.move(floorOld, java.nio.file.Paths.get(
-      s"$dir/docs", "_graft_sink_floor_a_b"))
-    val bBn = bB.count()
-    BronzeIngest.indexedIngestBatch(t, bB, 7L, "a_b", Nil)
-    assert(t.read().count() == rows + bBn,
-      "a foreign legacy floor (tag names another verbatim appId) must " +
-        "be ignored, not trusted")
+      "the replay must be recognized from the log tag")
+    // batch 1: the earlier-named floors are not read, so it appends
+    val nB = bB.count()
+    BronzeIngest.indexedIngestBatch(t, bB, 1L, "a/b", Nil)
+    assert(t.read().count() == rows + nB && t.version == v + 1,
+      "an earlier-named floor must not mark a batch as landed")
+    assert(Files.readString(floor) == s"$v\ngraft-stream:a/b:1")
+    // a floor without its tag line is untrusted, whatever number it
+    // holds: the scan starts at 0 and still finds batch 1's entry
+    Files.writeString(floor, "999\n")
+    BronzeIngest.indexedIngestBatch(t, bB, 1L, "a/b", Nil)
+    assert(t.read().count() == rows + nB && t.version == v + 1,
+      "a tag-less floor must not turn a replay into a re-append")
   }
 
   test("ST15 floor sidecar: a floor file that holds garbage or is a " +
@@ -964,7 +957,7 @@ class StreamingSpec extends SparkSpec {
     InvertedIndex.buildIndex(t.read().select($"doc_id", $"text"),
       "text", "doc_id", ref, nBuckets = 8)
     def probe(p: String) = InvertedIndex.bm25TopKIndexed(spark, p,
-      "hash join table", k = 20, nBuckets = 8)
+      "hash join table", k = 20)
       .as[(Long, Long, Long, Long)].collect().toSeq
     assert(probe(s"$dir/idx") === probe(ref))
   }
@@ -1014,7 +1007,7 @@ class StreamingSpec extends SparkSpec {
       InvertedIndex.buildIndex(live.select($"doc_id", $"text"),
         "text", "doc_id", ref, nBuckets = 8)
       def bm(p: String) = InvertedIndex.bm25TopKIndexed(spark, p,
-        "hash join table", k = 20, nBuckets = 8)
+        "hash join table", k = 20)
         .as[(Long, Long, Long, Long)].collect().toSeq
       assert(bm(s"$dir/ridx") === bm(ref), s"retrieval != rebuild $where")
       // IVF-PQ: maintained lists == from-scratch encode, row for row
@@ -1324,7 +1317,7 @@ class StreamingSpec extends SparkSpec {
       assert(maintained == rebuilt, s"mv != rebuild $where")
       // retrieval: indexed probe == direct scorer over the live docs
       val got = InvertedIndex.bm25TopKIndexed(spark, s"$dir/idx", q,
-        k = 10, nBuckets = 4).as[(Long, Long, Long, Long)].collect().toSeq
+        k = 10).as[(Long, Long, Long, Long)].collect().toSeq
       val ref = InvertedIndex.bm25TopK(t.read().select($"doc_id", $"text"),
         "text", "doc_id", q, k = 10)
         .as[(Long, Long, Long, Long)].collect().toSeq
